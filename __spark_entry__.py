@@ -11,17 +11,22 @@
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import sys
 from collections.abc import Callable
+from typing import NamedTuple
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 _PIPELINE_DOC_CAP = 400   # doc budget for per-query raster pipeline runs
+_MEDIA_DOC_CAP = 200      # doc budget for re-encoded media / span gates
 
 
 def _interleaved_corpus(spark: SparkSession, sf_dir: str, cap: int):
@@ -109,7 +114,7 @@ def _ocr_dpi_font_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
         reencode_media
     from org_dharts_dia_tesseract_spark.operators.windows import \
         level_font_attributes
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
+    docs, media = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
     h = analyze_documents(docs, reencode_media(media, "tiff", dpi=192))
     return level_font_attributes(h, "TEXTLINE")
 
@@ -127,7 +132,7 @@ def _ocr_page_osd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-way page orientation & script detection (PSM OSD_ONLY/AUTO_OSD:
     rotation-confidence argmax, PublicTypes.java:66-71)."""
     from org_dharts_dia_tesseract_spark.operators import page_osd
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
+    docs, media = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
     return page_osd(docs, media)
 
 
@@ -136,198 +141,84 @@ def _ocr_tiff_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     336-371): per-doc page count + encoded size (blob dropped for the
     row check)."""
     from org_dharts_dia_tesseract_spark.operators.sinks import merge_tiff
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
+    docs, media = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
     return (merge_tiff(docs, media)
             .select("doc_id", "n_pages",
                     F.length("tiff").alias("tiff_bytes")))
 
 
-def _ocr_spans_bmp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over BMP-ENCODED media payloads: the
-    pure-numpy codec decode path (ImageIOHelper.java:263-327 analog) under
-    the same pipeline; spans must equal the raw-payload run's (the
-    parquet oracle IS the raw-run expectation)."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "bmp"))
+class _SpanGate(NamedTuple):
+    """One span-extraction gate: extract_spans over the first
+    _MEDIA_DOC_CAP docs with media optionally colorized, then re-encoded
+    with reencode_media(media, **reencode). `expect` names the single-process
+    twin that scripts/gen_expected.py writes as the gate's oracle parquet:
+    raw (the unencoded run), color / color_prog (the colorize + color-JPEG
+    chain), bilevel (the threshold-128 1-bit chain) or hin."""
+    expect: str
+    reencode: dict | None = None
+    colorize: bool = False
+    languages: str = "eng"
 
 
-def _ocr_spans_deflate_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over DEFLATE-compressed TIFF payloads
-    (Adobe DEFLATE, compression tag 8 — the most common scanned-page
-    TIFF encoding after none/PackBits; zlib strips, codecs_img.py).
-    Spans must equal the raw-payload run's."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "tiff",
-                                              compression="deflate"))
+_SPAN_GATES = {
+    # pure-numpy BMP decode; lossless, so spans equal the raw run's
+    "ocr_spans_bmp_media": _SpanGate("raw", {"codec": "bmp"}),
+    # DEFLATE (tag 8) TIFF strips via zlib; lossless
+    "ocr_spans_deflate_media": _SpanGate(
+        "raw", {"codec": "tiff", "compression": "deflate"}),
+    # zlib IDAT + scanline filters; lossless
+    "ocr_spans_png_media": _SpanGate("raw", {"codec": "png"}),
+    # variable-width LZW; lossless
+    "ocr_spans_gif_media": _SpanGate("raw", {"codec": "gif"}),
+    # lossy, but quality-90 pixel error (<~25 levels) sits far inside the
+    # >170-level binarization margin, so spans still equal the raw run's
+    "ocr_spans_jpeg_media": _SpanGate("raw", {"codec": "jpeg"}),
+    # colorized pages through YCbCr 4:2:0 JPEG; the twin runs the same chain
+    "ocr_spans_jpeg_color_media": _SpanGate(
+        "color", {"codec": "jpeg", "jpeg_subsampling": "420"},
+        colorize=True),
+    # progressive (SOF2) encodes the same quantized coefficients as
+    # baseline, so decode is pixel-identical to the color gate's chain
+    "ocr_spans_jpeg_prog_media": _SpanGate(
+        "color_prog", {"codec": "jpeg", "jpeg_subsampling": "420",
+                       "jpeg_progressive": True}, colorize=True),
+    # palette + Adam7 interlace; grey palettes collapse to 1 band, lossless
+    "ocr_spans_png_palette_media": _SpanGate(
+        "raw", {"codec": "png", "png_palette": True, "png_interlace": True}),
+    # 1-bit PackBits: threshold-128 changes pixels, so not the raw run
+    "ocr_spans_tiff_bilevel_media": _SpanGate(
+        "bilevel", {"codec": "tiff", "compression": "packbits",
+                    "tiff_bits": 1}),
+    # CCITT G4 is lossless over the thresholded image: the bilevel twin
+    "ocr_spans_tiff_g4_media": _SpanGate(
+        "bilevel", {"codec": "tiff", "compression": "g4", "tiff_bits": 1}),
+    # scanned PDF with /CCITTFaxDecode K=-1: same thresholded image
+    "ocr_spans_pdf_g4_media": _SpanGate(
+        "bilevel", {"codec": "pdf", "pdf_ccitt": True}),
+    # MQ coder + EBCOT + reversible 5/3 wavelet; lossless
+    "ocr_spans_jp2_media": _SpanGate("raw", {"codec": "jp2"}),
+    # FlateDecode image XObject in a single-page PDF; lossless
+    "ocr_spans_pdf_media": _SpanGate("raw", {"codec": "pdf"}),
+    # second language pack: recognition templates change, so the text does
+    "ocr_spans_lang_hin": _SpanGate("hin", languages="hin"),
+}
 
 
-def _ocr_spans_png_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over PNG-encoded media payloads (zlib
-    IDAT + scanline filters, codecs_img.py:decode_png). Spans must equal
-    the raw-payload run's."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "png"))
+def _span_gate(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    gate = _SPAN_GATES[name]
 
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from org_dharts_dia_tesseract_spark.operators import extract_spans
+        from org_dharts_dia_tesseract_spark.operators.multimodal import (
+            colorize_media, reencode_media)
+        docs, media = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
+        if gate.colorize:
+            media = colorize_media(media)
+        if gate.reencode:
+            media = reencode_media(media, **gate.reencode)
+        return extract_spans(docs, media, languages=gate.languages)
 
-def _ocr_spans_gif_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over GIF-encoded media payloads (real
-    variable-width LZW, codecs_img.py:decode_gif). Spans must equal the
-    raw-payload run's."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "gif"))
-
-
-def _ocr_spans_jpeg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span extraction over baseline-JPEG media payloads (real greyscale
-    Huffman+DCT coder, codecs_img.py). JPEG is LOSSY, but pixel error at
-    quality 90 (<~25 levels) is far inside the pipeline's >170-level
-    ink/background binarization margin, so spans equal the raw run's —
-    the oracle parquet pins exactly that."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "jpeg"))
-
-
-def _ocr_spans_jpeg_color_media(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over COLOR (3-component YCbCr 4:2:0)
-    JPEG payloads: pages deterministically colorized (luma-compressed +
-    spatial chroma ramps, datagen.colorize_page), encoded with the color
-    JPEG path (MCU-interleaved 4 Y + Cb + Cr blocks, chroma box-mean
-    downsample), decoded + luma-collapsed inside the pipeline. Oracle
-    parquet is the same colorize/encode/decode chain run single-process
-    — the reference surface is ImageIO's color JPEG decode
-    (ImageIOHelper.java:270-327)."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import (
-        colorize_media, reencode_media)
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    color = reencode_media(colorize_media(media), "jpeg",
-                           jpeg_subsampling="420")
-    return extract_spans(docs, color)
-
-
-def _ocr_spans_jp2_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span extraction over JPEG 2000 media payloads (codecs_jp2: real
-    MQ arithmetic coder + EBCOT three-pass code-blocks + reversible 5/3
-    wavelet — the last format of ImageIOHelper.java:263-327, previously
-    stubbed). The transform is LOSSLESS, so spans are byte-identical to
-    the raw run's; the oracle parquet pins exactly that."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "jp2"))
-
-
-def _ocr_spans_pdf_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span extraction over PDF-wrapped media payloads (codecs_pdf: a
-    from-scratch single-page PDF writer/parser, FlateDecode image
-    XObjects via stdlib zlib). The reference REJECTS pdf
-    (ImageIOHelper.java:278-282); the north rule names PDF parse as a
-    main-content tier, so here it is a real codec. Lossless, so spans
-    are byte-identical to the raw run's — the oracle parquet pins that."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "pdf"))
-
-
-def _ocr_spans_jpeg_prog_media(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """Span extraction over PROGRESSIVE (SOF2) color 4:2:0 JPEG
-    payloads: spectral-selection + successive-approximation scans,
-    EOBn runs, non-interleaved AC block order (T.81 Annex G) — the
-    dominant JPEG flavor in a real web corpus; ImageIO's stock reader
-    handles it (ImageIOHelper.java:270-327). Progressive encodes the
-    SAME quantized coefficients as baseline, so decode is
-    pixel-identical and the oracle parquet is the color-JPEG
-    expectation re-pinned under this gate's name."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import (
-        colorize_media, reencode_media)
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    color = reencode_media(colorize_media(media), "jpeg",
-                           jpeg_subsampling="420", jpeg_progressive=True)
-    return extract_spans(docs, color)
-
-
-def _ocr_spans_png_palette_media(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Span extraction over PALETTE + Adam7-INTERLACED PNG payloads
-    (indexed color through PLTE, 7-pass de-interlace; grey palettes
-    collapse back to 1-band). Lossless, so spans are byte-identical to
-    the raw run's — the oracle parquet pins that."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "png",
-                                              png_palette=True,
-                                              png_interlace=True))
-
-
-def _ocr_spans_tiff_bilevel_media(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """Span extraction over BILEVEL (1-bit) PackBits TIFF payloads —
-    the classic fax/scanned-document encoding. Threshold-128
-    binarization changes pixel values, so the oracle parquet is the
-    single-process twin of the same encode/decode chain
-    (scripts/gen_expected.py:_bilevel_span_rows), not the raw run."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "tiff",
-                                              compression="packbits",
-                                              tiff_bits=1))
-
-
-def _ocr_spans_tiff_g4_media(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Span extraction over CCITT Group 4 (T.6 MMR, TIFF compression 4)
-    payloads — THE archival scanned-document encoding: 2-D pass/
-    horizontal/vertical coding against the previous line, single
-    stateful strip, WhiteIsZero. G4 is lossless over the thresholded
-    image, so the expectation equals the bilevel gate's (same
-    single-process twin, scripts/gen_expected.py:_bilevel_span_rows)."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "tiff",
-                                              compression="g4",
-                                              tiff_bits=1))
-
-
-def _ocr_spans_pdf_g4_media(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """Span extraction over SCANNED-PDF payloads: pages embedded as
-    CCITT Group 4 fax streams (/CCITTFaxDecode, K=-1) — the archival
-    form real scanned PDFs use (~7x smaller than Flate on text pages).
-    Threshold-128 matches the bilevel TIFF chain, so the expectation is
-    the bilevel twin's (scripts/gen_expected.py:_bilevel_span_rows)."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "pdf",
-                                              pdf_ccitt=True))
+    return run
 
 
 def _pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,8 +272,7 @@ def _ivfpq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from org_dharts_dia_tesseract_spark.sources.tables import load_table
     emb = load_table(spark, sf_dir, "embeddings")
     label = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "data", "gen", f"ivfpq_index_{label}")
+    path = os.path.join(_HERE, "data", "gen", f"ivfpq_index_{label}")
     ivfpq_write_index(emb, path, n_lists=8, m=8, ks=16)
     qs = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
@@ -426,8 +316,7 @@ def _semdedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from org_dharts_dia_tesseract_spark.sources.tables import load_table
     emb = load_table(spark, sf_dir, "embeddings")
     label = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "data", "gen", f"semdedup_index_{label}")
+    path = os.path.join(_HERE, "data", "gen", f"semdedup_index_{label}")
     ivf_write_index(emb, path, n_lists=8)
     return semdedup_indexed(spark, path, threshold=0.35)
 
@@ -510,133 +399,49 @@ def _pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans, so a writer/parser bug on either side breaks the hash."""
     from org_dharts_dia_tesseract_spark.operators.pdf import (
         docs_to_pdf, pdf_extract_text)
-    docs, _ = _interleaved_corpus(spark, sf_dir, 200)
+    docs, _ = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
     return pdf_extract_text(docs_to_pdf(docs))
 
 
-def _ocr_spans_lang_hin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span extraction initialized with the SECOND installed language
-    pack ('hin': a different deterministic glyph atlas). Recognition
-    templates come from the loaded pack, so the output TEXT differs from
-    the 'eng' run — the init language spec changes recognition, not just
-    config state (TesseractHandle.init:399-459)."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, media, languages="hin")
+# The driver checks the first 50 entries of queries() each round, so
+# gate freshness is a rotation over the correctness records it leaves
+# behind (CORRECTNESS_r*.json: gate -> {*_match, err, ...} per round).
+_PINNED_HEAD = ("ocr_extract_spans",)
 
 
-# Driver-checked order: the correctness gate reads this dict in insertion
-# order and checks the FIRST 50 entries per round, so freshness is a
-# rotation policy. RULE (codified per the round-4 verdict): CHANGED code
-# outranks stale-but-unchanged code — an entry whose implementation
-# changed this round re-enters the window the same round, ahead of any
-# unchanged backlog. Round-5 window (the final one): (0) gates NEW this
-# round (never had a driver row); (1) entries whose round-4 rewrite was
-# never driver-verified (they sat at positions 51-52 of the round-4
-# list); (2) round-4-green entries whose code changed THIS round
-# (hash-spread PQ training sample; audio_features' on_error='drop'
-# policy; output-invariant at gate scale but re-verified anyway);
-# (3) the round-3-green backlog. The registry is
-# 105 entries, so 55 sit past the cap: 47 are round-4-green (1 round
-# stale) and 8 are round-3-green (2 rounds stale — ocr_training_corpus,
-# ocr_annotated_pages, ocr_word_font_attrs, rollup_orders_by_status,
-# ocr_tiff_merge, embedding_norms, order_gap_days,
-# distinct_users_per_type — chosen because
-# their code AND oracles are unchanged
-# since their last green and an in-window sibling exercises the same
-# code path: the extract/pipeline stages via ocr_extract_spans +
-# ocr_hierarchy, font attrs via ocr_hierarchy, rollup aggs via
-# cube_revenue_nation_status, the TIFF writer via the in-window tiff
-# decode gates' shared codec, the embeddings scan via the four
-# in-window ANN gates, lag/lead window fns via running_total_revenue +
-# moving_avg_value_1h, countDistinct aggs on the events scan via
-# events_pivot_counts).
-# Everything past the cap is green in scripts/check_gate.py locally;
-# COVERAGE.md carries the auditable ledger.
-_PRIORITY = [
-    # (0) new this round
-    "semdedup_kept",
-    "video_frame_features", "ivfpq_indexed_topk", "dedup_clusters_star",
-    "audio_features_drop_policy", "video_frame_features_drop_policy",
-    # (1) round-4 rewrites never driver-verified
-    "ntile_price_quartiles", "dedup_clusters",
-    # (2) round-4-green, code changed this round
-    "pq_topk_adc", "ivfpq_topk_probe_all", "audio_features",
-    # (3) round-3-green backlog (44 of 48; see header for the 4 left out)
-    "ocr_extract_spans", "ocr_hierarchy", "ocr_layout_only",
-    "html_main_content", "winnow_fingerprints", "pii_scrub",
-    "type_token_ratio", "tfidf_top_terms", "doc_fingerprint",
-    "similarity_topk_cosine",
-    "anti_join_idle_customers", "semi_join_active_parts",
-    "events_pivot_counts", "set_ops_buyers_vs_eventusers",
-    "range_join_error_after_signup", "minby_cheapest_part_per_brand",
-    "asof_join_last_click",
-    "embedding_near_dup_pairs", "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume", "cube_revenue_nation_status",
-    "running_total_revenue", "moving_avg_value_1h",
-    "above_nation_avg_balance", "monthly_revenue_timeseries",
-    "paragraph_dedup", "benchmark_contamination", "repetition_quality",
-    "line_dedup_global", "ocr_spans_bmp_media",
-    "ocr_spans_deflate_media", "ocr_spans_png_media",
-    "ocr_spans_gif_media", "ocr_spans_jpeg_media", "ocr_spans_jp2_media",
-    "ocr_spans_pdf_media", "pdf_text_extract", "ocr_spans_lang_hin",
-    "ocr_unlv_text",
-    # ---- 50-entry driver cap lands here ----
-    # semdedup_indexed (new in round 5, added after the window was
-    # allocated): its entire prune back half is the in-window
-    # semdedup_kept's `_semdedup_over_assigned` (bit-identical kept
-    # set), and its stored-index read path is in-window via
-    # ivfpq_indexed_topk — so the only never-driver-checked code is the
-    # two-line stored-assignment scan; pytest + local mirror cover it
-    "semdedup_indexed",
-    # bloom_novel_docs (new in round 5, added after the window was
-    # allocated): Bloom-filter incremental dedup with a pure ANSI-SQL
-    # oracle; its md5-chunk hash portability is driver-verified
-    # in-window by the minhash/simhash gates that use the identical
-    # conv(substr(md5)) trick, and pytest + the local mirror value-check
-    # the bitmap path (tests/test_bloom.py, 6 tests + auto parity)
-    "bloom_novel_docs",
-    # stratified_sample_docs (new in round 5, post-allocation): pure
-    # codegen CASE+filter over the same portable md5 hash the in-window
-    # minhash/simhash gates verify; pytest tests/test_sampling.py +
-    # auto-parity at sf0.001 + local mirror
-    "stratified_sample_docs",
-    # ocr_page_osd (round-3-green, unchanged) deferred to make room for
-    # semdedup_kept (new in round 5): OSD rides the same page-analysis
-    # kernels the in-window hierarchy/layout gates verify end-to-end
-    "ocr_page_osd",
-    # round-3-greens deferred to make room for changed/new round-5 code
-    # (audio_features' on_error='drop'; dedup_clusters_star): the TIFF
-    # merge writer is exercised in-window by the tiff decode gates'
-    # shared codec, and embedding_norms' trivial per-row norm rides the
-    # same embeddings scan that four in-window ANN gates traverse with
-    # far stronger checks
-    "ocr_tiff_merge", "embedding_norms",
-    # round-3-green entries deliberately deferred (2 rounds stale,
-    # rationale in the header comment)
-    "ocr_training_corpus", "ocr_annotated_pages", "ocr_word_font_attrs",
-    "rollup_orders_by_status",
-    # round-4-green tranche (1 round stale), stalest-first convention
-    "ocr_dpi_font_attrs", "ocr_spans_jpeg_color_media",
-    "ocr_spans_jpeg_prog_media", "ocr_spans_png_palette_media",
-    "ocr_spans_tiff_bilevel_media", "ocr_spans_tiff_g4_media",
-    "ocr_spans_pdf_g4_media", "audio_features",
-    "json_props_extract", "array_component_stats",
-    "all_word_confidences", "begin_final_flags", "box_text_output",
-    "box_union", "char_whitelist", "cms_hot_users", "dedup_exact",
-    "events_sessionize", "grouping_sets_revenue", "histogram_price_bins",
-    "hll_distinct_users", "hocr_output", "html_boilerplate_strip",
-    "ivf_topk_probe_all", "join_orders_customer", "lang_id_heuristic",
-    "lang_set_algebra", "mean_word_conf", "minhash_lsh_pairs",
-    "minhash_signatures", "ngram_jaccard_band_blocked",
-    "ngram_jaccard_pairs", "percent_rank_prices",
-    "price_quantiles_by_segment", "quality_score", "roi_filter",
-    "rollup_doc_text", "simhash32", "simhash_near_dup_pairs",
-    "spans_explode_seq", "sql_tpch_q6_forecast_revenue", "token_count",
-    "topk_orders_per_customer", "tpch_pricing_rollup",
-    "tpch_q10_returned_items", "tpch_q18_large_orders", "utf8_page_text",
-    "word_flags",
-]
+def _green(row: dict) -> bool:
+    return not row.get("err") and not any(
+        v is False for k, v in row.items() if k.endswith("_match"))
+
+
+def _driver_order(names: list[str], records: list[dict]) -> list[str]:
+    """Pinned head first, then gates never green on record, then gates by
+    the last round they were green, oldest first; ties keep registry
+    order. `records` are the per-round correctness rows, oldest first.
+    With a 50-entry window over ~110 gates this checks every gate at
+    least once in any 3 consecutive rounds."""
+    last_green: dict[str, int] = {}
+    for rnd, record in enumerate(records):
+        for name, row in record.items():
+            if _green(row):
+                last_green[name] = rnd
+    head = [n for n in _PINNED_HEAD if n in names]
+    rest = sorted((n for n in names if n not in head),
+                  key=lambda n: last_green.get(n, -1))
+    return head + rest
+
+
+def _correctness_records() -> list[dict]:
+    """CORRECTNESS_rNN.json next to this file, oldest round first;
+    unreadable files are skipped (no records -> registry order)."""
+    out = []
+    for path in sorted(glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json"))):
+        try:
+            with open(path) as f:
+                out.append(json.load(f))
+        except (OSError, ValueError):
+            continue
+    return out
 
 
 # Raster-pipeline gates: each is oracled by a parquet expectation table
@@ -653,17 +458,7 @@ _RASTER_GATES = {
     "ocr_annotated_pages": _ocr_annotated_pages,
     "ocr_word_font_attrs": _ocr_word_font_attrs,
     "ocr_dpi_font_attrs": _ocr_dpi_font_attrs,
-    "ocr_spans_bmp_media": _ocr_spans_bmp_media,
-    "ocr_spans_deflate_media": _ocr_spans_deflate_media,
-    "ocr_spans_png_media": _ocr_spans_png_media,
-    "ocr_spans_gif_media": _ocr_spans_gif_media,
-    "ocr_spans_jpeg_media": _ocr_spans_jpeg_media,
-    "ocr_spans_jpeg_color_media": _ocr_spans_jpeg_color_media,
-    "ocr_spans_jpeg_prog_media": _ocr_spans_jpeg_prog_media,
-    "ocr_spans_png_palette_media": _ocr_spans_png_palette_media,
-    "ocr_spans_tiff_bilevel_media": _ocr_spans_tiff_bilevel_media,
-    "ocr_spans_tiff_g4_media": _ocr_spans_tiff_g4_media,
-    "ocr_spans_pdf_g4_media": _ocr_spans_pdf_g4_media,
+    **{name: _span_gate(name) for name in _SPAN_GATES},
     "audio_features": _audio_features,
     "audio_features_drop_policy": _audio_features_drop_policy,
     "video_frame_features_drop_policy": _video_frame_features_drop_policy,
@@ -673,17 +468,13 @@ _RASTER_GATES = {
     "semdedup_kept": _semdedup_kept,
     "semdedup_indexed": _semdedup_indexed,
     "video_frame_features": _video_frame_features,
-    "ocr_spans_jp2_media": _ocr_spans_jp2_media,
-    "ocr_spans_pdf_media": _ocr_spans_pdf_media,
     "pdf_text_extract": _pdf_text_extract,
-    "ocr_spans_lang_hin": _ocr_spans_lang_hin,
     "ocr_unlv_text": _ocr_unlv_text,
     "ocr_page_osd": _ocr_page_osd,
     "ocr_tiff_merge": _ocr_tiff_merge,
 }
 
-_EXPECTED_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "tests", "expected")
+_EXPECTED_DIR = os.path.join(_HERE, "tests", "expected")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -691,9 +482,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from org_dharts_dia_tesseract_spark.queries import spark_queries
     out = dict(spark_queries())
     out.update(_RASTER_GATES)
-    ordered = {k: out[k] for k in _PRIORITY if k in out}
-    ordered.update({k: v for k, v in out.items() if k not in ordered})
-    return ordered
+    return {k: out[k] for k in _driver_order(list(out),
+                                             _correctness_records())}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,22 +1,22 @@
 """Benchmark entry: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS]; prints ONE JSON line and writes the same
+numbers as markdown to data/BENCH_latest.md.
 
-Also produces the north-rule scaling evidence (sandbox stand-in for N vs
-4N executors): the flagship OCR-extraction job runs at local[N] and
-local[4N] on the same input in fresh subprocesses, over several
-interleaved rounds with alternating run order; the reported efficiency =
-median over rounds of (thr_4N / thr_N) / 4. Results go to BENCH.md.
+The N-vs-4N scaling efficiency is read from the append-only ledger
+BENCH_scaling_attempts.jsonl: the median of its admitted rounds. Rounds
+are run only by scripts/scaling_attempt.py, one per invocation; this
+module holds the ledger helpers and the one-run worker it uses.
 
 Usage:
-    python bench.py                      # full bench + scaling + BENCH.md
-    python bench.py --worker local[8]    # internal: one scaling run
+    python bench.py                      # headline queries + ledger median
+    python bench.py --worker local[8]    # one scaling run (scaling_attempt)
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
+import statistics
 import sys
 import time
 
@@ -24,11 +24,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 GEN_DIR = os.path.join(REPO, "data", "gen")
-_PROC_T0 = time.time()
+REPORT = os.path.join(REPO, "data", "BENCH_latest.md")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") == "1"
 # scaling runs need enough work that compute dominates fixed overheads
 # (stage scheduling, Python worker spin-up) — else efficiency measures
 # the constant term, not the operator: a ~3 s constant against a ~10 s
@@ -44,9 +43,13 @@ WARMUP_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP_DOCS", "3000"))
 CAPACITY_MIN = float(os.environ.get("SPARK_GRAFT_BENCH_CAPACITY_MIN", "3.5"))
 # append-only cross-run ledger of scaling rounds: clean >=3.5x quota
 # windows open only every 5-30 min, so admitted rounds accumulate across
-# bench invocations and scripts/scaling_attempt.py runs; the reported
-# north-rule efficiency is the median over ALL admitted rounds on record
+# scripts/scaling_attempt.py runs; the reported north-rule efficiency is
+# the median over ALL admitted rounds on record
 LEDGER = os.path.join(REPO, "BENCH_scaling_attempts.jsonl")
+# N vs 4N is 2 vs 8: the shared host's CPU quota tops out near ~16-20
+# effective cores, so both sides fit under it and the ratio measures the
+# plan's scaling, not the quota ceiling
+PAIR = ["local[2]", "local[8]"]
 
 
 def _ledger_rows() -> list[dict]:
@@ -56,7 +59,7 @@ def _ledger_rows() -> list[dict]:
         return [json.loads(l) for l in f if l.strip()]
 
 
-def _ledger_append(rows: list[dict], source: str = "bench.py") -> None:
+def _ledger_append(rows: list[dict], source: str) -> None:
     if not rows:
         return
     stamp = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
@@ -67,22 +70,17 @@ def _ledger_append(rows: list[dict], source: str = "bench.py") -> None:
 
 
 def _ledger_admitted(pair: list[str]) -> list[dict]:
-    """Admitted rounds on record that are COMMENSURABLE with the current
+    """Measured rounds on record that are COMMENSURABLE with the current
     protocol: same master pair, same corpus size (rows predating the
     scale_docs stamp ran the long-standing 40000-doc default), and
     admission RE-DERIVED from the stored capacity against the current
     CAPACITY_MIN — a historical flag decided under a laxer threshold
     must not smuggle a round into a stricter run's median."""
-    out = []
-    for r in _ledger_rows():
-        if r.get("pair") != pair or "efficiency" not in r:
-            continue
-        if r.get("scale_docs", 40000) != SCALE_DOCS:
-            continue
-        cap = r.get("capacity")
-        if cap is not None and cap >= CAPACITY_MIN:
-            out.append(r)
-    return out
+    return [r for r in _ledger_rows()
+            if r.get("pair") == pair and "efficiency" in r
+            and r.get("scale_docs", 40000) == SCALE_DOCS
+            and r.get("capacity") is not None
+            and r["capacity"] >= CAPACITY_MIN]
 
 
 def _cores_of(master: str) -> int:
@@ -110,13 +108,13 @@ def _n_docs(spark) -> int:
     return load_table(spark, SF_DIR, "documents").count()
 
 
-def _run_flagship(spark, docs_path: str, media_path: str,
-                  salt: int) -> tuple[float, int]:
+def _run_flagship(spark, docs_path: str,
+                  media_path: str) -> tuple[float, int]:
     from org_dharts_dia_tesseract_spark.operators import extract_spans
     docs = spark.read.parquet(docs_path)
     media = spark.read.parquet(media_path)
     t0 = time.time()
-    n = extract_spans(docs, media, salt_partitions=salt).count()
+    n = extract_spans(docs, media).count()
     return time.time() - t0, n
 
 
@@ -131,26 +129,6 @@ def _probe_work(n):
     for _ in range(n):
         s += float((x @ x)[0, 0])
     return s
-
-
-def _machine_probe() -> dict:
-    """Aggregate numpy throughput at 1..32 single-threaded processes:
-    measures what parallel capacity the (shared, quota-throttled) sandbox
-    actually provides at run time — context for interpreting scaling
-    numbers and for picking an N whose 4N still fits under the quota."""
-    import multiprocessing as mp
-
-    out = {}
-    for procs in (1, 4, 8, 16, 32):
-        t0 = time.time()
-        with mp.Pool(procs) as p:
-            p.map(_probe_work, [200] * procs)
-        out[f"iters_per_sec_{procs}p"] = round(procs * 200 / (time.time() - t0), 1)
-    out["machine_parallel_ratio_16v4"] = round(
-        out["iters_per_sec_16p"] / out["iters_per_sec_4p"], 3)
-    out["machine_parallel_ratio_32v8"] = round(
-        out["iters_per_sec_32p"] / out["iters_per_sec_8p"], 3)
-    return out
 
 
 def _quick_capacity_ratio(lo_p: int, hi_p: int) -> float:
@@ -172,7 +150,7 @@ def _single_process_baseline(n_docs: int = 150) -> dict:
     """Single-process end-to-end docs/sec of the oracle engine — the
     stand-in for the reference's single-threaded wrapper (which publishes
     no numbers, BASELINE.md): same kernels, no Spark, one core. The
-    'matches-or-beats single-node throughput' comparison in BENCH.md is
+    'matches-or-beats single-node throughput' comparison in the report is
     distributed-vs-this."""
     from org_dharts_dia_tesseract_spark import datagen
     from org_dharts_dia_tesseract_spark.oracle.page import document_spans
@@ -197,12 +175,28 @@ def worker_main(master: str) -> None:
                       shuffle_partitions=max(cores, 8))
     warm_docs, warm_media = _corpus_paths(spark, WARMUP_DOCS)
     docs_path, media_path = _corpus_paths(spark, SCALE_DOCS)
-    _run_flagship(spark, warm_docs, warm_media, salt=None)       # warm-up
-    elapsed, n_spans = _run_flagship(spark, docs_path, media_path, salt=None)
+    _run_flagship(spark, warm_docs, warm_media)                  # warm-up
+    elapsed, n_spans = _run_flagship(spark, docs_path, media_path)
     print(json.dumps({"master": master, "elapsed": elapsed,
                       "docs_per_sec": SCALE_DOCS / elapsed,
                       "n_spans": n_spans}))
     spark.stop()
+
+
+def _ledger_scaling(pair: list[str]) -> dict:
+    """The scaling summary: median efficiency over the admitted rounds
+    on record for `pair`. With none admitted, publish NO efficiency — a
+    median over quota-rejected rounds measures the host's ceiling, not
+    the plan."""
+    eff = [r["efficiency"] for r in _ledger_admitted(pair)]
+    return {
+        "pair": pair,
+        "efficiency": round(statistics.median(eff), 3) if eff else None,
+        "efficiency_stat": ("median(admitted, cross-run ledger)" if eff
+                            else "no admitted rounds on record"),
+        "capacity_min": CAPACITY_MIN,
+        "admitted_efficiencies": eff,
+    }
 
 
 def main() -> None:
@@ -214,138 +208,19 @@ def main() -> None:
     n_docs = _n_docs(spark)
     docs_path, media_path = _corpus_paths(spark, n_docs)
 
-    queries: dict[str, float] = {}
-
-    t0 = time.time()
-    elapsed, n_spans = _run_flagship(spark, docs_path, media_path, salt=None)
-    queries["ocr_extract_spans"] = round(elapsed, 3)
-    docs_per_sec = n_docs / elapsed
+    elapsed, n_spans = _run_flagship(spark, docs_path, media_path)
+    queries = {"ocr_extract_spans": round(elapsed, 3)}
     single = _single_process_baseline()
-
-    if os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "1") == "1":
-        qs = spark_queries()
-        for name in ("tpch_pricing_rollup", "dedup_exact",
-                     "minhash_lsh_pairs", "simhash32", "events_sessionize",
-                     "similarity_topk_cosine", "quality_score",
-                     "topk_orders_per_customer", "tpch_q3_shipping_priority",
-                     "sql_tpch_q6_forecast_revenue", "ivf_topk_probe_all",
-                     "html_boilerplate_strip"):
-            t = time.time()
-            qs[name](spark, SF_DIR).count()
-            queries[name] = round(time.time() - t, 3)
+    qs = spark_queries()
+    for name in ("tpch_pricing_rollup", "dedup_exact", "minhash_lsh_pairs",
+                 "simhash32", "events_sessionize", "similarity_topk_cosine",
+                 "quality_score", "topk_orders_per_customer",
+                 "tpch_q3_shipping_priority", "sql_tpch_q6_forecast_revenue",
+                 "ivf_topk_probe_all", "html_boilerplate_strip"):
+        t = time.time()
+        qs[name](spark, SF_DIR).count()
+        queries[name] = round(time.time() - t, 3)
     spark.stop()
-
-    scaling = {}
-    if SCALING:
-        scaling["machine_probe"] = _machine_probe()
-        # N vs 4N defaults to 2 vs 8: the shared host's CPU quota tops out
-        # near ~16-20 effective cores (see probe), so both sides of a
-        # 2-vs-8 pair always fit under the quota and the ratio measures
-        # the PLAN's scaling, not the quota ceiling. The task brief allows
-        # any N/4N pair; override via SPARK_GRAFT_BENCH_MASTERS.
-        masters = os.environ.get(
-            "SPARK_GRAFT_BENCH_MASTERS", "local[2],local[8]").split(",")
-        lo, hi = sorted(masters, key=_cores_of)
-        ratio = max(_cores_of(hi) / _cores_of(lo), 1.0)
-        want = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "5"))
-        max_rounds = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_ROUNDS", "12"))
-        # wall-clock budget: never let scaling rounds push total bench
-        # time past the point where an external timeout could kill us
-        # before the JSON line prints
-        budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "1500"))
-        scaling["rounds"] = []
-        admitted: list[float] = []
-        measured = 0
-        rd = 0
-        # Quota-gated admission (round-3 verdict): each round is bracketed
-        # by an independent capacity probe (aggregate single-threaded-numpy
-        # throughput at lo vs hi procs, measured BEFORE the efficiency is
-        # known — admission can't peek at the outcome). A round counts
-        # toward the reported median only if min(pre, post) >= CAPACITY_MIN:
-        # when the shared host grants < ~3.5x compute at 4x procs, the
-        # ratio measures the quota ceiling, not the plan. Throttled moments
-        # cost one cheap probe (~4 s), not a full Spark round.
-        while (len(admitted) < want and rd < max_rounds
-               and (rd == 0 or time.time() - _PROC_T0 < budget_s)):
-            rd += 1
-            pre = _quick_capacity_ratio(_cores_of(lo), _cores_of(hi))
-            if pre < CAPACITY_MIN and measured > 0:
-                scaling["rounds"].append(
-                    {"capacity_pre": pre, "gated": True})
-                time.sleep(15)   # let the co-tenant burst pass
-                continue
-            row = {"capacity_pre": pre}
-            # alternate the within-round run order so a time-varying host
-            # quota inflates half the rounds and deflates the other half —
-            # the median over rounds then cancels the drift instead of
-            # riding it (round-1 ADVICE: sequential lo-then-hi runs let a
-            # rising quota masquerade as scaling)
-            order = (lo, hi) if measured % 2 == 0 else (hi, lo)
-            row["run_order"] = list(order)
-            for master in order:
-                r = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__),
-                     "--worker", master],
-                    capture_output=True, text=True, cwd=REPO,
-                    env={**os.environ, "SPARK_GRAFT_BENCH_SCALING": "0"})
-                lines = [l for l in (r.stdout or "").splitlines()
-                         if l.startswith("{")]
-                if lines:
-                    row[master] = json.loads(lines[-1])
-                else:
-                    row[master] = {"error": (r.stderr or "")[-400:]}
-            row["capacity_post"] = _quick_capacity_ratio(
-                _cores_of(lo), _cores_of(hi))
-            row["capacity"] = min(pre, row["capacity_post"])
-            measured += 1
-            if all("docs_per_sec" in row[m] for m in (lo, hi)):
-                row["efficiency"] = round(
-                    (row[hi]["docs_per_sec"] / row[lo]["docs_per_sec"])
-                    / ratio, 3)
-                row["admitted"] = row["capacity"] >= CAPACITY_MIN
-                if row["admitted"]:
-                    admitted.append(row["efficiency"])
-            scaling["rounds"].append(row)
-        # persist this run's measured rounds, then report the median over
-        # every admitted round ON RECORD (this run + prior runs +
-        # scripts/scaling_attempt.py) — admission is always decided by
-        # the pre/post capacity probe before the efficiency is known, so
-        # accumulating across runs adds samples, not selection
-        _ledger_append([{**r, "pair": [lo, hi], "scale_docs": SCALE_DOCS}
-                        for r in scaling["rounds"] if not r.get("gated")])
-        adm_rows = _ledger_admitted([lo, hi])
-        all_admitted = [r["efficiency"] for r in adm_rows]
-        scaling["pair"] = [lo, hi]
-        scaling["quota_limited"] = not admitted
-        scaling["capacity_min"] = CAPACITY_MIN
-        scaling["admitted_efficiencies"] = all_admitted
-        scaling["run_admitted_efficiencies"] = admitted
-        scaling["all_round_efficiencies"] = [
-            r.get("efficiency") for r in scaling["rounds"]]
-        scaling["round_capacities"] = [
-            r.get("capacity", r.get("capacity_pre"))
-            for r in scaling["rounds"]]
-        if all_admitted:
-            import statistics
-            med = round(statistics.median(all_admitted), 3)
-            scaling["efficiency"] = med
-            scaling["efficiency_stat"] = "median(admitted, cross-run ledger)"
-            # displayed lo/hi throughputs: the admitted on-record round
-            # (with per-side detail) nearest the median
-            cands = [r for r in adm_rows
-                     if isinstance(r.get(lo), dict)
-                     and "docs_per_sec" in r.get(lo, {})
-                     and isinstance(r.get(hi), dict)
-                     and "docs_per_sec" in r.get(hi, {})]
-            if cands:
-                rep = min(cands, key=lambda r: abs(r["efficiency"] - med))
-                scaling[lo], scaling[hi] = rep[lo], rep[hi]
-        else:
-            # no admitted round anywhere on record: publish NO efficiency
-            # number — a median over quota-rejected rounds measures the
-            # host's ceiling, not the plan (round-4 ADVICE)
-            scaling["efficiency"] = None
-            scaling["efficiency_stat"] = "no admitted rounds on record"
 
     result = {
         "metric": "total_headline_seconds",
@@ -355,83 +230,18 @@ def main() -> None:
         "sf": _sf_label(SF_DIR),
         "n_docs": n_docs,
         "n_spans": n_spans,
-        "ocr_docs_per_sec": round(docs_per_sec, 2),
+        "ocr_docs_per_sec": round(n_docs / elapsed, 2),
         "single_process_baseline": single,
-        "scaling": scaling,
+        "scaling": _ledger_scaling(PAIR),
     }
-
-    if _sf_label(SF_DIR) != "0.1":
-        # quick-check run at a non-headline sf (local iteration,
-        # verification): print the JSON line but never rewrite BENCH.md
-        # — it records the sf0.1 headline run, and an sf0.01 smoke run
-        # clobbering it is how the round-4 "dirty BENCH.md" regression
-        # happened
-        pass
-    elif os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "1") == "1":
-        if SCALING:
-            # the scaling section now derives from the cross-run ledger
-            # (admitted history survives any single quota-limited run),
-            # so a full rewrite is always safe — the round-3/4 "keep the
-            # admitted record" splice special-case is obsolete
-            _write_bench_md(result)
-        else:
-            _splice_md(result, keep="scaling")   # headline-only refresh
-    else:
-        _splice_md(result, keep="head")          # scaling-only refresh
-    # The printed line must stay SHORT: the driver keeps only a bounded
-    # tail of stdout, and round 3's full-detail line overflowed it
-    # ("parsed": null in BENCH_r03.json). Per-round detail lives in
-    # BENCH.md; the JSON line carries the summary numbers only.
-    slim = dict(result)
-    if scaling.get("rounds") is not None:
-        slim["scaling"] = {
-            k: scaling[k] for k in
-            ("pair", "efficiency", "efficiency_stat", "quota_limited",
-             "capacity_min", "admitted_efficiencies",
-             "run_admitted_efficiencies",
-             "all_round_efficiencies", "round_capacities")
-            if k in scaling}
-    print(json.dumps(slim))
-
-
-def _splice_md(result: dict, keep: str) -> None:
-    """Partial refresh of BENCH.md: rewrite one half, preserve the other
-    (head = everything before '## Scaling'; scaling = that section).
-    The latest measurement always wins — BENCH.md is 'latest run', never
-    best-of (round-1 ADVICE: one-way ratchets turn a noisy measurement
-    into cherry-picking). The scaling section itself derives from the
-    append-only cross-run ledger, so no overwrite can lose admitted
-    history. With no existing file, write the full report from this
-    run."""
-    path = os.path.join(REPO, "BENCH.md")
-    old = None
-    if os.path.exists(path):
-        with open(path) as f:
-            text = f.read()
-        parts = text.split("\n## Scaling", 1)
-        if keep == "scaling" and len(parts) == 2:
-            old = "\n## Scaling" + parts[1].rstrip() + "\n"
-        elif keep == "head":
-            old = parts[0].rstrip()
-    sc = result.get("scaling") or {}
-    if (keep == "head" and old is not None
-            and sc.get("efficiency") is None):
-        return   # no admitted rounds on record; keep the committed file
     _write_bench_md(result)
-    if old is None:
-        return   # fresh checkout: the full report from this run stands
-    with open(path) as f:
-        parts = f.read().split("\n## Scaling", 1)
-    if keep == "scaling":
-        with open(path, "w") as f:
-            f.write(parts[0].rstrip() + "\n" + old)
-    elif len(parts) == 2:
-        with open(path, "w") as f:
-            f.write(old + "\n\n## Scaling" + parts[1])
+    # the line stays short: the driver keeps only a bounded stdout tail
+    print(json.dumps(result))
 
 
 def _write_bench_md(result: dict) -> None:
-    sc = result.get("scaling") or {}
+    sc = result["scaling"]
+    base = result["single_process_baseline"]["docs_per_sec_1core"]
     lines = [
         "# BENCH — measured results (latest run)",
         "",
@@ -441,98 +251,33 @@ def _write_bench_md(result: dict) -> None:
         f"**{result['ocr_docs_per_sec']} docs/sec** on local[{CPUS}] "
         f"({result['queries']['ocr_extract_spans']} s)",
         f"- single-process oracle baseline (the reference-wrapper analog — "
-        f"the reference itself publishes no numbers): "
-        f"{result['single_process_baseline']['docs_per_sec_1core']} docs/sec "
-        f"on 1 core -> distributed beats single-node by "
-        f"**{result['ocr_docs_per_sec'] / result['single_process_baseline']['docs_per_sec_1core']:.1f}x** "
-        "at equal data",
+        f"the reference itself publishes no numbers): {base} docs/sec on "
+        f"1 core -> distributed beats single-node by "
+        f"**{result['ocr_docs_per_sec'] / base:.1f}x** at equal data",
         "",
         "## Headline query times (sec)",
         "",
     ]
     lines += [f"- {k}: {v}" for k, v in result["queries"].items()]
-    if sc.get("efficiency") is not None:
-        probe = sc.get("machine_probe", {})
-        lo, hi = sc["pair"]
-        if isinstance(sc.get(lo), dict) and isinstance(sc.get(hi), dict):
-            side = [
-                f"- {lo}:  {sc[lo]['docs_per_sec']:.2f} docs/sec "
-                f"({sc[lo]['elapsed']:.2f} s)",
-                f"- {hi}: {sc[hi]['docs_per_sec']:.2f} docs/sec "
-                f"({sc[hi]['elapsed']:.2f} s)",
-            ]
-        else:
-            side = ["- (per-side throughput detail unavailable for the "
-                    "median admitted round)"]
-        lines += [
-            "",
-            "## Scaling (north-rule evidence: N vs 4N parallelism, same input)",
-            "",
-            *side,
-            f"- scaling efficiency (thr_4N/thr_N)/4 = **{sc['efficiency']}** "
-            f"(target >= 0.8; median of ALL QUOTA-ADMITTED rounds on "
-            f"record in BENCH_scaling_attempts.jsonl: "
-            f"{sc.get('admitted_efficiencies')} — a round is admitted iff "
-            f"an independent pre+post capacity probe shows the host "
-            f"granted >= {sc.get('capacity_min')}x compute at 4x procs "
-            f"while it ran, decided before the efficiency is computed; "
-            f"this run measured {sc.get('all_round_efficiencies')} at "
-            f"capacities {sc.get('round_capacities')}; "
-            f"this_run_quota_limited={sc.get('quota_limited')})",
-            "",
-            f"{lo} vs {hi} is the measured N-vs-4N pair: this sandbox is "
-            "a shared host whose CPU quota tops out near ~16-20 effective "
-            "cores (the single-threaded-numpy probe below measures the "
-            "capacity that existed at run time), so both sides of the "
-            "pair must fit under the quota for the ratio to measure the "
-            "plan rather than the ceiling. Within each round the two runs "
-            "execute sequentially; alternating their order across rounds "
-            "makes quota drift inflate half the rounds and deflate the "
-            "other half, which the median cancels. The pipeline's own "
-            "parallelism (64+ independent scan partitions, no payload "
-            "shuffles, single lean exchange) is visible in "
-            "`df.explain('formatted')` and scales with whatever cores the "
-            "scheduler actually grants.",
-            "",
-            "- machine probe (iters/s @p single-threaded procs): "
-            + ", ".join(f"{probe[k]} @{k.split('_')[-1]}"
-                        for k in sorted(probe, key=lambda s: len(s))
-                        if k.startswith("iters")),
-            f"- probe parallel ratio 16v4: "
-            f"{probe.get('machine_parallel_ratio_16v4', '?')} (4.0 = "
-            "unthrottled), 32v8: "
-            f"{probe.get('machine_parallel_ratio_32v8', '?')}",
-        ]
-        # cross-run ledger summary: the judge's at-a-glance view of how
-        # selective the admission rule actually is (attempts vs admitted)
-        rows = [r for r in _ledger_rows() if r.get("pair") == sc["pair"]
-                and r.get("scale_docs", 40000) == SCALE_DOCS]
-        meas = [r for r in rows if "efficiency" in r]
-        adm = sorted(r["efficiency"] for r in meas
-                     if r.get("capacity", 0) >= CAPACITY_MIN)
-        if adm:
-            import statistics
-            lines += [
-                "",
-                "## Scaling-attempt ledger summary "
-                "(BENCH_scaling_attempts.jsonl, all runs)",
-                "",
-                f"- attempts on record: {len(rows)} "
-                f"({len(meas)} ran to a measured efficiency, "
-                f"{len(rows) - len(meas)} capacity-gated before running); "
-                f"admitted by the pre-registered >= {CAPACITY_MIN}x "
-                f"capacity rule: {len(adm)}; measured-but-rejected: "
-                f"{len(meas) - len(adm)}",
-                f"- admitted efficiencies: median "
-                f"**{statistics.median(adm):.3f}**, min {min(adm):.3f}, "
-                f"max {max(adm):.3f}, n={len(adm)} "
-                f"(>= 0.8 in {sum(1 for e in adm if e >= 0.8)}/{len(adm)})",
-                f"- admission never sees the efficiency value: a round is "
-                f"admitted or rejected purely on the independent pre+post "
-                f"capacity probes, so accumulating rounds adds samples, "
-                f"not selection.",
-            ]
-    with open(os.path.join(REPO, "BENCH.md"), "w") as f:
+    lo, hi = sc["pair"]
+    adm = sorted(sc["admitted_efficiencies"])
+    lines += [
+        "",
+        f"## Scaling ({lo} vs {hi}, same input; "
+        "BENCH_scaling_attempts.jsonl, rounds from "
+        "scripts/scaling_attempt.py)",
+        "",
+        f"- rounds admitted by the pre-registered >= "
+        f"{sc['capacity_min']}x capacity rule: {len(adm)}",
+    ]
+    if adm:
+        lines.append(
+            f"- scaling efficiency (thr_4N/thr_N)/4: median "
+            f"**{sc['efficiency']:.3f}**, min {adm[0]:.3f}, max "
+            f"{adm[-1]:.3f}, n={len(adm)} (>= 0.8 in "
+            f"{sum(1 for e in adm if e >= 0.8)}/{len(adm)})")
+    os.makedirs(os.path.dirname(REPORT), exist_ok=True)
+    with open(REPORT, "w") as f:
         f.write("\n".join(lines) + "\n")
 
 

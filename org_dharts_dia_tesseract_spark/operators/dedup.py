@@ -437,6 +437,9 @@ def bloom_hash_positions(col: Column, m_bits: int,
     if m_bits < 8 or m_bits & 7:
         raise ValueError(f"m_bits must be a positive multiple of 8, "
                          f"got {m_bits}")
+    if m_bits > 1 << 31:
+        # positions are cast to int32; past 2^31 they would wrap negative
+        raise ValueError(f"m_bits must be at most 2^31, got {m_bits}")
     return [(F.conv(F.substring(F.md5(col), 1 + 8 * j, 8), 16, 10)
              .cast("bigint") % m_bits).cast("int").alias(f"_bp{j}")
             for j in range(k)]

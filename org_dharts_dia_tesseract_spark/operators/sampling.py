@@ -24,7 +24,10 @@ def hash_uniform(col: Column, salt: str = "") -> Column:
     """Deterministic uniform in [0, 1) from a salted md5 of `col`.
     SQL twin: CAST('0x' || substr(md5('<salt>:' || CAST(x AS VARCHAR)),
     1, 8) AS BIGINT) / 4294967296.0 — bit-identical doubles (integer
-    numerator < 2^32, power-of-two denominator)."""
+    numerator < 2^32, power-of-two denominator). `salt` may not contain
+    ':', or (salt='a:b', id='c') and (salt='a', id='b:c') would collide."""
+    if ":" in salt:
+        raise ValueError(f"salt must not contain ':', got {salt!r}")
     h = F.md5(F.concat(F.lit(f"{salt}:"), col.cast("string")))
     return (F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint")
             / F.lit(_U32))

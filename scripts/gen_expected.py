@@ -37,6 +37,8 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from __spark_entry__ import (_MEDIA_DOC_CAP, _PIPELINE_DOC_CAP,
+                             _SPAN_GATES)
 from org_dharts_dia_tesseract_spark.codecs_img import encode_tiff_multipage
 from org_dharts_dia_tesseract_spark.datagen import (doc_spans_for,
                                                     media_row_for)
@@ -49,9 +51,9 @@ from org_dharts_dia_tesseract_spark.oracle.page import (analyze_page, resolve_pp
 
 EXPECTED_DIR = os.path.join(REPO, "tests", "expected")
 
-# doc budgets — MUST mirror __spark_entry__._PIPELINE_DOC_CAP et al.
-CAP_PIPELINE = 400
-CAP_MEDIA = 200
+# doc budgets: the registry's, so the twins cover the docs the gates read
+CAP_PIPELINE = _PIPELINE_DOC_CAP
+CAP_MEDIA = _MEDIA_DOC_CAP
 CAP_ANNOTATED = 100
 
 _ANNOT_LEVELS = ("BLOCK", "TEXTLINE", "WORD")
@@ -476,31 +478,23 @@ def main() -> None:
         print(f"{name}: {table.num_rows} rows", flush=True)
 
     spans = _span_rows(corpus, CAP_PIPELINE)
-    cut = f"doc-{CAP_MEDIA:08d}"
-    spans_200 = [r for r in spans if r["doc_id"] < cut]
     write("ocr_extract_spans", _spans_table(spans))
-    write("ocr_spans_bmp_media", _spans_table(spans_200))
-    write("ocr_spans_deflate_media", _spans_table(spans_200))
-    write("ocr_spans_png_media", _spans_table(spans_200))
-    write("ocr_spans_gif_media", _spans_table(spans_200))
-    write("ocr_spans_jpeg_media", _spans_table(spans_200))
-    write("ocr_spans_jpeg_color_media",
-          _spans_table(_color_jpeg_span_rows(corpus, CAP_MEDIA)))
-    write("ocr_spans_jpeg_prog_media",
-          _spans_table(_color_jpeg_span_rows(corpus, CAP_MEDIA,
-                                             progressive=True)))
-    write("ocr_spans_png_palette_media", _spans_table(spans_200))
-    bilevel = _spans_table(_bilevel_span_rows(corpus, CAP_MEDIA))
-    write("ocr_spans_tiff_bilevel_media", bilevel)
-    # G4 TIFF and CCITT-in-PDF are lossless over the same thresholded
-    # image -> same expectation
-    write("ocr_spans_tiff_g4_media", bilevel)
-    write("ocr_spans_pdf_g4_media", bilevel)
-    write("ocr_spans_jp2_media", _spans_table(spans_200))
-    write("ocr_spans_pdf_media", _spans_table(spans_200))
+    # span gates: each row of the registry's table names its twin
+    twins = {
+        "raw": lambda: [r for r in spans
+                        if r["doc_id"] < f"doc-{CAP_MEDIA:08d}"],
+        "color": lambda: _color_jpeg_span_rows(corpus, CAP_MEDIA),
+        "color_prog": lambda: _color_jpeg_span_rows(corpus, CAP_MEDIA,
+                                                    progressive=True),
+        "bilevel": lambda: _bilevel_span_rows(corpus, CAP_MEDIA),
+        "hin": lambda: _span_rows(corpus, CAP_MEDIA, langs=("hin",)),
+    }
+    tables: dict[str, pa.Table] = {}
+    for name, gate in _SPAN_GATES.items():
+        if gate.expect not in tables:
+            tables[gate.expect] = _spans_table(twins[gate.expect]())
+        write(name, tables[gate.expect])
     write("pdf_text_extract", _pdf_text_table(corpus, CAP_MEDIA))
-    write("ocr_spans_lang_hin",
-          _spans_table(_span_rows(corpus, CAP_MEDIA, langs=("hin",))))
     hier = list(_hierarchy_rows(corpus, CAP_PIPELINE))
     write("ocr_hierarchy", _hierarchy_table(hier))
     write("ocr_layout_only", _layout_table(corpus, CAP_PIPELINE))

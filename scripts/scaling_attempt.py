@@ -1,16 +1,14 @@
-"""One quota-gated scaling round, appended to BENCH_scaling_attempts.jsonl.
+"""One quota-gated N-vs-4N scaling round, appended to
+BENCH_scaling_attempts.jsonl.
 
-Round-4 verdict: the admitted-efficiency set must grow to >= 3 rounds, and
-admitted rounds accumulate ACROSS attempts (the host's CPU quota opens a
-clean >= 3.5x window only every 5-30 min, so a single bench invocation
-rarely lands 3). This script is the accumulator: it runs the SAME
-pre-registered protocol as bench.py's scaling loop — pre-probe, lo/hi
-flagship runs in fresh JVMs, post-probe, admission iff
-min(pre, post) >= bench.CAPACITY_MIN, decided before the efficiency is
-seen — and appends ONE JSON line per measured round to the shared
-append-only ledger (bench.LEDGER / bench._ledger_append, so the row
-format and location have a single definition). bench.py folds the
-ledger's commensurable admitted efficiencies into the reported median.
+This is the only code that runs scaling rounds. The host's CPU quota
+opens a clean >= 3.5x window only every 5-30 min, so admitted rounds
+accumulate across invocations. The protocol is pre-registered: a capacity
+pre-probe, the lo/hi flagship runs in fresh JVMs (`bench.py --worker`),
+a post-probe, and admission iff min(pre, post) >= bench.CAPACITY_MIN,
+decided before the efficiency is seen. Each measured round is ONE JSON
+line in the shared append-only ledger (bench.LEDGER /
+bench._ledger_append); bench.py reports the median of its admitted rounds.
 
 Usage:
     python scripts/scaling_attempt.py            # probe; run iff clean
@@ -24,7 +22,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -33,16 +30,16 @@ import bench  # noqa: E402
 
 
 def run_round(force: bool = False) -> dict:
-    lo, hi = "local[2]", "local[8]"
+    lo, hi = bench.PAIR
     ratio = bench._cores_of(hi) / bench._cores_of(lo)
     pre = bench._quick_capacity_ratio(bench._cores_of(lo), bench._cores_of(hi))
-    row: dict = {"capacity_pre": pre, "pair": [lo, hi],
+    row: dict = {"capacity_pre": pre, "pair": bench.PAIR,
                  "scale_docs": bench.SCALE_DOCS}
     if pre < bench.CAPACITY_MIN and not force:
         row["gated"] = True
         return row
     # alternate run order across recorded (measured) rounds so quota drift
-    # inflates half and deflates the other half — same rule as bench.py
+    # inflates half and deflates the other half, which the median cancels
     measured = sum(1 for r in bench._ledger_rows() if not r.get("gated"))
     order = (lo, hi) if measured % 2 == 0 else (hi, lo)
     row["run_order"] = list(order)
@@ -50,8 +47,7 @@ def run_round(force: bool = False) -> dict:
         r = subprocess.run(
             [sys.executable, os.path.join(REPO, "bench.py"),
              "--worker", master],
-            capture_output=True, text=True, cwd=REPO,
-            env={**os.environ, "SPARK_GRAFT_BENCH_SCALING": "0"})
+            capture_output=True, text=True, cwd=REPO)
         lines = [l for l in (r.stdout or "").splitlines()
                  if l.startswith("{")]
         row[master] = (json.loads(lines[-1]) if lines
@@ -71,8 +67,7 @@ def main() -> None:
     row = run_round(force=force)
     if not row.get("gated"):
         bench._ledger_append([row], source="scaling_attempt.py")
-    adm = [r["efficiency"]
-           for r in bench._ledger_admitted(["local[2]", "local[8]"])]
+    adm = [r["efficiency"] for r in bench._ledger_admitted(bench.PAIR)]
     print(json.dumps({"round": row.get("efficiency"),
                       "admitted": row.get("admitted"),
                       "gated": row.get("gated", False),

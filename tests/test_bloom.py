@@ -72,6 +72,17 @@ class TestBloomBuild:
         with pytest.raises(ValueError):
             bloom_filter_novel(corpus, b"\x00" * 10, m_bits=M)
 
+    def test_m_bits_capped_at_int32_range(self, spark, corpus):
+        """Positions are cast to int32: m_bits past 2^31 would wrap them
+        negative, so it is rejected; 2^31 itself stays non-negative."""
+        with pytest.raises(ValueError):
+            bloom_hash_positions(F.col("text"), (1 << 31) + 8)
+        m = 1 << 31
+        rows = corpus.select("text", *bloom_hash_positions(
+            F.col("text"), m)).limit(20).collect()
+        for r in rows:
+            assert [r[f"_bp{j}"] for j in range(K)] == _positions(r["text"], m)
+
 
 class TestBloomPlan:
     def test_filter_side_no_join_no_exchange(self, spark, corpus):

@@ -49,6 +49,16 @@ class TestHashSample:
         with pytest.raises(ValueError):
             hash_sample(corpus, 1.5)
 
+    def test_salt_with_colon_rejected(self, spark, corpus):
+        """'<salt>:<id>' is the hashed string, so a ':' in the salt would
+        let (salt='a:b', id='c') and (salt='a', id='b:c') collide."""
+        with pytest.raises(ValueError):
+            hash_uniform(F.col("doc_id"), "a:b")
+        with pytest.raises(ValueError):
+            hash_sample(corpus, 0.5, salt="train:1")
+        with pytest.raises(ValueError):
+            stratified_sample(corpus, {"src0": 0.5}, salt=":")
+
 
 class TestStratified:
     def test_rates_apply_per_stratum(self, spark, corpus):
