@@ -2,24 +2,24 @@
 
 Rebuilds the examples layer's rendered output (BlockAnalysis draws block
 outlines onto a JPEG, /root/reference/examples/.../BlockAnalysis.java:99;
-golden outputs res/examples/output/*.jpg). No codecs here: output is the
-same raw row-major uint8 payload convention as input, with box outlines
-burned in at configurable grey levels per level.
+golden outputs res/examples/output/*.jpg). Output is a raw row-major
+uint8 payload (any input codec decodes through oracle.page.decode_payload)
+with box outlines burned in at configurable grey levels per level.
 
-Implementation: one `mapInPandas` stage joining hierarchy rows back to
-their page payload; outlines are drawn with numpy slice assignments
-(vectorized, no per-pixel Python).
+Implementation: one per-row Arrow stage (stage.row_stage) over hierarchy
+boxes joined back to their page payload; outlines are drawn with numpy
+slice assignments (vectorized, no per-pixel Python).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..oracle.page import decode_payload
+from .stage import row_stage
 
 LEVEL_GREY = {"BLOCK": 0, "PARA": 64, "TEXTLINE": 96, "WORD": 128}
 
@@ -57,25 +57,13 @@ def annotate_pages(hierarchy: DataFrame, media: DataFrame,
              .agg(F.collect_list(
                  F.struct("level", "left", "top", "right", "bottom"))
                  .alias("boxes")))
-    rows = media.join(boxes, "media_ref")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in ANNOTATED_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = np.frombuffer(r.payload, dtype=np.uint8).copy()
-                shape = ((r.height, r.width) if r.bands == 1
-                         else (r.height, r.width, r.bands))
-                img = img.reshape(shape)
-                for bx in r.boxes:
-                    draw_box(img, bx["left"], bx["top"], bx["right"],
-                             bx["bottom"], LEVEL_GREY.get(bx["level"], 0))
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["bands"].append(r.bands)
-                out["payload"].append(img.tobytes())
-                out["n_boxes"].append(len(r.boxes))
-            yield pd.DataFrame(out)
+    def emit(r):
+        img = np.array(decode_payload(r.payload, r.width, r.height, r.bands))
+        for bx in r.boxes:
+            draw_box(img, bx["left"], bx["top"], bx["right"], bx["bottom"],
+                     LEVEL_GREY.get(bx["level"], 0))
+        yield (r.media_ref, r.width, r.height, r.bands, img.tobytes(),
+               len(r.boxes))
 
-    return rows.mapInPandas(run, ANNOTATED_SCHEMA)
+    return row_stage(media.join(boxes, "media_ref"), ANNOTATED_SCHEMA, emit)

@@ -3,8 +3,8 @@
 Spark-first rebuild of the reference's analyze/recognize flows
 (ImageAnalyzerFactory.analyzeLayout:472-488 / recognize:491-507, both
 delegating to the native engine): the per-page kernel is the same numpy
-code the oracle runs (oracle.analyze_page), executed as a vectorized
-`mapInPandas` stage over Arrow batches; everything around it — explode,
+code the oracle runs (oracle.analyze_page), executed per page by the
+shared Arrow stage (stage.row_stage); everything around it — explode,
 join, skew defusal, ordering, assembly — is declarative DataFrame API so
 Catalyst plans it (predicate pushdown, AQE shuffle sizing, broadcast
 selection).
@@ -17,9 +17,7 @@ Scale design (SURVEY sections 3.4 / 4.3):
   shuffled join on media_ref — a per-page key, so partitioning is
   uniform regardless of how image-heavy any document is. That per-page
   fan-out IS the skew defusal of the north rule: a 128-image skew-tail
-  doc lands on ~128 different tasks by construction. `salt_partitions`
-  forces an extra (payload-shuffling) repartition on (doc_id, offset)
-  and exists for media-size-skew pathologies only — leave it None.
+  doc lands on ~128 different tasks by construction.
 - raster payload columns are dropped inside the OCR stage; nothing heavy
   crosses the final shuffle.
 - the final ordering is an explicit window over (offset, sub) — Spark has
@@ -29,13 +27,15 @@ Scale design (SURVEY sections 3.4 / 4.3):
 
 from __future__ import annotations
 
-import time
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.config import resolve_languages
+from ..oracle.page import (analyze_page, decode_payload, detect_page_osd,
+                           resolve_ppi)
+from ..oracle.segment import TEXT_KINDS
+from .stage import row_stage
 
 SPAN_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -104,88 +104,25 @@ HIERARCHY_SCHEMA = T.StructType([
 ])
 
 
-def _exploded(documents: DataFrame) -> DataFrame:
-    """documents -> one row per span (S2 posexplode mapping)."""
-    return documents.select(
-        "doc_id",
-        F.explode("spans").alias("span"),
-    ).select(
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+def _spans(documents: DataFrame, kind: str) -> DataFrame:
+    """documents -> one row per span of `kind` (S2 posexplode mapping)."""
+    return (documents.select("doc_id", F.explode("spans").alias("s"))
+            .where(F.col("s.kind") == kind)
+            .select("doc_id", "s.offset", "s.kind", "s.text", "s.media_ref"))
 
 
-def _joined_images(documents: DataFrame, media: DataFrame,
-                   broadcast_media: bool) -> DataFrame:
-    img = _exploded(documents).where(F.col("kind") == "image") \
-        .select("doc_id", "offset", "media_ref")
-    m = F.broadcast(media) if broadcast_media else media
-    return img.join(m, "media_ref")
+def image_spans(documents: DataFrame) -> DataFrame:
+    """documents -> (doc_id, offset, media_ref), one row per image span."""
+    return _spans(documents, "image").select("doc_id", "offset", "media_ref")
 
 
-def _page_deadline(timeout_ms: int | None):
-    """Context manager: a soft per-page time budget via SIGALRM — the
-    analog of the reference's per-page timeout (TessAPI.java:464-481
-    recognizeWithTimeout takes timeout_millisec). Fires TimeoutError
-    inside the page's decode/analyze, which the on_error policy turns
-    into a dead-letter span, so one pathological page cannot stall a
-    task until the Spark task reaper. Soft: a single long-running numpy
-    kernel is only interrupted when Python regains control; signals are
-    per-process-main-thread, so outside one (exotic worker setups) the
-    budget degrades to no-op rather than crashing."""
-    import contextlib
-    import signal
-
-    @contextlib.contextmanager
-    def cm():
-        if not timeout_ms:
-            yield
-            return
-        armed = [True]
-
-        def on_alarm(signum, frame):
-            if armed[0]:              # a late fire (work already done,
-                raise TimeoutError(   # cleanup underway) must not raise
-                    f"page exceeded time budget of {timeout_ms} ms")
-        try:
-            old = signal.signal(signal.SIGALRM, on_alarm)
-        except ValueError:            # not the main thread: no budget
-            yield
-            return
-        # ITIMER_REAL is process-wide: remember any timer another owner
-        # had running so exit RESTORES it (minus the time we consumed,
-        # on the monotonic clock — wall time can step under NTP)
-        # instead of silently cancelling it
-        t0 = time.monotonic()
-        prev_value, prev_interval = signal.setitimer(
-            signal.ITIMER_REAL, timeout_ms / 1000.0)
-        try:
-            yield
-            # the body completed: disarm BEFORE any cleanup so an alarm
-            # landing between the last body statement and setitimer(0)
-            # is ignored instead of misreporting a finished page as a
-            # timeout (the raise window shrinks to ~one bytecode)
-            armed[0] = False
-        finally:
-            armed[0] = False
-            signal.setitimer(signal.ITIMER_REAL, 0)
-            # foreign handler FIRST, only then re-arm the foreign timer:
-            # an expired-or-nearly-expired foreign timer must fire into
-            # ITS handler, not into on_alarm (which, disarmed, would
-            # swallow the signal and lose the foreign alarm for good)
-            signal.signal(signal.SIGALRM, old)
-            if prev_value > 0:
-                remaining = prev_value - (time.monotonic() - t0)
-                signal.setitimer(signal.ITIMER_REAL,
-                                 max(remaining, 1e-6), prev_interval)
-    return cm
+def image_pages(documents: DataFrame, media: DataFrame) -> DataFrame:
+    """Image spans joined 1:1 to their media rows on media_ref: the
+    per-page input of every page operator."""
+    return image_spans(documents).join(media, "media_ref")
 
 
-def _ocr_stage(rows: DataFrame, psm: str, salt_partitions: int | None,
-               on_error: str = "fail",
+def _ocr_stage(rows: DataFrame, psm: str, on_error: str = "fail",
                langs: tuple[str, ...] = ("eng",),
                page_timeout_ms: int | None = None) -> DataFrame:
     """Image-span rows (with payload) -> block-level sub-spans.
@@ -195,47 +132,28 @@ def _ocr_stage(rows: DataFrame, psm: str, salt_partitions: int | None,
     text=<reason>) for an undecodable/unanalyzable page so one corrupt
     blob cannot kill a 10^12-doc job and the failure stays visible,
     countable, and deterministic — no side channel. page_timeout_ms is
-    the per-page budget (see _page_deadline)."""
+    the per-page budget (see stage._deadline)."""
     if on_error not in ("fail", "dead-letter"):
         raise ValueError(f"on_error must be 'fail' or 'dead-letter', "
                          f"got {on_error!r}")
-    if salt_partitions:
-        rows = rows.repartition(salt_partitions, "doc_id", "offset")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..oracle.page import analyze_page, decode_payload
-        from ..oracle.segment import TEXT_KINDS
-        deadline = _page_deadline(page_timeout_ms)
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in SPAN_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                try:
-                    with deadline():
-                        img = decode_payload(r.payload, r.width, r.height,
-                                             r.bands)
-                        res = analyze_page(img, psm=psm, langs=langs)
-                except Exception as e:   # noqa: BLE001 — policy boundary
-                    if on_error == "fail":
-                        raise
-                    out["doc_id"].append(r.doc_id)
-                    out["offset"].append(r.offset)
-                    out["sub"].append(0)
-                    out["kind"].append("error")
-                    out["text"].append(f"{type(e).__name__}: {e}"[:200])
-                    out["media_ref"].append(r.media_ref)
-                    continue
-                for i, blk in enumerate(res.blocks):
-                    is_text = blk.block_type in TEXT_KINDS
-                    out["doc_id"].append(r.doc_id)
-                    out["offset"].append(r.offset)
-                    out["sub"].append(i)
-                    out["kind"].append("text" if is_text else "image")
-                    out["text"].append(blk.text if is_text else None)
-                    out["media_ref"].append(
-                        r.media_ref if is_text else f"{r.media_ref}#b{i}")
-            yield pd.DataFrame(out)
+    def emit(r):
+        img = decode_payload(r.payload, r.width, r.height, r.bands)
+        res = analyze_page(img, psm=psm, langs=langs)
+        for i, blk in enumerate(res.blocks):
+            if blk.block_type in TEXT_KINDS:
+                yield r.doc_id, r.offset, i, "text", blk.text, r.media_ref
+            else:
+                yield (r.doc_id, r.offset, i, "image", None,
+                       f"{r.media_ref}#b{i}")
 
-    return rows.mapInPandas(run, SPAN_SCHEMA)
+    def dead_letter(r, e):
+        return (r.doc_id, r.offset, 0, "error",
+                f"{type(e).__name__}: {e}"[:200], r.media_ref)
+
+    return row_stage(rows, SPAN_SCHEMA, emit,
+                     error_row=None if on_error == "fail" else dead_letter,
+                     timeout_ms=page_timeout_ms)
 
 
 def audit_dangling_media(documents: DataFrame,
@@ -248,15 +166,12 @@ def audit_dangling_media(documents: DataFrame,
     (mirrors the reference failing a document whose image cannot be
     read, ImageIOHelper.readImageData). Lean plan: only media_ref is
     scanned on the media side (payload column pruned), anti join."""
-    img = _exploded(documents).where(F.col("kind") == "image") \
-        .select("doc_id", "offset", "media_ref")
-    return img.join(media.select("media_ref"), "media_ref", "left_anti")
+    return image_spans(documents).join(media.select("media_ref"),
+                                       "media_ref", "left_anti")
 
 
 def extract_spans(documents: DataFrame, media: DataFrame, *,
                   psm: str = "AUTO",
-                  broadcast_media: bool = False,
-                  salt_partitions: int | None = None,
                   on_error: str = "fail",
                   languages: str = "eng",
                   page_timeout_ms: int | None = None) -> DataFrame:
@@ -269,15 +184,12 @@ def extract_spans(documents: DataFrame, media: DataFrame, *,
     changes recognized text, not just config state. page_timeout_ms is
     the per-page soft budget (TessAPI.java:464-481 timeout_millisec
     analog) — pair with on_error='dead-letter'."""
-    from ..functions.config import resolve_languages
     langs = resolve_languages(languages)
-    text_spans = (_exploded(documents)
-                  .where(F.col("kind") == "text")
-                  .select("doc_id", "offset", F.lit(0).alias("sub"),
-                          "kind", "text", "media_ref"))
-    ocr_spans = _ocr_stage(
-        _joined_images(documents, media, broadcast_media),
-        psm, salt_partitions, on_error, langs, page_timeout_ms)
+    text_spans = _spans(documents, "text").select(
+        "doc_id", "offset", F.lit(0).alias("sub"), "kind", "text",
+        "media_ref")
+    ocr_spans = _ocr_stage(image_pages(documents, media), psm, on_error,
+                           langs, page_timeout_ms)
     all_spans = text_spans.unionByName(ocr_spans)
     w = Window.partitionBy("doc_id").orderBy("offset", "sub")
     return (all_spans
@@ -295,38 +207,24 @@ OSD_SCHEMA = T.StructType([
 ])
 
 
-def page_osd(documents: DataFrame, media: DataFrame, *,
-             broadcast_media: bool = False) -> DataFrame:
+def page_osd(documents: DataFrame, media: DataFrame) -> DataFrame:
     """Page-level orientation & script detection (PSM OSD_ONLY /
     AUTO_OSD): one row per page with the rotation-confidence argmax OSD
     verdict. Same partitioning as the OCR stage (per-page rows; payloads
     never shuffle)."""
-    rows = _joined_images(documents, media, broadcast_media)
+    def emit(r):
+        osd = detect_page_osd(
+            decode_payload(r.payload, r.width, r.height, r.bands))
+        yield (r.doc_id, r.media_ref, osd["orientation"],
+               osd["rotation_degrees"], osd["osd_confidence"], osd["script"])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..oracle.page import decode_payload, detect_page_osd
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in OSD_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode_payload(r.payload, r.width, r.height, r.bands)
-                osd = detect_page_osd(img)
-                out["doc_id"].append(r.doc_id)
-                out["media_ref"].append(r.media_ref)
-                out["orientation"].append(osd["orientation"])
-                out["rotation_degrees"].append(osd["rotation_degrees"])
-                out["osd_confidence"].append(osd["osd_confidence"])
-                out["script"].append(osd["script"])
-            yield pd.DataFrame(out)
-
-    return rows.mapInPandas(run, OSD_SCHEMA)
+    return row_stage(image_pages(documents, media), OSD_SCHEMA, emit)
 
 
 def analyze_documents(documents: DataFrame, media: DataFrame, *,
                       psm: str = "AUTO", recognize: bool = True,
                       whitelist: str | None = None,
                       roi: tuple[int, int, int, int] | None = None,
-                      broadcast_media: bool = False,
-                      salt_partitions: int | None = None,
                       languages: str = "eng") -> DataFrame:
     """Full hierarchy materialization: one row per node per page
     (the DataFrame form of the native PAGE_RES tree — SURVEY section 1.6).
@@ -336,52 +234,19 @@ def analyze_documents(documents: DataFrame, media: DataFrame, *,
     coordinates preserved); languages is the init language spec (resolved
     pack order feeds the recognition templates).
     """
-    from ..functions.config import resolve_languages
     langs = resolve_languages(languages)
-    rows = _joined_images(documents, media, broadcast_media)
-    if salt_partitions:
-        rows = rows.repartition(salt_partitions, "doc_id", "offset")
+    node_cols = HIERARCHY_SCHEMA.fieldNames()[3:]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..oracle.page import analyze_page, decode_payload, resolve_ppi
-        for pdf in batches:
-            frames = []
-            for r in pdf.itertuples(index=False):
-                img = decode_payload(r.payload, r.width, r.height, r.bands)
-                # S5 resolution chain: embedded metadata > dpi column >
-                # screen default (ImageIOHelper.readImageData:379-407);
-                # feeds font_pointsize (points = px * 72 / ppi)
-                ppi = resolve_ppi(r.payload, getattr(r, "dpi", None))
-                res = analyze_page(img, psm=psm, recognize=recognize,
-                                   whitelist=whitelist, roi=roi,
-                                   langs=langs, ppi=ppi)
-                rws = res.rows()
-                if not rws:
-                    continue
-                f = pd.DataFrame(rws)
-                f.insert(0, "doc_id", r.doc_id)
-                f.insert(1, "media_ref", r.media_ref)
-                f.insert(2, "offset", r.offset)
-                for c in ("baseline_x1", "baseline_y1",
-                          "baseline_x2", "baseline_y2"):
-                    f[c] = f[c].astype("Int32")
-                for c in ("font_pointsize", "font_id"):
-                    f[c] = f[c].astype("Int32")
-                for c in ("font_bold", "font_italic", "font_underlined",
-                          "font_monospace", "font_serif", "font_smallcaps",
-                          "is_dictionary_word", "is_numeric_word",
-                          "is_subscript", "is_superscript", "is_dropcap"):
-                    f[c] = f[c].astype("boolean")
-                frames.append(f)
-            if frames:
-                import warnings
-                with warnings.catch_warnings():
-                    # pandas deprecates letting all-NA object columns
-                    # (e.g. a page whose every node lacks text) vote on
-                    # the concat result dtype; either behavior is fine
-                    # here because Arrow casts to HIERARCHY_SCHEMA below
-                    warnings.simplefilter("ignore", FutureWarning)
-                    cat = pd.concat(frames, ignore_index=True)
-                yield cat[[f.name for f in HIERARCHY_SCHEMA]]
+    def emit(r):
+        img = decode_payload(r.payload, r.width, r.height, r.bands)
+        # S5 resolution chain: embedded metadata > dpi column > screen
+        # default (ImageIOHelper.readImageData:379-407); feeds
+        # font_pointsize (points = px * 72 / ppi)
+        ppi = resolve_ppi(r.payload, getattr(r, "dpi", None))
+        res = analyze_page(img, psm=psm, recognize=recognize,
+                           whitelist=whitelist, roi=roi, langs=langs, ppi=ppi)
+        for row in res.rows():
+            yield (r.doc_id, r.media_ref, r.offset,
+                   *(row[c] for c in node_cols))
 
-    return rows.mapInPandas(run, HIERARCHY_SCHEMA)
+    return row_stage(image_pages(documents, media), HIERARCHY_SCHEMA, emit)

@@ -1,28 +1,23 @@
 """Multimodal column operators: decode / feature-extract / resize /
 frame-sample over opaque binary payloads with typed metadata.
 
-Decode paths: raw row-major uint8 (zero-copy byte-buffer handoff, the
-reference's ImageIOHelper.convertImageData:249-257) plus REAL pure-numpy
-codecs for BMP / PNM / TIFF (PackBits + DEFLATE strips) / PNG (zlib
-IDAT, all 5 scanline filters) / GIF (real LZW both directions,
-interlace) / baseline greyscale JPEG (real Huffman+DCT; lossy, but the
-binarization margin keeps spans identical) / JPEG 2000 (MQ coder +
-EBCOT + reversible 5/3 wavelet; lossless) — the reference's FULL
-ImageIO decode surface (ImageIOHelper.java:263-327), every format a
-real coder. PDF — which the reference rejects
-(ImageIOHelper.java:278-282 throws) — is decoded too (codecs_pdf:
-FlateDecode/DCTDecode image XObjects), since the north rule names
-PDF parse as a main-content-extraction tier. The Spark-side plumbing
-(schema, batching, partitioning) is identical across all paths and
-fully tested.
+Every payload decodes through `oracle.page.decode_payload`: raw
+row-major uint8 (zero-copy byte-buffer handoff, the reference's
+ImageIOHelper.convertImageData:249-257) plus REAL pure-numpy codecs for
+BMP / PNM / TIFF (PackBits + DEFLATE strips) / PNG (zlib IDAT, all 5
+scanline filters) / GIF (real LZW both directions, interlace) / JPEG
+(real Huffman+DCT; lossy, but the binarization margin keeps spans
+identical) / JPEG 2000 (MQ coder + EBCOT + reversible 5/3 wavelet;
+lossless) — the reference's FULL ImageIO decode surface
+(ImageIOHelper.java:263-327), every format a real coder. PDF — which
+the reference rejects (ImageIOHelper.java:278-282 throws) — is decoded
+too (codecs_pdf: FlateDecode/DCTDecode image XObjects), since the north
+rule names PDF parse as a main-content-extraction tier.
 
-All operators are `mapInPandas` stages over Arrow batches; nothing is
-per-row Python.
+All operators run on the shared per-row Arrow stage (stage.row_stage).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -30,56 +25,36 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codecs_img import DECODERS, ENCODERS, sniff_codec
+from ..codecs_avi import avi_frame_features, decode_avi_mjpeg
+from ..codecs_img import ENCODERS, decode_tiff_pages, sniff_codec
+from ..codecs_wav import wav_features
+from ..datagen import colorize_page
+from ..oracle.binarize import otsu_binarize, to_grey
+from ..oracle.cc import connected_components
+from ..oracle.page import decode_payload
+from .extract import image_spans
+from .stage import row_stage
 
-SUPPORTED_RAW = "raw"   # row-major uint8, length == width*height*bands
 CODECS_REAL = ("bmp", "pnm", "tiff", "png", "gif", "jpeg", "jp2", "pdf")
-CODECS_STUBBED: tuple[str, ...] = ()   # every reference format is real now
 DEFAULT_DPI = 96
 
+_MEDIA_COLS = ("media_ref", "width", "height", "bands", "payload")
 
-def decode(payload: bytes, width: int, height: int, bands: int,
-           codec: str = SUPPORTED_RAW) -> np.ndarray:
-    if codec == SUPPORTED_RAW:
-        arr = np.frombuffer(payload, dtype=np.uint8)
-        shape = (height, width) if bands == 1 else (height, width, bands)
-        return arr.reshape(shape)
-    if codec in CODECS_REAL:
-        img = DECODERS[codec](payload)
-        got_bands = 1 if img.ndim == 2 else img.shape[2]
-        if img.shape[:2] != (height, width) or got_bands != bands:
-            raise ValueError(
-                f"{codec} payload decodes to {img.shape}, metadata says "
-                f"({height}, {width}) x {bands} bands")
-        return img
-    if codec in CODECS_STUBBED:     # empty since round 3; kept as the
-        raise NotImplementedError(  # documented gate for future formats
-            f"codec {codec!r} requires an imaging library absent from "
-            "this environment")
-    raise ValueError(f"unsupported media codec {codec!r}")
+
+def _raster(r) -> np.ndarray:
+    return decode_payload(r.payload, r.width, r.height, r.bands)
 
 
 def colorize_media(media: DataFrame) -> DataFrame:
     """Deterministic synthetic colorization of grey pages (datagen.
     colorize_page): raw 1-band payloads become raw 3-band RGB rows with
     real chroma content — the input surface for the color codec paths
-    (e.g. the 4:2:0 color-JPEG gate). mapInPandas per Arrow batch."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..datagen import colorize_page
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode(r.payload, r.width, r.height, r.bands)
-                rgb = colorize_page(img)
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["bands"].append(3)
-                out["payload"].append(rgb.tobytes())
-            yield pd.DataFrame(out)
+    (e.g. the 4:2:0 color-JPEG gate)."""
+    def emit(r):
+        yield (r.media_ref, r.width, r.height, 3,
+               colorize_page(_raster(r)).tobytes())
 
-    return media.select("media_ref", "width", "height", "bands",
-                        "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return row_stage(media.select(*_MEDIA_COLS), RESIZE_SCHEMA, emit)
 
 
 def reencode_media(media: DataFrame, codec: str,
@@ -94,8 +69,8 @@ def reencode_media(media: DataFrame, codec: str,
                    pdf_ccitt: bool = False) -> DataFrame:
     """Re-encode raw media payloads with a real codec —
     the inverse of decode, used as a sink format and to drive the codec
-    decode path end-to-end through the OCR pipeline. mapInPandas per
-    Arrow batch; width/height/bands metadata is preserved. For tiff,
+    decode path end-to-end through the OCR pipeline. width/height/bands
+    metadata is preserved. For tiff,
     `compression` picks 'none' | 'packbits' | 'deflate' and `tiff_bits`
     the bits-per-sample (1 = bilevel threshold-128, the fax/scan
     staple). For jpeg, `jpeg_progressive` emits an SOF2 scan script;
@@ -122,37 +97,27 @@ def reencode_media(media: DataFrame, codec: str,
             raise ValueError(f"{flag} applies to codec {owner!r}, "
                              f"not {codec!r}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode(r.payload, r.width, r.height, r.bands)
-                if codec == "tiff":
-                    enc = ENCODERS["tiff"](img, packbits, compression,
-                                           dpi=dpi, bits=tiff_bits)
-                elif codec == "jpeg":
-                    enc = ENCODERS["jpeg"](img, dpi=dpi,
-                                           subsampling=jpeg_subsampling,
-                                           progressive=jpeg_progressive)
-                elif codec == "png" and (png_palette or png_interlace):
-                    enc = ENCODERS["png"](img, dpi=dpi,
-                                          palette=png_palette,
-                                          interlace=png_interlace)
-                elif codec == "pdf" and pdf_ccitt:
-                    enc = ENCODERS["pdf"](img, ccitt=True)
-                elif dpi:
-                    enc = ENCODERS[codec](img, dpi=dpi)
-                else:
-                    enc = ENCODERS[codec](img)
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["bands"].append(r.bands)
-                out["payload"].append(enc)
-            yield pd.DataFrame(out)
+    def emit(r):
+        img = _raster(r)
+        if codec == "tiff":
+            enc = ENCODERS["tiff"](img, packbits, compression,
+                                   dpi=dpi, bits=tiff_bits)
+        elif codec == "jpeg":
+            enc = ENCODERS["jpeg"](img, dpi=dpi,
+                                   subsampling=jpeg_subsampling,
+                                   progressive=jpeg_progressive)
+        elif codec == "png" and (png_palette or png_interlace):
+            enc = ENCODERS["png"](img, dpi=dpi, palette=png_palette,
+                                  interlace=png_interlace)
+        elif codec == "pdf" and pdf_ccitt:
+            enc = ENCODERS["pdf"](img, ccitt=True)
+        elif dpi:
+            enc = ENCODERS[codec](img, dpi=dpi)
+        else:
+            enc = ENCODERS[codec](img)
+        yield r.media_ref, r.width, r.height, r.bands, enc
 
-    return media.select("media_ref", "width", "height", "bands",
-                        "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return row_stage(media.select(*_MEDIA_COLS), RESIZE_SCHEMA, emit)
 
 
 FEATURES_SCHEMA = T.StructType([
@@ -171,26 +136,15 @@ def extract_features(media: DataFrame) -> DataFrame:
     """Per-image features (decode -> binarize -> CC count) with the DPI
     fallback of S5 (ImageIOHelper.readImageData:379-407: missing metadata
     -> default resolution)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..oracle.binarize import otsu_binarize, to_grey
-        from ..oracle.cc import connected_components
-        for pdf in batches:
-            out = {f.name: [] for f in FEATURES_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode(r.payload, r.width, r.height, r.bands)
-                grey = to_grey(img)
-                ink = otsu_binarize(grey)
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dpi"].append(int(r.dpi) if pd.notna(r.dpi) else DEFAULT_DPI)
-                out["ink_ratio"].append(float(ink.mean()))
-                out["mean_luma"].append(float(grey.mean()))
-                out["row_profile_var"].append(float(np.var(ink.sum(axis=1))))
-                out["n_components"].append(len(connected_components(ink)))
-            yield pd.DataFrame(out)
+    def emit(r):
+        grey = to_grey(_raster(r))
+        ink = otsu_binarize(grey)
+        yield (r.media_ref, r.width, r.height,
+               int(r.dpi) if pd.notna(r.dpi) else DEFAULT_DPI,
+               float(ink.mean()), float(grey.mean()),
+               float(np.var(ink.sum(axis=1))), len(connected_components(ink)))
 
-    return media.mapInPandas(run, FEATURES_SCHEMA)
+    return row_stage(media, FEATURES_SCHEMA, emit)
 
 
 RESIZE_SCHEMA = T.StructType([
@@ -204,22 +158,13 @@ RESIZE_SCHEMA = T.StructType([
 
 def resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize (pure numpy fancy indexing — vectorized)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode(r.payload, r.width, r.height, r.bands)
-                ys = (np.arange(out_h) * r.height // out_h)
-                xs = (np.arange(out_w) * r.width // out_w)
-                res = img[np.ix_(ys, xs)] if r.bands == 1 else img[np.ix_(ys, xs)]
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(out_w)
-                out["height"].append(out_h)
-                out["bands"].append(r.bands)
-                out["payload"].append(res.tobytes())
-            yield pd.DataFrame(out)
+    def emit(r):
+        ys = np.arange(out_h) * r.height // out_h
+        xs = np.arange(out_w) * r.width // out_w
+        yield (r.media_ref, out_w, out_h, r.bands,
+               _raster(r)[np.ix_(ys, xs)].tobytes())
 
-    return media.mapInPandas(run, RESIZE_SCHEMA)
+    return row_stage(media, RESIZE_SCHEMA, emit)
 
 
 def split_tiff_pages(media: DataFrame) -> DataFrame:
@@ -227,37 +172,22 @@ def split_tiff_pages(media: DataFrame) -> DataFrame:
     1 file -> N page files, index=-1 => all): rows whose payload is a
     multi-page TIFF explode into one row per page (media_ref gains a
     '#p<i>' suffix, payload becomes the page's raw raster); every other
-    row passes through unchanged. mapInPandas, 1:N within the batch."""
-    from ..codecs_img import decode_tiff_pages, sniff_codec
+    row passes through unchanged (1:N per row)."""
+    def emit(r):
+        pay = bytes(r.payload)
+        if (len(pay) != r.width * r.height * r.bands
+                and sniff_codec(pay[:8]) == "tiff"):
+            pages = decode_tiff_pages(pay)
+            if len(pages) > 1:
+                for i, img in enumerate(pages):
+                    h, w = img.shape[:2]
+                    yield (f"{r.media_ref}#p{i}", w, h,
+                           1 if img.ndim == 2 else img.shape[2],
+                           img.tobytes())
+                return
+        yield r.media_ref, r.width, r.height, r.bands, r.payload
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
-
-            def emit(ref, w, h, b, payload):
-                out["media_ref"].append(ref)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bands"].append(b)
-                out["payload"].append(payload)
-
-            for r in pdf.itertuples(index=False):
-                pay = bytes(r.payload)
-                if (len(pay) != r.width * r.height * r.bands
-                        and sniff_codec(pay[:8]) == "tiff"):
-                    pages = decode_tiff_pages(pay)
-                    if len(pages) > 1:
-                        for i, img in enumerate(pages):
-                            h, w = img.shape[:2]
-                            b = 1 if img.ndim == 2 else img.shape[2]
-                            emit(f"{r.media_ref}#p{i}", w, h, b,
-                                 img.tobytes())
-                        continue
-                emit(r.media_ref, r.width, r.height, r.bands, r.payload)
-            yield pd.DataFrame(out)
-
-    return media.select("media_ref", "width", "height", "bands",
-                        "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return row_stage(media.select(*_MEDIA_COLS), RESIZE_SCHEMA, emit)
 
 
 def frame_sample(documents: DataFrame, media: DataFrame,
@@ -267,13 +197,9 @@ def frame_sample(documents: DataFrame, media: DataFrame,
     keep every k-th frame per document. Pure DataFrame ops — the filter is
     on the span position, pushed before the media join so dropped frames'
     payloads are never read."""
-    frames = (documents
-              .select("doc_id", F.explode("spans").alias("s"))
-              .where(F.col("s.kind") == "image")
-              .select("doc_id", F.col("s.offset").alias("offset"),
-                      F.col("s.media_ref").alias("media_ref")))
     w = Window.partitionBy("doc_id").orderBy("offset")
-    frames = frames.withColumn("frame_idx", F.row_number().over(w) - 1)
+    frames = image_spans(documents).withColumn(
+        "frame_idx", F.row_number().over(w) - 1)
     kept = frames.where(F.col("frame_idx") % every_k == 0)
     return kept.join(media, "media_ref")
 
@@ -296,18 +222,41 @@ VIDEO_FEATURES_SCHEMA = T.StructType([
 last_decode_error_observation = None
 
 
-def _with_drop_observation(df: DataFrame) -> DataFrame:
-    """Attach a dropped-payload counter to a feature stage that emits
-    `__err` marker rows (1 per undecodable payload), then filter the
-    markers out. The count survives in
-    `last_decode_error_observation.get` after any action — corrupt
-    clips at 10^12 rows are a data-quality fact to surface, not an
-    exception to die on (same policy as extract's dead-letter spans and
-    the LSH cap's dropped-bucket observation)."""
+def _payload_features(df: DataFrame, ref_col: str, schema: T.StructType,
+                      features_of, on_error: str) -> DataFrame:
+    """One row per feature dict in `features_of(payload)`, keyed by the
+    row's `ref_col`. on_error: 'fail' raises on an undecodable payload
+    (strict); 'drop' skips it and counts it in
+    `last_decode_error_observation` — corrupt clips at 10^12 rows are a
+    data-quality fact to surface, not an exception to die on (same
+    policy as extract's dead-letter spans and the LSH cap's
+    dropped-bucket observation)."""
     from pyspark.sql import Observation
     global last_decode_error_observation
+    if on_error not in ("fail", "drop"):
+        raise ValueError(f"on_error must be 'fail' or 'drop', "
+                         f"got {on_error!r}")
+    cols = schema.fieldNames()[1:]
+    drop = on_error == "drop"
+    ok = (0,) if drop else ()
+
+    def emit(r):
+        ref = getattr(r, ref_col)
+        return [(ref, *(f[c] for c in cols), *ok)
+                for f in features_of(r.payload)]
+
+    def marker(r, e):         # one `__err` row per undecodable payload
+        return (getattr(r, ref_col), *[0] * len(cols), 1)
+
+    if drop:
+        schema = T.StructType(
+            list(schema) + [T.StructField("__err", T.IntegerType(), False)])
+    feats = row_stage(df.select(ref_col, "payload"), schema, emit,
+                      error_row=marker if drop else None)
+    if not drop:
+        return feats
     obs = Observation()
-    observed = df.observe(
+    observed = feats.observe(
         obs, F.sum(F.col("__err")).alias("dropped_payloads"))
     last_decode_error_observation = obs
     return observed.where(F.col("__err") == 0).drop("__err")
@@ -321,48 +270,17 @@ def video_frame_features(video: DataFrame, every_k: int = 1,
     + its JPEG frames with the from-scratch codecs (codecs_avi ->
     codecs_img), keep every k-th frame, emit luma/ink stats — the same
     avi_frame_features kernel the single-process oracle runs, so
-    values are bit-identical. One narrow mapInPandas stage, zero
-    shuffles; payloads never leave their scan partition — the shape
-    that holds at 100 TB of video.
+    values are bit-identical. One narrow stage, zero shuffles; payloads
+    never leave their scan partition — the shape that holds at 100 TB
+    of video.
 
     on_error: 'fail' raises on an undecodable payload (strict,
     default); 'drop' skips it and counts it in
     `last_decode_error_observation` — one corrupt clip must not kill a
     10^12-row job, and the skip count stays visible."""
-    if on_error not in ("fail", "drop"):
-        raise ValueError(f"on_error must be 'fail' or 'drop', "
-                         f"got {on_error!r}")
-    schema = VIDEO_FEATURES_SCHEMA
-    if on_error == "drop":
-        schema = T.StructType(
-            list(VIDEO_FEATURES_SCHEMA)
-            + [T.StructField("__err", T.IntegerType(), False)])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs_avi import avi_frame_features
-        for pdf in batches:
-            out = {f.name: [] for f in schema}
-            for r in pdf.itertuples(index=False):
-                try:
-                    feats_rows = avi_frame_features(r.payload, every_k)
-                except Exception:   # noqa: BLE001 — policy boundary
-                    if on_error == "fail":
-                        raise
-                    out["video_ref"].append(r.video_ref)
-                    for f in VIDEO_FEATURES_SCHEMA[1:]:
-                        out[f.name].append(0)
-                    out["__err"].append(1)
-                    continue
-                for feats in feats_rows:
-                    out["video_ref"].append(r.video_ref)
-                    for k, v in feats.items():
-                        out[k].append(v)
-                    if on_error == "drop":
-                        out["__err"].append(0)
-            yield pd.DataFrame(out)
-
-    feats = video.select("video_ref", "payload").mapInPandas(run, schema)
-    return _with_drop_observation(feats) if on_error == "drop" else feats
+    return _payload_features(
+        video, "video_ref", VIDEO_FEATURES_SCHEMA,
+        lambda payload: avi_frame_features(payload, every_k), on_error)
 
 
 def split_video_frames(media: DataFrame, every_k: int = 1) -> DataFrame:
@@ -370,37 +288,23 @@ def split_video_frames(media: DataFrame, every_k: int = 1) -> DataFrame:
     whose payload sniffs as RIFF/AVI explode into one RAW row per
     sampled frame (media_ref gains '#f<i>', payload becomes the decoded
     raster), ready for the OCR/feature stages; every other row passes
-    through unchanged. mapInPandas, 1:N within the batch."""
+    through unchanged (1:N per row)."""
     if every_k < 1:       # fail on the driver, not deep in an executor
         raise ValueError("every_k must be >= 1")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs_avi import decode_avi_mjpeg
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
+    def emit(r):
+        pay = bytes(r.payload)
+        if pay[:4] == b"RIFF" and pay[8:12] == b"AVI ":
+            frames, w, h, _fps = decode_avi_mjpeg(pay)
+            for i, img in enumerate(frames):
+                if i % every_k == 0:
+                    yield (f"{r.media_ref}#f{i}", w, h,
+                           1 if img.ndim == 2 else img.shape[2],
+                           img.tobytes())
+            return
+        yield r.media_ref, r.width, r.height, r.bands, r.payload
 
-            def emit(ref, w, h, b, payload):
-                out["media_ref"].append(ref)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bands"].append(b)
-                out["payload"].append(payload)
-
-            for r in pdf.itertuples(index=False):
-                pay = bytes(r.payload)
-                if pay[:4] == b"RIFF" and pay[8:12] == b"AVI ":
-                    frames, w, h, _fps = decode_avi_mjpeg(pay)
-                    for i, img in enumerate(frames):
-                        if i % every_k:
-                            continue
-                        b = 1 if img.ndim == 2 else img.shape[2]
-                        emit(f"{r.media_ref}#f{i}", w, h, b, img.tobytes())
-                    continue
-                emit(r.media_ref, r.width, r.height, r.bands, r.payload)
-            yield pd.DataFrame(out)
-
-    return media.select("media_ref", "width", "height", "bands",
-                        "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return row_stage(media.select(*_MEDIA_COLS), RESIZE_SCHEMA, emit)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType([
@@ -420,42 +324,12 @@ def audio_features(audio: DataFrame, on_error: str = "fail") -> DataFrame:
     tier): per-clip duration / RMS / peak / zero-crossing-rate via the
     from-scratch RIFF/PCM codec (codecs_wav.wav_features — the same
     kernel the single-process oracle runs, so values are bit-identical).
-    One narrow mapInPandas stage, zero shuffles; payloads never leave
-    their scan partition — the shape that holds at 100 TB of audio.
+    One narrow stage, zero shuffles; payloads never leave their scan
+    partition — the shape that holds at 100 TB of audio.
 
     on_error: 'fail' raises on an undecodable payload (strict,
     default); 'drop' skips it and counts it in
     `last_decode_error_observation` (see video_frame_features)."""
-    if on_error not in ("fail", "drop"):
-        raise ValueError(f"on_error must be 'fail' or 'drop', "
-                         f"got {on_error!r}")
-    schema = AUDIO_FEATURES_SCHEMA
-    if on_error == "drop":
-        schema = T.StructType(
-            list(AUDIO_FEATURES_SCHEMA)
-            + [T.StructField("__err", T.IntegerType(), False)])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs_wav import wav_features
-        for pdf in batches:
-            out = {f.name: [] for f in schema}
-            for r in pdf.itertuples(index=False):
-                try:
-                    feats = wav_features(r.payload)
-                except Exception:   # noqa: BLE001 — policy boundary
-                    if on_error == "fail":
-                        raise
-                    out["audio_ref"].append(r.audio_ref)
-                    for f in AUDIO_FEATURES_SCHEMA[1:]:
-                        out[f.name].append(0)
-                    out["__err"].append(1)
-                    continue
-                out["audio_ref"].append(r.audio_ref)
-                for k, v in feats.items():
-                    out[k].append(v)
-                if on_error == "drop":
-                    out["__err"].append(0)
-            yield pd.DataFrame(out)
-
-    feats = audio.select("audio_ref", "payload").mapInPandas(run, schema)
-    return _with_drop_observation(feats) if on_error == "drop" else feats
+    return _payload_features(audio, "audio_ref", AUDIO_FEATURES_SCHEMA,
+                             lambda payload: [wav_features(payload)],
+                             on_error)

@@ -5,21 +5,21 @@ tier; the reference itself rejects PDF media
 (``ImageIOHelper.java:278-282``), so this surface goes beyond it with
 the from-scratch stdlib codec (``codecs_pdf``). Scanned-page PDFs
 (image XObjects) route through the ordinary media decode path instead —
-``multimodal.decode`` dispatches on the ``%PDF-`` magic like any other
+``oracle.page.decode_payload`` sniffs the ``%PDF-`` magic like any other
 codec.
 
-Both operators are ``mapInPandas`` Arrow-batch stages: zero shuffles,
-one narrow map per stage — at 100 TB each task touches only its own
-input split.
+Both operators run on the shared per-row Arrow stage
+(``stage.row_stage``): zero shuffles, one narrow map per stage — at
+100 TB each task touches only its own input split.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..codecs_pdf import encode_pdf_text, extract_pdf_text
+from .stage import row_stage
 
 PDF_DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -45,33 +45,18 @@ def _text_lines(spans) -> list[str]:
 def docs_to_pdf(docs: DataFrame) -> DataFrame:
     """Sink: render each interleaved document's text layer as a
     single-page Tj-stream PDF blob (one row per doc)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs_pdf import encode_pdf_text
-        for pdf in batches:
-            out = {"doc_id": [], "n_lines": [], "pdf": []}
-            for r in pdf.itertuples(index=False):
-                lines = _text_lines(r.spans)
-                out["doc_id"].append(r.doc_id)
-                out["n_lines"].append(len(lines))
-                out["pdf"].append(encode_pdf_text(lines))
-            yield pd.DataFrame(out)
+    def emit(r):
+        lines = _text_lines(r.spans)
+        yield r.doc_id, len(lines), encode_pdf_text(lines)
 
-    return docs.select("doc_id", "spans").mapInPandas(run, PDF_DOC_SCHEMA)
+    return row_stage(docs.select("doc_id", "spans"), PDF_DOC_SCHEMA, emit)
 
 
 def pdf_extract_text(pdfs: DataFrame, pdf_col: str = "pdf") -> DataFrame:
     """Source: parse the text layer (Tj/TJ show strings) back out of PDF
     payloads — one row per document, lines joined with newlines."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs_pdf import extract_pdf_text
-        for pdf in batches:
-            out = {"doc_id": [], "n_lines": [], "text": []}
-            for r in pdf.itertuples(index=False):
-                lines = extract_pdf_text(bytes(getattr(r, pdf_col)))
-                out["doc_id"].append(r.doc_id)
-                out["n_lines"].append(len(lines))
-                out["text"].append("\n".join(lines))
-            yield pd.DataFrame(out)
+    def emit(r):
+        lines = extract_pdf_text(bytes(getattr(r, pdf_col)))
+        yield r.doc_id, len(lines), "\n".join(lines)
 
-    return (pdfs.select("doc_id", pdf_col)
-            .mapInPandas(run, PDF_TEXT_SCHEMA))
+    return row_stage(pdfs.select("doc_id", pdf_col), PDF_TEXT_SCHEMA, emit)

@@ -12,9 +12,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-_TEXT_KINDS = ("FLOWING_TEXT", "HEADING_TEXT", "PULLOUT_TEXT", "TABLE",
-               "VERTICAL_TEXT", "CAPTION_TEXT")
+from ..errors import InvalidParameterError
+from ..oracle.page import decode_payload
+from ..oracle.segment import TEXT_KINDS
+from .extract import image_pages
+from .stage import row_stage
+
+_LINE_KEY = ["doc_id", "media_ref", "block_id", "para_id", "line_id"]
 
 
 def _ordered_join(df: DataFrame, keys: list[str], order_col: str,
@@ -27,11 +33,21 @@ def _ordered_join(df: DataFrame, keys: list[str], order_col: str,
                 sep).alias(out_name)))
 
 
+def _join_lines(lines: DataFrame, frag_col: str, out_name: str) -> DataFrame:
+    """Per page, line fragments joined by newlines in (block_id, para_id,
+    line_id) order: a struct key, so ids of any size sort by block, then
+    paragraph, then line, and nothing can overflow."""
+    return _ordered_join(
+        lines.withColumn("line_order",
+                         F.struct("block_id", "para_id", "line_id")),
+        ["doc_id", "media_ref"], "line_order", frag_col, "\n", out_name)
+
+
 def page_text(hierarchy: DataFrame) -> DataFrame:
     """GetUTF8Text (TessAPI.java:483-487): per page, text blocks joined by
     blank lines in reading order."""
     blocks = hierarchy.where((F.col("level") == "BLOCK")
-                             & F.col("block_type").isin(*_TEXT_KINDS)
+                             & F.col("block_type").isin(*TEXT_KINDS)
                              & F.col("text").isNotNull())
     return _ordered_join(blocks, ["doc_id", "media_ref"], "seq", "text",
                          "\n\n", "page_text")
@@ -50,17 +66,11 @@ def hocr(hierarchy: DataFrame) -> DataFrame:
             "block_id", "para_id", "line_id", "word_id",
             "left", "top", "right", "bottom",
             F.round("confidence").cast("int"), "text"))
-    lines = _ordered_join(
-        words, ["doc_id", "media_ref", "block_id", "para_id", "line_id"],
-        "seq", "frag", " ", "line_html")
+    lines = _ordered_join(words, _LINE_KEY, "seq", "frag", " ", "line_html")
     lines = lines.withColumn(
         "line_frag", F.format_string("<span class='ocr_line'>%s</span>",
-                                     "line_html")).withColumn(
-        "order_key",
-        F.col("block_id") * 1_000_000 + F.col("para_id") * 10_000
-        + F.col("line_id"))
-    pages = _ordered_join(lines, ["doc_id", "media_ref"], "order_key",
-                          "line_frag", "\n", "body")
+                                     "line_html"))
+    pages = _join_lines(lines, "line_frag", "body")
     return pages.select(
         "doc_id", "media_ref",
         F.format_string("<div class='ocr_page' title='image %s; ppageno 1'>\n%s\n</div>",
@@ -93,10 +103,8 @@ def unlv_text(hierarchy: DataFrame, reject_below: float = 50.0,
                            & F.col("text").isNotNull())
     ch = F.when(F.col("confidence") < reject_below, F.lit("~")) \
         .otherwise(F.regexp_replace(F.col("text"), r"[^\x00-\xff]", "~"))
-    word_key = ["doc_id", "media_ref", "block_id", "para_id", "line_id",
-                "word_id"]
     words = (syms
-             .groupBy(*word_key)
+             .groupBy(*_LINE_KEY, "word_id")
              .agg(F.min("seq").alias("seq"),
                   F.array_join(
                       F.transform(
@@ -107,14 +115,8 @@ def unlv_text(hierarchy: DataFrame, reject_below: float = 50.0,
     words = words.withColumn(
         "w", F.when(F.col("min_conf") < suspect_below,
                     F.concat(F.lit("^"), F.col("w"))).otherwise(F.col("w")))
-    line_key = ["doc_id", "media_ref", "block_id", "para_id", "line_id"]
-    lines = _ordered_join(words, line_key, "seq", "w", " ", "line_text")
-    lines = (lines
-             .withColumn("order_key",
-                         F.col("block_id") * 1_000_000
-                         + F.col("para_id") * 10_000 + F.col("line_id")))
-    return _ordered_join(lines, ["doc_id", "media_ref"], "order_key",
-                         "line_text", "\n", "unlv_text")
+    lines = _ordered_join(words, _LINE_KEY, "seq", "w", " ", "line_text")
+    return _join_lines(lines, "line_text", "unlv_text")
 
 
 def mean_text_conf(hierarchy: DataFrame) -> DataFrame:
@@ -155,13 +157,7 @@ def merge_pages(documents: DataFrame, media: DataFrame,
     doc) when a document exceeds `max_pages` — see DEFAULT_MAX_PAGES.
     max_pages=None disables the plan-level guard (merge_tiff does this
     and enforces its own typed guard in the encode kernel instead)."""
-    pages = (documents
-             .select("doc_id", F.explode("spans").alias("s"))
-             .where(F.col("s.kind") == "image")
-             .select("doc_id", F.col("s.offset").alias("offset"),
-                     F.col("s.media_ref").alias("media_ref"))
-             .join(media, "media_ref"))
-    out = (pages.groupBy("doc_id")
+    out = (image_pages(documents, media).groupBy("doc_id")
            .agg(F.transform(
                F.array_sort(F.collect_list(
                    F.struct("offset", "media_ref", "width", "height",
@@ -191,41 +187,30 @@ def merge_tiff(documents: DataFrame, media: DataFrame,
     """Byte-level TIFF merge (ImageIOHelper.mergeTiff:336-371): each
     document's page images, in span order, become ONE multi-page TIFF
     blob (linked IFD chain) — the true sink format of S3, on top of the
-    record-form merge_pages. mapInPandas over the per-doc page arrays.
+    record-form merge_pages, one stage row per document.
     Documents beyond `max_pages` raise a typed InvalidParameterError
     (executor-side) instead of OOMing — see DEFAULT_MAX_PAGES."""
-    from pyspark.sql import types as T
-
     from ..codecs_img import encode_tiff_multipage
-    from ..errors import InvalidParameterError
-    from ..oracle.page import decode_payload
-    # guard enforced in the kernel below (typed), not the plan
-    merged = merge_pages(documents, media, max_pages=None)
     schema = T.StructType([
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("n_pages", T.IntegerType(), False),
         T.StructField("tiff", T.BinaryType(), False),
     ])
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            out = {"doc_id": [], "n_pages": [], "tiff": []}
-            for r in pdf.itertuples(index=False):
-                if len(r.pages) > max_pages:   # typed executor-side guard
-                    raise InvalidParameterError(
-                        f"merge_tiff: document {r.doc_id} has "
-                        f"{len(r.pages)} pages > max_pages={max_pages}",
-                        {"doc_id": r.doc_id, "n_pages": len(r.pages)})
-                imgs = [decode_payload(p["payload"], p["width"],
-                                       p["height"], p["bands"])
-                        for p in r.pages]
-                out["doc_id"].append(r.doc_id)
-                out["n_pages"].append(len(imgs))
-                out["tiff"].append(encode_tiff_multipage(imgs, packbits))
-            yield pd.DataFrame(out)
+    def emit(r):
+        if len(r.pages) > max_pages:   # typed executor-side guard
+            raise InvalidParameterError(
+                f"merge_tiff: document {r.doc_id} has "
+                f"{len(r.pages)} pages > max_pages={max_pages}",
+                {"doc_id": r.doc_id, "n_pages": len(r.pages)})
+        imgs = [decode_payload(p["payload"], p["width"], p["height"],
+                               p["bands"])
+                for p in r.pages]
+        yield r.doc_id, len(imgs), encode_tiff_multipage(imgs, packbits)
 
-    return merged.mapInPandas(run, schema)
+    # guard enforced in the kernel above (typed), not the plan
+    return row_stage(merge_pages(documents, media, max_pages=None), schema,
+                     emit)
 
 
 def page_items(hierarchy: DataFrame) -> DataFrame:

@@ -20,8 +20,8 @@ import numpy as np
 
 from .binarize import otsu_binarize
 from .recognize import font_attributes, recognize_blocks
-from .segment import (IMAGE_KINDS, TEXT_KINDS, Box, Node,
-                      detect_justification, detect_orientation, segment)
+from .segment import (TEXT_KINDS, Box, Node, detect_justification,
+                      detect_orientation, segment)
 
 DEFAULT_PPI = 96
 
@@ -131,13 +131,6 @@ class PageResult:
                  for para in blk.children for line in para.children
                  for w in line.children if w.confidence is not None]
         return int(np.mean(confs)) if confs else 0
-
-    def orientation(self, block_idx: int = 0) -> dict:
-        raise_if = self.blocks
-        if not raise_if:
-            return {"orientation": "UP", "writing_direction": "LTR",
-                    "textline_order": "TTB", "deskew_angle": 0.0}
-        return self.blocks[block_idx].orientation_info  # type: ignore[attr-defined]
 
 
 def decode_payload(payload: bytes, width: int, height: int, bands: int) -> np.ndarray:

@@ -10,7 +10,7 @@ extraction and analytics must run incrementally. Patterns:
   applyInPandasWithState (gap-based sessions; state = open session per
   user), the streaming twin of queries.events_sessionize.
 - `streaming_span_extraction`: the flagship pipeline as an incremental
-  job — new document files micro-batch through the same mapInPandas OCR
+  job — new document files micro-batch through the same per-row OCR
   stage (stateless per page, so streaming needs no plan changes).
 
 Tested with file sources + `availableNow` triggers (no long-running
@@ -106,13 +106,8 @@ def streaming_span_extraction(spark: SparkSession, docs_path: str,
     so batch and streaming share the physical operators; only the seq
     window is per-micro-batch (global order needs a batch compaction —
     documented limitation, matching checkpointed-batch resume at scale)."""
-    from ..operators.extract import SPAN_SCHEMA, _ocr_stage
+    from ..operators.extract import _ocr_stage, image_pages
     static = spark.read.parquet(docs_path)
     stream = (spark.readStream.schema(static.schema)
               .option("maxFilesPerTrigger", 4).parquet(docs_path))
-    img = (stream.select("doc_id", F.explode("spans").alias("s"))
-           .where(F.col("s.kind") == "image")
-           .select("doc_id", F.col("s.offset").alias("offset"),
-                   F.col("s.media_ref").alias("media_ref"))
-           .join(media, "media_ref"))
-    return _ocr_stage(img, "AUTO", None)
+    return _ocr_stage(image_pages(stream, media), "AUTO")

@@ -3,6 +3,10 @@ __spark_entry__ registry entries: SQL parity vs DuckDB where an oracle
 exists, rows-only otherwise. Run before shipping a round:
 
     python scripts/check_gate.py [sf_dir] [--only name1,name2]
+
+The Spark master comes from SPARK_GRAFT_MASTER, else
+local[$SPARK_GRAFT_CPUS] (session.get_spark), like every other entry
+point: `SPARK_GRAFT_CPUS=$(nproc) python scripts/check_gate.py`.
 """
 
 from __future__ import annotations
@@ -32,8 +36,7 @@ def main() -> None:
         only = set(args[i + 1].split(","))
         del args[i:i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    spark = get_spark("local[16]", app_name="check-gate",
-                      shuffle_partitions=16)
+    spark = get_spark(app_name="check-gate")
     qs, oq = entry.queries(), entry.oracle_sql()
     if only:
         missing = only - set(qs)

@@ -284,9 +284,8 @@ def _unlv_table(rows: list[dict], reject_below: float = 50.0,
     pages: dict[tuple, list[tuple[int, str]]] = {}
     for (doc_id, ref, b, p, ln), ws in lines.items():
         ws.sort()
-        order_key = b * 1_000_000 + p * 10_000 + ln
         pages.setdefault((doc_id, ref), []).append(
-            (order_key, " ".join(w for _, w in ws)))
+            ((b, p, ln), " ".join(w for _, w in ws)))
     out = sorted(pages.items())
     return pa.table({
         "doc_id": pa.array([k[0] for k, _ in out], pa.string()),

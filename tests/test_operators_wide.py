@@ -322,15 +322,15 @@ def test_multimodal_codec_surface():
     """Every reference format is a real codec since round 3 (JP2 was the
     last stub) — plus PDF, which the reference rejects but the north
     rule names; unknown codecs reject with typed errors."""
-    assert M.CODECS_STUBBED == ()
+    from org_dharts_dia_tesseract_spark.oracle.page import decode_payload
     assert set(M.CODECS_REAL) == {"bmp", "pnm", "tiff", "png", "gif",
                                   "jpeg", "jp2", "pdf"}
-    with pytest.raises(ValueError):            # malformed jp2 payload
-        M.decode(b"xx", 1, 1, 1, codec="jp2")
-    with pytest.raises(ValueError):            # malformed pdf payload
-        M.decode(b"xx", 1, 1, 1, codec="pdf")
-    with pytest.raises(ValueError):
-        M.decode(b"xx", 1, 1, 1, codec="webp")  # unknown codec
+    with pytest.raises(ValueError, match="jp2"):   # malformed jp2 payload
+        decode_payload(b"\xff\x4f\xff\x51xx", 1, 1, 1)
+    with pytest.raises(ValueError, match="pdf"):   # malformed pdf payload
+        decode_payload(b"%PDF-xx", 1, 1, 1)
+    with pytest.raises(ValueError, match="no known codec"):
+        decode_payload(b"xx", 1, 1, 1)             # unknown codec
 
 
 def test_frame_sample(spark, corpus_small):
@@ -452,6 +452,15 @@ def test_page_timeout_dead_letters_and_resumes(spark, corpus_small,
     errs = out.where(F.col("kind") == "error").collect()
     assert errs, "1ms budget should dead-letter at least one page"
     assert all("time budget" in (e["text"] or "") for e in errs)
+    # a dead-lettered page emits exactly its one error row: no partial
+    # sub-span of that page (its media_ref or a '#b' child) leaks out
+    refs = [(r["doc_id"], r["media_ref"] or "")
+            for r in out.select("doc_id", "media_ref").collect()]
+    for e in errs:
+        page = e["media_ref"]
+        assert sum(d == e["doc_id"] and (m == page
+                                         or m.startswith(page + "#b"))
+                   for d, m in refs) == 1, page
     out.unpersist()
 
     # checkpointed runner: budget recorded as error spans, buckets DONE
@@ -667,6 +676,31 @@ def test_unlv_text_sink(hier):
         w["text"] for w in plain) == one["unlv_text"].replace("\n", " ")
 
 
+def test_sink_line_order_block_para_line(spark):
+    """hOCR and UNLV order a page's lines by (block_id, para_id,
+    line_id): para 101 of block 0 precedes line 5 of block 1, and block
+    ids past 2147 do not overflow (sinks accept externally supplied
+    hierarchies, and ANSI mode raises on int overflow)."""
+    schema = ("doc_id string, media_ref string, level string, "
+              "block_id int, para_id int, line_id int, word_id int, "
+              "sym_id int, seq int, text string, confidence float, "
+              "left int, top int, right int, bottom int")
+    rows = []
+    for ref, first, second in (("m1", (0, 101, 0), (1, 0, 5)),
+                               ("m2", (2148, 0, 0), (2148, 0, 1))):
+        for seq, (ids, word) in enumerate(((first, "FIRST"),
+                                           (second, "SECOND"))):
+            rows.append(("d", ref, "WORD", *ids, 0, -1, seq, word, 95.0,
+                         0, 0, 1, 1))
+            rows.append(("d", ref, "SYMBOL", *ids, 0, 0, seq, word[0],
+                         95.0, 0, 0, 1, 1))
+    h = spark.createDataFrame(rows, schema)
+    unlv = {r["media_ref"]: r["unlv_text"] for r in K.unlv_text(h).collect()}
+    assert unlv == {"m1": "F\nS", "m2": "F\nS"}
+    for r in K.hocr(h).collect():
+        assert r["hocr"].index(">FIRST<") < r["hocr"].index(">SECOND<")
+
+
 def test_page_osd_detects_rotations(spark):
     """Real 4-way OSD: rotated page payloads are detected with the right
     rotation and the upright page scores highest confidence."""
@@ -772,12 +806,12 @@ def test_star_components_handle_deep_chains(spark):
 
 
 def test_page_deadline_restores_foreign_timer():
-    """ITIMER_REAL is process-wide: _page_deadline must hand back any
+    """ITIMER_REAL is process-wide: the stage deadline must hand back any
     timer another owner had running (shrunk by the time it consumed),
     not cancel it on exit (round-4 advice)."""
     import signal
-    from org_dharts_dia_tesseract_spark.operators.extract import \
-        _page_deadline
+    from org_dharts_dia_tesseract_spark.operators.stage import \
+        _deadline as _page_deadline
     fired: list[int] = []
     old_handler = signal.signal(signal.SIGALRM,
                                 lambda *a: fired.append(1))

@@ -66,7 +66,7 @@ def test_skew_tail_fans_out(spark):
     than a small fraction of a skew doc's pages."""
     from org_dharts_dia_tesseract_spark import datagen
     from org_dharts_dia_tesseract_spark.operators.extract import \
-        _joined_images
+        image_pages
     # find a skew doc id deterministically
     skew_id = None
     for i in range(3000):
@@ -78,7 +78,7 @@ def test_skew_tail_fans_out(spark):
     assert skew_id is not None, "no skew doc in range"
     n = int(skew_id.split("-")[1]) + 1
     docs, media = corpus_tables(spark, n)
-    joined = _joined_images(docs, media, broadcast_media=False)
+    joined = image_pages(docs, media)
     pid = joined.withColumn("pid", F.spark_partition_id())
     dist = (pid.where(F.col("doc_id") == skew_id)
             .groupBy("pid").count().collect())

@@ -38,7 +38,7 @@ def test_span_sequence_equality(spark, corpus):
     document between the distributed pipeline and the single-process
     oracle (BASELINE.json north_rule)."""
     docs_df, media_df = corpus
-    got = (extract_spans(docs_df, media_df, salt_partitions=8)
+    got = (extract_spans(docs_df.repartition(8, "doc_id"), media_df)
            .toPandas().sort_values(["doc_id", "seq"]).reset_index(drop=True))
     exp = _oracle_spans(N_DOCS)
     assert len(got) == len(exp)
@@ -50,8 +50,8 @@ def test_span_sequence_equality_no_salt(spark, corpus):
     docs_df, media_df = corpus
     a = (extract_spans(docs_df, media_df)
          .toPandas().sort_values(["doc_id", "seq"]).reset_index(drop=True))
-    b = (extract_spans(docs_df, media_df, salt_partitions=3,
-                       broadcast_media=True)
+    b = (extract_spans(docs_df.repartition(3),
+                       media_df.repartition(5, "media_ref"))
          .toPandas().sort_values(["doc_id", "seq"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b)
 
@@ -69,17 +69,47 @@ def test_corpus_generation_matches_local(spark, corpus):
 
 
 def test_hierarchy_counts_match_oracle(spark, corpus):
+    """Every hierarchy row of the first 20 pages equals the oracle's
+    analyze_page(...).rows() in all HIERARCHY_SCHEMA columns, under a
+    partitioning that differs from the scan's."""
+    import numpy as np
+
+    from org_dharts_dia_tesseract_spark.operators.extract import \
+        HIERARCHY_SCHEMA
     from org_dharts_dia_tesseract_spark.oracle import analyze_page
-    from org_dharts_dia_tesseract_spark.oracle.page import decode_payload
+    from org_dharts_dia_tesseract_spark.oracle.page import (decode_payload,
+                                                            resolve_ppi)
+
+    def norm(v):   # Spark FloatType round-trips through float32
+        if isinstance(v, (float, np.floating)):
+            return None if v != v else float(np.float32(v))
+        return v.item() if isinstance(v, np.generic) else v
+
     docs_df, media_df = corpus
-    h = analyze_documents(docs_df, media_df, salt_partitions=4)
+    h = analyze_documents(docs_df.repartition(4), media_df.repartition(4))
     got = (h.groupBy("media_ref").count().toPandas()
            .set_index("media_ref")["count"].to_dict())
-    _, media = datagen.make_corpus(N_DOCS)
+    docs, media = datagen.make_corpus(N_DOCS)
     assert len(got) == len(media)
+    place = {s["media_ref"]: (d["doc_id"], s["offset"])
+             for d in docs for s in d["spans"] if s["kind"] == "image"}
+    names = HIERARCHY_SCHEMA.fieldNames()
+    exp = {}
     for m in media[:20]:
         img = decode_payload(m["payload"], m["width"], m["height"], m["bands"])
-        assert got[m["media_ref"]] == len(analyze_page(img).rows())
+        res = analyze_page(img, ppi=resolve_ppi(m["payload"], m.get("dpi")))
+        doc_id, offset = place[m["media_ref"]]
+        for r in res.rows():
+            full = {**r, "doc_id": doc_id, "media_ref": m["media_ref"],
+                    "offset": offset}
+            exp[(m["media_ref"], r["seq"])] = tuple(norm(full[c])
+                                                    for c in names)
+        assert got[m["media_ref"]] == len(res.rows())
+    refs = [m["media_ref"] for m in media[:20]]
+    rows = h.where(F.col("media_ref").isin(refs)).select(*names).collect()
+    assert {(r["media_ref"], r["seq"]): tuple(norm(v) for v in r)
+            for r in rows} == exp
+    assert len(rows) == len(exp)
 
 
 def test_hierarchy_invariants(spark, corpus):

@@ -127,9 +127,9 @@ def test_streaming_span_extraction(spark, tmp_path):
     _run_to_memory(out, "stream_spans", tmp_path, "append")
     got = spark.table("stream_spans")
     from org_dharts_dia_tesseract_spark.operators.extract import (
-        _joined_images, _ocr_stage)
+        _ocr_stage, image_pages)
     docs = spark.read.parquet(docs_path)
-    exp = _ocr_stage(_joined_images(docs, media, False), "AUTO", None)
+    exp = _ocr_stage(image_pages(docs, media), "AUTO")
     a = got.toPandas().sort_values(["doc_id", "offset", "sub"]).reset_index(drop=True)
     b = exp.toPandas().sort_values(["doc_id", "offset", "sub"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
