@@ -2,7 +2,8 @@
 
 `row_stage` owns what each operator used to hand-write: the
 `mapInPandas` batch loop, output-column assembly, the per-row error
-boundary and the per-row time budget. An operator supplies only
+boundary and the per-row time budget, and it keeps each worker's
+zip-import directories across tasks. An operator supplies only
 `emit(r) -> iterable of tuples in schema order` for one input row `r`
 (a namedtuple over the input columns).
 """
@@ -10,8 +11,10 @@ boundary and the per-row time budget. An operator supplies only
 from __future__ import annotations
 
 import contextlib
+import functools
 import signal
 import time
+import zipimport
 from typing import Callable, Iterable, Iterator
 
 import pandas as pd
@@ -74,6 +77,25 @@ def _deadline(timeout_ms: int | None):
     return cm
 
 
+def _keep_directory(self) -> None:
+    """Stands in for `zipimporter.invalidate_caches`: keep the archive
+    directory this importer has already read."""
+
+
+@functools.cache
+def _keep_zip_directories() -> None:
+    """Once per Python worker: keep `importlib.invalidate_caches()`,
+    which pyspark calls before every task, from re-reading every zip
+    archive on the worker's path. On CPython 3.11/3.12 each
+    `zipimporter` re-reads its whole directory (pyspark.zip, the
+    spark-core jar, py4j): 160-365 ms per task, more than a typical
+    task's own work. Safe because Spark never rewrites a file it has
+    already added under a live context: a later archive has a new path,
+    so a new importer that reads its directory once. Called only inside
+    tasks, so the driver is never patched."""
+    zipimport.zipimporter.invalidate_caches = _keep_directory
+
+
 def row_stage(rows: DataFrame, schema: T.StructType,
               emit: Callable[[tuple], Iterable[tuple]], *,
               error_row: Callable[[tuple, Exception], tuple] | None = None,
@@ -90,6 +112,7 @@ def row_stage(rows: DataFrame, schema: T.StructType,
     names = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _keep_zip_directories()
         deadline = _deadline(timeout_ms)
         for pdf in batches:
             out: list[tuple] = []

@@ -70,7 +70,9 @@ def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executors regardless of the
     driver's cwd — the programmatic equivalent of
     `spark-submit --py-files pkg.zip` (BASELINE.json north_star deploy
-    mode). Zips once per process, cached."""
+    mode). Zips once per process, cached; adds the zip once per context
+    (a repeated `addPyFile` would append it to every task's includes
+    and to the driver's `sys.path` again)."""
     global _PKG_ZIP
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     if _PKG_ZIP is None:
@@ -87,10 +89,10 @@ def _ship_package(spark: SparkSession) -> None:
                         rel = os.path.join(base, os.path.relpath(full, pkg_dir))
                         z.write(full, rel)
         _PKG_ZIP = path
-    try:
-        spark.sparkContext.addPyFile(_PKG_ZIP)
-    except Exception:
-        pass   # already added on this context
+    sc = spark.sparkContext
+    name = os.path.basename(_PKG_ZIP)
+    if not any(f.rsplit("/", 1)[-1] == name for f in sc.listFiles):
+        sc.addPyFile(_PKG_ZIP)
 
 
 _PKG_ZIP: str | None = None

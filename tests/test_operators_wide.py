@@ -833,6 +833,67 @@ def test_page_deadline_restores_foreign_timer():
         signal.signal(signal.SIGALRM, old_handler)
 
 
+def test_row_stage_keeps_zip_directories(spark):
+    """pyspark calls importlib.invalidate_caches() before every task,
+    which makes each zipimporter re-read its whole archive. Inside a
+    row_stage task the worker's importers keep their directories, zip
+    imports still resolve, and the driver is left unpatched."""
+    import zipimport
+    from pyspark.sql import types as T
+    from org_dharts_dia_tesseract_spark.operators.stage import row_stage
+
+    def emit(r):
+        import importlib
+        import sys
+        import zipimport
+        zips = [z for z in sys.path_importer_cache.values()
+                if isinstance(z, zipimport.zipimporter)]
+        before = [id(z._files) for z in zips]
+        importlib.invalidate_caches()
+        kept = before == [id(z._files) for z in zips]
+        linalg = importlib.import_module("pyspark.ml.linalg")
+        yield (len(zips), kept, linalg.__name__)
+
+    schema = T.StructType([T.StructField("zips", T.IntegerType()),
+                           T.StructField("kept", T.BooleanType()),
+                           T.StructField("imported", T.StringType())])
+    got = row_stage(spark.range(0, 8, 1, 8), schema, emit).collect()
+    assert len(got) == 8
+    assert all(r["zips"] >= 1 for r in got)
+    assert all(r["kept"] for r in got), "a task re-read a zip directory"
+    assert {r["imported"] for r in got} == {"pyspark.ml.linalg"}
+    stdlib = zipimport.zipimporter.invalidate_caches
+    assert (stdlib.__module__, stdlib.__qualname__) == \
+        ("zipimport", "zipimporter.invalidate_caches")
+
+
+def test_get_spark_ships_package_once(tmp_path):
+    """Repeated get_spark calls on one live context add the package zip
+    once: addPyFile appends a repeated path to every task's includes and
+    to the driver's sys.path again. Runs in a subprocess because
+    get_spark sets runtime confs on the shared test session."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = textwrap.dedent("""
+        import sys
+        from org_dharts_dia_tesseract_spark.session import get_spark
+        s = get_spark(master="local[1]")
+        get_spark(master="local[1]")
+        print(len(s.sparkContext._python_includes),
+              sum("dia_pkg_" in p for p in sys.path))
+        s.stop()
+        """)
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+               SPARK_LOCAL_DIRS=str(tmp_path))
+    r = subprocess.run([sys.executable, "-c", code], cwd=repo, env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.split() == ["1", "1"]
+
+
 def test_minhash_bucket_cap_drops_degenerate_buckets(spark):
     """max_bucket: a 6-member identical-text bucket would emit 15 pairs;
     capped at 3 it is dropped entirely while small buckets survive."""
