@@ -884,7 +884,6 @@ def _get_npasses(br: _PktBitReader) -> int:
 
 _CB_LOG = 6                 # 64x64 code-blocks
 _CB = 1 << _CB_LOG
-_ORIENT_GAIN = {"LL": 0, "HL": 1, "LH": 1, "HH": 2}
 
 
 def _resolution_subbands(nl: int) -> list[list[str]]:

@@ -27,7 +27,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .glyphs import CHARSET, GLYPH_H, GLYPH_W, atlas
+from .glyphs import GLYPH_H, GLYPH_W, atlas
 
 # Layout geometry contract shared by renderer, oracle and the Spark
 # segmentation stage. Gaps are strictly ordered:
@@ -44,8 +44,6 @@ INK_MAX = 40      # ink pixels drawn in [0, INK_MAX)
 BG_MIN = 215      # background pixels drawn in [BG_MIN, 256)
 DEFAULT_DPI = 96  # fallback mirrors ImageIOHelper.readImageData:379-407
 
-_SAFE = set(CHARSET)
-
 _VOCAB = [
     "the", "quick", "brown", "fox", "jumps", "over", "lazy", "dog",
     "spark", "page", "block", "word", "line", "glyph", "raster", "span",
@@ -56,11 +54,6 @@ _VOCAB = [
 
 def _seed_from(s: str) -> int:
     return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big")
-
-
-def sanitize(text: str) -> str:
-    """Map arbitrary text onto the closed charset (unknown -> '?')."""
-    return "".join(ch if (ch in _SAFE or ch in " \n") else "?" for ch in text)
 
 
 # --------------------------------------------------------------------------

@@ -111,13 +111,3 @@ def classify(bitmap: np.ndarray) -> tuple[str, float]:
     idx = int(np.argmin(dists))
     conf = 100.0 * (1.0 - float(dists[idx]) / GLYPH_AREA)
     return chars[idx], conf
-
-
-def classify_batch(bitmaps: np.ndarray) -> tuple[list[str], np.ndarray]:
-    """Vectorized classification of (K,7,5) bitmaps -> (chars, conf[K])."""
-    mat, chars = atlas_matrix()
-    flat = bitmaps.reshape(len(bitmaps), -1).astype(np.int16)
-    dists = np.abs(flat[:, None, :] - mat[None, :, :]).sum(axis=2)
-    idxs = np.argmin(dists, axis=1)
-    confs = 100.0 * (1.0 - dists[np.arange(len(bitmaps)), idxs] / GLYPH_AREA)
-    return [chars[i] for i in idxs], confs.astype(np.float32)

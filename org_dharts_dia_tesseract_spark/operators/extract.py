@@ -46,14 +46,6 @@ SPAN_SCHEMA = T.StructType([
     T.StructField("media_ref", T.StringType(), True),
 ])
 
-OUTPUT_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("seq", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("text", T.StringType(), True),
-    T.StructField("media_ref", T.StringType(), True),
-])
-
 HIERARCHY_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("media_ref", T.StringType(), False),

@@ -1,25 +1,38 @@
-"""Similarity search over embedding columns (array<float>).
+"""Nearest-neighbour search over embedding columns (array<float>).
 
-Two paths, same results where they overlap:
-- `brute_force_topk`: exact cosine top-k. The query set broadcasts; each
-  partition scores its shard JVM-side (zip_with/aggregate — whole-stage
-  codegen, no Python) and a rank window keeps k. At 100 TB the scan is
-  embarrassingly parallel and the only shuffle carries q*k candidate rows.
-- `lsh_topk`: random-hyperplane LSH. Hyperplane signs come from the
-  portable md5 hash of (plane, dimension) so the planes are deterministic
-  and identical across engines with no stored model. Vectors land in a
-  bucket per signature; candidates are scored only within the query's
-  bucket (optionally +Hamming-1 probes). Sub-linear candidate sets at
-  scale; recall traded via n_planes/probes.
+Six top-k operators share one read path built from three pieces, so all
+of them return (q_id, vec_id, <score>, rk:int) ranked by ONE tie-break:
+score descending, then id ascending.
+- `_topk`: the single rank window that keeps rk <= k per query.
+- `_cosine_topk`: exact cosine over a frame of (vector, query) pairs,
+  scored JVM-side (zip_with/aggregate in whole-stage codegen, no
+  Python); self-matches and zero-norm vectors drop out. The operators
+  differ only in the pairs they feed it: `brute_force_topk` a cross join
+  with the broadcast query set, `lsh_topk` a join on random-hyperplane
+  signature buckets, `ivf_topk`/`ivf_topk_indexed` a join on each
+  query's nprobe nearest inverted lists.
+- `_adc_topk`: code-space scoring in ONE mapInPandas. Each Arrow batch
+  keeps its local top-k per query under the global tie-break (map-side
+  combine), so the corpus never shuffles; `pq_topk_adc` scores PQ codes,
+  `ivfpq_topk`/`ivfpq_topk_indexed` residual codes of the probed lists.
+
+`semdedup` reuses the IVF coarse model to prune near-duplicates cluster
+by cluster. The numpy kernels are plain module functions so the single-process
+oracle (scripts/gen_expected.py) runs the SAME code the executors run
+and the doubles hash bit-identically.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import logging
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 log = logging.getLogger(__name__)
 
@@ -41,27 +54,41 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
-def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                     id_col: str = "vec_id", emb_col: str = "embedding",
-                     q_id_col: str = "q_id", q_emb_col: str = "q_emb") -> DataFrame:
-    scored = (embeddings.crossJoin(F.broadcast(queries))
-              .where(F.col(id_col) != F.col(q_id_col))
-              .select(q_id_col, id_col,
-                      cosine(F.col(q_emb_col), F.col(emb_col)).alias("cosine"))
-              .where(F.col("cosine").isNotNull()))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+def _topk(scored: DataFrame, k: int, q_id_col: str, id_col: str,
+          score_col: str) -> DataFrame:
+    """The rank window every operator ends in: per query, score
+    descending then id ascending; keeps rk <= k."""
+    w = Window.partitionBy(q_id_col).orderBy(F.col(score_col).desc(),
+                                             F.col(id_col))
     return (scored.withColumn("rk", F.row_number().over(w).cast("int"))
             .where(F.col("rk") <= k))
 
 
-def _plane_matrix(n_planes: int, dim: int) -> "np.ndarray":
+def _cosine_topk(pairs: DataFrame, k: int, id_col: str, emb_col: str,
+                 q_id_col: str, q_emb_col: str) -> DataFrame:
+    """Cosine top-k over candidate (vector, query) pairs."""
+    scored = (pairs.where(F.col(id_col) != F.col(q_id_col))
+              .select(q_id_col, id_col,
+                      cosine(F.col(q_emb_col), F.col(emb_col)).alias("cosine"))
+              .where(F.col("cosine").isNotNull()))
+    return _topk(scored, k, q_id_col, id_col, "cosine")
+
+
+def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
+                     id_col: str = "vec_id", emb_col: str = "embedding",
+                     q_id_col: str = "q_id", q_emb_col: str = "q_emb") -> DataFrame:
+    """Exact cosine top-k: the query set broadcasts and each partition
+    scores its shard; the only shuffle carries the rank window's
+    candidates."""
+    return _cosine_topk(embeddings.crossJoin(F.broadcast(queries)), k,
+                        id_col, emb_col, q_id_col, q_emb_col)
+
+
+def _plane_matrix(n_planes: int, dim: int) -> np.ndarray:
     """(n_planes, dim) matrix of +1/-1 hyperplane weights: plane p's
     weight for dimension d is set by the parity of the portable md5 hash
     of 'p:d' — no stored random state, identical on every executor, every
     engine, every run."""
-    import hashlib
-
-    import numpy as np
     W = np.empty((n_planes, dim), dtype=np.float64)
     for p in range(n_planes):
         for d in range(dim):
@@ -87,11 +114,9 @@ def hyperplane_signature(emb_col: str | Column, n_planes: int,
     BLAS builds, whereas this fixed-order reduction reproduces the
     Catalyst `aggregate(zip_with(...))` fold exactly — signatures are
     identical across engines and environments."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    planes: dict[int, "np.ndarray"] = {}
+    planes: dict[int, np.ndarray] = {}
 
-    @pandas_udf("string")
+    @F.pandas_udf("string")
     def sig(s: pd.Series) -> pd.Series:
         if len(s) == 0:
             return pd.Series([], dtype="object")
@@ -125,14 +150,8 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     (broadcast-model pandas_udf; no driver-side action in the plan)."""
     e = embeddings.withColumn("sig", hyperplane_signature(emb_col, n_planes, dim))
     q = queries.withColumn("sig", hyperplane_signature(q_emb_col, n_planes, dim))
-    scored = (e.join(F.broadcast(q), "sig")
-              .where(F.col(id_col) != F.col(q_id_col))
-              .select(q_id_col, id_col,
-                      cosine(F.col(q_emb_col), F.col(emb_col)).alias("cosine"))
-              .where(F.col("cosine").isNotNull()))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (scored.withColumn("rk", F.row_number().over(w).cast("int"))
-            .where(F.col("rk") <= k))
+    return _cosine_topk(e.join(F.broadcast(q), "sig"), k,
+                        id_col, emb_col, q_id_col, q_emb_col)
 
 
 # -- IVF (inverted-file) index: the scale path past LSH -------------------
@@ -154,47 +173,45 @@ def _l2sq(emb: Column, centroid: list[float]) -> Column:
         F.lit(0.0), lambda acc, x: acc + x)
 
 
+def _sq_dists(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n, d) rows x (k, d) centroids -> (n, k) squared distances.
+
+    Computed as sum((x-c)^2) directly — non-negative by construction and
+    matching the expression form's arithmetic (the expanded
+    ||x||^2-2x.c+||c||^2 form can go slightly negative under cancellation
+    and round differently near ties). Chunked so the (chunk, k, d)
+    broadcast temp stays ~64 MB; each row's sum is the same in any
+    chunk."""
+    chunk = max(1, (64 << 20) // (C.shape[0] * C.shape[1] * 8))
+    out = np.empty((X.shape[0], C.shape[0]), dtype=np.float64)
+    for i in range(0, X.shape[0], chunk):
+        diff = X[i:i + chunk, None, :] - C[None, :, :]
+        out[i:i + chunk] = (diff * diff).sum(axis=2)
+    return out
+
+
 def _centroid_dists(centroids: list[list[float]]):
     """(n, d) batch -> (n, k) squared distances to the broadcast model.
 
     The model ships inside the pandas_udf closure (the broadcast-model +
     vectorized-Arrow-kernel pattern): one small codegen'd plan regardless
     of k x d, where the pure-expression form compiles a fresh giant
-    aggregate(zip_with(...)) tree per centroid per pass. Distances are
-    computed as sum((x-c)^2) directly — non-negative by construction and
-    matching the expression form's arithmetic (the expanded
-    ||x||^2-2x.c+||c||^2 form can go slightly negative under cancellation
-    and round differently near ties)."""
-    import numpy as np
+    aggregate(zip_with(...)) tree per centroid per pass."""
     C = np.asarray(centroids, dtype=np.float64)          # (k, d)
-    # bound the (chunk, k, d) broadcast temp to ~64 MB per batch
-    chunk = max(1, (64 << 20) // (C.shape[0] * C.shape[1] * 8))
-
-    def dists(s: pd.Series) -> "np.ndarray":
-        X = np.stack(s.to_numpy()).astype(np.float64)    # (n, d)
-        out = np.empty((X.shape[0], C.shape[0]), dtype=np.float64)
-        for i in range(0, X.shape[0], chunk):
-            diff = X[i:i + chunk, None, :] - C[None, :, :]
-            out[i:i + chunk] = (diff * diff).sum(axis=2)
-        return out
-    return dists
-
-
-def _nearest_list_udf(centroids: list[list[float]]):
-    from pyspark.sql.functions import pandas_udf
-    dists = _centroid_dists(centroids)
-
-    @pandas_udf("int")
-    def f(s: pd.Series) -> pd.Series:
-        if len(s) == 0:   # empty Arrow batch: np.stack would raise
-            return pd.Series([], dtype="int32")
-        return pd.Series(dists(s).argmin(axis=1)).astype("int32")
-    return f
+    return lambda s: _sq_dists(
+        np.stack(s.to_numpy()).astype(np.float64), C)
 
 
 def _nearest_list(emb: Column, centroids: list[list[float]]) -> Column:
     """0-based id of the closest centroid; first-index tie-break."""
-    return _nearest_list_udf(centroids)(emb)
+    dists = _centroid_dists(centroids)
+
+    @F.pandas_udf("int")
+    def f(s: pd.Series) -> pd.Series:
+        if len(s) == 0:   # empty Arrow batch: np.stack would raise
+            return pd.Series([], dtype="int32")
+        return pd.Series(dists(s).argmin(axis=1)).astype("int32")
+    return f(emb)
 
 
 def _train_sample(embeddings: DataFrame, id_col: str, emb_col: str,
@@ -231,11 +248,9 @@ def kmeans_centroids(embeddings: DataFrame, n_lists: int = 8,
     touches the corpus, as a narrow broadcast-model map. Empty clusters
     keep their previous centroid; assignment tie-break = first index,
     matching `_nearest_list`'s argmin."""
-    import numpy as np
     sample = _train_sample(embeddings, id_col, emb_col, init_sample)
     X = np.array([[float(v) for v in r[1]] for r in sample])   # id-sorted
-    C = _kmeans_np(X, n_lists, n_iters)        # shared Lloyd core
-    return [list(map(float, c)) for c in C]
+    return _kmeans_np(X, n_lists, n_iters).tolist()   # shared Lloyd core
 
 
 def ivf_assign(embeddings: DataFrame, centroids: list[list[float]],
@@ -246,27 +261,49 @@ def ivf_assign(embeddings: DataFrame, centroids: list[list[float]],
         "list_id", _nearest_list(F.col(emb_col), centroids))
 
 
+def _write_model(spark, model, path: str) -> None:
+    """A model sidecar: one line of JSON written as a text dataset
+    through Spark's DataFrameWriter (i.e. the Hadoop FileSystem for
+    `path`'s scheme), so an index works on hdfs:// and s3:// paths, not
+    just local disk."""
+    spark.createDataFrame([(json.dumps(model),)], "value string") \
+        .coalesce(1).write.mode("overwrite").text(path)
+
+
+def _read_model(spark, path: str):
+    rows = spark.read.text(path).collect()
+    return json.loads("".join(r["value"] for r in rows))
+
+
 def ivf_write_index(embeddings: DataFrame, path: str, n_lists: int = 8,
                     id_col: str = "vec_id", emb_col: str = "embedding",
                     centroids: list[list[float]] | None = None
                     ) -> list[list[float]]:
     """Persist the IVF index: vectors tagged with list_id, written
     partitionBy(list_id) so probes prune at the parquet scan, plus the
-    centroid model as a one-line JSON text dataset alongside
-    (`<path>/_centroids/`). The sidecar is written through Spark's
-    DataFrameWriter (i.e. the Hadoop FileSystem for `path`'s scheme), so
-    the index works on hdfs:// and s3:// paths, not just local disk.
-    Returns the centroids."""
-    import json
+    centroid model as a JSON sidecar (`<path>/_centroids/`). Returns the
+    centroids."""
     if centroids is None:
         centroids = kmeans_centroids(embeddings, n_lists=n_lists,
                                      id_col=id_col, emb_col=emb_col)
     ivf_assign(embeddings, centroids, emb_col) \
         .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    spark = embeddings.sparkSession
-    spark.createDataFrame([(json.dumps(centroids),)], "value string") \
-        .coalesce(1).write.mode("overwrite").text(f"{path}/_centroids")
+    _write_model(embeddings.sparkSession, centroids, f"{path}/_centroids")
     return centroids
+
+
+def _probes(queries: DataFrame, centroids: list[list[float]], nprobe: int,
+            q_id_col: str, q_emb_col: str) -> DataFrame:
+    """(q_id, q_emb, list_id) rows, one per probed list: each query's
+    nprobe nearest centroids (distance, then list id), scored JVM-side.
+    The set is small and broadcasts onto the index's list_id column."""
+    ranked = F.array(*[F.struct(_l2sq(F.col(q_emb_col), c).alias("d"),
+                                F.lit(i).cast("int").alias("i"))
+                       for i, c in enumerate(centroids)])
+    nearest = F.transform(F.slice(F.array_sort(ranked), 1, nprobe),
+                          lambda s: s["i"])
+    return queries.select(q_id_col, q_emb_col,
+                          F.explode(nearest).alias("list_id"))
 
 
 def ivf_topk_indexed(spark, path: str, queries: DataFrame, k: int = 5,
@@ -279,37 +316,13 @@ def ivf_topk_indexed(spark, path: str, queries: DataFrame, k: int = 5,
     the stored corpus is ever READ (PartitionFilters in the scan plan,
     pinned by test_ivf_index_partition_pruning), then scored via the
     same broadcast probe join as ivf_topk."""
-    import json
-    rows = spark.read.text(f"{path}/_centroids").collect()
-    centroids = json.loads("".join(r["value"] for r in rows))
-    index = spark.read.parquet(path)
-    probes = queries.select(
-        q_id_col, q_emb_col,
-        F.explode(_probe_lists(F.col(q_emb_col), centroids, nprobe))
-        .alias("list_id"))
-    probe_lists = sorted({r["list_id"]
-                          for r in probes.select("list_id")
-                          .distinct().collect()})
-    pruned = index.where(F.col("list_id").isin(probe_lists))
-    scored = (pruned.join(F.broadcast(probes), "list_id")
-              .where(F.col(id_col) != F.col(q_id_col))
-              .select(q_id_col, id_col,
-                      cosine(F.col(q_emb_col), F.col(emb_col)).alias("cosine"))
-              .where(F.col("cosine").isNotNull()))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(),
-                                             F.col(id_col))
-    return (scored.withColumn("rk", F.row_number().over(w).cast("int"))
-            .where(F.col("rk") <= k))
-
-
-def _probe_lists(q_emb: Column, centroids: list[list[float]],
-                 nprobe: int) -> Column:
-    """Array of the nprobe nearest list ids for a query vector."""
-    ranked = F.array(*[F.struct(_l2sq(q_emb, c).alias("d"),
-                                F.lit(i).cast("int").alias("i"))
-                       for i, c in enumerate(centroids)])
-    return F.transform(F.slice(F.array_sort(ranked), 1, nprobe),
-                       lambda s: s["i"])
+    probes = _probes(queries, _read_model(spark, f"{path}/_centroids"),
+                     nprobe, q_id_col, q_emb_col)
+    lists = sorted({r["list_id"] for r in
+                    probes.select("list_id").distinct().collect()})
+    index = spark.read.parquet(path).where(F.col("list_id").isin(lists))
+    return _cosine_topk(index.join(F.broadcast(probes), "list_id"), k,
+                        id_col, emb_col, q_id_col, q_emb_col)
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
@@ -317,50 +330,54 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
              centroids: list[list[float]] | None = None,
              id_col: str = "vec_id", emb_col: str = "embedding",
              q_id_col: str = "q_id", q_emb_col: str = "q_emb") -> DataFrame:
-    """Approximate cosine top-k via IVF probing.
-
-    The (q_id, list_id) probe set broadcasts; the index side joins on its
-    partition column, so only nprobe/n_lists of the corpus is scored."""
+    """Approximate cosine top-k via IVF probing: the (q_id, list_id)
+    probe set broadcasts and the index side joins on its list_id, so
+    only nprobe/n_lists of the corpus is scored."""
     if centroids is None:
         centroids = kmeans_centroids(embeddings, n_lists=n_lists,
                                      id_col=id_col, emb_col=emb_col)
+    probes = _probes(queries, centroids, nprobe, q_id_col, q_emb_col)
     index = ivf_assign(embeddings, centroids, emb_col)
-    probes = queries.select(
-        q_id_col, q_emb_col,
-        F.explode(_probe_lists(F.col(q_emb_col), centroids, nprobe))
-        .alias("list_id"))
-    scored = (index.join(F.broadcast(probes), "list_id")
-              .where(F.col(id_col) != F.col(q_id_col))
-              .select(q_id_col, id_col,
-                      cosine(F.col(q_emb_col), F.col(emb_col)).alias("cosine"))
-              .where(F.col("cosine").isNotNull()))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(),
-                                             F.col(id_col))
-    return (scored.withColumn("rk", F.row_number().over(w).cast("int"))
-            .where(F.col("rk") <= k))
+    return _cosine_topk(index.join(F.broadcast(probes), "list_id"), k,
+                        id_col, emb_col, q_id_col, q_emb_col)
 
 
 # ---------------------------------------------------------------------------
 # Product quantization (IVF-PQ's PQ half): the 100 TB memory story —
 # a d-dim float32 vector becomes m uint8 codes (here 64 floats -> 8
 # bytes), scored against queries via ADC lookup tables without ever
-# reconstructing the vectors. Kernels are plain numpy module functions
-# so the single-process oracle (scripts/gen_expected.py) runs the SAME
-# code the executors run — doubles hash bit-identically.
+# reconstructing the vectors.
 # ---------------------------------------------------------------------------
 
-def _as_f64(vecs) -> "np.ndarray":
+def _as_f64(vecs) -> np.ndarray:
     """float32-normalize then widen — both the Arrow path (executors)
     and the pyarrow path (oracle twin) land on identical float64."""
-    import numpy as np
     return np.asarray(vecs, dtype=np.float32).astype(np.float64)
+
+
+def _kmeans_np(X, k: int, n_iters: int = 3):
+    """Farthest-first init + Lloyd (first-index tie-breaks) — the numpy
+    core shared by the coarse quantizer and the oracle twin."""
+    seeds = [0]
+    d_min = ((X - X[0]) ** 2).sum(axis=1)
+    while len(seeds) < min(k, len(X)):
+        nxt = int(np.argmax(d_min))
+        seeds.append(nxt)
+        d_min = np.minimum(d_min, ((X - X[nxt]) ** 2).sum(axis=1))
+    C = X[seeds].copy()
+    for _ in range(n_iters):
+        assign = _sq_dists(X, C).argmin(axis=1)
+        for j in range(len(C)):
+            members = X[assign == j]
+            if len(members):
+                C[j] = members.mean(axis=0)
+    return C
 
 
 def _pq_train_np(X, m: int, ks: int, n_iters: int = 5):
     """Per-subspace Lloyd k-means with farthest-first init (k-center:
     seed 0 = row 0, ties -> first index) — the deterministic training
     twin of kmeans_centroids, one codebook per subspace."""
-    import numpy as np
     n, d = X.shape
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m} subspaces")
@@ -370,14 +387,11 @@ def _pq_train_np(X, m: int, ks: int, n_iters: int = 5):
 
 
 def _pq_encode_np(X, books):
-    import numpy as np
     m = len(books)
     sub = X.shape[1] // m
     codes = np.empty((X.shape[0], m), dtype=np.int32)
     for j, C in enumerate(books):
-        S = X[:, j * sub:(j + 1) * sub]
-        codes[:, j] = ((S[:, None, :] - C[None, :, :]) ** 2
-                       ).sum(axis=2).argmin(axis=1)
+        codes[:, j] = _sq_dists(X[:, j * sub:(j + 1) * sub], C).argmin(axis=1)
     return codes
 
 
@@ -385,7 +399,6 @@ def _pq_adc_ip_np(q, books, codes):
     """Asymmetric-distance inner product: per-subspace lookup tables
     (books[j] @ q_sub), summed over subspaces in fixed j order — the
     accumulation order is part of the bit-identity contract."""
-    import numpy as np
     m = len(books)
     sub = q.size // m
     score = np.zeros(codes.shape[0], dtype=np.float64)
@@ -393,6 +406,52 @@ def _pq_adc_ip_np(q, books, codes):
         table = books[j] @ q[j * sub:(j + 1) * sub]
         score += table[codes[:, j]]
     return score
+
+
+def _vectors(pdf: pd.DataFrame, emb_col: str) -> np.ndarray:
+    """An Arrow batch's embedding column as an (n, d) float64 matrix."""
+    return _as_f64(np.stack(pdf[emb_col].to_numpy()))
+
+
+def _collect_queries(queries: DataFrame, q_id_col: str, q_emb_col: str):
+    """Queries collect to the driver (small by contract, like IVF probe
+    sets): (q_ids, Q) in q_id order."""
+    rows = queries.select(q_id_col, q_emb_col).orderBy(q_id_col).collect()
+    return [r[0] for r in rows], _as_f64([list(r[1]) for r in rows])
+
+
+def _adc_topk(corpus: DataFrame, k: int, id_col: str, q_id_col: str,
+              score) -> DataFrame:
+    """Code-space top-k in ONE mapInPandas over `corpus`, then the rank
+    window's ONE exchange.
+
+    `score(pdf)` yields (q_id, ids, scores) for each query and the batch
+    rows it scores. Each batch emits only its local top k+1 per query
+    (+1 absorbs the self-match, which is skipped), ranked by the GLOBAL
+    tie-break (score desc, id asc) — any other local order could drop a
+    globally-ranked candidate at a boundary tie."""
+    schema = T.StructType([
+        T.StructField(q_id_col, T.LongType(), False),
+        T.StructField(id_col, T.LongType(), False),
+        T.StructField("adc_ip", T.DoubleType(), False),
+    ])
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out_q, out_v, out_s = [], [], []
+            for qid, ids, s in score(pdf):
+                for b in np.lexsort((ids, -s))[:k + 1]:
+                    if ids[b] != qid:
+                        out_q.append(qid)
+                        out_v.append(int(ids[b]))
+                        out_s.append(float(s[b]))
+            yield pd.DataFrame({q_id_col: out_q, id_col: out_v,
+                                "adc_ip": out_s})
+
+    return _topk(corpus.mapInPandas(run, schema), k, q_id_col, id_col,
+                 "adc_ip")
 
 
 def pq_train(embeddings: DataFrame, m: int = 8, ks: int = 16,
@@ -412,32 +471,7 @@ def pq_train(embeddings: DataFrame, m: int = 8, ks: int = 16,
     scale. Returns nested lists (m x ks x d/m) for closure broadcast."""
     sample = _train_sample(embeddings, id_col, emb_col, init_sample)
     X = _as_f64([list(r[1]) for r in sample])
-    return [[list(map(float, row)) for row in C]
-            for C in _pq_train_np(X, m, ks)]
-
-
-def pq_encode(embeddings: DataFrame, codebooks: list,
-              id_col: str = "vec_id",
-              emb_col: str = "embedding") -> DataFrame:
-    """Corpus -> (id, pq_code array<int>): one narrow mapInPandas stage,
-    codebooks ride the closure (broadcast), zero shuffles."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("pq_code", T.ArrayType(T.IntegerType()), False),
-    ])
-
-    def run(batches):
-        import numpy as np
-        books = [np.array(b, dtype=np.float64) for b in codebooks]
-        for pdf in batches:
-            X = _as_f64(np.stack(pdf[emb_col].to_numpy()))
-            codes = _pq_encode_np(X, books)
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "pq_code": list(codes)})
-
-    return embeddings.select(id_col, emb_col).mapInPandas(run, schema)
+    return [C.tolist() for C in _pq_train_np(X, m, ks)]
 
 
 def pq_topk_adc(embeddings: DataFrame, queries: DataFrame,
@@ -446,95 +480,92 @@ def pq_topk_adc(embeddings: DataFrame, queries: DataFrame,
                 id_col: str = "vec_id", emb_col: str = "embedding",
                 q_id_col: str = "q_id",
                 q_emb_col: str = "q_emb") -> DataFrame:
-    """Approximate inner-product top-k via PQ ADC: queries collect to
-    the driver (small by contract, like IVF probes), each Arrow batch
-    scores its codes against per-query lookup tables and emits only its
-    local top-k per query (map-side combine), then one window reduces
-    to the global top-k — the corpus never shuffles and never leaves
-    code space."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    """Approximate inner-product top-k via PQ ADC: each Arrow batch
+    encodes its vectors and scores the codes against per-query lookup
+    tables — the corpus never shuffles and never leaves code space."""
     if codebooks is None:
         codebooks = pq_train(embeddings, m=m, ks=ks, id_col=id_col,
                              emb_col=emb_col)
-    qrows = queries.select(q_id_col, q_emb_col).orderBy(q_id_col).collect()
-    q_ids = [r[0] for r in qrows]
-    Q = _as_f64([list(r[1]) for r in qrows])
-    schema = T.StructType([
-        T.StructField(q_id_col, T.LongType(), False),
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("adc_ip", T.DoubleType(), False),
-    ])
+    books = [np.array(b, dtype=np.float64) for b in codebooks]
+    q_ids, Q = _collect_queries(queries, q_id_col, q_emb_col)
 
-    def run(batches):
-        import numpy as np
-        books = [np.array(b, dtype=np.float64) for b in codebooks]
-        for pdf in batches:
-            X = _as_f64(np.stack(pdf[emb_col].to_numpy()))
-            codes = _pq_encode_np(X, books)
-            ids = pdf[id_col].to_numpy()
-            out_q, out_v, out_s = [], [], []
-            for qi, qid in enumerate(q_ids):
-                s = _pq_adc_ip_np(Q[qi], books, codes)
-                # local prune must use the GLOBAL tie-break
-                # (score desc, id asc) or a boundary tie could drop
-                # the globally-ranked candidate
-                keep = np.lexsort((ids, -s))[:k + 1]
-                for b in keep:                    # +1 absorbs self-match
-                    if ids[b] == qid:
-                        continue
-                    out_q.append(qid)
-                    out_v.append(int(ids[b]))
-                    out_s.append(float(s[b]))
-            yield pd.DataFrame({q_id_col: out_q, id_col: out_v,
-                                "adc_ip": out_s})
+    def score(pdf):
+        codes = _pq_encode_np(_vectors(pdf, emb_col), books)
+        ids = pdf[id_col].to_numpy()
+        for qid, q in zip(q_ids, Q):
+            yield qid, ids, _pq_adc_ip_np(q, books, codes)
 
-    cand = embeddings.select(id_col, emb_col).mapInPandas(run, schema)
-    w = Window.partitionBy(q_id_col).orderBy(F.col("adc_ip").desc(),
-                                             F.col(id_col))
-    return (cand.withColumn("rk", F.row_number().over(w).cast("int"))
-            .where(F.col("rk") <= k))
+    return _adc_topk(embeddings.select(id_col, emb_col), k, id_col,
+                     q_id_col, score)
 
 
-def _kmeans_np(X, k: int, n_iters: int = 3):
-    """Farthest-first init + Lloyd (first-index tie-breaks) — the numpy
-    core shared by the coarse quantizer and the oracle twin."""
-    import numpy as np
-    seeds = [0]
-    d_min = ((X - X[0]) ** 2).sum(axis=1)
-    while len(seeds) < min(k, len(X)):
-        nxt = int(np.argmax(d_min))
-        seeds.append(nxt)
-        d_min = np.minimum(d_min, ((X - X[nxt]) ** 2).sum(axis=1))
-    C = X[seeds].copy()
-    for _ in range(n_iters):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for j in range(len(C)):
-            members = X[assign == j]
-            if len(members):
-                C[j] = members.mean(axis=0)
-    return C
-
+# -- IVF-PQ: coarse lists + residual PQ codes -----------------------------
+#
+# Coarse assignment prunes which vectors a query scores (nprobe of
+# n_lists inverted lists), residual PQ codes replace the vectors (d
+# float32 -> m bytes), and scoring is q.x ~ q.centroid[list] + ADC(q,
+# residual codes) — constant per (query, list) plus table lookups.
+# `ivfpq_topk` re-trains and re-ENCODES the corpus inside every call —
+# fine for one-shot batches, a full decode+encode scan per batch at
+# 100 TB. The write/read pair is the faiss-on-disk shape: encode ONCE
+# into (id, list_id, pq_code) partitioned by list_id (a ~32x read-volume
+# reduction), then every query batch reads ONLY its probed list_id
+# partitions (PartitionFilters at the parquet scan) and scores STORED
+# codes — no encode stage in the read plan. Both read paths share one
+# scorer, so on the same model they return bit-identical doubles.
 
 def _ivfpq_train_np(X, n_lists: int, m: int, ks: int):
     """Coarse centroids + RESIDUAL-space PQ codebooks (faiss IVF-PQ
     training shape): quantize x - centroid[assign(x)], not x."""
-    import numpy as np
     C = _kmeans_np(X, n_lists)
-    assign = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(
-        axis=1)
-    residuals = X - C[assign]
-    books = _pq_train_np(residuals, m, ks)
-    return C, books
+    assign = _sq_dists(X, C).argmin(axis=1)
+    return C, _pq_train_np(X - C[assign], m, ks)
 
 
 def _ivfpq_encode_np(X, C, books):
-    import numpy as np
-    assign = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(
-        axis=1)
-    codes = _pq_encode_np(X - C[assign], books)
-    return assign, codes
+    assign = _sq_dists(X, C).argmin(axis=1)
+    return assign, _pq_encode_np(X - C[assign], books)
+
+
+def _ivfpq_ip_np(q, C, books, assign, codes):
+    """IVF-PQ inner product q.centroid[list] + ADC(q, residual codes).
+    q.centroid is computed once per list and then gathered, so a row's
+    score does not depend on which other rows share its batch (a per-row
+    `C[assign] @ q` product rounds differently with the batch length)."""
+    return (C @ q)[assign] + _pq_adc_ip_np(q, books, codes)
+
+
+def _ivfpq_model(embeddings: DataFrame, n_lists: int, m: int, ks: int,
+                 id_col: str, emb_col: str, init_sample: int):
+    """IVF-PQ training on the same deterministic hash-spread, id-resorted
+    sample as pq_train/kmeans_centroids (no lowest-id prefix bias; == the
+    whole corpus when it fits in init_sample, which is what keeps the
+    single-process oracle twin exact at gate scale)."""
+    sample = _train_sample(embeddings, id_col, emb_col, init_sample)
+    return _ivfpq_train_np(_as_f64([list(r[1]) for r in sample]),
+                           n_lists, m, ks)
+
+
+def _ivfpq_scorer(C, books, q_ids, Q, probes, id_col: str,
+                  lists_and_codes):
+    """The scorer of both IVF-PQ read paths: each query scores only the
+    rows of its probed lists. `lists_and_codes(pdf)` gives a batch's
+    (list ids, residual codes) — encoded on the fly or read from the
+    stored index."""
+    def score(pdf):
+        assign, codes = lists_and_codes(pdf)
+        ids = pdf[id_col].to_numpy()
+        for qid, q, lists in zip(q_ids, Q, probes):
+            mask = np.isin(assign, lists)
+            if mask.any():
+                yield qid, ids[mask], _ivfpq_ip_np(q, C, books,
+                                                   assign[mask], codes[mask])
+    return score
+
+
+def _nearest_lists(Q, C, nprobe: int) -> np.ndarray:
+    """Each query's nprobe nearest coarse lists (stable ties)."""
+    return np.argsort(_sq_dists(Q, C), axis=1, kind="stable")[:, :nprobe]
 
 
 def ivfpq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
@@ -543,80 +574,18 @@ def ivfpq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                emb_col: str = "embedding", q_id_col: str = "q_id",
                q_emb_col: str = "q_emb",
                init_sample: int = 8192) -> DataFrame:
-    """The composed IVF-PQ read path: coarse assignment prunes which
-    vectors a query scores (nprobe of n_lists inverted lists), residual
-    PQ codes replace the vectors (d float32 -> m bytes), and scoring is
-    q.x ~ q.centroid[list] + ADC(q, residual codes) — constant per
-    (query, list) plus table lookups. ONE mapInPandas stage assigns,
+    """The composed IVF-PQ read path: ONE mapInPandas stage assigns,
     encodes, probe-filters and emits local top-k per query; ONE window
-    exchange reduces globally. Training runs on the same deterministic
-    hash-spread, id-resorted sample as pq_train/kmeans_centroids (no
-    lowest-id prefix bias; == the whole corpus when it fits in
-    init_sample, which is what keeps the single-process oracle twin
-    exact at gate scale)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    sample = _train_sample(embeddings, id_col, emb_col, init_sample)
-    Xs = _as_f64([list(r[1]) for r in sample])
-    C, books = _ivfpq_train_np(Xs, n_lists, m, ks)
-    qrows = queries.select(q_id_col, q_emb_col).orderBy(q_id_col).collect()
-    q_ids = [r[0] for r in qrows]
-    Q = _as_f64([list(r[1]) for r in qrows])
-    import numpy as np
-    # per-query probe set: nprobe nearest coarse centroids
-    qd = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    probe = {qid: set(np.argsort(qd[i], kind="stable")[:nprobe].tolist())
-             for i, qid in enumerate(q_ids)}
-    C_l, books_l = C.tolist(), [b.tolist() for b in books]
-    schema = T.StructType([
-        T.StructField(q_id_col, T.LongType(), False),
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("adc_ip", T.DoubleType(), False),
-    ])
+    exchange reduces globally."""
+    C, books = _ivfpq_model(embeddings, n_lists, m, ks, id_col, emb_col,
+                            init_sample)
+    q_ids, Q = _collect_queries(queries, q_id_col, q_emb_col)
+    score = _ivfpq_scorer(
+        C, books, q_ids, Q, _nearest_lists(Q, C, nprobe), id_col,
+        lambda pdf: _ivfpq_encode_np(_vectors(pdf, emb_col), C, books))
+    return _adc_topk(embeddings.select(id_col, emb_col), k, id_col,
+                     q_id_col, score)
 
-    def run(batches):
-        import numpy as np
-        Cn = np.array(C_l, dtype=np.float64)
-        Bn = [np.array(b, dtype=np.float64) for b in books_l]
-        Qn = _as_f64(Q)
-        for pdf in batches:
-            X = _as_f64(np.stack(pdf[emb_col].to_numpy()))
-            ids = pdf[id_col].to_numpy()
-            assign, codes = _ivfpq_encode_np(X, Cn, Bn)
-            out_q, out_v, out_s = [], [], []
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(assign, list(probe[qid]))
-                if not mask.any():
-                    continue
-                sub_ids = ids[mask]
-                s = (Cn[assign[mask]] @ Qn[qi]
-                     + _pq_adc_ip_np(Qn[qi], Bn, codes[mask]))
-                keep = np.lexsort((sub_ids, -s))[:k + 1]
-                for b in keep:
-                    if sub_ids[b] == qid:
-                        continue
-                    out_q.append(qid)
-                    out_v.append(int(sub_ids[b]))
-                    out_s.append(float(s[b]))
-            yield pd.DataFrame({q_id_col: out_q, id_col: out_v,
-                                "adc_ip": out_s})
-
-    cand = embeddings.select(id_col, emb_col).mapInPandas(run, schema)
-    w = Window.partitionBy(q_id_col).orderBy(F.col("adc_ip").desc(),
-                                             F.col(id_col))
-    return (cand.withColumn("rk", F.row_number().over(w).cast("int"))
-            .where(F.col("rk") <= k))
-
-
-# -- persisted IVF-PQ index: write once, query many -----------------------
-#
-# ivfpq_topk re-trains and re-ENCODES the corpus inside every query call —
-# fine for one-shot batches, a full decode+encode scan per batch at
-# 100 TB. The write/read pair below is the faiss-on-disk shape: encode
-# ONCE into (id, list_id, pq_code) partitioned by list_id (d float32 ->
-# m bytes, a ~32x read-volume reduction), then every query batch reads
-# ONLY its probed list_id partitions (PartitionFilters at the parquet
-# scan) and scores STORED codes — no encode stage in the read plan.
 
 def ivfpq_write_index(embeddings: DataFrame, path: str, n_lists: int = 8,
                       m: int = 8, ks: int = 16, id_col: str = "vec_id",
@@ -625,19 +594,11 @@ def ivfpq_write_index(embeddings: DataFrame, path: str, n_lists: int = 8,
     """Persist an IVF-PQ index: coarse-assign + residual-PQ-encode the
     corpus in ONE narrow mapInPandas (models ride the closure), write
     partitionBy(list_id), and store the model (coarse centroids +
-    residual codebooks) as a one-line JSON text dataset at
-    `<path>/_model` through Spark's writer (works on hdfs://, s3://).
-    Training runs on the same hash-spread bounded sample as
-    pq_train/kmeans_centroids — zero full-corpus passes beyond the one
-    encode scan. Returns (centroids, codebooks) as nested lists."""
-    import json
-
-    from pyspark.sql import types as T
-    sample = _train_sample(embeddings, id_col, emb_col, init_sample)
-    Xs = _as_f64([list(r[1]) for r in sample])
-    C, books = _ivfpq_train_np(Xs, n_lists, m, ks)
-    C_l = [list(map(float, c)) for c in C]
-    books_l = [[list(map(float, row)) for row in b] for b in books]
+    residual codebooks) as a JSON sidecar at `<path>/_model`. Zero
+    full-corpus passes beyond the one encode scan. Returns (centroids,
+    codebooks) as nested lists."""
+    C, books = _ivfpq_model(embeddings, n_lists, m, ks, id_col, emb_col,
+                            init_sample)
     schema = T.StructType([
         T.StructField(id_col, T.LongType(), False),
         T.StructField("pq_code", T.ArrayType(T.IntegerType()), False),
@@ -645,25 +606,19 @@ def ivfpq_write_index(embeddings: DataFrame, path: str, n_lists: int = 8,
     ])
 
     def run(batches):
-        import numpy as np
-        Cn = np.array(C_l, dtype=np.float64)
-        Bn = [np.array(b, dtype=np.float64) for b in books_l]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = _as_f64(np.stack(pdf[emb_col].to_numpy()))
-            assign, codes = _ivfpq_encode_np(X, Cn, Bn)
+            assign, codes = _ivfpq_encode_np(_vectors(pdf, emb_col), C, books)
             yield pd.DataFrame({id_col: pdf[id_col],
                                 "pq_code": list(codes),
                                 "list_id": assign.astype("int32")})
 
     (embeddings.select(id_col, emb_col).mapInPandas(run, schema)
      .write.mode("overwrite").partitionBy("list_id").parquet(path))
-    spark = embeddings.sparkSession
-    model = json.dumps({"centroids": C_l, "codebooks": books_l})
-    spark.createDataFrame([(model,)], "value string") \
-        .coalesce(1).write.mode("overwrite").text(f"{path}/_model")
-    return C_l, books_l
+    model = {"centroids": C.tolist(), "codebooks": [b.tolist() for b in books]}
+    _write_model(embeddings.sparkSession, model, f"{path}/_model")
+    return model["centroids"], model["codebooks"]
 
 
 def ivfpq_topk_indexed(spark, path: str, queries: DataFrame, k: int = 5,
@@ -674,71 +629,21 @@ def ivfpq_topk_indexed(spark, path: str, queries: DataFrame, k: int = 5,
     probed list_id filter lands on the index's partition column (only
     nprobe/n_lists of the stored codes are ever READ — PartitionFilters
     in the scan, pinned by tests/test_pq.py), and scoring runs over the
-    STORED pq_code column — score = q.centroid[list] + ADC(q, residual
-    codes), bit-identical to ivfpq_topk on the same model. One
-    mapInPandas over the pruned scan with local top-k per batch
-    (global tie-break: score desc, id asc), ONE exchange for the final
-    window. Queries collect to the driver (small by contract, like IVF
-    probe sets)."""
-    import json
-
-    import numpy as np
-    from pyspark.sql import types as T
-    rows = spark.read.text(f"{path}/_model").collect()
-    model = json.loads("".join(r["value"] for r in rows))
-    C_l, books_l = model["centroids"], model["codebooks"]
-    C = np.array(C_l, dtype=np.float64)
-    qrows = queries.select(q_id_col, q_emb_col).orderBy(q_id_col).collect()
-    q_ids = [r[0] for r in qrows]
-    Q = _as_f64([list(r[1]) for r in qrows])
-    qd = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    probe = {qid: np.argsort(qd[i], kind="stable")[:nprobe].tolist()
-             for i, qid in enumerate(q_ids)}
-    probe_lists = sorted({int(l) for ls in probe.values() for l in ls})
-    Q_l = Q.tolist()
-    schema = T.StructType([
-        T.StructField(q_id_col, T.LongType(), False),
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("adc_ip", T.DoubleType(), False),
-    ])
-
-    def run(batches):
-        import numpy as np
-        Cn = np.array(C_l, dtype=np.float64)
-        Bn = [np.array(b, dtype=np.float64) for b in books_l]
-        Qn = _as_f64(Q_l)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            assign = pdf["list_id"].to_numpy()
-            codes = np.stack(pdf["pq_code"].to_numpy()).astype(np.int64)
-            out_q, out_v, out_s = [], [], []
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(assign, probe[qid])
-                if not mask.any():
-                    continue
-                sub_ids = ids[mask]
-                s = (Cn[assign[mask]] @ Qn[qi]
-                     + _pq_adc_ip_np(Qn[qi], Bn, codes[mask]))
-                keep = np.lexsort((sub_ids, -s))[:k + 1]
-                for b in keep:
-                    if sub_ids[b] == qid:
-                        continue
-                    out_q.append(qid)
-                    out_v.append(int(sub_ids[b]))
-                    out_s.append(float(s[b]))
-            yield pd.DataFrame({q_id_col: out_q, id_col: out_v,
-                                "adc_ip": out_s})
-
+    STORED pq_code column, bit-identical to ivfpq_topk on the same
+    model."""
+    model = _read_model(spark, f"{path}/_model")
+    C = np.array(model["centroids"], dtype=np.float64)
+    books = [np.array(b, dtype=np.float64) for b in model["codebooks"]]
+    q_ids, Q = _collect_queries(queries, q_id_col, q_emb_col)
+    probes = _nearest_lists(Q, C, nprobe)
     index = (spark.read.parquet(path)
-             .where(F.col("list_id").isin(probe_lists))
+             .where(F.col("list_id").isin(np.unique(probes).tolist()))
              .select(id_col, "pq_code", "list_id"))
-    cand = index.mapInPandas(run, schema)
-    w = Window.partitionBy(q_id_col).orderBy(F.col("adc_ip").desc(),
-                                             F.col(id_col))
-    return (cand.withColumn("rk", F.row_number().over(w).cast("int"))
-            .where(F.col("rk") <= k))
+    score = _ivfpq_scorer(
+        C, books, q_ids, Q, probes, id_col,
+        lambda pdf: (pdf["list_id"].to_numpy(),
+                     np.stack(pdf["pq_code"].to_numpy()).astype(np.int64)))
+    return _adc_topk(index, k, id_col, q_id_col, score)
 
 
 # -- SemDeDup: cluster-then-prune semantic dedup ---------------------------
@@ -785,7 +690,6 @@ def _semdedup_prune_np(ids, X, threshold: float):
     or lowest-centroid-distance member; lowest id is reproducible
     across engines and runs). Zero-norm vectors have no direction
     (cosine() NULL semantics above): always kept, never leaders."""
-    import numpy as np
     order = np.argsort(ids, kind="stable")
     ids_s, Xs = ids[order], X[order]
     norms = np.sqrt((Xs * Xs).sum(axis=1))
@@ -896,7 +800,6 @@ def _semdedup_over_assigned(assigned: DataFrame, threshold: float,
     out_schema = f"{id_col} {id_type}, list_id int"
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
         kept = _semdedup_prune_np(pdf[id_col].to_numpy(),
                                   _as_f64(list(pdf[emb_col])), thr)
         return pd.DataFrame({

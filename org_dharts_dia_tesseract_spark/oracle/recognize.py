@@ -26,14 +26,6 @@ from .segment import Node, TEXT_KINDS
 _NUMERIC_RE = re.compile(r"^[0-9.,\-]+$")   # R5 isNumeric (ResultHandle:145-151)
 
 
-def _pad_bitmap(bmp: np.ndarray) -> np.ndarray:
-    out = np.zeros((GLYPH_H, GLYPH_W), dtype=np.uint8)
-    h = min(bmp.shape[0], GLYPH_H)
-    w = min(bmp.shape[1], GLYPH_W)
-    out[:h, :w] = bmp[:h, :w]
-    return out
-
-
 def recognize_blocks(blocks: list[Node], whitelist: str | None = None,
                      langs: tuple[str, ...] = ("eng",)) -> None:
     """Classify every SYMBOL node and roll text/confidence up, in place.
@@ -64,9 +56,9 @@ def recognize_blocks(blocks: list[Node], whitelist: str | None = None,
     for b in blocks:
         collect(b)
     if symbols:
-        # one (n, AREA) buffer filled via row views: same values as the
-        # old per-symbol _pad_bitmap + stack + astype, without n temporary
-        # arrays (this is the per-page hot loop)
+        # one (n, AREA) buffer filled via row views: each bitmap cropped
+        # or zero-padded to the glyph cell, without n temporary arrays
+        # (this is the per-page hot loop)
         flat = np.zeros((len(symbols), GLYPH_AREA), dtype=np.int16)
         for j, s in enumerate(symbols):
             bmp = s.bitmap

@@ -43,7 +43,6 @@ UNKNOWN = "UNKNOWN"
 
 TEXT_KINDS = {"FLOWING_TEXT", "HEADING_TEXT", "PULLOUT_TEXT", "TABLE",
               "VERTICAL_TEXT", "CAPTION_TEXT"}   # isText, PublicTypes.java:178-184
-IMAGE_KINDS = {"FLOWING_IMAGE", "HEADING_IMAGE", "PULLOUT_IMAGE"}  # isImage, :186-192
 
 LEVELS = ("BLOCK", "PARA", "TEXTLINE", "WORD", "SYMBOL")
 
@@ -68,15 +67,6 @@ class Node:
     confidence: float | None = None
     virtual: bool = False            # non-text block's synthesized child
     bitmap: np.ndarray | None = None  # SYMBOL only: ink crop for recognition
-
-
-def _blank_runs(profile: np.ndarray) -> list[tuple[int, int]]:
-    """Half-open [start, end) runs where profile == 0, interior only."""
-    nz = np.flatnonzero(profile)
-    if len(nz) == 0:
-        return []
-    gaps = np.flatnonzero(np.diff(nz) > 1)
-    return [(int(nz[g] + 1), int(nz[g + 1])) for g in gaps]
 
 
 class _InkProfiles:

@@ -1107,25 +1107,11 @@ def similarity_topk_cosine(spark, sf_dir):
     """Brute-force cosine top-5 for 5 query vectors — the ANN baseline.
     At scale: broadcast the query set; each partition scores its shard and
     emits local top-k; a single narrow final top-k per query follows."""
+    from .operators.similarity import brute_force_topk
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.where(F.col("vec_id") < 5) \
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    def sq_norm(c):
-        return F.sqrt(F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0), lambda a, x: a + x))
-    dot = F.aggregate(
-        F.zip_with("q_emb", "embedding",
-                   lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda a, x: a + x)
-    scored = (emb.crossJoin(F.broadcast(qs))
-              .where(F.col("vec_id") != F.col("q_id"))
-              .select("q_id", "vec_id",
-                      (dot / (sq_norm(F.col("q_emb")) * sq_norm(F.col("embedding"))))
-                      .alias("cosine")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (scored.withColumn("rk", F.row_number().over(w).cast("int"))
-            .where(F.col("rk") <= 5)
+    return (brute_force_topk(emb, qs, k=5)
             .select("q_id", "vec_id", F.round("cosine", 4).alias("cosine"), "rk"))
 
 

@@ -608,13 +608,13 @@ def main() -> None:
     # composed IVF-PQ twin (probe-all): coarse + residual codebooks on
     # the same id-ordered sample; score = q.centroid + ADC(q, residual)
     from org_dharts_dia_tesseract_spark.operators.similarity import (
-        _ivfpq_encode_np, _ivfpq_train_np)
+        _ivfpq_encode_np, _ivfpq_ip_np, _ivfpq_train_np)
     C, rbooks = _ivfpq_train_np(X, n_lists=8, m=8, ks=16)
     assign, rcodes = _ivfpq_encode_np(X, C, rbooks)
     irows = []
     for qid in [i for i in ids if i < 5]:
         qi = int(np.nonzero(ids == qid)[0][0])
-        s = C[assign] @ X[qi] + _pq_adc_ip_np(X[qi], rbooks, rcodes)
+        s = _ivfpq_ip_np(X[qi], C, rbooks, assign, rcodes)
         keep = np.lexsort((ids, -s))
         rk = 0
         for b in keep:
@@ -642,8 +642,7 @@ def main() -> None:
         plists = np.argsort(qd, kind="stable")[:2]
         mask = np.isin(assign, plists)
         sub_ids = ids[mask]
-        s = C[assign[mask]] @ X[qi] + _pq_adc_ip_np(X[qi], rbooks,
-                                                    rcodes[mask])
+        s = _ivfpq_ip_np(X[qi], C, rbooks, assign[mask], rcodes[mask])
         keep = np.lexsort((sub_ids, -s))
         rk = 0
         for b in keep:
