@@ -7,14 +7,19 @@ the sandbox ships no Iceberg runtime — the table API below is the seam
 where an Iceberg catalog would slot in):
 
     <root>/data/bucket=<k>/*.parquet      span rows of doc-bucket k
-    <root>/manifests/bucket-<k>.json      {bucket, status, n_docs, n_spans,
-                                           wall_ms, attempt, lineage_id}
+    <root>/manifests/bucket-<k>.json      {bucket, n_buckets, status,
+                                           n_docs, n_spans, n_error_spans,
+                                           wall_ms, attempt, lineage_id,
+                                           written_at}
 
 Buckets are `pmod(xxhash64(doc_id), n_buckets)` — stable under any
 cluster size, so a resume after failure processes exactly the missing
-buckets (anti-join of bucket ids against DONE manifests). Content is a
-pure function of doc_id (deterministic kernels, SURVEY 4.3), so resumed
-output is bit-identical to a single run.
+buckets (anti-join of bucket ids against DONE manifests). A run writes
+all of its pending buckets with ONE `partitionBy("bucket")` write under
+dynamic partition overwrite, so a resume replaces only its own
+partitions; the per-bucket span counts are observed on that same write.
+Content is a pure function of doc_id (deterministic kernels, SURVEY
+4.3), so resumed output is bit-identical to a single run.
 """
 
 from __future__ import annotations
@@ -24,7 +29,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -36,19 +41,15 @@ def _manifest_path(root: str, bucket: int) -> str:
     return os.path.join(root, "manifests", f"bucket-{bucket}.json")
 
 
+def _write_json(path: str, obj: dict) -> None:
+    """Atomic commit: a reader sees the old file or the new one."""
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f)
+    os.replace(path + ".tmp", path)
+
+
 def done_buckets(root: str) -> set[int]:
-    mdir = os.path.join(root, "manifests")
-    if not os.path.isdir(mdir):
-        return set()
-    out = set()
-    for name in os.listdir(mdir):
-        if not name.endswith(".json"):
-            continue
-        with open(os.path.join(mdir, name)) as f:
-            m = json.load(f)
-        if m.get("status") == "DONE":
-            out.add(int(m["bucket"]))
-    return out
+    return {m["bucket"] for m in metrics(root) if m["status"] == "DONE"}
 
 
 def run_checkpointed(spark: SparkSession, documents: DataFrame,
@@ -56,103 +57,96 @@ def run_checkpointed(spark: SparkSession, documents: DataFrame,
                      fail_buckets: set[int] | None = None,
                      audit: bool = True,
                      on_error: str = "dead-letter",
-                     concurrency: int = 4,
                      page_timeout_ms: int | None = None) -> dict:
-    """Run span extraction bucket-by-bucket with manifests; skips buckets
-    already DONE (resume). `fail_buckets` injects failures for tests.
+    """Run span extraction with per-bucket manifests; skips buckets
+    already DONE (resume).
+
+    The pending buckets are extracted and written by ONE Spark write;
+    each bucket's manifest is committed (atomic rename) only after that
+    write commits, with its n_spans / n_error_spans observed on the
+    write itself and `wall_ms` = the run's write time. The failure unit
+    is the run: an exception from the write records every pending
+    bucket FAILED, and the next call retries them. `fail_buckets`
+    injects failures for tests: those buckets are recorded FAILED
+    without running. A root is bucketed once: a call whose `n_buckets`
+    differs from the one in the root's manifests raises ValueError
+    (resuming under another bucketing would silently drop documents).
     `audit` records dangling media_refs (image spans whose media row is
     missing — silently unprocessable) in manifests/_audit.json.
     `on_error` defaults to 'dead-letter': a corrupt page becomes an
     in-band kind='error' span (counted per bucket in the manifest)
-    instead of permanently failing its bucket on every resume.
+    instead of failing the run on every resume.
     `page_timeout_ms` bounds each page's decode+analyze (soft SIGALRM
     deadline, the TessAPI.java:464-481 timeout_millisec analog); an
     over-budget page dead-letters as a kind='error' span counted in the
     bucket manifest instead of stalling the task.
-    `concurrency` (default 4) submits that many bucket jobs at once
-    (Spark's scheduler interleaves them) — a sequential driver loop
-    leaves the cluster idle between jobs once bucket counts grow;
-    manifests stay correct because each is an atomic per-bucket rename.
 
     Returns a summary dict {processed, skipped, failed}.
     """
     from ..operators.extract import audit_dangling_media, extract_spans
 
+    prior = {m["bucket"]: m for m in metrics(root)}
+    other = {m.get("n_buckets", n_buckets)
+             for m in prior.values()} - {n_buckets}
+    if other:
+        raise ValueError(f"{root} holds manifests for n_buckets="
+                         f"{sorted(other)}; resume it with that, not "
+                         f"{n_buckets}")
     os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
     if audit:
         dangling = audit_dangling_media(documents, media)
         sample = [r.asDict() for r in dangling.limit(20).collect()]
-        apath = os.path.join(root, "manifests", "_audit.json")
-        with open(apath + ".tmp", "w") as f:
-            json.dump({"n_dangling_media_refs": dangling.count(),
-                       "sample": sample,
-                       "written_at": int(time.time())}, f)
-        os.replace(apath + ".tmp", apath)
-    docs_b = documents.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-    docs_b.cache()
-    already = done_buckets(root)
-    summary = {"processed": [], "skipped": sorted(already), "failed": []}
-    lineage_id = uuid.uuid4().hex
-    # ONE job for every bucket's doc count (vs a count() job per bucket):
-    # the per-bucket loop then only runs the extraction write itself
-    bucket_docs = {r["bucket"]: r["n"] for r in
-                   docs_b.groupBy("bucket")
-                   .agg(F.count("*").alias("n")).collect()}
-
-    def run_bucket(b: int) -> tuple[int, bool]:
-        attempt = 1
-        prev = _manifest_path(root, b)
-        if os.path.exists(prev):
-            with open(prev) as f:
-                attempt = int(json.load(f).get("attempt", 0)) + 1
+        _write_json(os.path.join(root, "manifests", "_audit.json"),
+                    {"n_dangling_media_refs": dangling.count(),
+                     "sample": sample, "written_at": int(time.time())})
+    already = {b for b, m in prior.items() if m["status"] == "DONE"}
+    todo = [b for b in range(n_buckets) if b not in already]
+    errors = {b: f"injected failure in bucket {b}"
+              for b in todo if b in (fail_buckets or ())}
+    pending = [b for b in todo if b not in errors]
+    counts, n_docs, wall_ms = {}, {}, 0
+    if pending:
+        bucket = bucket_of(F.col("doc_id"), n_buckets)
+        # ONE job for every bucket's doc count
+        n_docs = {r["bucket"]: r["count"] for r in
+                  documents.groupBy(bucket.alias("bucket")).count().collect()}
         t0 = time.time()
         try:
-            if fail_buckets and b in fail_buckets:
-                raise RuntimeError(f"injected failure in bucket {b}")
-            part = docs_b.where(F.col("bucket") == b).drop("bucket")
-            n_docs = int(bucket_docs.get(b, 0))
-            out = extract_spans(part, media, on_error=on_error,
-                                page_timeout_ms=page_timeout_ms)
-            out_path = os.path.join(root, "data", f"bucket={b}")
-            out.write.mode("overwrite").parquet(out_path)
-            written = spark.read.parquet(out_path)
-            counts = written.groupBy(
-                (F.col("kind") == "error").alias("is_err")).count().collect()
-            n_spans = sum(r["count"] for r in counts)
-            n_err = sum(r["count"] for r in counts if r["is_err"])
-            manifest = {
-                "bucket": b, "status": "DONE", "n_docs": n_docs,
-                "n_spans": n_spans, "n_error_spans": n_err,
-                "wall_ms": int((time.time() - t0) * 1000),
-                "attempt": attempt, "lineage_id": lineage_id,
-                "written_at": int(time.time()),
-            }
-            ok = True
-        except Exception as e:   # noqa: BLE001 — manifest must record any failure
-            manifest = {
-                "bucket": b, "status": "FAILED", "error": str(e)[:500],
-                "wall_ms": int((time.time() - t0) * 1000),
-                "attempt": attempt, "lineage_id": lineage_id,
-                "written_at": int(time.time()),
-            }
-            ok = False
-        tmp = _manifest_path(root, b) + f".tmp{b}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, _manifest_path(root, b))   # atomic commit
-        return b, ok
-
-    todo = [b for b in range(n_buckets) if b not in already]
-    if concurrency <= 1:
-        results = [run_bucket(b) for b in todo]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=concurrency) as pool:
-            results = list(pool.map(run_bucket, todo))
-    for b, ok in sorted(results):
-        summary["processed" if ok else "failed"].append(b)
-    docs_b.unpersist()
-    return summary
+            is_err, per_bucket = F.col("kind") == "error", []
+            for b in pending:
+                in_b = F.col("bucket") == b
+                per_bucket += [F.count_if(in_b).alias(f"spans_{b}"),
+                               F.count_if(in_b & is_err).alias(f"errors_{b}")]
+            obs = Observation()
+            spans = (extract_spans(documents.where(bucket.isin(pending)),
+                                   media, on_error=on_error,
+                                   page_timeout_ms=page_timeout_ms)
+                     .withColumn("bucket", bucket)
+                     .observe(obs, *per_bucket))
+            (spans.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("bucket").parquet(os.path.join(root, "data")))
+            counts = obs.get
+        except Exception as e:   # noqa: BLE001 — the manifests record it
+            errors.update({b: str(e)[:500] for b in pending})
+        wall_ms = int((time.time() - t0) * 1000)
+    lineage_id = uuid.uuid4().hex
+    for b in todo:
+        if b in errors:
+            result = {"status": "FAILED", "error": errors[b],
+                      "wall_ms": wall_ms if b in pending else 0}
+        else:
+            result = {"status": "DONE", "n_docs": n_docs.get(b, 0),
+                      "n_spans": counts[f"spans_{b}"],
+                      "n_error_spans": counts[f"errors_{b}"],
+                      "wall_ms": wall_ms}
+        _write_json(_manifest_path(root, b), {
+            "bucket": b, **result,
+            "attempt": prior.get(b, {}).get("attempt", 0) + 1,
+            "lineage_id": lineage_id, "written_at": int(time.time()),
+            "n_buckets": n_buckets})
+    return {"processed": [b for b in todo if b not in errors],
+            "skipped": sorted(already), "failed": sorted(errors)}
 
 
 def read_output(spark: SparkSession, root: str) -> DataFrame:

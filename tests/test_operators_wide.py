@@ -372,28 +372,68 @@ def test_checkpoint_resume_after_failure(spark, corpus_small, tmp_path):
     pd.testing.assert_frame_equal(direct, resumed)
 
 
-def test_checkpoint_concurrent_buckets_identical(spark, corpus_small,
-                                                 tmp_path):
-    """concurrency=4 submits bucket jobs in parallel; output and
-    manifests must equal the sequential run exactly."""
+@pytest.mark.parametrize("n_buckets", [1, 4])
+def test_checkpoint_observed_counts(spark, corpus_small, tmp_path,
+                                    n_buckets):
+    """The one partitioned write observes each bucket's span counts: every
+    manifest must equal direct per-bucket counts of the same extraction,
+    with the dead-lettered page counted exactly once."""
+    from org_dharts_dia_tesseract_spark.operators import extract_spans
     from org_dharts_dia_tesseract_spark.sources import checkpoint as C
     docs_df, media_df = corpus_small
-    seq_root = str(tmp_path / "seq")
-    par_root = str(tmp_path / "par")
-    s1 = C.run_checkpointed(spark, docs_df, media_df, seq_root,
-                            n_buckets=4, audit=False)
-    s2 = C.run_checkpointed(spark, docs_df, media_df, par_root,
-                            n_buckets=4, audit=False, concurrency=4)
-    assert s1["processed"] == s2["processed"] == [0, 1, 2, 3]
-    cols = ["doc_id", "seq", "kind", "text", "media_ref"]
-    a = (C.read_output(spark, seq_root).select(cols).toPandas()
-         .sort_values(["doc_id", "seq"]).reset_index(drop=True))
-    b = (C.read_output(spark, par_root).select(cols).toPandas()
-         .sort_values(["doc_id", "seq"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b)
-    per_bucket = lambda root: {  # noqa: E731
-        m["bucket"]: (m["n_docs"], m["n_spans"]) for m in C.metrics(root)}
-    assert per_bucket(seq_root) == per_bucket(par_root)
+    victim = media_df.select("media_ref").first()[0]
+    corrupted = media_df.withColumn(
+        "payload",
+        F.when(F.col("media_ref") == victim,
+               F.substring("payload", 1, 7)).otherwise(F.col("payload")))
+    root = str(tmp_path / "ckpt")
+    s = C.run_checkpointed(spark, docs_df, corrupted, root,
+                           n_buckets=n_buckets, audit=False)
+    assert s == {"processed": list(range(n_buckets)), "skipped": [],
+                 "failed": []}
+
+    bucket = C.bucket_of(F.col("doc_id"), n_buckets).alias("bucket")
+    spans = extract_spans(docs_df, corrupted, on_error="dead-letter")
+    per_bucket = lambda df: {  # noqa: E731
+        r["bucket"]: r["count"] for r in df.groupBy(bucket).count().collect()}
+    n_docs = per_bucket(docs_df)
+    n_spans = per_bucket(spans)
+    n_err = per_bucket(spans.where(F.col("kind") == "error"))
+    ms = C.metrics(root)
+    assert {m["bucket"]: (m["n_docs"], m["n_spans"], m["n_error_spans"])
+            for m in ms} == {
+        b: (n_docs.get(b, 0), n_spans.get(b, 0), n_err.get(b, 0))
+        for b in range(n_buckets)}
+    assert sum(m["n_error_spans"] for m in ms) == 1
+    fields = {"bucket", "status", "n_docs", "n_spans", "n_error_spans",
+              "wall_ms", "attempt", "lineage_id", "written_at"}
+    assert all(fields <= m.keys() for m in ms)
+
+
+def test_checkpoint_rejects_other_bucketing(spark, corpus_small, tmp_path):
+    """A root is bucketed once: resuming it with another n_buckets would
+    skip the documents the new bucketing maps onto old DONE bucket ids,
+    so it raises; manifests written without n_buckets are accepted."""
+    import json
+
+    from org_dharts_dia_tesseract_spark.sources import checkpoint as C
+    docs_df, media_df = corpus_small
+    root = str(tmp_path / "ckpt")
+    C.run_checkpointed(spark, docs_df, media_df, root, n_buckets=4,
+                       fail_buckets={2}, audit=False)
+    with pytest.raises(ValueError, match="n_buckets"):
+        C.run_checkpointed(spark, docs_df, media_df, root, n_buckets=2,
+                           audit=False)
+    for m in C.metrics(root):          # a root from before the field
+        del m["n_buckets"]
+        with open(C._manifest_path(root, m["bucket"]), "w") as f:
+            json.dump(m, f)
+    s = C.run_checkpointed(spark, docs_df, media_df, root, n_buckets=4,
+                           audit=False)
+    assert s["processed"] == [2]
+    ms = C.metrics(root)
+    assert sum(m["n_docs"] for m in ms) == docs_df.count()
+    assert sum(m["n_spans"] for m in ms) == C.read_output(spark, root).count()
 
 
 def test_corrupt_payload_error_policy(spark, corpus_small, tmp_path):
