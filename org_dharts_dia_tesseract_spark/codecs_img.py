@@ -258,47 +258,55 @@ def _tiff_lzw_encode(raw: bytes) -> bytes:
     return bytes(out)
 
 
+# the single-byte strings both LZW decoders start their tables from
+_LZW_BYTES = [bytes([i]) for i in range(256)]
+
+
 def _tiff_lzw_decode(data: bytes, n_bytes: int) -> bytes:
     """Inverse of _tiff_lzw_encode; also reads libtiff output (same
     MSB-first early-change convention)."""
     out = bytearray()
-    acc = n_bits = i = 0
-    width = 9
-    table = [bytes([j]) for j in range(256)] + [b"", b""]
+    n_out = acc = n_bits = i = 0
+    end = len(data)
+    root = _LZW_BYTES + [b"", b""]
+    table, size = root.copy(), 258
+    # early change, minus one more because the decoder's table lags the
+    # encoder's by one entry (the in-flight KwKwK entry): the width steps
+    # up once the table holds `grow` entries
+    width, grow = 9, (1 << 9) - 2
     prev: bytes | None = None
-    while len(out) < n_bytes:
+    while n_out < n_bytes:
         while n_bits < width:
-            if i >= len(data):
+            if i >= end:
                 raise ValueError("TIFF LZW stream truncated")
             acc = (acc << 8) | data[i]
             i += 1
             n_bits += 8
-        code = (acc >> (n_bits - width)) & ((1 << width) - 1)
         n_bits -= width
+        code = acc >> n_bits
         acc &= (1 << n_bits) - 1
         if code == 256:                         # Clear
-            table = [bytes([j]) for j in range(256)] + [b"", b""]
-            width, prev = 9, None
+            table, size = root.copy(), 258
+            width, grow, prev = 9, (1 << 9) - 2, None
             continue
         if code == 257:                         # EOI
             break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError(f"TIFF LZW code {code} out of range")
+        if code < size:
             entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):                # KwKwK
+            if prev is not None:
+                table.append(prev + entry[:1])
+                size += 1
+        elif code == size and prev is not None:  # KwKwK
             entry = prev + prev[:1]
             table.append(entry)
+            size += 1
         else:
             raise ValueError(f"TIFF LZW code {code} out of range")
-        # early change, minus one more because the decoder's table lags
-        # the encoder's by one entry (the in-flight KwKwK entry)
-        if len(table) == (1 << width) - 2 and width < 12:
+        if size == grow and width < 12:
             width += 1
+            grow = (1 << width) - 2
         out += entry
+        n_out += len(entry)
         prev = entry
     return bytes(out[:n_bytes])
 
@@ -1415,16 +1423,20 @@ def _lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
 
 
 def _lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> np.ndarray:
+    """GIF-variant LZW (LSB-first, no early change) -> n_pixels indices;
+    a stream that ends early leaves the remaining pixels 0."""
     clear, end = 1 << min_code_size, (1 << min_code_size) + 1
-    out = np.empty(n_pixels, dtype=np.uint8)
-    pos = 0
+    out = bytearray()
+    n_out = 0
     acc = n_bits = bit_i = 0
+    n_data = len(data)
+    root = _LZW_BYTES[:clear] + [b"", b""]
+    table, size = root.copy(), clear + 2
     width = min_code_size + 1
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
     prev: bytes | None = None
-    while pos < n_pixels:
+    while n_out < n_pixels:
         while n_bits < width:
-            if bit_i >= len(data):
+            if bit_i >= n_data:
                 raise ValueError("GIF LZW stream truncated")
             acc |= data[bit_i] << n_bits
             bit_i += 1
@@ -1433,27 +1445,32 @@ def _lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> np.ndarray:
         acc >>= width
         n_bits -= width
         if code == clear:
-            table = [bytes([i]) for i in range(clear)] + [b"", b""]
+            table, size = root.copy(), clear + 2
             width, prev = min_code_size + 1, None
             continue
         if code == end:
             break
-        if prev is None:
+        if code < size:
             entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):                # the KwKwK case
+            if prev is not None:
+                table.append(prev + entry[:1])
+                size += 1
+        elif code == size and prev is not None:     # the KwKwK case
             entry = prev + prev[:1]
             table.append(entry)
+            size += 1
         else:
             raise ValueError(f"GIF LZW code {code} out of range")
-        if prev is not None and len(table) == (1 << width) and width < 12:
+        if prev is not None and size == (1 << width) and width < 12:
             width += 1
-        out[pos: pos + len(entry)] = np.frombuffer(entry, dtype=np.uint8)
-        pos += len(entry)
+        out += entry
+        n_out += len(entry)
         prev = entry
-    return out[:n_pixels]
+    if n_out >= n_pixels:
+        return np.frombuffer(out, dtype=np.uint8, count=n_pixels)
+    idx = np.zeros(n_pixels, dtype=np.uint8)    # the stream ended early
+    idx[:n_out] = np.frombuffer(out, dtype=np.uint8)
+    return idx
 
 
 def encode_gif(img: np.ndarray) -> bytes:
@@ -1578,8 +1595,10 @@ def decode_gif(data: bytes) -> np.ndarray:
 # dependence on the "typical" Annex-K code tables). Color: JFIF YCbCr,
 # encoder emits 4:4:4 or 4:2:0 (box-mean chroma downsample), decoder
 # handles any integer sampling-factor grid (4:4:4 / 4:2:2 / 4:2:0),
-# per-component quant/Huffman table ids, DRI/RSTn, byte stuffing;
-# progressive (SOF2) and non-interleaved scans are rejected. JPEG is
+# per-component quant/Huffman table ids, DRI/RSTn, byte stuffing,
+# progressive (SOF2) and non-interleaved scans. The decoder reads Huffman
+# codes through a peek table built once per DHT table (`_huff_table`),
+# not one bit at a time. JPEG is
 # lossy: round-trips are near-equal, not equal — but the OCR pipeline
 # binarizes with a >170-level ink/background margin, so spans over
 # JPEG-encoded media equal the raw run's (gates ocr_spans_jpeg_media /
@@ -2074,48 +2093,100 @@ def encode_jpeg(img: np.ndarray, quality: int = 90,
     return bytes(out)
 
 
+# Huffman decoding is table-driven rather than bit-serial (T.81 Annex
+# F.2.2.3). Each DHT table is built once into a peek table: the next 9
+# bits of the stream index `lut`, whose entry is (length << 8) | symbol for
+# a code of at most 9 bits. An entry of 0 is the prefix of a longer code
+# (or of no code): `_huff_long` resolves it from the next 16 bits against
+# the canonical code ranges of lengths 10..16.
+
+
+def _huff_table(bits: list[int], symbols: list[int]) -> tuple[list, tuple]:
+    """DHT (BITS, HUFFVAL) -> (lut, long) peek table. `long` holds one
+    (length, first code, last code, symbols from first) per length above
+    9 bits. Codes that overflow their length (an over-full BITS list)
+    can never be read and are left out."""
+    lut = [0] * 512
+    long = []
+    code = k = 0
+    for length in range(1, 17):
+        cnt = bits[length - 1]
+        last = min(code + cnt, 1 << length) - 1
+        if length <= 9:
+            shift = 9 - length
+            for c in range(code, last + 1):
+                entry = (length << 8) | symbols[k + c - code]
+                lut[c << shift: (c + 1) << shift] = [entry] * (1 << shift)
+        elif last >= code:
+            long.append((length, code, last, symbols[k: k + cnt]))
+        code = (code + cnt) << 1
+        k += cnt
+    return lut, tuple(long)
+
+
+def _huff_long(long: tuple, peek16: int) -> int:
+    """(length << 8) | symbol of the code longer than 9 bits that starts
+    `peek16`; ValueError when the bits start no code of the table."""
+    for length, first, last, syms in long:
+        c = peek16 >> (16 - length)
+        if first <= c <= last:
+            return (length << 8) | syms[c - first]
+    raise ValueError("JPEG: invalid Huffman code")
+
+
+def _fill(data: bytes, pos: int, acc: int, n: int) -> tuple[int, int, int]:
+    """Top the bit buffer up to 32 bits or more: 0xFF00 is an unstuffed
+    0xFF, a marker stops consumption (pos stays on it), and bytes at a
+    marker or past the end read as 0xFF padding. The valid bits of `acc`
+    are its low `n`; a run of 6 bytes without 0xFF loads in one step."""
+    acc &= (1 << n) - 1
+    word = data[pos: pos + 6]
+    if len(word) == 6 and 0xFF not in word:
+        return pos + 6, (acc << 48) | int.from_bytes(word, "big"), n + 48
+    end = len(data)
+    while n < 32:
+        if pos >= end:
+            b = 0xFF
+        else:
+            b = data[pos]
+            if b != 0xFF:
+                pos += 1
+            elif pos + 1 >= end or data[pos + 1] == 0x00:
+                pos += 2                        # stuffed byte
+        acc = (acc << 8) | b
+        n += 8
+    return pos, acc, n
+
+
 class _BitReader:
+    """MSB-first entropy-coded-segment reader. `_read_block` runs the
+    same state (pos, acc, n) in locals; both refill through `_fill`."""
+
     def __init__(self, data: bytes) -> None:
         self.data = data
         self.pos = 0
         self.acc = 0
         self.n = 0
 
-    def _fill(self) -> None:
-        while self.n <= 24:
-            if self.pos >= len(self.data):
-                self.acc = (self.acc << 8) | 0xFF   # pad past end
-                self.n += 8
-                continue
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                nxt = self.data[self.pos] if self.pos < len(self.data) else 0
-                if nxt == 0x00:
-                    self.pos += 1               # stuffed byte
-                else:
-                    self.pos -= 1               # marker: stop consuming
-                    self.acc = (self.acc << 8) | 0xFF
-                    self.n += 8
-                    continue
-            self.acc = (self.acc << 8) | b
-            self.n += 8
-
     def bits(self, k: int) -> int:
         if k == 0:
             return 0
-        self._fill()
-        v = (self.acc >> (self.n - k)) & ((1 << k) - 1)
-        self.n -= k
-        return v
+        n = self.n
+        if n < 16:
+            self.pos, self.acc, n = _fill(self.data, self.pos, self.acc, n)
+        n -= k
+        self.n = n
+        return (self.acc >> n) & ((1 << k) - 1)
 
-    def huff(self, table: dict[tuple, int]) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.bits(1)
-            if (length, code) in table:
-                return table[(length, code)]
-        raise ValueError("JPEG: invalid Huffman code")
+    def huff(self, table: tuple[list, tuple]) -> int:
+        n = self.n
+        if n < 16:
+            self.pos, self.acc, n = _fill(self.data, self.pos, self.acc, n)
+        acc = self.acc
+        v = (table[0][(acc >> (n - 9)) & 0x1FF]
+             or _huff_long(table[1], (acc >> (n - 16)) & 0xFFFF))
+        self.n = n - (v >> 8)
+        return v & 0xFF
 
     def align(self) -> None:
         self.n -= self.n % 8
@@ -2134,28 +2205,54 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def _read_block(br: "_BitReader", dc_tab: dict, ac_tab: dict,
-                pred: int) -> tuple[np.ndarray, int]:
-    """Entropy-decode one block into zigzag order; returns (row, pred)."""
-    s = br.huff(dc_tab)
-    pred += _extend(br.bits(s), s) if s else 0
-    row = np.zeros(64, dtype=np.int32)
-    row[0] = pred
+def _read_block(br: "_BitReader", dc_tab: tuple, ac_tab: tuple,
+                pred: int, blk: np.ndarray) -> int:
+    """Entropy-decode one sequential block into its zigzag row `blk`;
+    returns the new DC predictor. The reader's state is held in locals
+    for the whole block (the per-symbol hot loop)."""
+    data, pos, acc, n = br.data, br.pos, br.acc, br.n
+    lut, long = dc_tab
+    if n < 16:
+        pos, acc, n = _fill(data, pos, acc, n)
+    v = (lut[(acc >> (n - 9)) & 0x1FF]
+         or _huff_long(long, (acc >> (n - 16)) & 0xFFFF))
+    n -= v >> 8
+    s = v & 0xFF
+    if s:
+        if n < 16:
+            pos, acc, n = _fill(data, pos, acc, n)
+        n -= s
+        d = (acc >> n) & ((1 << s) - 1)
+        pred += d if d >> (s - 1) else d - (1 << s) + 1
+    blk[:] = 0
+    blk[0] = pred
+    lut, long = ac_tab
     k = 1
     while k < 64:
-        sym = br.huff(ac_tab)
-        if sym == 0x00:                    # EOB
-            break
-        if sym == 0xF0:                    # ZRL
-            k += 16
+        if n < 16:
+            pos, acc, n = _fill(data, pos, acc, n)
+        v = (lut[(acc >> (n - 9)) & 0x1FF]
+             or _huff_long(long, (acc >> (n - 16)) & 0xFFFF))
+        n -= v >> 8
+        s = v & 15
+        if not s:
+            if v & 0xFF == 0x00:               # EOB
+                break
+            if v & 0xFF != 0xF0:
+                raise ValueError("JPEG: invalid AC symbol")
+            k += 16                            # ZRL
             continue
-        k += sym >> 4
-        size = sym & 15
+        k += (v >> 4) & 15
         if k > 63:
             raise ValueError("JPEG: AC index out of range")
-        row[k] = _extend(br.bits(size), size)
+        if n < 16:
+            pos, acc, n = _fill(data, pos, acc, n)
+        n -= s
+        d = (acc >> n) & ((1 << s) - 1)
+        blk[k] = d if d >> (s - 1) else d - (1 << s) + 1
         k += 1
-    return row, pred
+    br.pos, br.acc, br.n = pos, acc, n
+    return pred
 
 
 def _idct_plane(zz: np.ndarray, Q: np.ndarray, bh: int,
@@ -2186,7 +2283,7 @@ def _jpeg_scan_end(data: bytes, pos: int) -> int:
     return n
 
 
-def _decode_dc_block(br: "_BitReader", blk: np.ndarray, dc_tab: dict,
+def _decode_dc_block(br: "_BitReader", blk: np.ndarray, dc_tab: tuple,
                      pred: int, Ah: int, Al: int) -> int:
     """Progressive DC: first scan (Ah=0) decodes the point-transformed
     difference; refinement ORs in the next lower bit (T.81 G.1.2.1)."""
@@ -2200,7 +2297,7 @@ def _decode_dc_block(br: "_BitReader", blk: np.ndarray, dc_tab: dict,
     return pred
 
 
-def _decode_ac_first(br: "_BitReader", blk: np.ndarray, ac_tab: dict,
+def _decode_ac_first(br: "_BitReader", blk: np.ndarray, ac_tab: tuple,
                      Ss: int, Se: int, Al: int, eobrun: int) -> int:
     """Progressive AC, first scan for this band (T.81 G.1.2.2): EOBn
     run-length codes span whole blocks; values land shifted by Al."""
@@ -2226,7 +2323,7 @@ def _decode_ac_first(br: "_BitReader", blk: np.ndarray, ac_tab: dict,
     return eobrun
 
 
-def _decode_ac_refine(br: "_BitReader", blk: np.ndarray, ac_tab: dict,
+def _decode_ac_refine(br: "_BitReader", blk: np.ndarray, ac_tab: tuple,
                       Ss: int, Se: int, Al: int, eobrun: int) -> int:
     """Progressive AC refinement (T.81 G.1.2.3): newly-significant
     coefficients arrive as ±1<<Al; already-nonzero ones absorb one
@@ -2281,7 +2378,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         raise ValueError("not a JPEG payload")
     pos = 2
     qtabs: dict[int, np.ndarray] = {}
-    htabs: dict[tuple, dict[tuple, int]] = {}
+    htabs: dict[tuple, tuple] = {}           # (class, id) -> peek table
     h = w = None
     comps: list[tuple[int, int, int, int]] = []   # (cid, hs, vs, tq)
     restart = 0
@@ -2316,15 +2413,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 bits = list(payload[i + 1: i + 17])
                 n = sum(bits)
                 symbols = list(payload[i + 17: i + 17 + n])
-                table: dict[tuple, int] = {}
-                code, k = 0, 0
-                for length in range(1, 17):
-                    for _ in range(bits[length - 1]):
-                        table[(length, code)] = symbols[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                htabs[(cls, tid)] = table
+                if len(bits) < 16 or len(symbols) < n:
+                    raise ValueError("JPEG: truncated DHT segment")
+                htabs[(cls, tid)] = _huff_table(bits, symbols)
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):     # SOF0/1 sequential, 2 prog.
             progressive = marker == 0xC2
@@ -2367,6 +2458,21 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             Ah, Al = ahal >> 4, ahal & 15
             if not progressive:
                 Ss, Se, Ah, Al = 0, 63, 0, 0
+            for cid, td, ta in scomps:
+                if cid not in cmeta:
+                    raise ValueError(f"JPEG: scan component {cid} is not "
+                                     "in the frame")
+                if not progressive:
+                    need = [(0, td), (1, ta)]
+                elif Ss:                       # AC scan
+                    need = [(1, ta)]
+                else:                          # DC first / refinement
+                    need = [] if Ah else [(0, td)]
+                for cls, tid in need:
+                    if (cls, tid) not in htabs:
+                        raise ValueError(
+                            f"JPEG: scan selects undefined "
+                            f"{('DC', 'AC')[cls]} Huffman table {tid}")
             end = _jpeg_scan_end(data, pos)
             br = _BitReader(data[pos:end])
             pos = end
@@ -2414,9 +2520,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                     for idx in idxs:
                         blk = zzs[cid][idx]
                         if not progressive:
-                            zzs[cid][idx], preds[cid] = _read_block(
+                            preds[cid] = _read_block(
                                 br, htabs[(0, td)], htabs[(1, ta)],
-                                preds[cid])
+                                preds[cid], blk)
                         elif Ss == 0:          # DC scan (Se must be 0)
                             dc_tab = htabs[(0, td)] if Ah == 0 else None
                             preds[cid] = _decode_dc_block(
@@ -2431,6 +2537,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                                 eobrun)
     if h is None or n_scans == 0:
         raise ValueError("JPEG: missing SOS/SOF")
+    for _cid, _hs, _vs, tq in comps:
+        if tq not in qtabs:
+            raise ValueError(f"JPEG: quantization table {tq} not defined")
     planes = {}
     for cid, hs, vs, tq in comps:
         plane = _idct_plane(zzs[cid], qtabs[tq], mcus_y * vs, mcus_x * hs)

@@ -17,6 +17,20 @@ This is a from-scratch implementation of the actual coding chain:
 - codestream markers (SOC/SIZ/COD/QCD/SOT/SOD/EOC) and the JP2
   container boxes (signature/ftyp/jp2h/jp2c).
 
+Tier-1 runs on one context model shared by encoder and decoder
+(`_T1Grid`):
+- a padded neighbour-state grid per code-block: for each coefficient, 8
+  significance bits and 4 sign bits of its neighbours, updated when a
+  coefficient becomes significant, so a context is one list index into
+  tables derived from the Annex D ones (`_SIG_CTX`, `_SIGN_CTX`);
+- per pass a candidate list in stripe order, taken with numpy from the
+  grid's bytearrays, so each pass visits only coefficients it may code:
+  SPP the insignificant ones, MRP those significant before the
+  bit-plane, CUP the stripe columns still holding an unvisited
+  insignificant one;
+- one MQ decoder whose state lives in closure cells (`_MQDecoder.decode`
+  is the closure).
+
 Supported subset (encoder always writes this; decoder validates and
 rejects anything else with a clear error): single tile at origin, 1 or 3
 components sampled 1:1 (no MCT — components coded independently), 8-bit
@@ -34,6 +48,7 @@ environment to cross-check byte streams against.
 
 from __future__ import annotations
 
+import functools
 import math
 import struct
 
@@ -180,76 +195,83 @@ class _MQEncoder:
         return bytes(self.out)
 
 
+# Decoder form of the Qe table: a context's state is one int,
+# st = 2 * index + MPS, so a decision reads one list per field.
+_ST_QE = [_QE[st >> 1][0] for st in range(2 * len(_QE))]
+_ST_NMPS = [2 * _QE[st >> 1][1] + (st & 1) for st in range(2 * len(_QE))]
+_ST_NLPS = [2 * _QE[st >> 1][2] + ((st & 1) ^ _QE[st >> 1][3])
+            for st in range(2 * len(_QE))]
+
+
 class _MQDecoder:
     """MQ decoder; reads past-the-end as 0xFF (matching the encoder's
-    dropped-trailing-FF convention)."""
+    dropped-trailing-FF convention). The coder state (A, C, CT, the read
+    position and the per-context states) lives in closure cells:
+    `self.decode` is the closure, so a decision costs no attribute
+    lookups."""
 
     def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.n = len(data)
-        self.bp = 0
-        b0 = data[0] if self.n else 0xFF
-        self.c = b0 << 16
-        self._bytein()
-        self.c <<= 7
-        self.ct -= 7
-        self.a = 0x8000
-        self.i, self.mps = _init_ctx_states()
+        n = len(data)
+        state = [2 * i + m for i, m in zip(*_init_ctx_states())]
+        qes, nmps, nlps = _ST_QE, _ST_NMPS, _ST_NLPS
+        bp = 0
+        c = (data[0] if n else 0xFF) << 16
+        ct = 0
+        a = 0x8000
 
-    def _bytein(self) -> None:
-        data, bp, n = self.data, self.bp, self.n
-        cur = data[bp] if bp < n else 0xFF
-        if cur == 0xFF:
+        def bytein() -> None:
+            nonlocal bp, c, ct
+            cur = data[bp] if bp < n else 0xFF
             nxt = data[bp + 1] if bp + 1 < n else 0xFF
-            if nxt > 0x8F:
-                self.c += 0xFF00
-                self.ct = 8
+            if cur != 0xFF:
+                bp += 1
+                c += nxt << 8
+                ct = 8
+            elif nxt > 0x8F:
+                c += 0xFF00
+                ct = 8
             else:
-                self.bp = bp + 1
-                self.c += nxt << 9
-                self.ct = 7
-        else:
-            self.bp = bp + 1
-            nxt = data[bp + 1] if bp + 1 < n else 0xFF
-            self.c += nxt << 8
-            self.ct = 8
+                bp += 1
+                c += nxt << 9
+                ct = 7
 
-    def decode(self, cx: int) -> int:
-        qe, nmps, nlps, switch = _QE[self.i[cx]]
-        self.a -= qe
-        if ((self.c >> 16) & 0xFFFF) < qe:
-            # LPS exchange path
-            if self.a < qe:
-                d = self.mps[cx]
-                self.i[cx] = nmps
+        def decode(cx: int) -> int:
+            nonlocal a, c, ct
+            st = state[cx]
+            qe = qes[st]
+            a -= qe
+            if ((c >> 16) & 0xFFFF) < qe:
+                # LPS exchange path
+                if a < qe:
+                    d = st & 1
+                    state[cx] = nmps[st]
+                else:
+                    d = (st & 1) ^ 1
+                    state[cx] = nlps[st]
+                a = qe
             else:
-                d = 1 - self.mps[cx]
-                if switch:
-                    self.mps[cx] ^= 1
-                self.i[cx] = nlps
-            self.a = qe
-        else:
-            self.c -= qe << 16
-            if self.a & 0x8000:
-                return self.mps[cx]
-            if self.a < qe:
-                d = 1 - self.mps[cx]
-                if switch:
-                    self.mps[cx] ^= 1
-                self.i[cx] = nlps
-            else:
-                d = self.mps[cx]
-                self.i[cx] = nmps
-        # renormalize
-        while True:
-            if self.ct == 0:
-                self._bytein()
-            self.a <<= 1
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            if self.a & 0x8000:
-                break
-        return d
+                c -= qe << 16
+                if a & 0x8000:
+                    return st & 1
+                if a < qe:
+                    d = (st & 1) ^ 1
+                    state[cx] = nlps[st]
+                else:
+                    d = st & 1
+                    state[cx] = nmps[st]
+            while True:                         # renormalize
+                if ct == 0:
+                    bytein()
+                a <<= 1
+                c = (c << 1) & 0xFFFFFFFF
+                ct -= 1
+                if a & 0x8000:
+                    return d
+
+        bytein()
+        c <<= 7
+        ct -= 7
+        self.decode = decode
 
 
 # ---------------------------------------------------------------------------
@@ -373,93 +395,128 @@ _SIGN_LUT = {
     (-1, 1): (11, 1), (-1, 0): (12, 1), (-1, -1): (13, 1),
 }
 
+# Neighbour-state bits of the tier-1 grid. `nbr[q]` holds one
+# significance bit per neighbour of q; `ngs[q]` one negative-sign bit per
+# horizontal/vertical neighbour (set only with its significance bit).
+_W, _E, _N, _S, _NW, _NE, _SW, _SE = 1, 2, 4, 8, 16, 32, 64, 128
 
-class _BlockCoder:
-    """Shared scan/context machinery for one code-block; subclassed into
-    nothing — encode/decode are driven by the two module functions with
-    callbacks so the pass logic is written exactly once."""
 
-    __slots__ = ("w", "h", "sig_lut", "sig", "vis", "ref", "sgn", "mag")
+def _sig_ctx_by_mask(orient: str) -> list[int]:
+    """Significance context per 8-bit neighbour mask (from _SIG_LUT)."""
+    lut = _SIG_LUT[orient]
+    out = []
+    for m in range(256):
+        hh = (m & _W > 0) + (m & _E > 0)
+        vv = (m & _N > 0) + (m & _S > 0)
+        dd = bin(m >> 4).count("1")
+        out.append(lut[hh * 15 + vv * 5 + dd])
+    return out
 
-    def __init__(self, w: int, h: int, orient: str) -> None:
-        self.w = w
-        self.h = h
-        self.sig_lut = _SIG_LUT[orient]
-        n = w * h
-        self.sig = bytearray(n)
-        self.vis = bytearray(n)
-        self.ref = bytearray(n)
-        self.sgn = bytearray(n)     # 0 positive, 1 negative
-        self.mag = [0] * n
 
-    # --- neighborhood ------------------------------------------------
-    def sig_ctx(self, y: int, x: int) -> int:
-        w, h, sig = self.w, self.h, self.sig
-        p = y * w + x
-        hh = 0
-        if x > 0 and sig[p - 1]:
-            hh += 1
-        if x + 1 < w and sig[p + 1]:
-            hh += 1
-        vv = 0
-        if y > 0 and sig[p - w]:
-            vv += 1
-        if y + 1 < h and sig[p + w]:
-            vv += 1
-        d = 0
-        if y > 0:
-            if x > 0 and sig[p - w - 1]:
-                d += 1
-            if x + 1 < w and sig[p - w + 1]:
-                d += 1
-        if y + 1 < h:
-            if x > 0 and sig[p + w - 1]:
-                d += 1
-            if x + 1 < w and sig[p + w + 1]:
-                d += 1
-        return self.sig_lut[hh * 15 + vv * 5 + d]
+def _sign_ctx_by_mask() -> list[tuple[int, int]]:
+    """(ctx, xor) per (nbr & 15) | (ngs << 4) (from _SIGN_LUT)."""
+    out = []
+    for m in range(256):
+        def contrib(bit: int) -> int:
+            return 0 if not m & bit else (-1 if m & (bit << 4) else 1)
+        hc = max(-1, min(1, contrib(_W) + contrib(_E)))
+        vc = max(-1, min(1, contrib(_N) + contrib(_S)))
+        out.append(_SIGN_LUT[(hc, vc)])
+    return out
 
-    def nbr_count(self, y: int, x: int) -> int:
-        """H+V+D significant-neighbour count (refinement context)."""
-        w, h, sig = self.w, self.h, self.sig
-        p = y * w + x
-        c = 0
-        if x > 0 and sig[p - 1]:
-            c += 1
-        if x + 1 < w and sig[p + 1]:
-            c += 1
-        if y > 0 and sig[p - w]:
-            c += 1
-        if y + 1 < h and sig[p + w]:
-            c += 1
-        if y > 0:
-            if x > 0 and sig[p - w - 1]:
-                c += 1
-            if x + 1 < w and sig[p - w + 1]:
-                c += 1
-        if y + 1 < h:
-            if x > 0 and sig[p + w - 1]:
-                c += 1
-            if x + 1 < w and sig[p + w + 1]:
-                c += 1
-        return c
 
-    def sign_ctx(self, y: int, x: int) -> tuple[int, int]:
-        w, h, sig, sgn = self.w, self.h, self.sig, self.sgn
-        p = y * w + x
-        hc = 0
-        if x > 0 and sig[p - 1]:
-            hc += -1 if sgn[p - 1] else 1
-        if x + 1 < w and sig[p + 1]:
-            hc += -1 if sgn[p + 1] else 1
-        hc = 1 if hc > 0 else (-1 if hc < 0 else 0)
-        vc = 0
-        if y > 0 and sig[p - w]:
-            vc += -1 if sgn[p - w] else 1
-        if y + 1 < h and sig[p + w]:
-            vc += -1 if sgn[p + w] else 1
-        vc = 1 if vc > 0 else (-1 if vc < 0 else 0)
-        return _SIGN_LUT[(hc, vc)]
+_SIG_CTX = {o: _sig_ctx_by_mask(o) for o in _SIG_LUT}
+_SIGN_CTX = _sign_ctx_by_mask()
+
+
+@functools.lru_cache(maxsize=32)
+def _stripe_scan(h: int, w: int) -> tuple[np.ndarray, ...]:
+    """Scan geometry of an h x w code-block on its padded grid (row
+    stride w + 2, coefficient (y, x) at (y + 1) * (w + 2) + x + 1):
+    - order: every coefficient in stripe order (4-row stripes, column by
+      column, top to bottom within a column);
+    - cols: (n_columns, 4) positions of each stripe column; a short last
+      stripe is filled with position 0, a padding cell kept significant;
+    - tops, ends: the first position of each stripe column, and the one
+      a row past its last coefficient."""
+    ww = w + 2
+    hp = -(-h // 4) * 4
+    pos = np.zeros((hp, w), dtype=np.int64)
+    pos[:h] = (np.arange(1, h + 1)[:, None] * ww
+               + np.arange(1, w + 1)[None, :])
+    cols = pos.reshape(hp // 4, 4, w).transpose(0, 2, 1).reshape(-1, 4)
+    order = cols.reshape(-1)
+    tops = cols[:, 0].copy()
+    ends = tops + (cols > 0).sum(axis=1) * ww
+    out = (order[order > 0], cols, tops, ends)
+    for a in out:                    # shared by every caller of the cache
+        a.setflags(write=False)
+    return out
+
+
+class _T1Grid:
+    """Tier-1 state of one code-block on a padded grid (one cell of
+    padding round the block, so neighbour reads need no bounds checks).
+    The per-cell bytearrays double as numpy views, from which each pass
+    takes its candidate list in stripe order:
+    - SPP: the insignificant coefficients;
+    - MRP: the coefficients significant before this bit-plane;
+    - CUP: the stripe columns still holding an insignificant coefficient
+      not visited by this bit-plane's SPP."""
+
+    __slots__ = ("stride", "sig", "vis", "ref", "neg", "nbr", "ngs",
+                 "sig_np", "vis_np", "order", "cols", "tops", "ends")
+
+    def __init__(self, h: int, w: int) -> None:
+        self.stride = w + 2
+        size = (h + 2) * (w + 2)
+        self.sig = bytearray(size)    # coefficient is significant
+        self.vis = bytearray(size)    # coded by this bit-plane's SPP
+        self.ref = bytearray(size)    # refined at least once
+        self.neg = bytearray(size)    # coefficient is negative
+        self.nbr = bytearray(size)    # significance bits of neighbours
+        self.ngs = bytearray(size)    # sign bits of H/V neighbours
+        self.sig[0] = 1               # the filler cell of short columns
+        self.sig_np = np.frombuffer(self.sig, dtype=np.uint8)
+        self.vis_np = np.frombuffer(self.vis, dtype=np.uint8)
+        self.order, self.cols, self.tops, self.ends = _stripe_scan(h, w)
+
+    def insignificant(self) -> list[int]:
+        o = self.order
+        return o[self.sig_np[o] == 0].tolist()
+
+    def significant(self) -> list[int]:
+        o = self.order
+        return o[self.sig_np[o] != 0].tolist()
+
+    def cleanup_columns(self) -> zip:
+        """(top, end, all four free) of each stripe column that holds a
+        coefficient neither significant nor visited."""
+        free = (self.sig_np | self.vis_np)[self.cols] == 0
+        keep = free.any(axis=1)
+        return zip(self.tops[keep].tolist(), self.ends[keep].tolist(),
+                   free.all(axis=1)[keep].tolist())
+
+    def set_significant(self, q: int, negative: int) -> None:
+        """Mark q significant with its sign, in its own cell and in the
+        neighbour bits of the eight cells round it."""
+        w, nbr = self.stride, self.nbr
+        self.sig[q] = 1
+        nbr[q - 1] |= _E
+        nbr[q + 1] |= _W
+        nbr[q - w] |= _S
+        nbr[q + w] |= _N
+        nbr[q - w - 1] |= _SE
+        nbr[q - w + 1] |= _SW
+        nbr[q + w - 1] |= _NE
+        nbr[q + w + 1] |= _NW
+        if negative:
+            ngs = self.ngs
+            self.neg[q] = 1
+            ngs[q - 1] |= _E
+            ngs[q + 1] |= _W
+            ngs[q - w] |= _S
+            ngs[q + w] |= _N
 
 
 def t1_encode(coeffs: np.ndarray, orient: str) -> tuple[bytes, int, int]:
@@ -468,105 +525,67 @@ def t1_encode(coeffs: np.ndarray, orient: str) -> tuple[bytes, int, int]:
     Returns (codeword, n_passes, n_bitplanes); an all-zero block returns
     (b"", 0, 0) and is simply not included in its packet."""
     h, w = coeffs.shape
-    bc = _BlockCoder(w, h, orient)
-    flat = coeffs.reshape(-1)
-    mags = np.abs(flat)
-    nbps = int(mags.max()).bit_length() if flat.size else 0
+    mags = np.abs(coeffs)
+    nbps = int(mags.max()).bit_length() if coeffs.size else 0
     if nbps == 0:
         return b"", 0, 0
-    bc.mag = [int(m) for m in mags]
-    sgn = bc.sgn
-    for i, v in enumerate(flat.tolist()):
-        if v < 0:
-            sgn[i] = 1
+    g = _T1Grid(h, w)
+    mag = np.pad(mags, 1).reshape(-1).tolist()
+    negs = np.pad(coeffs < 0, 1).reshape(-1).tolist()
     mq = _MQEncoder()
     enc = mq.encode
-    sig, vis, ref, mag = bc.sig, bc.vis, bc.ref, bc.mag
+    sig, vis, ref, nbr, ngs = g.sig, g.vis, g.ref, g.nbr, g.ngs
+    ww = g.stride
+    sig_ctx, sign_ctx = _SIG_CTX[orient], _SIGN_CTX
+    set_sig = g.set_significant
 
-    def code_sign(y: int, x: int) -> None:
-        ctx, xr = bc.sign_ctx(y, x)
-        enc(sgn[y * w + x] ^ xr, ctx)
-
-    def spp(p: int) -> None:
-        for y0 in range(0, h, 4):
-            ymax = min(y0 + 4, h)
-            for x in range(w):
-                for y in range(y0, ymax):
-                    q = y * w + x
-                    if sig[q]:
-                        continue
-                    ctx = bc.sig_ctx(y, x)
-                    if ctx == 0:
-                        continue
-                    vis[q] = 1
-                    bit = (mag[q] >> p) & 1
-                    enc(bit, ctx)
-                    if bit:
-                        code_sign(y, x)
-                        sig[q] = 1
-
-    def mrp(p: int) -> None:
-        for y0 in range(0, h, 4):
-            ymax = min(y0 + 4, h)
-            for x in range(w):
-                for y in range(y0, ymax):
-                    q = y * w + x
-                    if not sig[q] or vis[q]:
-                        continue
-                    if ref[q]:
-                        ctx = 16
-                    else:
-                        ctx = 15 if bc.nbr_count(y, x) else 14
-                        ref[q] = 1
-                    enc((mag[q] >> p) & 1, ctx)
-
-    def cup(p: int) -> None:
-        for y0 in range(0, h, 4):
-            ymax = min(y0 + 4, h)
-            full = ymax - y0 == 4
-            for x in range(w):
-                start = y0
-                if full:
-                    rl = True
-                    for y in range(y0, ymax):
-                        q = y * w + x
-                        if sig[q] or vis[q] or bc.sig_ctx(y, x) != 0:
-                            rl = False
-                            break
-                    if rl:
-                        r = -1
-                        for k in range(4):
-                            if (mag[(y0 + k) * w + x] >> p) & 1:
-                                r = k
-                                break
-                        if r < 0:
-                            enc(0, _CTX_RL)
-                            continue
-                        enc(1, _CTX_RL)
-                        enc(r >> 1, _CTX_UNI)
-                        enc(r & 1, _CTX_UNI)
-                        y = y0 + r
-                        q = y * w + x
-                        code_sign(y, x)
-                        sig[q] = 1
-                        start = y + 1
-                for y in range(start, ymax):
-                    q = y * w + x
-                    if sig[q] or vis[q]:
-                        continue
-                    bit = (mag[q] >> p) & 1
-                    enc(bit, bc.sig_ctx(y, x))
-                    if bit:
-                        code_sign(y, x)
-                        sig[q] = 1
+    def code_sign(q: int) -> None:
+        ctx, xr = sign_ctx[(nbr[q] & 15) | (ngs[q] << 4)]
+        enc(negs[q] ^ xr, ctx)
+        set_sig(q, negs[q])
 
     for p in range(nbps - 1, -1, -1):
         if p != nbps - 1:
-            spp(p)
-            mrp(p)
-        cup(p)
-        for i in range(len(vis)):
-            vis[i] = 0
+            refine = g.significant()
+            for q in g.insignificant():             # SPP
+                f = nbr[q]
+                if not f:
+                    continue
+                vis[q] = 1
+                bit = (mag[q] >> p) & 1
+                enc(bit, sig_ctx[f])
+                if bit:
+                    code_sign(q)
+            for q in refine:                        # MRP
+                if ref[q]:
+                    ctx = 16
+                else:
+                    ctx = 15 if nbr[q] else 14
+                    ref[q] = 1
+                enc((mag[q] >> p) & 1, ctx)
+        for q, end, run in g.cleanup_columns():     # CUP
+            if run and not (nbr[q] or nbr[q + ww] or nbr[q + 2 * ww]
+                            or nbr[q + 3 * ww]):
+                r = 0
+                while r < 4 and not (mag[q + r * ww] >> p) & 1:
+                    r += 1
+                if r == 4:
+                    enc(0, _CTX_RL)
+                    continue
+                enc(1, _CTX_RL)
+                enc(r >> 1, _CTX_UNI)
+                enc(r & 1, _CTX_UNI)
+                q += r * ww
+                code_sign(q)
+                q += ww
+            while q < end:
+                if not (sig[q] or vis[q]):
+                    bit = (mag[q] >> p) & 1
+                    enc(bit, sig_ctx[nbr[q]])
+                    if bit:
+                        code_sign(q)
+                q += ww
+        g.vis_np[:] = 0
     return mq.flush(), 3 * nbps - 2, nbps
 
 
@@ -577,93 +596,57 @@ def t1_decode(data: bytes, w: int, h: int, orient: str,
     if n_passes == 0:
         return out
     nbps = (n_passes + 2) // 3
-    bc = _BlockCoder(w, h, orient)
-    mq = _MQDecoder(data)
-    dec = mq.decode
-    sig, vis, ref, mag = bc.sig, bc.vis, bc.ref, bc.mag
-    sgn = bc.sgn
+    g = _T1Grid(h, w)
+    mag = [0] * len(g.sig)
+    dec = _MQDecoder(data).decode
+    sig, vis, ref, nbr, ngs = g.sig, g.vis, g.ref, g.nbr, g.ngs
+    ww = g.stride
+    sig_ctx, sign_ctx = _SIG_CTX[orient], _SIGN_CTX
+    set_sig = g.set_significant
 
-    def decode_sign(y: int, x: int) -> None:
-        ctx, xr = bc.sign_ctx(y, x)
-        sgn[y * w + x] = dec(ctx) ^ xr
-
-    def spp(p: int) -> None:
-        for y0 in range(0, h, 4):
-            ymax = min(y0 + 4, h)
-            for x in range(w):
-                for y in range(y0, ymax):
-                    q = y * w + x
-                    if sig[q]:
-                        continue
-                    ctx = bc.sig_ctx(y, x)
-                    if ctx == 0:
-                        continue
-                    vis[q] = 1
-                    if dec(ctx):
-                        decode_sign(y, x)
-                        sig[q] = 1
-                        mag[q] |= 1 << p
-
-    def mrp(p: int) -> None:
-        for y0 in range(0, h, 4):
-            ymax = min(y0 + 4, h)
-            for x in range(w):
-                for y in range(y0, ymax):
-                    q = y * w + x
-                    if not sig[q] or vis[q]:
-                        continue
-                    if ref[q]:
-                        ctx = 16
-                    else:
-                        ctx = 15 if bc.nbr_count(y, x) else 14
-                        ref[q] = 1
-                    if dec(ctx):
-                        mag[q] |= 1 << p
-                    else:
-                        mag[q] &= ~(1 << p)
-
-    def cup(p: int) -> None:
-        for y0 in range(0, h, 4):
-            ymax = min(y0 + 4, h)
-            full = ymax - y0 == 4
-            for x in range(w):
-                start = y0
-                if full:
-                    rl = True
-                    for y in range(y0, ymax):
-                        q = y * w + x
-                        if sig[q] or vis[q] or bc.sig_ctx(y, x) != 0:
-                            rl = False
-                            break
-                    if rl:
-                        if not dec(_CTX_RL):
-                            continue
-                        r = (dec(_CTX_UNI) << 1) | dec(_CTX_UNI)
-                        y = y0 + r
-                        q = y * w + x
-                        mag[q] |= 1 << p
-                        decode_sign(y, x)
-                        sig[q] = 1
-                        start = y + 1
-                for y in range(start, ymax):
-                    q = y * w + x
-                    if sig[q] or vis[q]:
-                        continue
-                    if dec(bc.sig_ctx(y, x)):
-                        mag[q] |= 1 << p
-                        decode_sign(y, x)
-                        sig[q] = 1
+    def decode_sign(q: int) -> None:
+        ctx, xr = sign_ctx[(nbr[q] & 15) | (ngs[q] << 4)]
+        set_sig(q, dec(ctx) ^ xr)
 
     for p in range(nbps - 1, -1, -1):
+        one = 1 << p
         if p != nbps - 1:
-            spp(p)
-            mrp(p)
-        cup(p)
-        for i in range(len(vis)):
-            vis[i] = 0
-    vals = np.array(mag, dtype=np.int32).reshape(h, w)
-    signs = np.frombuffer(bytes(sgn), dtype=np.uint8).reshape(h, w)
-    return np.where(signs == 1, -vals, vals)
+            refine = g.significant()
+            for q in g.insignificant():             # SPP
+                f = nbr[q]
+                if not f:
+                    continue
+                vis[q] = 1
+                if dec(sig_ctx[f]):
+                    mag[q] = one
+                    decode_sign(q)
+            for q in refine:                        # MRP
+                if ref[q]:
+                    ctx = 16
+                else:
+                    ctx = 15 if nbr[q] else 14
+                    ref[q] = 1
+                if dec(ctx):
+                    mag[q] |= one
+        for q, end, run in g.cleanup_columns():     # CUP
+            if run and not (nbr[q] or nbr[q + ww] or nbr[q + 2 * ww]
+                            or nbr[q + 3 * ww]):
+                if not dec(_CTX_RL):
+                    continue
+                q += ((dec(_CTX_UNI) << 1) | dec(_CTX_UNI)) * ww
+                mag[q] = one
+                decode_sign(q)
+                q += ww
+            while q < end:
+                if not (sig[q] or vis[q]):
+                    if dec(sig_ctx[nbr[q]]):
+                        mag[q] = one
+                        decode_sign(q)
+                q += ww
+        g.vis_np[:] = 0
+    vals = np.array(mag, dtype=np.int32).reshape(h + 2, w + 2)[1:-1, 1:-1]
+    signs = np.frombuffer(g.neg, dtype=np.uint8).reshape(h + 2, w + 2)
+    return np.where(signs[1:-1, 1:-1] == 1, -vals, vals)
 
 
 # ---------------------------------------------------------------------------

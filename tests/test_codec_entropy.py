@@ -1,0 +1,163 @@
+"""The entropy-coded codecs (JPEG, JPEG 2000, GIF and TIFF LZW): pinned
+encoder bytes and decoded pixels, and typed errors on bad streams.
+
+Each pinned case encodes a seeded fixture and pins the sha256 of the encoded
+bytes and of the decoded pixels. The encoders build perfbench's codec
+pool, so a changed byte would hand two checkouts different benchmark
+inputs; the decoders must keep every pixel. The fixtures are a noisy
+page (dense coefficients, many GIF/TIFF LZW codes and dictionary resets)
+and a rendered text page (long zero runs, JP2 run-length mode); the noisy
+grey page is large enough to split into several 64x64 JP2 code-blocks.
+"""
+
+from __future__ import annotations
+
+import hashlib
+
+import numpy as np
+import pytest
+
+from org_dharts_dia_tesseract_spark import codecs_img as C
+from org_dharts_dia_tesseract_spark import datagen
+from org_dharts_dia_tesseract_spark.codecs_avi import (decode_avi_mjpeg,
+                                                       encode_avi_mjpeg)
+
+NOISE = np.random.default_rng(2026).integers(0, 256, (150, 141),
+                                              dtype=np.uint8)
+NOISE_RGB = np.random.default_rng(2027).integers(0, 256, (37, 42, 3),
+                                                 dtype=np.uint8)
+TEXT = datagen.fixture_page("simple_poetry")
+TEXT_RGB = datagen.colorize_page(TEXT)
+
+
+def _sha(b) -> str:
+    if isinstance(b, np.ndarray):
+        b = str(b.shape).encode() + np.ascontiguousarray(b).tobytes()
+    return hashlib.sha256(b).hexdigest()[:16]
+
+
+def _mjpeg(img: np.ndarray):
+    frames = [C.encode_jpeg(img), C.encode_jpeg(255 - img)]
+    h, w = img.shape[:2]
+    enc = encode_avi_mjpeg(frames, w, h, 5)
+    dec, _w, _h, _fps = decode_avi_mjpeg(enc)
+    return enc, np.stack(dec)
+
+
+def _pair(encode, decode):
+    def run(img):
+        enc = encode(img)
+        return enc, decode(enc)
+    return run
+
+
+CASES = {
+    "jpeg-grey": _pair(C.encode_jpeg, C.decode_jpeg),
+    "jpeg-420": _pair(lambda im: C.encode_jpeg(im, subsampling="420"),
+                      C.decode_jpeg),
+    "jpeg-prog": _pair(lambda im: C.encode_jpeg(im, progressive=True),
+                       C.decode_jpeg),
+    "jp2": _pair(C.encode_jp2, C.decode_jp2),
+    "gif": _pair(C.encode_gif, C.decode_gif),
+    "tiff-lzw": _pair(lambda im: C.encode_tiff(im, compression="lzw"),
+                      C.decode_tiff),
+    "tiff-lzw-pred": _pair(
+        lambda im: C.encode_tiff(im, compression="lzw", predictor=True),
+        C.decode_tiff),
+    "mjpeg": _mjpeg,
+}
+
+# (case, fixture) -> (sha of the encoded bytes, sha of the decoded pixels)
+PINS = {
+    ("jpeg-grey", "noise"): ("8903f592dc4ed52a", "c72600e2240b54c6"),
+    ("jpeg-grey", "text"): ("218bb0cdb2cd2921", "6d36e085f378cd79"),
+    ("jpeg-420", "noise-rgb"): ("bb1290b9b3dcacbd", "5c3407b2b252ed26"),
+    ("jpeg-420", "text-rgb"): ("b17badd2712b9b6c", "6c4c532d9fb6155c"),
+    ("jpeg-prog", "noise"): ("3b636ca12e8be7ed", "c72600e2240b54c6"),
+    ("jpeg-prog", "text"): ("f34ecf178ae52592", "6d36e085f378cd79"),
+    ("jpeg-prog", "text-rgb"): ("7997ccb649079b69", "aa6ef87f57c8a659"),
+    ("jp2", "noise-odd"): ("39b0090df6985578", "bd0ddd54f6f8a6e8"),
+    ("jp2", "text"): ("e4e7a2bfc7058cc6", "544540e53210d0cc"),
+    ("jp2", "noise-rgb"): ("66231673bae5ed79", "67bb276ca4b17670"),
+    ("gif", "noise"): ("e87359357f971b71", "682a789ced8a72d7"),
+    ("gif", "text"): ("100cfe47415b0515", "544540e53210d0cc"),
+    ("gif", "noise-rgb64"): ("9af288013e0876d9", "0921ac80e937f542"),
+    ("tiff-lzw", "noise"): ("297ce33ba0626652", "682a789ced8a72d7"),
+    ("tiff-lzw", "text"): ("77baac13fbdd6516", "544540e53210d0cc"),
+    ("tiff-lzw", "noise-rgb"): ("c0cddb9785683007", "67bb276ca4b17670"),
+    ("tiff-lzw-pred", "noise"): ("319517b6311283bd", "682a789ced8a72d7"),
+    ("tiff-lzw-pred", "text"): ("5fd81bbf1c9e7d89", "544540e53210d0cc"),
+    ("mjpeg", "noise"): ("58f72f93a2435db0", "333496dec13c321b"),
+    ("mjpeg", "text"): ("5b1ade9d13f3e6a3", "7937b81bdbb307b7"),
+}
+
+FIXTURES = {
+    "noise": NOISE,
+    "text": TEXT,
+    "noise-rgb": NOISE_RGB,
+    "text-rgb": TEXT_RGB,
+    "noise-odd": NOISE[:, :139],
+    "noise-rgb64": NOISE_RGB & 0xC0,          # 64 colours: GIF palette
+}
+
+
+@pytest.mark.parametrize("case,fixture", sorted(PINS))
+def test_codec_output_pinned(case, fixture):
+    enc, dec = CASES[case](FIXTURES[fixture])
+    assert (_sha(enc), _sha(dec)) == PINS[(case, fixture)]
+
+
+def _lzw_lsb(codes: list[int], width: int) -> bytes:
+    acc = n_bits = 0
+    out = bytearray()
+    for c in codes:
+        acc |= c << n_bits
+        n_bits += width
+    while n_bits > 0:
+        out.append(acc & 255)
+        acc >>= 8
+        n_bits -= 8
+    return bytes(out)
+
+
+def test_gif_lzw_first_code_out_of_range():
+    """The first code after Clear must name a root entry; one past the
+    table raises the same typed error as TIFF LZW, not IndexError."""
+    with pytest.raises(ValueError, match="GIF LZW code 300 out of range"):
+        C._lzw_decode(_lzw_lsb([256, 300, 257], 9), 8, 10)
+    with pytest.raises(ValueError, match="TIFF LZW code 300 out of range"):
+        C._tiff_lzw_decode(bytes([0x80, 0x4B, 0x20, 0x20]), 10)
+
+
+def test_gif_lzw_short_stream_pads_with_zero():
+    """A stream that ends (EOI) before the image is full leaves the rest
+    of the pixels 0, not whatever the buffer held."""
+    out = C._lzw_decode(_lzw_lsb([256, 7, 9, 257], 9), 8, 6)
+    assert out.tolist() == [7, 9, 0, 0, 0, 0]
+
+
+def _patched(blob: bytes, marker: bytes, offset: int, value: int) -> bytes:
+    b = bytearray(blob)
+    b[blob.index(marker) + offset] = value
+    return bytes(b)
+
+
+@pytest.mark.parametrize("progressive", [False, True],
+                         ids=["sequential", "progressive"])
+def test_jpeg_undefined_tables_raise_value_error(progressive):
+    """A scan selecting a Huffman table no DHT defined, or a component
+    naming a missing quantization table, is a ValueError naming it."""
+    blob = C.encode_jpeg(NOISE[:16, :16], progressive=progressive)
+    # SOS payload: Ns, then (component id, Td << 4 | Ta) per component
+    bad_dc = _patched(blob, b"\xff\xda", 6, 0x30)
+    with pytest.raises(ValueError, match="DC Huffman table 3"):
+        C.decode_jpeg(bad_dc)
+    if not progressive:      # the first progressive scans are DC-only
+        bad_ac = _patched(blob, b"\xff\xda", 6, 0x03)
+        with pytest.raises(ValueError, match="AC Huffman table 3"):
+            C.decode_jpeg(bad_ac)
+    # SOF payload: P, Y, X, Nf, then (id, H << 4 | V, Tq) per component
+    sof = b"\xff\xc2" if progressive else b"\xff\xc0"
+    bad_q = _patched(blob, sof, 12, 3)
+    with pytest.raises(ValueError, match="quantization table 3"):
+        C.decode_jpeg(bad_q)
