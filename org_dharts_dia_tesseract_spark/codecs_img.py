@@ -5,10 +5,12 @@ Rebuilds the reference's full ImageIO decode surface
 javax.imageio) without an imaging library:
 uncompressed BMP (8-bit greyscale palette + 24-bit BGR), binary/ASCII PNM
 (P2/P3/P5/P6, maxval to 65535), TIFF (single or multi strip, compression
-none=1, CCITT G3=2 / G4=4 fax coding, LZW=5 with the MSB-first
-early-change convention, Adobe/legacy DEFLATE=8/32946 via stdlib zlib,
-or PackBits=32773; horizontal Predictor tag 317; 1/4/8/16 bits per
-sample single-band, 8-bit grey or RGB), PNG (grey 1/2/4/8/16-bit, RGB
+none=1, CCITT fax 2/3/4 (one T.4/T.6 coder keyed by PDF's K, EndOfLine
+and EncodedByteAlign, which PDF's CCITTFaxDecode shares — see its
+section), LZW=5 with the MSB-first early-change convention,
+Adobe/legacy DEFLATE=8/32946 via stdlib zlib, or PackBits=32773;
+horizontal Predictor tag 317; 1/4/8/16 bits per sample single-band,
+8-bit grey or RGB), PNG (grey 1/2/4/8/16-bit, RGB
 8/16, palette with tRNS, grey+alpha/RGBA composited over white, Adam7
 interlace, zlib IDAT, all five scanline filters), GIF 87a/89a (8-bit
 palette incl. exact-palette RGB encode, real variable-width LZW in both
@@ -202,7 +204,7 @@ def decode_pnm(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# TIFF (baseline: strips, compression none or PackBits)
+# TIFF (strips: none, PackBits, LZW, DEFLATE; CCITT fax in the next section)
 # ---------------------------------------------------------------------------
 
 _TIFF_TAGS = {256: "width", 257: "height", 258: "bits", 259: "compression",
@@ -355,13 +357,21 @@ def packbits_decode(data: bytes, expected: int) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# CCITT Group 3 (T.4 Modified Huffman, TIFF compression 2) and Group 4
-# (T.6 MMR two-dimensional coding, TIFF compression 4) — the canonical
-# bilevel fax / scanned-document encodings. Both directions implemented
-# from the ITU tables below. As with the JP2 module, the two sides are
-# mutually consistent by construction and the run tables are asserted
-# prefix-free by tests; no external CCITT bitstream is available in
-# this environment to cross-check interop.
+# CCITT fax coding (ITU-T T.4 / T.6) — the canonical bilevel fax /
+# scanned-document encodings: TIFF compression 2, 3 and 4 and PDF
+# CCITTFaxDecode. One encoder and one decoder serve every wire form,
+# keyed as PDF keys them (ISO 32000-1 7.4.6):
+#   k < 0   every line 2-D against the line above (T.6 MMR, "G4")
+#   k = 0   every line 1-D Modified Huffman ("G3")
+#   k > 0   a tag bit per line: 1-D on every k-th line, 2-D between
+#   eol     an EOL 000000000001 before every line (fill zeros tolerated)
+#   align   every line ends on a byte boundary
+# TIFF compression 2 is (0, align) with one row per strip; 3 is (0, eol),
+# or (k > 0, eol) when T4Options bit 0 is set; 4 is (-1). Both
+# directions are implemented from the ITU tables below. As with the JP2
+# module, the two sides are mutually consistent by construction and the
+# run tables are asserted prefix-free by tests; no external CCITT
+# bitstream is at hand to cross-check interop.
 # ---------------------------------------------------------------------------
 
 # T.4 Table 1/2: (run -> (bits, code)) terminating (0-63) + makeup
@@ -462,15 +472,19 @@ class _MsbWriter:
 
 
 class _MsbReader:
+    """MSB-first bit reader; bits past the end read as 0."""
+
     def __init__(self, data: bytes) -> None:
         self.data = data
         self.bitpos = 0
 
     def bit(self) -> int:
         i = self.bitpos
-        self.bitpos += 1
-        byte = self.data[i >> 3] if (i >> 3) < len(self.data) else 0
-        return (byte >> (7 - (i & 7))) & 1
+        self.bitpos = i + 1
+        try:
+            return (self.data[i >> 3] >> (7 - (i & 7))) & 1
+        except IndexError:
+            return 0
 
     def align(self) -> None:
         self.bitpos = (self.bitpos + 7) & ~7
@@ -517,65 +531,34 @@ def _changes_of(row: np.ndarray) -> list[int]:
     return np.nonzero(row != prev)[0].tolist()
 
 
-def _g3_encode(black: np.ndarray, align: bool = True,
-               eol: bool = False) -> bytes:
-    """T.4 one-dimensional Modified Huffman. Three wire flavors share
-    the run coding: TIFF compression 2 (align=True: no EOLs, every row
-    byte-aligned), classic G3 / TIFF compression 3 (eol=True: EOL
-    000000000001 before every line, no alignment), and PDF
-    CCITTFaxDecode K=0 defaults (align=False, eol=False: a bare
-    unaligned run stream)."""
-    h, w = black.shape
-    bw = _MsbWriter()
-    for y in range(h):
-        if eol:
-            bw.write(0x001, 12)         # EOL
-        changes = _changes_of(black[y]) + [w]
-        pos, color = 0, 0               # 0 = white run first (may be 0)
-        i = 0
-        while pos < w:
-            nxt = changes[i] if i < len(changes) else w
-            _ccitt_write_run(bw, nxt - pos,
-                             _CCITT_WHITE_ALL if color == 0
-                             else _CCITT_BLACK_ALL)
-            pos, color, i = nxt, 1 - color, i + 1
-        if align:
-            bw.align()
-    return bw.flush()
+def _mh_encode_line(bw: "_MsbWriter", cur: list[int], w: int) -> None:
+    """Code one line 1-D: the runs between its changes, alternating
+    white and black from a white run (which may be 0 long). A 0-wide
+    line codes to nothing, as _mh_decode_line reads nothing for it."""
+    pos = 0
+    for i, nxt in enumerate(cur + [w] if w else []):
+        _ccitt_write_run(bw, nxt - pos,
+                         _CCITT_BLACK_ALL if i & 1 else _CCITT_WHITE_ALL)
+        pos = nxt
 
 
-def _g3_decode(data: bytes, h: int, w: int, align: bool = True,
-               eol: bool = False) -> bytes:
-    """Inverse of _g3_encode -> packed rows (bit 1 = black). With
-    eol=True, fill bits before each EOL are tolerated (T.4 4.1.2)."""
-    br = _MsbReader(data)
-    row_bytes = -(-w // 8)
-    out = np.zeros((h, row_bytes * 8), dtype=bool)
-    for y in range(h):
-        if eol:
-            zeros = 0                   # fill zeros then 000000000001
-            while True:
-                b = br.bit()
-                if b:
-                    break
-                zeros += 1
-                if zeros > 64 + 11:
-                    raise ValueError("CCITT G3: EOL not found")
-            if zeros < 11:
-                raise ValueError("CCITT G3: malformed EOL")
-        pos, color = 0, 0
-        while pos < w:
-            run = _ccitt_read_run(
-                br, _CCITT_WHITE_DEC if color == 0 else _CCITT_BLACK_DEC)
-            if pos + run > w:
-                raise ValueError("CCITT: run overflows row")
-            if color:
-                out[y, pos:pos + run] = True
-            pos += run
-            color = 1 - color
-        if align:
-            br.align()
-    return np.packbits(out, axis=1).tobytes()
+def _mh_decode_line(br: "_MsbReader", w: int) -> list[int]:
+    """Decode one 1-D line -> its changing positions. A zero-length run
+    is no transition: its two equal boundaries cancel."""
+    cur: list[int] = []
+    pos, color = 0, 0
+    while pos < w:
+        pos += _ccitt_read_run(
+            br, _CCITT_BLACK_DEC if color else _CCITT_WHITE_DEC)
+        if pos > w:
+            raise ValueError("CCITT: run overflows row")
+        if pos < w:
+            if cur and cur[-1] == pos:
+                cur.pop()
+            else:
+                cur.append(pos)
+        color = 1 - color
+    return cur
 
 
 def _g4_b1_index(ref: list[int], a0: int, color: int) -> int:
@@ -623,42 +606,22 @@ def _g4_encode_line(bw: "_MsbWriter", cur: list[int], ref: list[int],
             a0 = a2
 
 
-def _g4_encode(black: np.ndarray) -> bytes:
-    """T.6 MMR (TIFF compression 4): every line coded against the
-    previous one (imaginary all-white line above the first); pass /
-    horizontal / vertical modes, no EOFB (TIFF strips carry the row
-    count)."""
-    h, w = black.shape
-    bw = _MsbWriter()
-    ref: list[int] = []                 # all-white reference line
-    for y in range(h):
-        cur = _changes_of(black[y])
-        _g4_encode_line(bw, cur, ref, w)
-        ref = cur
-    return bw.flush()
-
-
 def _g4_decode_line(br: "_MsbReader", ref: list[int],
                     w: int) -> list[int]:
     """Decode one 2-D-coded line against `ref`; returns the changing
     positions (may include a line-ending sentinel at w)."""
+    bit = br.bit
     cur: list[int] = []
     a0, color = -1, 0
     while a0 < w:
         i = _g4_b1_index(ref, a0, color)
         b1 = ref[i] if i < len(ref) else w
         b2 = ref[i + 1] if i + 1 < len(ref) else w
-        if br.bit():                              # 1 -> V0
+        if bit():                                 # 1 -> V0
             a1 = b1
-            cur.append(a1)
-            a0, color = a1, 1 - color
-            continue
-        if br.bit():                              # 01x -> V(L/R)1
-            a1 = b1 + 1 if br.bit() else b1 - 1
-            cur.append(a1)
-            a0, color = a1, 1 - color
-            continue
-        if br.bit():                              # 001 -> horizontal
+        elif bit():                               # 01x -> V(L/R)1
+            a1 = b1 + 1 if bit() else b1 - 1
+        elif bit():                               # 001 -> horizontal
             start = max(a0, 0)
             r1 = _ccitt_read_run(
                 br, _CCITT_WHITE_DEC if color == 0
@@ -670,114 +633,86 @@ def _g4_decode_line(br: "_MsbReader", ref: list[int],
             cur.extend((a1, a2))
             a0 = a2
             continue
-        if br.bit():                              # 0001 -> pass
+        elif bit():                               # 0001 -> pass
             a0 = b2
             continue
-        if br.bit():                              # 00001 1x -> V(L/R)2
-            a1 = b1 + 2 if br.bit() else b1 - 2
-        elif br.bit():                            # 000001 1x -> V(L/R)3
-            a1 = b1 + 3 if br.bit() else b1 - 3
+        elif bit():                               # 00001 1x -> V(L/R)2
+            a1 = b1 + 2 if bit() else b1 - 2
+        elif bit():                               # 000001 1x -> V(L/R)3
+            a1 = b1 + 3 if bit() else b1 - 3
         else:
             raise ValueError("CCITT G4: invalid mode code")
+        if a1 < a0 or a1 < 0:           # the encoder's a1 is always > a0
+            raise ValueError("CCITT G4: vertical code moves left of a0")
         cur.append(a1)
         a0, color = a1, 1 - color
     return cur
 
 
-def _paint_line(out: np.ndarray, y: int, cur: list[int], w: int) -> None:
-    for k in range(0, len(cur) - 1, 2):               # paint black runs
-        out[y, cur[k]:cur[k + 1]] = True
-    if len(cur) % 2:
-        out[y, cur[-1]:w] = True
-
-
-def _g4_decode(data: bytes, h: int, w: int) -> bytes:
-    """Inverse of _g4_encode -> packed rows (bit 1 = black)."""
-    br = _MsbReader(data)
-    row_bytes = -(-w // 8)
-    out = np.zeros((h, row_bytes * 8), dtype=bool)
-    ref: list[int] = []
-    for y in range(h):
-        cur = _g4_decode_line(br, ref, w)
-        _paint_line(out, y, cur, w)
-        # the encoder's reference line holds TRUE transitions only — a
-        # sentinel a1 == w from a line-ending vertical/horizontal code
-        # is not one; keep both sides' b1 arithmetic identical
-        ref = [c for c in cur if c < w]
-    return np.packbits(out, axis=1).tobytes()
-
-
-def _t4_2d_encode(black: np.ndarray, k: int = 4) -> bytes:
-    """T.4 two-dimensional coding (TIFF compression 3 with T4Options
-    bit 0, PDF CCITTFaxDecode K>0): every line prefixed by EOL + a tag
-    bit (1 = 1-D, 0 = 2-D); the first line of each K-group is 1-D, the
-    rest are coded against the previous line with the T.6 modes."""
+def _ccitt_encode(black: np.ndarray, k: int, eol: bool = False,
+                  align: bool = False) -> bytes:
+    """Bilevel rows (True = black) in the wire form (k, eol, align)
+    described above. No RTC / EOFB trailer: TIFF strips and PDF /Rows
+    carry the row count."""
     h, w = black.shape
     bw = _MsbWriter()
-    ref: list[int] = []
+    ref: list[int] = []                 # imaginary all-white line above
     for y in range(h):
-        one_d = (y % k) == 0
-        bw.write(0x001, 12)             # EOL
-        bw.write(1 if one_d else 0, 1)  # tag bit
+        if eol:
+            bw.write(0x001, 12)         # EOL
         cur = _changes_of(black[y])
+        one_d = k == 0 or (k > 0 and y % k == 0)
+        if k > 0:
+            bw.write(int(one_d), 1)     # tag bit: 1 = 1-D, 0 = 2-D
         if one_d:
-            changes = cur + [w]
-            pos, color, i = 0, 0, 0
-            while pos < w:
-                nxt = changes[i] if i < len(changes) else w
-                _ccitt_write_run(bw, nxt - pos,
-                                 _CCITT_WHITE_ALL if color == 0
-                                 else _CCITT_BLACK_ALL)
-                pos, color, i = nxt, 1 - color, i + 1
+            _mh_encode_line(bw, cur, w)
         else:
             _g4_encode_line(bw, cur, ref, w)
+        if align:
+            bw.align()
         ref = cur
     return bw.flush()
 
 
-def _t4_2d_decode(data: bytes, h: int, w: int) -> bytes:
-    """Inverse of _t4_2d_encode -> packed rows (bit 1 = black)."""
+def _ccitt_decode(data: bytes, h: int, w: int, k: int, eol: bool = False,
+                  align: bool = False) -> bytes:
+    """Inverse of _ccitt_encode -> packed rows (bit 1 = black); any k > 0
+    reads the tag bits. A row of a non-empty line codes in >= 1 bit and
+    bits past the end decode no row, so a header claiming more rows than
+    the stream has bits is refused before the row buffer is allocated."""
+    if h > 8 * len(data):
+        raise ValueError(f"CCITT: {h} rows cannot be coded in "
+                         f"{len(data)} bytes")
     br = _MsbReader(data)
-    row_bytes = -(-w // 8)
-    out = np.zeros((h, row_bytes * 8), dtype=bool)
+    out = np.zeros((h, -(-w // 8) * 8), dtype=bool)
     ref: list[int] = []
     for y in range(h):
-        zeros = 0                       # fill zeros then EOL
-        while True:
-            if br.bit():
-                break
-            zeros += 1
-            if zeros > 64 + 11:
-                raise ValueError("CCITT T.4 2-D: EOL not found")
-        if zeros < 11:
-            raise ValueError("CCITT T.4 2-D: malformed EOL")
-        if br.bit():                    # tag bit 1 -> 1-D line
-            cur = []
-            pos, color = 0, 0
-            while pos < w:
-                run = _ccitt_read_run(
-                    br, _CCITT_WHITE_DEC if color == 0
-                    else _CCITT_BLACK_DEC)
-                if pos + run > w:
-                    raise ValueError("CCITT: run overflows row")
-                pos += run
-                if pos < w:
-                    cur.append(pos)
-                color = 1 - color
-            # zero-length runs produce duplicate boundaries = no
-            # transition; collapse adjacent equal pairs
-            norm: list[int] = []
-            for c in cur:
-                if norm and norm[-1] == c:
-                    norm.pop()
-                else:
-                    norm.append(c)
-            cur = norm
-        else:                           # tag bit 0 -> 2-D line
+        if eol:                         # fill zeros then 000000000001
+            zeros = 0
+            while not br.bit():
+                zeros += 1
+                if zeros > 64 + 11:
+                    raise ValueError("CCITT: EOL not found")
+            if zeros < 11:
+                raise ValueError("CCITT: malformed EOL")
+        if k < 0 or (k > 0 and not br.bit()):    # tag bit 0 -> 2-D
             cur = _g4_decode_line(br, ref, w)
-        _paint_line(out, y, cur, w)
+        else:
+            cur = _mh_decode_line(br, w)
+        for a, b in zip(cur[::2], cur[1::2] + [w]):   # paint black runs
+            out[y, a:b] = True
+        # the encoder's reference line holds TRUE transitions only — a
+        # sentinel a1 == w from a line-ending vertical/horizontal code
+        # is not one; keep both sides' b1 arithmetic identical
         ref = [c for c in cur if c < w]
+        if align:
+            br.align()
     return np.packbits(out, axis=1).tobytes()
+
+
+# CCITT compressions -> _ccitt_encode's (k, eol, align)
+_TIFF_CCITT = {"g3": (0, False, True), "t4": (0, True, False),
+               "t4_2d": (4, True, False), "g4": (-1, False, False)}
 
 
 _TIFF_COMPRESSION = {"none": 1, "g3": 2, "t4": 3, "t4_2d": 3, "g4": 4,
@@ -793,8 +728,14 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
 
     compression: 'none' | 'packbits' | 'lzw' (tag 5 — MSB-first
     early-change LZW, libtiff-compatible) | 'deflate' (Adobe DEFLATE,
-    tag value 8 — zlib streams per strip); the legacy `packbits` bool is
-    kept for callers predating the deflate path.
+    tag value 8 — zlib streams per strip) | a CCITT fax form, bits=1
+    only, coded by `_ccitt_encode` as (k, eol, align): 'g3' (tag 2,
+    1-D Modified Huffman, one byte-aligned row per strip: (0, no, yes)),
+    't4' (tag 3, EOL before every 1-D line: (0, yes, no)), 't4_2d'
+    (tag 3 with T4Options bit 0, EOL + tag bit, a 1-D line every 4th:
+    (4, yes, no)) or 'g4' (tag 4, T.6 MMR: (-1, no, no)); the last
+    three write one strip. The legacy `packbits` bool is kept for
+    callers predating the deflate path.
 
     predictor: horizontal differencing (tag 317 = 2), the standard
     companion to LZW/DEFLATE for scanned pages.
@@ -841,24 +782,21 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
         rows = img.reshape(h, w * bands)
     rows_per_strip = 1
     t4options = None
-    if compression in ("g3", "t4", "t4_2d", "g4"):
+    if compression in _TIFF_CCITT:
         # CCITT coding: bilevel only, bit 1 = black under the fax
         # convention, so the file declares WhiteIsZero (photometric 0)
         if bits != 1:
             raise ValueError("TIFF g3/t4/g4 compression requires bits=1")
         black = img < 128               # True = black ink
-        if compression == "g3":         # compression 2: aligned rows
-            strips = [_g3_encode(black[y:y + 1]) for y in range(h)]
-        elif compression == "t4":       # compression 3: EOL-prefixed 1-D
-            strips = [_g3_encode(black, align=False, eol=True)]
+        form = _TIFF_CCITT[compression]
+        if compression == "g3":         # compression 2: a strip per row
+            strips = [_ccitt_encode(black[y:y + 1], *form)
+                      for y in range(h)]
+        else:                           # one stateful strip
+            strips = [_ccitt_encode(black, *form)]
             rows_per_strip = h
-        elif compression == "t4_2d":    # compression 3 + T4Options 2-D
-            strips = [_t4_2d_encode(black)]
-            rows_per_strip = h
-            t4options = 1
-        else:                           # g4: one stateful strip
-            strips = [_g4_encode(black)]
-            rows_per_strip = h
+        if form[0] > 0:
+            t4options = 1               # T4Options bit 0: 2-D lines
     elif compression == "packbits":
         strips = [packbits_encode(rows[y]) for y in range(h)]
     elif compression == "lzw":
@@ -948,16 +886,20 @@ def _tiff_values(data: bytes, endian: str, typ: int, count: int,
     return list(struct.unpack_from(f"{endian}{count}{fmt}", data, off))
 
 
-def decode_tiff(data: bytes) -> np.ndarray:
-    """First (or only) page of a TIFF payload."""
+def _tiff_header(data: bytes) -> tuple[str, int]:
+    """(struct byte-order prefix, offset of the first IFD)."""
     if data[:2] == b"II":
         endian = "<"
     elif data[:2] == b"MM":
         endian = ">"
     else:
         raise ValueError("not a TIFF payload")
-    ifd_off = struct.unpack_from(f"{endian}I", data, 4)[0]
-    return _decode_tiff_ifd(data, endian, ifd_off)
+    return endian, struct.unpack_from(f"{endian}I", data, 4)[0]
+
+
+def decode_tiff(data: bytes) -> np.ndarray:
+    """First (or only) page of a TIFF payload."""
+    return _decode_tiff_ifd(data, *_tiff_header(data))
 
 
 def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
@@ -994,6 +936,10 @@ def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
                                   "(none/horizontal only)")
     if predictor == 2 and bps != 8:
         raise NotImplementedError("TIFF predictor needs 8-bit samples")
+    if compression in (2, 3, 4):        # _ccitt_decode's (k, eol, align)
+        fax = ((0, False, True) if compression == 2
+               else (-1, False, False) if compression == 4
+               else (tags.get("t4options", [0])[0] & 1, True, False))
     row_bytes = -(-w * bps * bands // 8)    # rows pad to byte boundaries
     chunks = []
     for si, (off, cnt) in enumerate(zip(tags["strip_offsets"],
@@ -1007,15 +953,8 @@ def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
         elif compression in (8, 32946):   # Adobe / legacy DEFLATE
             import zlib
             raw = zlib.decompress(raw)
-        elif compression == 2:            # CCITT G3 1-D (MH, no EOLs)
-            raw = _g3_decode(raw, n_rows, w)
-        elif compression == 3:            # T.4, EOL-prefixed lines
-            if tags.get("t4options", [0])[0] & 1:     # 2-D (tag bits)
-                raw = _t4_2d_decode(raw, n_rows, w)
-            else:                                     # pure 1-D
-                raw = _g3_decode(raw, n_rows, w, align=False, eol=True)
-        elif compression == 4:            # CCITT G4 (T.6 MMR)
-            raw = _g4_decode(raw, n_rows, w)
+        elif compression in (2, 3, 4):    # CCITT fax
+            raw = _ccitt_decode(raw, n_rows, w, *fax)
         chunks.append(np.frombuffer(raw, dtype=np.uint8,
                                     count=n_rows * row_bytes))
     px = np.concatenate(chunks)
@@ -1093,14 +1032,8 @@ def decode_tiff_pages(data: bytes) -> list[np.ndarray]:
     chain — the decode side of the reference's multi-page split
     (ImageIOHelper.createTiffFiles:74-123: one document = one page
     sequence)."""
-    if data[:2] == b"II":
-        endian = "<"
-    elif data[:2] == b"MM":
-        endian = ">"
-    else:
-        raise ValueError("not a TIFF payload")
+    endian, ifd_off = _tiff_header(data)
     pages = []
-    ifd_off = struct.unpack_from(f"{endian}I", data, 4)[0]
     while ifd_off:
         pages.append(_decode_tiff_ifd(data, endian, ifd_off))
         n = struct.unpack_from(f"{endian}H", data, ifd_off)[0]
@@ -2569,8 +2502,7 @@ from .codecs_jp2 import decode_jp2, encode_jp2  # noqa: E402
 from .codecs_pdf import decode_pdf, encode_pdf  # noqa: E402 — registry
 
 def _tiff_dpi(data: bytes) -> int | None:
-    endian = "<" if data[:2] == b"II" else ">"
-    ifd_off = struct.unpack_from(f"{endian}I", data, 4)[0]
+    endian, ifd_off = _tiff_header(data)
     n = struct.unpack_from(f"{endian}H", data, ifd_off)[0]
     xres, unit = None, 2                    # spec default unit = inch
     for i in range(n):

@@ -9,7 +9,9 @@ Two layers, both REAL coders (no external PDF/imaging library):
   lossless, so OCR spans over PDF-encoded media equal the raw run's.
   The decoder also accepts ``/DCTDecode`` image streams (JPEG-in-PDF,
   the most common scanned-page encoding in the wild) by handing the
-  stream to the in-repo baseline JPEG decoder.
+  stream to the in-repo baseline JPEG decoder, and 1-bit
+  ``/CCITTFaxDecode`` streams (any ``/K``; K > 0 needs ``/EndOfLine``)
+  through the TIFF fax coder.
 - **Text layer**: ``encode_pdf_text(lines)`` writes a PDF with a
   Helvetica ``BT/Td/Tj`` content stream; ``extract_pdf_text(payload)``
   tokenizes every non-image content stream for ``Tj``/``TJ`` show
@@ -100,8 +102,8 @@ def encode_pdf(img: np.ndarray, ccitt: bool = False) -> bytes:
     if ccitt:
         if img.ndim != 2:
             raise ValueError("PDF CCITT embed is 1-band only")
-        from .codecs_img import _g4_encode   # lazy: avoids cycle
-        pixels = _g4_encode(img < 128)
+        from .codecs_img import _ccitt_encode   # lazy: avoids cycle
+        pixels = _ccitt_encode(img < 128, -1)
         # BlackIs1 stays at its default (false): decoded black = sample
         # 0 = DeviceGray ink, the form real viewers display correctly
         image_obj = _stream_obj(
@@ -168,25 +170,18 @@ def decode_pdf(payload: bytes) -> np.ndarray:
         if data is None:
             raise ValueError("PDF image XObject has no stream")
         if b"/CCITTFaxDecode" in body:
-            from .codecs_img import (_g3_decode,  # lazy: avoids cycle
-                                     _g4_decode, _t4_2d_decode)
+            from .codecs_img import _ccitt_decode   # lazy: avoids cycle
             k_m = re.search(rb"/K\s+(-?\d+)", body)
             k = int(k_m.group(1)) if k_m else 0
             cols_m = re.search(rb"/Columns\s+(\d+)", body)
             cols = int(cols_m.group(1)) if cols_m else 1728
-            if k < 0:
-                decoded = _g4_decode(data, h, cols)
-            elif k > 0:                  # mixed 1-D/2-D: tag bits after
-                if b"/EndOfLine true" not in body:   # each EOL
-                    raise NotImplementedError(
-                        "PDF CCITTFaxDecode K > 0 without EndOfLine "
-                        "unsupported (no line framing to parse)")
-                decoded = _t4_2d_decode(data, h, cols)
-            else:                        # K = 0: T.4 1-D; PDF defaults
-                decoded = _g3_decode(    # are no EOLs, no byte align
-                    data, h, cols,
-                    align=b"/EncodedByteAlign true" in body,
-                    eol=b"/EndOfLine true" in body)
+            eol = b"/EndOfLine true" in body     # PDF defaults: no EOLs,
+            if k > 0 and not eol:                # no byte alignment
+                raise NotImplementedError(
+                    "PDF CCITTFaxDecode K > 0 without EndOfLine "
+                    "unsupported (no line framing to parse)")
+            decoded = _ccitt_decode(data, h, cols, k, eol,
+                                    b"/EncodedByteAlign true" in body)
             packed = np.frombuffer(decoded, dtype=np.uint8)
             bits = np.unpackbits(packed.reshape(h, -1), axis=1)[:, :w]
             # CCITT black is ink: return 0 where the fax stream coded

@@ -1,5 +1,6 @@
-"""The entropy-coded codecs (JPEG, JPEG 2000, GIF and TIFF LZW): pinned
-encoder bytes and decoded pixels, and typed errors on bad streams.
+"""The entropy-coded codecs (JPEG, JPEG 2000, GIF, TIFF LZW and the CCITT
+fax coder): pinned encoder bytes and decoded pixels, and typed errors on
+bad streams.
 
 Each pinned case encodes a seeded fixture and pins the sha256 of the encoded
 bytes and of the decoded pixels. The encoders build perfbench's codec
@@ -21,6 +22,7 @@ from org_dharts_dia_tesseract_spark import codecs_img as C
 from org_dharts_dia_tesseract_spark import datagen
 from org_dharts_dia_tesseract_spark.codecs_avi import (decode_avi_mjpeg,
                                                        encode_avi_mjpeg)
+from org_dharts_dia_tesseract_spark.codecs_pdf import decode_pdf, encode_pdf
 
 NOISE = np.random.default_rng(2026).integers(0, 256, (150, 141),
                                               dtype=np.uint8)
@@ -65,6 +67,10 @@ CASES = {
         lambda im: C.encode_tiff(im, compression="lzw", predictor=True),
         C.decode_tiff),
     "mjpeg": _mjpeg,
+    **{f"tiff-{c}": _pair(
+        lambda im, c=c: C.encode_tiff(im, compression=c, bits=1),
+        C.decode_tiff) for c in ("g3", "t4", "t4_2d", "g4")},
+    "pdf-ccitt": _pair(lambda im: encode_pdf(im, ccitt=True), decode_pdf),
 }
 
 # (case, fixture) -> (sha of the encoded bytes, sha of the decoded pixels)
@@ -89,6 +95,16 @@ PINS = {
     ("tiff-lzw-pred", "text"): ("5fd81bbf1c9e7d89", "544540e53210d0cc"),
     ("mjpeg", "noise"): ("58f72f93a2435db0", "333496dec13c321b"),
     ("mjpeg", "text"): ("5b1ade9d13f3e6a3", "7937b81bdbb307b7"),
+    ("tiff-g3", "noise"): ("78c3b1b9f2d93bf3", "28d78a7db6e00140"),
+    ("tiff-g3", "text"): ("d3b009aa8e2977af", "98841ff79df35648"),
+    ("tiff-t4", "noise"): ("a3781343045a2b78", "28d78a7db6e00140"),
+    ("tiff-t4", "text"): ("baebd7a62e9cfaf4", "98841ff79df35648"),
+    ("tiff-t4_2d", "noise"): ("62bf8a5704737d46", "28d78a7db6e00140"),
+    ("tiff-t4_2d", "text"): ("95219140ffcfb872", "98841ff79df35648"),
+    ("tiff-g4", "noise"): ("ff0aea4af5a918d8", "28d78a7db6e00140"),
+    ("tiff-g4", "text"): ("b2a6c5514e78490f", "98841ff79df35648"),
+    ("pdf-ccitt", "noise"): ("cf87b696d522778e", "28d78a7db6e00140"),
+    ("pdf-ccitt", "text"): ("cc5b1a6dd6f4e65b", "98841ff79df35648"),
 }
 
 FIXTURES = {
@@ -161,3 +177,67 @@ def test_jpeg_undefined_tables_raise_value_error(progressive):
     bad_q = _patched(blob, sof, 12, 3)
     with pytest.raises(ValueError, match="quantization table 3"):
         C.decode_jpeg(bad_q)
+
+
+def _tiff_value_at(blob: bytes, tag: int) -> int:
+    """Offset of the inline value field of `tag` in a little-endian
+    single-IFD TIFF."""
+    ifd = int.from_bytes(blob[4:8], "little")
+    for i in range(int.from_bytes(blob[ifd:ifd + 2], "little")):
+        e = ifd + 2 + 12 * i
+        if int.from_bytes(blob[e:e + 2], "little") == tag:
+            return e + 8
+    raise KeyError(tag)
+
+
+def _tiff_set(blob: bytes, tag: int, value: int) -> bytes:
+    at = _tiff_value_at(blob, tag)
+    return blob[:at] + value.to_bytes(4, "little") + blob[at + 4:]
+
+
+def test_ccitt_rows_bounded_by_stream_bits():
+    """A header claiming 2^31 rows x 2^16 columns over a few bytes is
+    refused before the 128 TiB row buffer is allocated: every coded row
+    takes at least one bit."""
+    img = np.full((2, 8), 255, dtype=np.uint8)
+    tif = C.encode_tiff(img, compression="g4", bits=1)
+    for tag, value in ((256, 1 << 16), (257, 1 << 31), (278, 1 << 31)):
+        tif = _tiff_set(tif, tag, value)
+    with pytest.raises(ValueError, match="rows cannot be coded"):
+        C.decode_tiff(tif)
+    pdf = (encode_pdf(img, ccitt=True)
+           .replace(b"/Width 8 /Height 2", b"/Width 65536 /Height 2147483648")
+           .replace(b"/Columns 8 /Rows 2", b"/Columns 65536 /Rows 2147483648"))
+    with pytest.raises(ValueError, match="rows cannot be coded"):
+        decode_pdf(pdf)
+
+
+def test_ccitt_g4_vertical_code_left_of_a0_rejected():
+    """Row 0 has pixels 1-2 black; row 1 is VL3 V0 V0, so its first
+    change a1 = b1 - 3 = -2 lies left of the line start."""
+    bw = C._MsbWriter()
+    C._g4_encode_line(bw, [1, 3], [], 8)
+    bw.write(0b0000010, 7)                    # VL3
+    bw.write(1, 1)                            # V0
+    bw.write(1, 1)                            # V0
+    stream = bw.flush()
+    tif = C.encode_tiff(np.full((2, 8), 255, dtype=np.uint8),
+                        compression="g4", bits=1)
+    at = _tiff_value_at(tif, 273)             # the one strip ends the file
+    tif = tif[:int.from_bytes(tif[at:at + 4], "little")] + stream
+    tif = _tiff_set(tif, 279, len(stream))
+    with pytest.raises(ValueError, match="moves left"):
+        C.decode_tiff(tif)
+
+
+@pytest.mark.parametrize("k", [-1, 0, 3])
+@pytest.mark.parametrize("eol", [False, True])
+@pytest.mark.parametrize("align", [False, True])
+def test_ccitt_every_wire_form_roundtrips(k, eol, align):
+    """One coder covers every (K, EndOfLine, EncodedByteAlign) triple."""
+    black = NOISE[:23, :37] < 128
+    enc = C._ccitt_encode(black, k, eol, align)
+    dec = C._ccitt_decode(enc, 23, 37, k, eol, align)
+    rows = np.unpackbits(np.frombuffer(dec, np.uint8).reshape(23, -1),
+                         axis=1)[:, :37]
+    assert np.array_equal(rows.astype(bool), black)

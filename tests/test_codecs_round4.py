@@ -351,13 +351,13 @@ class TestCcitt:
         T.4 2-D line framing."""
         import re
         from org_dharts_dia_tesseract_spark.codecs_img import (
-            _t4_2d_encode)
+            _ccitt_encode)
         from org_dharts_dia_tesseract_spark.codecs_pdf import (decode_pdf,
                                                                encode_pdf)
         rng = np.random.default_rng(85)
         img = (rng.random((13, 29)) > 0.5).astype(np.uint8) * 255
         blob = encode_pdf(img, ccitt=True)
-        t4 = _t4_2d_encode(img < 128)
+        t4 = _ccitt_encode(img < 128, 4, eol=True)
         m = re.search(rb"/DecodeParms << /K -1 /Columns (\d+) /Rows "
                       rb"(\d+) >> /Length (\d+) >>\nstream\n", blob)
         start, end = m.span()
@@ -376,13 +376,13 @@ class TestCcitt:
         """PDF CCITTFaxDecode K=0 defaults: no EOLs, no byte alignment
         — a bare T.4 1-D run stream."""
         import re
-        from org_dharts_dia_tesseract_spark.codecs_img import _g3_encode
+        from org_dharts_dia_tesseract_spark.codecs_img import _ccitt_encode
         from org_dharts_dia_tesseract_spark.codecs_pdf import (decode_pdf,
                                                                encode_pdf)
         rng = np.random.default_rng(83)
         img = (rng.random((23, 31)) > 0.5).astype(np.uint8) * 255
         blob = encode_pdf(img, ccitt=True)
-        g3 = _g3_encode(img < 128, align=False, eol=False)
+        g3 = _ccitt_encode(img < 128, 0)
         m = re.search(rb"/DecodeParms << /K -1 /Columns (\d+) /Rows "
                       rb"(\d+) >> /Length (\d+) >>\nstream\n", blob)
         start, end = m.span()
@@ -445,8 +445,9 @@ class TestPdfCcitt:
         assert len(encode_pdf(img, ccitt=True)) < len(encode_pdf(img)) / 4
 
     def test_mixed_mode_k_positive_rejected(self):
-        """K=0 (pure 1-D) decodes since round 4; K>0 (mixed 1-D/2-D
-        Group 3) stays rejected."""
+        """K=0 (pure 1-D) and K<0 decode; K>0 (mixed 1-D/2-D Group 3)
+        without EndOfLine has no line framing and is rejected (with
+        EndOfLine it decodes: test_pdf_k_positive_with_eol)."""
         from org_dharts_dia_tesseract_spark.codecs_pdf import (decode_pdf,
                                                                encode_pdf)
         blob = encode_pdf(np.zeros((4, 4), dtype=np.uint8), ccitt=True)
