@@ -7,14 +7,15 @@ uncompressed BMP (8-bit greyscale palette + 24-bit BGR), binary/ASCII PNM
 (P2/P3/P5/P6, maxval to 65535), TIFF (single or multi strip, compression
 none=1, CCITT fax 2/3/4 (one T.4/T.6 coder keyed by PDF's K, EndOfLine
 and EncodedByteAlign, which PDF's CCITTFaxDecode shares — see its
-section), LZW=5 with the MSB-first early-change convention,
+section), LZW=5 (one LZW coder, shared with GIF and keyed by a variant
+table of bit order and early change — see its section),
 Adobe/legacy DEFLATE=8/32946 via stdlib zlib, or PackBits=32773;
 horizontal Predictor tag 317; 1/4/8/16 bits per sample single-band,
 8-bit grey or RGB), PNG (grey 1/2/4/8/16-bit, RGB
 8/16, palette with tRNS, grey+alpha/RGBA composited over white, Adam7
 interlace, zlib IDAT, all five scanline filters), GIF 87a/89a (8-bit
-palette incl. exact-palette RGB encode, real variable-width LZW in both
-directions, interlace on decode), JPEG — baseline SOF0/SOF1 and
+palette incl. exact-palette RGB encode, the shared variable-width LZW
+coder in both directions, interlace on decode), JPEG — baseline SOF0/SOF1 and
 PROGRESSIVE SOF2 (spectral selection + successive approximation),
 greyscale and YCbCr color on any integer sampling grid (the one LOSSY
 codec — see its section) — and JPEG 2000 (codecs_jp2: MQ arithmetic
@@ -204,113 +205,147 @@ def decode_pnm(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# TIFF (strips: none, PackBits, LZW, DEFLATE; CCITT fax in the next section)
+# LZW (Welch) — TIFF compression 5 and GIF image data. One encoder and one
+# decoder serve both; TIFF 6.0 §13 and GIF89a Appendix F differ only in
+#   msb    code bits packed most-significant first (TIFF) or least (GIF)
+#   early  how many codes before GIF's point the width steps up, as the
+#          encoder counts: TIFF's "early change" steps once 2**w - 1 codes
+#          exist, GIF once 2**w + 1 do
+# Both open with Clear (2**min_code_size), end with EOI (Clear + 1) and
+# grow to 12-bit codes. When the next code would need 13 bits the encoder
+# emits Clear instead of adding it: TIFF writers add that entry and then
+# Clear, but an entry added just before a Clear is never read, so the codes
+# are the same.
 # ---------------------------------------------------------------------------
 
-_TIFF_TAGS = {256: "width", 257: "height", 258: "bits", 259: "compression",
-              262: "photometric", 273: "strip_offsets", 277: "samples",
-              278: "rows_per_strip", 279: "strip_counts",
-              292: "t4options", 317: "predictor"}
-_TYPE_SIZE = {1: 1, 3: 2, 4: 4}
+_LZW = {"gif": (False, 0), "tiff": (True, 2)}
 
+# The decoder reads the code at bit p as (win[p >> 3] >> shift[p & 7]) & mask
+# from the 32-bit word at every byte, in either bit order. Per variant and
+# code width: (table size that steps the width up — 2**w + 1 - early less
+# the one entry the decoder's table lags the encoder's —, mask, shift).
+_LZW_WIDTHS = {
+    variant: {w: ((1 << w) - early if w < 12 else -1, (1 << w) - 1,
+                  [32 - w - o if msb else o for o in range(8)])
+              for w in range(3, 13)}
+    for variant, (msb, early) in _LZW.items()}
 
-def _tiff_lzw_encode(raw: bytes) -> bytes:
-    """TIFF-variant LZW (compression 5): byte-string dictionary, 9..12
-    bit codes packed MSB-FIRST, 256=Clear / 257=EOI, and the spec's
-    "early change" — the code width bumps when the next free code
-    reaches (1<<width)-1, one entry earlier than the GIF variant."""
-    out = bytearray()
-    acc = n_bits = 0
-    width = 9
-
-    def emit(code: int) -> None:
-        nonlocal acc, n_bits
-        acc = (acc << width) | code
-        n_bits += width
-        while n_bits >= 8:
-            out.append((acc >> (n_bits - 8)) & 255)
-            n_bits -= 8
-            acc &= (1 << n_bits) - 1
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
-    next_code = 258
-    emit(256)                                   # Clear opens the stream
-    seq = b""
-    for b in raw:
-        cand = seq + bytes([b])
-        if cand in table:
-            seq = cand
-            continue
-        emit(table[seq])
-        table[cand] = next_code
-        next_code += 1
-        if next_code == (1 << width) - 1:       # early change
-            if width < 12:
-                width += 1
-            else:                               # dictionary full -> reset
-                emit(256)
-                table = {bytes([i]): i for i in range(256)}
-                next_code, width = 258, 9
-        seq = bytes([b])
-    if seq:
-        emit(table[seq])
-    emit(257)                                   # EOI
-    if n_bits:
-        out.append((acc << (8 - n_bits)) & 255)
-    return bytes(out)
-
-
-# the single-byte strings both LZW decoders start their tables from
+# the single-byte strings the decoder starts its table from
 _LZW_BYTES = [bytes([i]) for i in range(256)]
 
 
-def _tiff_lzw_decode(data: bytes, n_bytes: int) -> bytes:
-    """Inverse of _tiff_lzw_encode; also reads libtiff output (same
-    MSB-first early-change convention)."""
-    out = bytearray()
-    n_out = acc = n_bits = i = 0
-    end = len(data)
-    root = _LZW_BYTES + [b"", b""]
-    table, size = root.copy(), 258
-    # early change, minus one more because the decoder's table lags the
-    # encoder's by one entry (the in-flight KwKwK entry): the width steps
-    # up once the table holds `grow` entries
-    width, grow = 9, (1 << 9) - 2
-    prev: bytes | None = None
-    while n_out < n_bytes:
-        while n_bits < width:
-            if i >= end:
-                raise ValueError("TIFF LZW stream truncated")
-            acc = (acc << 8) | data[i]
-            i += 1
-            n_bits += 8
-        n_bits -= width
-        code = acc >> n_bits
-        acc &= (1 << n_bits) - 1
-        if code == 256:                         # Clear
-            table, size = root.copy(), 258
-            width, grow, prev = 9, (1 << 9) - 2, None
+def _lzw_encode(data: bytes, min_code_size: int, variant: str) -> bytes:
+    """LZW-code `data` (every byte < 2**min_code_size) as `variant`."""
+    msb, early = _LZW[variant]
+    clear = 1 << min_code_size
+    width = min_code_size + 1
+    codes = [width << 12 | clear]       # width << 12 | code, packed at the end
+    table: dict[int, int] = {}          # prefix code << 8 | byte -> code
+    nxt = clear + 2
+    seq = data[0] if data else -1
+    for b in data[1:]:
+        key = seq << 8 | b
+        code = table.get(key)
+        if code is not None:
+            seq = code
             continue
-        if code == 257:                         # EOI
+        codes.append(width << 12 | seq)
+        if nxt + early >= 4096:         # dictionary full -> Clear
+            codes.append(width << 12 | clear)
+            table = {}
+            nxt, width = clear + 2, min_code_size + 1
+        else:
+            table[key] = nxt
+            nxt += 1
+            if nxt == (1 << width) + 1 - early:
+                width += 1
+        seq = b
+    if seq >= 0:
+        codes.append(width << 12 | seq)
+    codes.append(width << 12 | (clear + 1))                  # EOI
+    c = np.asarray(codes, dtype=np.int32)
+    bits = ((c[:, None] >> np.arange(12)) & 1).astype(np.uint8)  # LSB first
+    keep = np.arange(12) < (c >> 12)[:, None]
+    if msb:             # MSB first: reverse each code's `width` bits
+        bits, keep = bits[:, ::-1], keep[:, ::-1]
+    return np.packbits(bits[keep],
+                       bitorder="big" if msb else "little").tobytes()
+
+
+def _lzw_decode(data: bytes, min_code_size: int, n: int,
+                variant: str) -> bytes:
+    """Inverse of `_lzw_encode` (TIFF: also reads libtiff output): at most
+    `n` bytes, fewer when EOI comes first. Every code takes at least
+    min_code_size + 1 bits, the first after a Clear yields one byte and
+    each later one at most one byte more than the longest so far (and no
+    entry exceeds 4096 bytes), so an `n` beyond what `data` can hold is
+    refused before anything is allocated."""
+    msb, early = _LZW[variant]
+    name = variant.upper()
+    if not 2 <= min_code_size <= 8:
+        raise ValueError(f"{name} LZW minimum code size {min_code_size} "
+                         "unsupported")
+    k = 8 * len(data) // (min_code_size + 1)
+    if n > k * min(k, 4096):
+        raise ValueError(f"{name} LZW stream of {len(data)} bytes cannot "
+                         f"hold {n} bytes")
+    win = memoryview(np.ndarray(len(data), ">u4" if msb else "<u4",
+                                bytes(data) + b"\0\0\0", strides=1
+                                ).astype(np.uint32))
+    n_bits = 8 * len(data)
+    widths = _LZW_WIDTHS[variant]
+    clear, end = 1 << min_code_size, (1 << min_code_size) + 1
+    root = _LZW_BYTES[:clear] + [b"", b""]
+    table, size = root.copy(), clear + 2
+    width = min_code_size + 1
+    grow, mask, shift = widths[width]
+    prev: bytes | None = None
+    out = bytearray()
+    n_out = p = 0
+    while n_out < n:
+        if p + width > n_bits:
+            raise ValueError(f"{name} LZW stream truncated")
+        code = (win[p >> 3] >> shift[p & 7]) & mask
+        p += width
+        if code == clear:
+            table, size = root.copy(), clear + 2
+            width, prev = min_code_size + 1, None
+            grow, mask, shift = widths[width]
+            continue
+        if code == end:
             break
         if code < size:
             entry = table[code]
             if prev is not None:
                 table.append(prev + entry[:1])
                 size += 1
-        elif code == size and prev is not None:  # KwKwK
+        elif code == size and prev is not None:     # the KwKwK case
             entry = prev + prev[:1]
             table.append(entry)
             size += 1
         else:
-            raise ValueError(f"TIFF LZW code {code} out of range")
-        if size == grow and width < 12:
+            raise ValueError(f"{name} LZW code {code} out of range")
+        if size == grow:
             width += 1
-            grow = (1 << width) - 2
+            grow, mask, shift = widths[width]
         out += entry
         n_out += len(entry)
         prev = entry
-    return bytes(out[:n_bytes])
+    del out[n:]
+    return bytes(out)
+
+
+# ---------------------------------------------------------------------------
+# TIFF (strips: none, PackBits, LZW "tiff" variant, DEFLATE; CCITT fax in
+# the next section)
+# ---------------------------------------------------------------------------
+
+_TIFF_TAGS = {256: "width", 257: "height", 258: "bits", 259: "compression",
+              262: "photometric", 273: "strip_offsets", 277: "samples",
+              278: "rows_per_strip", 279: "strip_counts",
+              282: "x_resolution", 292: "t4options",
+              296: "resolution_unit", 317: "predictor"}
+_TYPE_SIZE = {1: 1, 3: 2, 4: 4, 5: 8}     # BYTE, SHORT, LONG, RATIONAL
 
 
 def packbits_encode(row: np.ndarray) -> bytes:
@@ -800,7 +835,8 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
     elif compression == "packbits":
         strips = [packbits_encode(rows[y]) for y in range(h)]
     elif compression == "lzw":
-        strips = [_tiff_lzw_encode(rows[y].tobytes()) for y in range(h)]
+        strips = [_lzw_encode(rows[y].tobytes(), 8, "tiff")
+                  for y in range(h)]
     elif compression == "deflate":
         import zlib
         strips = [zlib.compress(rows[y].tobytes()) for y in range(h)]
@@ -877,13 +913,15 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
 
 
 def _tiff_values(data: bytes, endian: str, typ: int, count: int,
-                 raw: bytes) -> list[int]:
-    size = _TYPE_SIZE[typ]
-    fmt = {1: "B", 3: "H", 4: "I"}[typ]
-    if size * count <= 4:
-        return list(struct.unpack_from(f"{endian}{count}{fmt}", raw))
-    off = struct.unpack_from(f"{endian}I", raw)[0]
-    return list(struct.unpack_from(f"{endian}{count}{fmt}", data, off))
+                 at: int) -> list[int]:
+    """An IFD entry's values from its value field at `at` (the values
+    themselves when they fit in 4 bytes, else their offset); a RATIONAL
+    gives numerator, denominator pairs."""
+    if _TYPE_SIZE[typ] * count > 4:
+        at = struct.unpack_from(f"{endian}I", data, at)[0]
+    fmt = {1: "B", 3: "H", 4: "I", 5: "I"}[typ]
+    n = 2 * count if typ == 5 else count
+    return list(struct.unpack_from(f"{endian}{n}{fmt}", data, at))
 
 
 def _tiff_header(data: bytes) -> tuple[str, int]:
@@ -902,20 +940,40 @@ def decode_tiff(data: bytes) -> np.ndarray:
     return _decode_tiff_ifd(data, *_tiff_header(data))
 
 
-def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
+def _tiff_tags(data: bytes, endian: str,
+               ifd_off: int) -> dict[str, tuple[int, int, int]]:
+    """The IFD's entries named in `_TIFF_TAGS`: name -> (type, count,
+    offset of the value field), for `_tiff_values` to read. Values are
+    read only when asked for, so a bad pointer in a tag the caller does
+    not use (resolution metadata, say) stops nothing."""
     n = struct.unpack_from(f"{endian}H", data, ifd_off)[0]
-    tags: dict[str, list[int]] = {}
-    for i in range(n):
-        tag, typ, count = struct.unpack_from(f"{endian}HHI",
-                                             data, ifd_off + 2 + i * 12)
+    tags = {}
+    for e in range(ifd_off + 2, ifd_off + 2 + n * 12, 12):
+        tag, typ, count = struct.unpack_from(f"{endian}HHI", data, e)
         if tag in _TIFF_TAGS and typ in _TYPE_SIZE:
-            raw = data[ifd_off + 2 + i * 12 + 8: ifd_off + 2 + i * 12 + 12]
-            tags[_TIFF_TAGS[tag]] = _tiff_values(data, endian, typ, count, raw)
-    w, h = tags["width"][0], tags["height"][0]
-    bands = tags.get("samples", [1])[0]
-    compression = tags.get("compression", [1])[0]
-    rows_per_strip = tags.get("rows_per_strip", [h])[0]
-    bits_v = tags.get("bits", [8])
+            tags[_TIFF_TAGS[tag]] = (typ, count, e + 8)
+    return tags
+
+
+def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
+    tags = _tiff_tags(data, endian, ifd_off)
+
+    def tag(name: str, default: int | None = None) -> list[int]:
+        if name in tags and tags[name][0] != 5:     # integer types only
+            return _tiff_values(data, endian, *tags[name])
+        if default is None:
+            raise ValueError(f"TIFF IFD has no {name} tag")
+        return [default]
+
+    w, h = tag("width")[0], tag("height")[0]
+    offsets, counts = tag("strip_offsets"), tag("strip_counts")
+    bands = tag("samples", 1)[0]
+    compression = tag("compression", 1)[0]
+    rows_per_strip = tag("rows_per_strip", h)[0]
+    bits_v = tag("bits", 8)
+    predictor = tag("predictor", 1)[0]
+    t4options = tag("t4options", 0)[0]
+    photometric = tag("photometric", 1)[0]
     bps = bits_v[0]
     if any(b != bps for b in bits_v):
         raise NotImplementedError("TIFF mixed bits-per-sample unsupported")
@@ -929,8 +987,6 @@ def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
             "(none/CCITT G3/T4/G4/LZW/DEFLATE/PackBits only)")
     if compression in (2, 3, 4) and (bps != 1 or bands != 1):
         raise ValueError("TIFF CCITT compression requires 1-bit 1-band")
-
-    predictor = tags.get("predictor", [1])[0]
     if predictor not in (1, 2):
         raise NotImplementedError(f"TIFF predictor {predictor} unsupported "
                                   "(none/horizontal only)")
@@ -939,17 +995,16 @@ def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
     if compression in (2, 3, 4):        # _ccitt_decode's (k, eol, align)
         fax = ((0, False, True) if compression == 2
                else (-1, False, False) if compression == 4
-               else (tags.get("t4options", [0])[0] & 1, True, False))
+               else (t4options & 1, True, False))
     row_bytes = -(-w * bps * bands // 8)    # rows pad to byte boundaries
     chunks = []
-    for si, (off, cnt) in enumerate(zip(tags["strip_offsets"],
-                                        tags["strip_counts"])):
+    for si, (off, cnt) in enumerate(zip(offsets, counts)):
         n_rows = min(rows_per_strip, h - si * rows_per_strip)
         raw = data[off: off + cnt]
         if compression == 32773:
             raw = packbits_decode(raw, n_rows * row_bytes)
         elif compression == 5:            # LZW (MSB-first, early change)
-            raw = _tiff_lzw_decode(raw, n_rows * row_bytes)
+            raw = _lzw_decode(raw, 8, n_rows * row_bytes, "tiff")
         elif compression in (8, 32946):   # Adobe / legacy DEFLATE
             import zlib
             raw = zlib.decompress(raw)
@@ -975,7 +1030,7 @@ def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
         img = px.reshape((h, w) if bands == 1 else (h, w, bands))
     if predictor == 2:      # undo horizontal differencing (per row/band)
         img = (np.cumsum(img, axis=1, dtype=np.int64) % 256).astype(np.uint8)
-    if tags.get("photometric", [1])[0] == 0:          # WhiteIsZero
+    if photometric == 0:                                # WhiteIsZero
         img = 255 - img
     return np.ascontiguousarray(img)
 
@@ -1010,7 +1065,7 @@ def encode_tiff_multipage(pages: list[np.ndarray],
             e0 = ifd_off + 2 + j * 12
             tag, typ, count = struct.unpack_from("<HHI", b, e0)
             # RATIONAL (type 5, 8 bytes) is always a pointer
-            if {**_TYPE_SIZE, 5: 8}.get(typ, 1) * count > 4:
+            if _TYPE_SIZE.get(typ, 1) * count > 4:
                 ptr = struct.unpack_from("<I", b, e0 + 8)[0]
                 if tag == 273:   # strip offsets array: rebase each entry
                     for s in range(count):
@@ -1308,103 +1363,9 @@ def decode_png(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# GIF (87a/89a, 8-bit palette; real LZW both ways; interlace on decode)
+# GIF (87a/89a, 8-bit palette; LZW "gif" variant both ways; interlace on
+# decode)
 # ---------------------------------------------------------------------------
-
-def _lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
-    """GIF-variant LZW: variable 3..12-bit codes, CLEAR resets the
-    dictionary when it fills."""
-    clear, end = 1 << min_code_size, (1 << min_code_size) + 1
-    out = bytearray()
-    acc = n_bits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, n_bits
-        acc |= code << n_bits
-        n_bits += width
-        while n_bits >= 8:
-            out.append(acc & 255)
-            acc >>= 8
-            n_bits -= 8
-
-    table: dict[tuple, int] = {(i,): i for i in range(clear)}
-    next_code, width = end + 1, min_code_size + 1
-    emit(clear, width)
-    seq: tuple = ()
-    for px in indices.tolist():
-        cand = seq + (px,)
-        if cand in table:
-            seq = cand
-            continue
-        emit(table[seq], width)
-        if next_code < 4096:
-            table[cand] = next_code
-            if next_code == (1 << width) and width < 12:
-                width += 1
-            next_code += 1
-        else:                                   # dictionary full -> reset
-            emit(clear, width)
-            table = {(i,): i for i in range(clear)}
-            next_code, width = end + 1, min_code_size + 1
-        seq = (px,)
-    if seq:
-        emit(table[seq], width)
-    emit(end, width)
-    if n_bits:
-        out.append(acc & 255)
-    return bytes(out)
-
-
-def _lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> np.ndarray:
-    """GIF-variant LZW (LSB-first, no early change) -> n_pixels indices;
-    a stream that ends early leaves the remaining pixels 0."""
-    clear, end = 1 << min_code_size, (1 << min_code_size) + 1
-    out = bytearray()
-    n_out = 0
-    acc = n_bits = bit_i = 0
-    n_data = len(data)
-    root = _LZW_BYTES[:clear] + [b"", b""]
-    table, size = root.copy(), clear + 2
-    width = min_code_size + 1
-    prev: bytes | None = None
-    while n_out < n_pixels:
-        while n_bits < width:
-            if bit_i >= n_data:
-                raise ValueError("GIF LZW stream truncated")
-            acc |= data[bit_i] << n_bits
-            bit_i += 1
-            n_bits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        n_bits -= width
-        if code == clear:
-            table, size = root.copy(), clear + 2
-            width, prev = min_code_size + 1, None
-            continue
-        if code == end:
-            break
-        if code < size:
-            entry = table[code]
-            if prev is not None:
-                table.append(prev + entry[:1])
-                size += 1
-        elif code == size and prev is not None:     # the KwKwK case
-            entry = prev + prev[:1]
-            table.append(entry)
-            size += 1
-        else:
-            raise ValueError(f"GIF LZW code {code} out of range")
-        if prev is not None and size == (1 << width) and width < 12:
-            width += 1
-        out += entry
-        n_out += len(entry)
-        prev = entry
-    if n_out >= n_pixels:
-        return np.frombuffer(out, dtype=np.uint8, count=n_pixels)
-    idx = np.zeros(n_pixels, dtype=np.uint8)    # the stream ended early
-    idx[:n_out] = np.frombuffer(out, dtype=np.uint8)
-    return idx
-
 
 def encode_gif(img: np.ndarray) -> bytes:
     """GIF89a with a 256-entry global palette and real LZW image data.
@@ -1413,10 +1374,11 @@ def encode_gif(img: np.ndarray) -> bytes:
     use <= 256 distinct colors — GIF has no truecolor model, and lossy
     quantization would break the pipeline's determinism contract."""
     img = np.ascontiguousarray(img, dtype=np.uint8)
-    if img.ndim == 3:
-        if img.shape[2] != 3:
-            raise ValueError(f"GIF encoder supports 1 or 3 bands, got "
-                             f"{img.shape[2]}")
+    if img.ndim == 2:
+        h, w = img.shape
+        palette = np.repeat(np.arange(256, dtype=np.uint8), 3).tobytes()
+        indices = img.tobytes()
+    elif img.ndim == 3 and img.shape[2] == 3:
         h, w = img.shape[:2]
         colors, inv = np.unique(img.reshape(h * w, 3), axis=0,
                                 return_inverse=True)
@@ -1426,26 +1388,15 @@ def encode_gif(img: np.ndarray) -> bytes:
         pal = np.zeros((256, 3), dtype=np.uint8)
         pal[:len(colors)] = colors
         palette = pal.tobytes()
-        lzw = _lzw_encode(inv.astype(np.uint8).ravel(), 8)
-        out = bytearray()
-        out += b"GIF89a"
-        out += struct.pack("<HHBBB", w, h, 0xF7, 0, 0)
-        out += palette
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        out += bytes([8])
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i: i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00\x3b"
-        return bytes(out)
-    if img.ndim != 2:
+        indices = inv.astype(np.uint8).tobytes()
+    elif img.ndim == 3:
+        raise ValueError(f"GIF encoder supports 1 or 3 bands, got "
+                         f"{img.shape[2]}")
+    else:
         raise ValueError("GIF encoder supports 1-band (greyscale) or "
                          "3-band (<=256-color) images")
-    h, w = img.shape
-    palette = bytes(b for v in range(256) for b in (v, v, v))
-    lzw = _lzw_encode(img.ravel(), 8)
-    out = bytearray()
-    out += b"GIF89a"
+    lzw = _lzw_encode(indices, 8, "gif")
+    out = bytearray(b"GIF89a")
     out += struct.pack("<HHBBB", w, h, 0xF7, 0, 0)   # GCT: 256 entries
     out += palette
     out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)   # image desc
@@ -1499,7 +1450,10 @@ def decode_gif(data: bytes) -> np.ndarray:
                 lzw += data[pos + 1: pos + 1 + ln]
                 pos += 1 + ln
             pos += 1
-            idx = _lzw_decode(bytes(lzw), min_code, w * h).reshape(h, w)
+            # a stream that ends (EOI) early leaves the other pixels 0
+            raw = _lzw_decode(bytes(lzw), min_code, w * h, "gif")
+            idx = np.frombuffer(raw.ljust(w * h, b"\0"),
+                                np.uint8).reshape(h, w)
             if ipacked & 0x40:                   # deinterlace
                 rows = [y for start, step in _GIF_INTERLACE
                         for y in range(start, h, step)]
@@ -2503,21 +2457,15 @@ from .codecs_pdf import decode_pdf, encode_pdf  # noqa: E402 — registry
 
 def _tiff_dpi(data: bytes) -> int | None:
     endian, ifd_off = _tiff_header(data)
-    n = struct.unpack_from(f"{endian}H", data, ifd_off)[0]
-    xres, unit = None, 2                    # spec default unit = inch
-    for i in range(n):
-        tag, typ, count = struct.unpack_from(f"{endian}HHI",
-                                             data, ifd_off + 2 + i * 12)
-        val_off = ifd_off + 2 + i * 12 + 8
-        if tag == 282 and typ == 5 and count >= 1:
-            ptr = struct.unpack_from(f"{endian}I", data, val_off)[0]
-            num, den = struct.unpack_from(f"{endian}II", data, ptr)
-            xres = num / den if den else None
-        elif tag == 296 and typ == 3:
-            unit = struct.unpack_from(f"{endian}H", data, val_off)[0]
-    if xres is None or unit == 1:           # 1 = no absolute unit
+    tags = _tiff_tags(data, endian, ifd_off)
+    unit = (_tiff_values(data, endian, *tags["resolution_unit"])[0]
+            if "resolution_unit" in tags else 2)    # spec default: inch
+    if tags.get("x_resolution", (0,))[0] != 5 or unit == 1:  # 1: no unit
         return None
-    return round(xres * 2.54) if unit == 3 else round(xres)
+    num, den = _tiff_values(data, endian, *tags["x_resolution"])[:2]
+    if not den:
+        return None
+    return round(num / den * 2.54) if unit == 3 else round(num / den)
 
 
 def _png_dpi(data: bytes) -> int | None:

@@ -164,8 +164,12 @@ def decode_pdf(payload: bytes) -> np.ndarray:
     for _, body in sorted(objects.items()):
         if not _IMAGE_RE.search(body):
             continue
-        w = int(_INT_KEY[b"Width"].search(body).group(1))
-        h = int(_INT_KEY[b"Height"].search(body).group(1))
+        w_m = _INT_KEY[b"Width"].search(body)
+        h_m = _INT_KEY[b"Height"].search(body)
+        if w_m is None or h_m is None:
+            raise ValueError("PDF image XObject has no integer "
+                             + ("/Width" if w_m is None else "/Height"))
+        w, h = int(w_m.group(1)), int(h_m.group(1))
         data = _stream_of(body, objects)
         if data is None:
             raise ValueError("PDF image XObject has no stream")

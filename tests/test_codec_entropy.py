@@ -14,6 +14,7 @@ grey page is large enough to split into several 64x64 JP2 code-blocks.
 from __future__ import annotations
 
 import hashlib
+import struct
 
 import numpy as np
 import pytest
@@ -138,18 +139,48 @@ def _lzw_lsb(codes: list[int], width: int) -> bytes:
 
 def test_gif_lzw_first_code_out_of_range():
     """The first code after Clear must name a root entry; one past the
-    table raises the same typed error as TIFF LZW, not IndexError."""
+    table raises the same typed error as TIFF LZW, not IndexError. (Four
+    bytes hold three 9-bit codes, so at most 9 output bytes.)"""
     with pytest.raises(ValueError, match="GIF LZW code 300 out of range"):
-        C._lzw_decode(_lzw_lsb([256, 300, 257], 9), 8, 10)
+        C._lzw_decode(_lzw_lsb([256, 300, 257], 9), 8, 9, "gif")
     with pytest.raises(ValueError, match="TIFF LZW code 300 out of range"):
-        C._tiff_lzw_decode(bytes([0x80, 0x4B, 0x20, 0x20]), 10)
+        C._lzw_decode(bytes([0x80, 0x4B, 0x20, 0x20]), 8, 9, "tiff")
+
+
+def _gif(w: int, h: int, lzw: bytes) -> bytes:
+    """A GIF89a with the grey ramp palette and one image of `lzw` data."""
+    out = bytearray(b"GIF89a" + struct.pack("<HHBBB", w, h, 0xF7, 0, 0))
+    out += np.repeat(np.arange(256, dtype=np.uint8), 3).tobytes()
+    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0) + bytes([8])
+    out += bytes([len(lzw)]) + lzw + b"\x00\x3b"
+    return bytes(out)
 
 
 def test_gif_lzw_short_stream_pads_with_zero():
     """A stream that ends (EOI) before the image is full leaves the rest
     of the pixels 0, not whatever the buffer held."""
-    out = C._lzw_decode(_lzw_lsb([256, 7, 9, 257], 9), 8, 6)
-    assert out.tolist() == [7, 9, 0, 0, 0, 0]
+    out = C.decode_gif(_gif(3, 2, _lzw_lsb([256, 7, 9, 257], 9)))
+    assert out.tolist() == [[7, 9, 0], [0, 0, 0]]
+
+
+def test_gif_lzw_output_bound_refuses_huge_header():
+    """Three 9-bit codes cannot decode to more than 3 * 3 bytes, so a
+    header claiming 8000 x 8000 pixels over them is refused before the
+    64 MB image is allocated."""
+    blob = _gif(8000, 8000, _lzw_lsb([256, 7, 257], 9))
+    assert len(blob) == 799
+    with pytest.raises(ValueError, match="GIF LZW stream of 4 bytes"):
+        C.decode_gif(blob)
+
+
+@pytest.mark.parametrize("min_code_size", [1, 9, 194])
+def test_gif_lzw_min_code_size_out_of_range(min_code_size):
+    """GIF codes are at most 12 bits wide and name byte strings, so a
+    minimum code size outside 2..8 is a ValueError, not IndexError."""
+    blob = bytearray(_gif(3, 2, _lzw_lsb([256, 7, 9, 257], 9)))
+    blob[791] = min_code_size                   # after header + palette
+    with pytest.raises(ValueError, match=f"minimum code size {min_code_size}"):
+        C.decode_gif(bytes(blob))
 
 
 def _patched(blob: bytes, marker: bytes, offset: int, value: int) -> bytes:

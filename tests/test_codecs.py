@@ -43,13 +43,27 @@ def test_tiff_lzw_roundtrip(img, predictor):
     assert dec.shape == img.shape and (dec == img).all()
 
 
-def test_tiff_lzw_width_growth_and_dict_reset():
-    """200k random bytes force the 9->12 bit width ladder and multiple
-    dictionary resets (the early-change convention either side of the
-    decoder's one-entry lag is where implementations diverge)."""
-    raw = np.random.default_rng(17).integers(
-        0, 256, 200_000, dtype=np.uint8).tobytes()
-    assert C._tiff_lzw_decode(C._tiff_lzw_encode(raw), len(raw)) == raw
+@pytest.mark.parametrize("variant,min_code_size",
+                         [("tiff", 8), ("gif", 8), ("gif", 2)])
+def test_tiff_lzw_width_growth_and_dict_reset(variant, min_code_size):
+    """200k random symbols force the width ladder up to 12 bits and
+    multiple dictionary resets (the early-change convention either side
+    of the decoder's one-entry lag is where implementations diverge)."""
+    raw = (np.random.default_rng(17).integers(0, 256, 200_000, dtype=np.uint8)
+           & ((1 << min_code_size) - 1)).tobytes()
+    enc = C._lzw_encode(raw, min_code_size, variant)
+    assert C._lzw_decode(enc, min_code_size, len(raw), variant) == raw
+
+
+def test_tiff_missing_required_tag_is_value_error():
+    """An IFD without ImageWidth (tag 256 renumbered to an unknown id) is
+    a ValueError naming the tag, not a KeyError."""
+    blob = bytearray(C.encode_tiff(GREY, compression="lzw"))
+    ifd = struct.unpack_from("<I", blob, 4)[0]
+    assert struct.unpack_from("<H", blob, ifd + 2)[0] == 256
+    struct.pack_into("<H", blob, ifd + 2, 65000)
+    with pytest.raises(ValueError, match="TIFF IFD has no width tag"):
+        C.decode_tiff(bytes(blob))
 
 
 def test_tiff_predictor_shrinks_gradients():

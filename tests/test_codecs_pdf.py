@@ -82,6 +82,18 @@ def test_malformed_payloads():
         P.decode_pdf(bad)
 
 
+@pytest.mark.parametrize("key,value", [(b"/Width", b"53"),
+                                       (b"/Height", b"37")])
+def test_image_dimension_not_integer(key, value):
+    """An image dict whose /Width or /Height is not an integer is a
+    ValueError naming the key, not an AttributeError."""
+    blob = P.encode_pdf(GREY)
+    assert blob.count(key + b" " + value) == 1
+    bad = blob.replace(key + b" " + value, key + b" /X")
+    with pytest.raises(ValueError, match="no integer " + key.decode()):
+        P.decode_pdf(bad)
+
+
 def test_spark_pdf_sink_source_roundtrip(spark):
     """docs_to_pdf -> pdf_extract_text reproduces exactly the raw text
     spans in offset order, per document."""

@@ -186,7 +186,7 @@ def test_gif_interlaced_and_color_palette_decode():
     order = [y for s, st in ((0, 8), (4, 8), (2, 4), (1, 2))
              for y in range(s, h, st)]
     stored = idx[order]                      # rows in interlace pass order
-    lzw = _lzw_encode(stored.ravel(), 2)     # min code size 2 (4 colors)
+    lzw = _lzw_encode(stored.tobytes(), 2, "gif")   # 4 colors
     out = bytearray()
     out += b"GIF89a" + struct.pack("<HHBBB", w, h, 0x81, 0, 0) + pal
     out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40)   # interlaced
