@@ -64,6 +64,15 @@ def sniff_codec(payload: bytes) -> str | None:
     return None
 
 
+def _unpack(fmt: str, data: bytes, at: int, what: str) -> tuple:
+    """struct.unpack_from, but a field past the payload is a ValueError
+    naming `what` was read there."""
+    if at + struct.calcsize(fmt) > len(data):
+        raise ValueError(f"{what} at offset {at} runs past the "
+                         f"{len(data)}-byte payload")
+    return struct.unpack_from(fmt, data, at)
+
+
 # ---------------------------------------------------------------------------
 # BMP (Windows BITMAPINFOHEADER, uncompressed)
 # ---------------------------------------------------------------------------
@@ -912,16 +921,17 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
     return bytes(out)
 
 
-def _tiff_values(data: bytes, endian: str, typ: int, count: int,
-                 at: int) -> list[int]:
-    """An IFD entry's values from its value field at `at` (the values
+def _tiff_values(data: bytes, endian: str, tags: dict,
+                 name: str) -> list[int]:
+    """The values of IFD entry `name` from its value field (the values
     themselves when they fit in 4 bytes, else their offset); a RATIONAL
     gives numerator, denominator pairs."""
+    typ, count, at = tags[name]
     if _TYPE_SIZE[typ] * count > 4:
-        at = struct.unpack_from(f"{endian}I", data, at)[0]
+        at = _unpack(f"{endian}I", data, at, f"TIFF {name} offset")[0]
     fmt = {1: "B", 3: "H", 4: "I", 5: "I"}[typ]
     n = 2 * count if typ == 5 else count
-    return list(struct.unpack_from(f"{endian}{n}{fmt}", data, at))
+    return list(_unpack(f"{endian}{n}{fmt}", data, at, f"TIFF {name} tag"))
 
 
 def _tiff_header(data: bytes) -> tuple[str, int]:
@@ -932,7 +942,7 @@ def _tiff_header(data: bytes) -> tuple[str, int]:
         endian = ">"
     else:
         raise ValueError("not a TIFF payload")
-    return endian, struct.unpack_from(f"{endian}I", data, 4)[0]
+    return endian, _unpack(f"{endian}I", data, 4, "TIFF IFD offset")[0]
 
 
 def decode_tiff(data: bytes) -> np.ndarray:
@@ -946,10 +956,10 @@ def _tiff_tags(data: bytes, endian: str,
     offset of the value field), for `_tiff_values` to read. Values are
     read only when asked for, so a bad pointer in a tag the caller does
     not use (resolution metadata, say) stops nothing."""
-    n = struct.unpack_from(f"{endian}H", data, ifd_off)[0]
+    n = _unpack(f"{endian}H", data, ifd_off, "TIFF IFD")[0]
     tags = {}
     for e in range(ifd_off + 2, ifd_off + 2 + n * 12, 12):
-        tag, typ, count = struct.unpack_from(f"{endian}HHI", data, e)
+        tag, typ, count = _unpack(f"{endian}HHI", data, e, "TIFF IFD entry")
         if tag in _TIFF_TAGS and typ in _TYPE_SIZE:
             tags[_TIFF_TAGS[tag]] = (typ, count, e + 8)
     return tags
@@ -960,7 +970,7 @@ def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
 
     def tag(name: str, default: int | None = None) -> list[int]:
         if name in tags and tags[name][0] != 5:     # integer types only
-            return _tiff_values(data, endian, *tags[name])
+            return _tiff_values(data, endian, tags, name)
         if default is None:
             raise ValueError(f"TIFF IFD has no {name} tag")
         return [default]
@@ -1092,8 +1102,8 @@ def decode_tiff_pages(data: bytes) -> list[np.ndarray]:
     while ifd_off:
         pages.append(_decode_tiff_ifd(data, endian, ifd_off))
         n = struct.unpack_from(f"{endian}H", data, ifd_off)[0]
-        ifd_off = struct.unpack_from(f"{endian}I", data,
-                                     ifd_off + 2 + n * 12)[0]
+        ifd_off = _unpack(f"{endian}I", data, ifd_off + 2 + n * 12,
+                          "TIFF next IFD offset")[0]
     return pages
 
 
@@ -1411,13 +1421,26 @@ def encode_gif(img: np.ndarray) -> bytes:
 _GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
+def _gif_sub_blocks(data: bytes, pos: int) -> tuple[bytes, int]:
+    """The data of the sub-blocks at `pos` joined, and the position past
+    their zero-length terminator."""
+    out = bytearray()
+    while pos < len(data):
+        ln = data[pos]
+        if not ln:
+            return bytes(out), pos + 1
+        out += data[pos + 1: pos + 1 + ln]
+        pos += 1 + ln
+    raise ValueError("GIF: truncated sub-blocks")
+
+
 def decode_gif(data: bytes) -> np.ndarray:
     """First image of a GIF87a/89a: global/local palette, real LZW,
     interlace supported; extensions skipped. A grey palette yields
     (h, w); a color palette yields (h, w, 3)."""
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
-    _sw, _sh, packed, _bg, _ar = struct.unpack_from("<HHBBB", data, 6)
+    _sw, _sh, packed, _bg, _ar = _unpack("<HHBBB", data, 6, "GIF header")
     pos = 13
     gct = None
     if packed & 0x80:
@@ -1428,12 +1451,10 @@ def decode_gif(data: bytes) -> np.ndarray:
         block = data[pos]
         pos += 1
         if block == 0x21:                        # extension: skip sub-blocks
-            pos += 1
-            while data[pos]:
-                pos += 1 + data[pos]
-            pos += 1
+            _ext, pos = _gif_sub_blocks(data, pos + 1)
         elif block == 0x2C:                      # image descriptor
-            _l, _t, w, h, ipacked = struct.unpack_from("<HHHHB", data, pos)
+            _l, _t, w, h, ipacked = _unpack("<HHHHB", data, pos,
+                                            "GIF image descriptor")
             pos += 9
             pal = gct
             if ipacked & 0x80:
@@ -1442,16 +1463,9 @@ def decode_gif(data: bytes) -> np.ndarray:
                 pos += n * 3
             if pal is None:
                 raise ValueError("GIF image has no color table")
-            min_code = data[pos]
-            pos += 1
-            lzw = bytearray()
-            while data[pos]:
-                ln = data[pos]
-                lzw += data[pos + 1: pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
+            lzw, _end = _gif_sub_blocks(data, pos + 1)   # after min code
             # a stream that ends (EOI) early leaves the other pixels 0
-            raw = _lzw_decode(bytes(lzw), min_code, w * h, "gif")
+            raw = _lzw_decode(lzw, data[pos], w * h, "gif")
             idx = np.frombuffer(raw.ljust(w * h, b"\0"),
                                 np.uint8).reshape(h, w)
             if ipacked & 0x40:                   # deinterlace
@@ -1471,25 +1485,35 @@ def decode_gif(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# JPEG (baseline DCT, greyscale + 3-component YCbCr color; LOSSY — the
-# one non-exact codec)
+# JPEG (DCT, greyscale + 3-component YCbCr color; LOSSY — the one
+# non-exact codec)
 # ---------------------------------------------------------------------------
 #
-# Baseline sequential JFIF: 8x8 DCT as a matrix product (einsum over all
-# blocks), Annex-K luminance + chrominance quant tables scaled by
-# libjpeg's quality formula, canonical Huffman codes BUILT LOCALLY and
-# shipped in the file's own DHT segments (decoders read DHT, so no
-# dependence on the "typical" Annex-K code tables). Color: JFIF YCbCr,
-# encoder emits 4:4:4 or 4:2:0 (box-mean chroma downsample), decoder
-# handles any integer sampling-factor grid (4:4:4 / 4:2:2 / 4:2:0),
-# per-component quant/Huffman table ids, DRI/RSTn, byte stuffing,
-# progressive (SOF2) and non-interleaved scans. The decoder reads Huffman
-# codes through a peek table built once per DHT table (`_huff_table`),
-# not one bit at a time. JPEG is
-# lossy: round-trips are near-equal, not equal — but the OCR pipeline
-# binarizes with a >170-level ink/background margin, so spans over
-# JPEG-encoded media equal the raw run's (gates ocr_spans_jpeg_media /
-# ocr_spans_jpeg_color_media).
+# JFIF, baseline (SOF0) or progressive (SOF2): 8x8 DCT as a matrix product
+# (einsum over all blocks), Annex-K luminance + chrominance quant tables
+# scaled by libjpeg's quality formula, canonical Huffman codes BUILT
+# LOCALLY and shipped in the file's own DHT segments (decoders read DHT,
+# so no dependence on the "typical" Annex-K code tables). Color: JFIF
+# YCbCr; the encoder emits 4:4:4 or 4:2:0 (box-mean chroma downsample),
+# the decoder handles any integer sampling-factor grid (4:4:4 / 4:2:2 /
+# 4:2:0), per-component quant/Huffman table ids, DRI/RSTn, byte stuffing
+# and non-interleaved scans.
+#
+# One block order serves every scan in both directions: `_scan_units`
+# lists a scan's restart units (T.81 A.2) — an MCU of an interleaved
+# scan, a block of a single-component one. The encoder has one path over
+# a component list (cid, hs, vs, tq), grey being colour with one
+# component, and writes the one baseline scan or the progressive script
+# through one set of block emitters: a baseline block is a DC-first
+# block, an AC-first band 1-63 and an EOB flush. The decoder walks the
+# same units through `_read_block` (the sequential fast path, chosen by
+# SOF0/SOF1) or the progressive block decoders, and reads Huffman codes
+# through a peek table built once per DHT table (`_huff_table`), not one
+# bit at a time. JPEG is lossy: round-trips are near-equal, not equal —
+# but the OCR pipeline binarizes with a >170-level ink/background margin,
+# so spans over JPEG-encoded media equal the raw run's (gates
+# ocr_spans_jpeg_media / ocr_spans_jpeg_color_media /
+# ocr_spans_jpeg_prog_media).
 
 _JPEG_QBASE = np.array([
     [16, 11, 10, 16, 24, 40, 51, 61],
@@ -1605,33 +1629,6 @@ def _block_zz(plane: np.ndarray, Q: np.ndarray) -> np.ndarray:
     return quant.reshape(-1, 64)[:, _ZZ]
 
 
-def _write_block(bw: "_BitWriter", blk: np.ndarray, pred: int) -> int:
-    """Entropy-encode one zigzag block; returns the new DC predictor."""
-    diff = int(blk[0]) - pred
-    s = _category(diff)
-    bw.write(*_DC_CODES[s])                # (code, length)
-    if s:
-        bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    k = 1
-    while k < 64:
-        run = 0
-        while k < 64 and blk[k] == 0:
-            run += 1
-            k += 1
-        if k == 64:
-            bw.write(*_AC_CODES[0x00])     # EOB
-            break
-        while run >= 16:
-            bw.write(*_AC_CODES[0xF0])     # ZRL
-            run -= 16
-        v = int(blk[k])
-        s = _category(v)
-        bw.write(*_AC_CODES[(run << 4) | s])
-        bw.write(v if v > 0 else v + (1 << s) - 1, s)
-        k += 1
-    return int(blk[0])
-
-
 # Progressive AC scans need EOBn symbols (r<15, s=0) that the Annex-K
 # baseline tables don't define, so progressive scans use one flat
 # canonical table: all 176 legal AC symbols (r 0..15 x s 0..10) at 9
@@ -1642,13 +1639,14 @@ _PROG_AC_BITS = [0] * 8 + [176] + [0] * 7
 _PROG_AC_CODES = {sym: (i, 9) for i, sym in enumerate(_PROG_AC_SYMBOLS)}
 
 
-def _emit_eobrun(bw: "_BitWriter", eobrun: int,
-                 bebits: list[int]) -> tuple[int, list]:
+def _emit_eobrun(bw: "_BitWriter", eobrun: int, bebits: list[int],
+                 codes: dict) -> tuple[int, list]:
     """Flush a pending EOBn symbol plus the correction bits buffered
-    while the run was open (T.81 G.1.2.3 encoder side)."""
+    while the run was open (T.81 G.1.2.3 encoder side). A run of one
+    is EOB0, the sequential EOB."""
     if eobrun > 0:
         r = eobrun.bit_length() - 1
-        bw.write(*_PROG_AC_CODES[r << 4])
+        bw.write(*codes[r << 4])
         if r:
             bw.write(eobrun - (1 << r), r)
         for b in bebits:
@@ -1670,7 +1668,7 @@ def _emit_dc_first_block(bw: "_BitWriter", blk: np.ndarray, pred: int,
 
 
 def _emit_ac_first_block(bw: "_BitWriter", blk: np.ndarray, Ss: int,
-                         Se: int, Al: int, eobrun: int) -> int:
+                         Se: int, Al: int, eobrun: int, codes: dict) -> int:
     """AC first scan for the band: ZRL/EOBn run-length coding of the
     point-transformed (truncate-toward-zero) coefficients."""
     vals = []
@@ -1680,19 +1678,19 @@ def _emit_ac_first_block(bw: "_BitWriter", blk: np.ndarray, Ss: int,
     if not any(vals):
         eobrun += 1
         if eobrun == 0x7FFF:
-            eobrun, _ = _emit_eobrun(bw, eobrun, [])
+            eobrun, _ = _emit_eobrun(bw, eobrun, [], codes)
         return eobrun
-    eobrun, _ = _emit_eobrun(bw, eobrun, [])
+    eobrun, _ = _emit_eobrun(bw, eobrun, [], codes)
     r = 0
     for v in vals:
         if v == 0:
             r += 1
             continue
         while r > 15:
-            bw.write(*_PROG_AC_CODES[0xF0])
+            bw.write(*codes[0xF0])
             r -= 16
         s = _category(v)
-        bw.write(*_PROG_AC_CODES[(r << 4) | s])
+        bw.write(*codes[(r << 4) | s])
         bw.write(v if v > 0 else v + (1 << s) - 1, s)
         r = 0
     if r > 0:
@@ -1701,8 +1699,8 @@ def _emit_ac_first_block(bw: "_BitWriter", blk: np.ndarray, Ss: int,
 
 
 def _emit_ac_refine_block(bw: "_BitWriter", blk: np.ndarray, Ss: int,
-                          Se: int, Al: int, eobrun: int,
-                          bebits: list[int]) -> tuple[int, list]:
+                          Se: int, Al: int, eobrun: int, bebits: list[int],
+                          codes: dict) -> tuple[int, list]:
     """AC refinement scan: newly-significant coefficients as (r,1)
     symbols + sign bit; one correction bit per already-nonzero
     coefficient, buffered across ZRL/EOB boundaries (T.81 G.1.2.3)."""
@@ -1721,8 +1719,8 @@ def _emit_ac_refine_block(bw: "_BitWriter", blk: np.ndarray, Ss: int,
             r += 1
             continue
         while r > 15 and k <= eob:
-            eobrun, bebits = _emit_eobrun(bw, eobrun, bebits)
-            bw.write(*_PROG_AC_CODES[0xF0])
+            eobrun, bebits = _emit_eobrun(bw, eobrun, bebits, codes)
+            bw.write(*codes[0xF0])
             r -= 16
             for b in br_bits:
                 bw.write(b, 1)
@@ -1730,8 +1728,8 @@ def _emit_ac_refine_block(bw: "_BitWriter", blk: np.ndarray, Ss: int,
         if a > 1:                     # already significant: correction
             br_bits.append(a & 1)     # bit rides with the next symbol
             continue
-        eobrun, bebits = _emit_eobrun(bw, eobrun, bebits)
-        bw.write(*_PROG_AC_CODES[(r << 4) | 1])
+        eobrun, bebits = _emit_eobrun(bw, eobrun, bebits, codes)
+        bw.write(*codes[(r << 4) | 1])
         bw.write(signs[i], 1)
         for b in br_bits:
             bw.write(b, 1)
@@ -1741,96 +1739,90 @@ def _emit_ac_refine_block(bw: "_BitWriter", blk: np.ndarray, Ss: int,
         eobrun += 1
         bebits = bebits + br_bits
         if eobrun == 0x7FFF or len(bebits) > 930:
-            eobrun, bebits = _emit_eobrun(bw, eobrun, bebits)
+            eobrun, bebits = _emit_eobrun(bw, eobrun, bebits, codes)
     return eobrun, bebits
 
 
-def _scan_block_order(scomps: list[int], cmeta: dict, mcus_x: int,
-                      mcus_y: int, hmax: int, vmax: int, w: int, h: int):
-    """Yield (cid, padded-grid block index) in T.81 A.2 scan order:
-    MCU-interleaved for multi-component scans, component-raster over
-    the REAL block grid (stride = padded width) for single-component."""
-    if len(scomps) > 1:
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for cid in scomps:
-                    hs, vs = cmeta[cid]
-                    bw_c = mcus_x * hs
-                    for by in range(vs):
-                        for bx in range(hs):
-                            yield cid, (my * vs + by) * bw_c + mx * hs + bx
+def _mcu_grid(comps: list[tuple], w: int,
+              h: int) -> tuple[int, int, int, int]:
+    """(hmax, vmax, mcus_x, mcus_y) of a frame of (cid, hs, vs, tq)
+    components."""
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    return hmax, vmax, -(-w // (8 * hmax)), -(-h // (8 * vmax))
+
+
+def _scan_units(comps: list[tuple], scan: list[int], w: int,
+                h: int) -> list[list[tuple[int, int]]]:
+    """The restart units of a scan over the component ids `scan`, in
+    T.81 A.2 order; each entry is (position in `scan`, block index in
+    that component's MCU-padded grid). An interleaved scan has one unit
+    per MCU; a single-component scan has one per block of the
+    component's REAL block grid (stride = the padded grid width)."""
+    hmax, vmax, mcus_x, mcus_y = _mcu_grid(comps, w, h)
+    meta = {cid: (hs, vs) for cid, hs, vs, _tq in comps}
+    if len(scan) == 1:
+        hs, vs = meta[scan[0]]
+        stride = mcus_x * hs
+        cw, ch = -(-w * hs // hmax), -(-h * vs // vmax)   # real samples
+        return [[(0, by * stride + bx)] for by in range(-(-ch // 8))
+                for bx in range(-(-cw // 8))]
+    mcu = []        # per block of an MCU: (position, offset, row, hs)
+    for i, cid in enumerate(scan):
+        hs, vs = meta[cid]
+        mcu += [(i, by * mcus_x * hs + bx, vs * mcus_x * hs, hs)
+                for by in range(vs) for bx in range(hs)]
+    return [[(i, my * row + mx * hs + off) for i, off, row, hs in mcu]
+            for my in range(mcus_y) for mx in range(mcus_x)]
+
+
+def _jpeg_scans(comps: list[tuple], zzs: dict, w: int, h: int,
+                progressive: bool) -> bytes:
+    """Every SOS header and entropy-coded segment of the image. Baseline
+    is one interleaved scan, luma on table set 0 and chroma on set 1;
+    each block is coded as DC, then AC 1-63, then its EOB. The
+    progressive script is interleaved DC first (Al=1), per-component AC
+    1-63 first (Al=1), per-component AC refine (Al=0) and interleaved
+    DC refine, every AC scan on the one flat EOBn-capable table 0. It
+    exercises every decode path: spectral selection, successive
+    approximation on DC and AC, EOB runs, buffered correction bits,
+    non-interleaved block order."""
+    cids = [c[0] for c in comps]
+    tabs = [0x00] + [0x11] * (len(cids) - 1)     # Td << 4 | Ta per cid
+    if progressive:               # (scan, tables, Ss, Se, Ah, Al)
+        codes, zero = _PROG_AC_CODES, [0] * len(cids)
+        script = ([(cids, [t & 0xF0 for t in tabs], 0, 0, 0, 1)]
+                  + [([cid], [0], 1, 63, ah, al)
+                     for ah, al in ((0, 1), (1, 0)) for cid in cids]
+                  + [(cids, zero, 0, 0, 1, 0)])
     else:
-        cid = scomps[0]
-        hs, vs = cmeta[cid]
-        bw_c = mcus_x * hs
-        cw = -(-(w * hs) // hmax)             # real component sample dims
-        ch = -(-(h * vs) // vmax)
-        bws = -(-cw // 8)
-        bhs = -(-ch // 8)
-        for u in range(bws * bhs):
-            yield cid, (u // bws) * bw_c + u % bws
-
-
-def _progressive_entropy(h: int, w: int, comps: list[tuple], zzs: dict,
-                         mcus_x: int, mcus_y: int) -> bytes:
-    """All SOS+entropy segments for the progressive scan script:
-    interleaved DC first (Al=1), per-component AC 1-63 first (Al=1),
-    per-component AC refine (Al=0), interleaved DC refine. Exercises
-    every decode path: spectral selection, successive approximation on
-    DC and AC, EOB runs, buffered correction bits, non-interleaved
-    block order."""
-    cmeta = {cid: (hs, vs) for cid, hs, vs in comps}
-    hmax = max(hs for _c, hs, _v in comps)
-    vmax = max(vs for _c, _h, vs in comps)
-    cids = [cid for cid, _h, _v in comps]
-    dc_tid = {cid: (0 if i == 0 else 1) for i, cid in enumerate(cids)}
-
-    def sos(scan_cids: list[int], tds: dict, tas: dict, Ss: int, Se: int,
-            Ah: int, Al: int) -> bytes:
-        body = bytes([len(scan_cids)])
-        for cid in scan_cids:
-            body += bytes([cid, (tds.get(cid, 0) << 4) | tas.get(cid, 0)])
-        body += bytes([Ss, Se, (Ah << 4) | Al])
-        return struct.pack(">HH", 0xFFDA, len(body) + 2) + body
-
+        codes, script = _AC_CODES, [(cids, tabs, 0, 63, 0, 0)]
     out = bytearray()
-    # scan 1: DC first, all components interleaved, Al=1
-    out += sos(cids, dc_tid, {}, 0, 0, 0, 1)
-    bw = _BitWriter()
-    preds = {cid: 0 for cid in cids}
-    for cid, idx in _scan_block_order(cids, cmeta, mcus_x, mcus_y,
-                                      hmax, vmax, w, h):
-        preds[cid] = _emit_dc_first_block(bw, zzs[cid][idx], preds[cid], 1)
-    out += bw.flush()
-    # scans 2..: AC 1-63 first per component, Al=1
-    for cid in cids:
-        out += sos([cid], {}, {cid: 0}, 1, 63, 0, 1)
+    for scan, tables, Ss, Se, Ah, Al in script:
+        sos = [len(scan), *(b for pair in zip(scan, tables) for b in pair),
+               Ss, Se, (Ah << 4) | Al]
+        out += struct.pack(">HH", 0xFFDA, len(sos) + 2) + bytes(sos)
         bw = _BitWriter()
-        eobrun = 0
-        for _c, idx in _scan_block_order([cid], cmeta, mcus_x, mcus_y,
-                                         hmax, vmax, w, h):
-            eobrun = _emit_ac_first_block(bw, zzs[cid][idx], 1, 63, 1,
-                                          eobrun)
-        _emit_eobrun(bw, eobrun, [])
-        out += bw.flush()
-    # AC refinement per component, Ah=1 -> Al=0
-    for cid in cids:
-        out += sos([cid], {}, {cid: 0}, 1, 63, 1, 0)
-        bw = _BitWriter()
+        grids = [zzs[cid] for cid in scan]
+        preds = [0] * len(scan)
         eobrun, bebits = 0, []
-        for _c, idx in _scan_block_order([cid], cmeta, mcus_x, mcus_y,
-                                         hmax, vmax, w, h):
-            eobrun, bebits = _emit_ac_refine_block(
-                bw, zzs[cid][idx], 1, 63, 0, eobrun, bebits)
-        _emit_eobrun(bw, eobrun, bebits)
+        for unit in _scan_units(comps, scan, w, h):
+            for i, idx in unit:
+                blk = grids[i][idx]
+                if Ss == 0 and Ah:          # DC refinement: one raw bit
+                    bw.write((int(blk[0]) >> Al) & 1, 1)
+                elif Ss == 0:
+                    preds[i] = _emit_dc_first_block(bw, blk, preds[i], Al)
+                if Se and Ah:
+                    eobrun, bebits = _emit_ac_refine_block(
+                        bw, blk, Ss, Se, Al, eobrun, bebits, codes)
+                elif Se:
+                    eobrun = _emit_ac_first_block(bw, blk, Ss or 1, Se, Al,
+                                                  eobrun, codes)
+                    if not Ss:              # sequential: no EOB runs
+                        eobrun, _ = _emit_eobrun(bw, eobrun, [], codes)
+        _emit_eobrun(bw, eobrun, bebits, codes)
         out += bw.flush()
-    # final scan: DC refine, interleaved, Ah=1 Al=0 (raw bits, no table)
-    out += sos(cids, {}, {}, 0, 0, 1, 0)
-    bw = _BitWriter()
-    for cid, idx in _scan_block_order(cids, cmeta, mcus_x, mcus_y,
-                                      hmax, vmax, w, h):
-        bw.write(int(zzs[cid][idx][0]) & 1, 1)
-    out += bw.flush()
     return bytes(out)
 
 
@@ -1845,17 +1837,19 @@ def _rgb_to_ycbcr(img: np.ndarray) -> tuple[np.ndarray, ...]:
 
 
 def _jfif_headers(h: int, w: int, comps: list[tuple], qsegs: list[bytes],
-                  dpi: int | None, progressive: bool = False) -> bytearray:
+                  dpi: int | None, progressive: bool) -> bytearray:
     """SOI + APP0 + DQT(s) + SOF0/SOF2 + DHTs (same canonical tables
     under ids 0 and 1 — components reference them per class/id, so a
     decoder must honor the table-id indirection). Progressive frames
-    replace the baseline AC tables with the flat EOBn-capable one."""
+    replace the baseline AC tables with the one flat EOBn-capable
+    table 0."""
 
     def seg(marker: int, payload: bytes) -> bytes:
         return struct.pack(">HH", marker, len(payload) + 2) + payload
 
     def dht(cls: int, tid: int, bits: list[int], symbols: list[int]) -> bytes:
-        return bytes([(cls << 4) | tid]) + bytes(bits) + bytes(symbols)
+        return seg(0xFFC4, bytes([(cls << 4) | tid]) + bytes(bits)
+                   + bytes(symbols))
 
     out = bytearray(b"\xff\xd8")                               # SOI
     units, dens = (1, int(dpi)) if dpi else (0, 1)
@@ -1863,20 +1857,16 @@ def _jfif_headers(h: int, w: int, comps: list[tuple], qsegs: list[bytes],
                + struct.pack(">BHHBB", units, dens, dens, 0, 0))
     for q in qsegs:
         out += seg(0xFFDB, q)
-    ncomp = len(comps)
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for cid, samp, tq in comps:
-        sof += bytes([cid, samp, tq])
+    sof = struct.pack(">BHHB", 8, h, w, len(comps))
+    for cid, hs, vs, tq in comps:
+        sof += bytes([cid, (hs << 4) | vs, tq])
     out += seg(0xFFC2 if progressive else 0xFFC0, sof)
-    out += seg(0xFFC4, dht(0, 0, _DC_BITS, _DC_SYMBOLS))
-    if progressive:
-        out += seg(0xFFC4, dht(1, 0, _PROG_AC_BITS, _PROG_AC_SYMBOLS))
-    else:
-        out += seg(0xFFC4, dht(1, 0, _AC_BITS, _AC_SYMBOLS))
-    if ncomp == 3:
-        out += seg(0xFFC4, dht(0, 1, _DC_BITS, _DC_SYMBOLS))
-        if not progressive:
-            out += seg(0xFFC4, dht(1, 1, _AC_BITS, _AC_SYMBOLS))
+    for tid in range(min(len(comps), 2)):
+        out += dht(0, tid, _DC_BITS, _DC_SYMBOLS)
+        if progressive and tid == 0:
+            out += dht(1, 0, _PROG_AC_BITS, _PROG_AC_SYMBOLS)
+        elif not progressive:
+            out += dht(1, tid, _AC_BITS, _AC_SYMBOLS)
     return out
 
 
@@ -1892,92 +1882,34 @@ def encode_jpeg(img: np.ndarray, quality: int = 90,
     spectral-selection + successive-approximation scan script over the
     SAME quantized coefficients, so baseline and progressive encodes of
     one image decode pixel-identically."""
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
     img = np.ascontiguousarray(img, dtype=np.uint8)
-    if img.ndim == 2:
-        h, w = img.shape
-        Q = _jpeg_quant_table(quality)
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        padded = np.pad(img, ((0, ph - h), (0, pw - w)),
-                        mode="edge").astype(np.float64)
-        qsegs = [bytes([0]) + bytes(Q.reshape(-1)[_ZZ].tolist())]
-        zz = _block_zz(padded, Q)
-        if progressive:
-            out = _jfif_headers(h, w, [(1, 0x11, 0)], qsegs, dpi,
-                                progressive=True)
-            out += _progressive_entropy(h, w, [(1, 1, 1)], {1: zz},
-                                        pw // 8, ph // 8)
-            out += b"\xff\xd9"
-            return bytes(out)
-        bw = _BitWriter()
-        pred = 0
-        for blk in zz:
-            pred = _write_block(bw, blk, pred)
-        out = _jfif_headers(h, w, [(1, 0x11, 0)], qsegs, dpi)
-        out += seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        out += bw.flush()
-        out += b"\xff\xd9"                                      # EOI
-        return bytes(out)
-
-    if img.ndim != 3 or img.shape[2] != 3:
+    if img.ndim == 2:                 # one component, sampled 1x1
+        planes, s = [img], 1
+    elif img.ndim != 3 or img.shape[2] != 3:
         raise ValueError("JPEG encoder supports 1 or 3 bands")
-    if subsampling not in ("444", "420"):
+    elif subsampling not in ("444", "420"):
         raise ValueError(f"JPEG subsampling must be '444' or '420', "
                          f"got {subsampling!r}")
+    else:
+        planes, s = _rgb_to_ycbcr(img), 1 if subsampling == "444" else 2
     h, w = img.shape[:2]
-    mcu = 8 if subsampling == "444" else 16
-    ph, pw = -(-h // mcu) * mcu, -(-w // mcu) * mcu
-    y, cb, cr = _rgb_to_ycbcr(img)
-    y, cb, cr = (np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-                 for p in (y, cb, cr))
-    if subsampling == "420":
-        cb = cb.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        cr = cr.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-    Qy = _jpeg_quant_table(quality)
-    Qc = _jpeg_quant_table(quality, _JPEG_QBASE_CHROMA)
-    zz_y = _block_zz(y, Qy)
-    zz_cb = _block_zz(cb, Qc)
-    zz_cr = _block_zz(cr, Qc)
-    qsegs = [bytes([0]) + bytes(Qy.reshape(-1)[_ZZ].tolist()),
-             bytes([1]) + bytes(Qc.reshape(-1)[_ZZ].tolist())]
-    if progressive:
-        sy = 1 if subsampling == "444" else 2
-        out = _jfif_headers(
-            h, w, [(1, (sy << 4) | sy, 0), (2, 0x11, 1), (3, 0x11, 1)],
-            qsegs, dpi, progressive=True)
-        out += _progressive_entropy(
-            h, w, [(1, sy, sy), (2, 1, 1), (3, 1, 1)],
-            {1: zz_y, 2: zz_cb, 3: zz_cr}, pw // mcu, ph // mcu)
-        out += b"\xff\xd9"
-        return bytes(out)
-    ybw = pw // 8                       # Y blocks per row
-    cbw = pw // 8 if subsampling == "444" else pw // 16
-    bw = _BitWriter()
-    preds = [0, 0, 0]
-    for my in range(ph // mcu):
-        for mx in range(pw // mcu):
-            if subsampling == "444":
-                yblocks = [my * ybw + mx]
-            else:                       # 2x2 Y blocks, raster order
-                yblocks = [(2 * my + by) * ybw + 2 * mx + bx
-                           for by in (0, 1) for bx in (0, 1)]
-            for bi in yblocks:
-                preds[0] = _write_block(bw, zz_y[bi], preds[0])
-            ci = my * cbw + mx
-            preds[1] = _write_block(bw, zz_cb[ci], preds[1])
-            preds[2] = _write_block(bw, zz_cr[ci], preds[2])
-    samp_y = 0x11 if subsampling == "444" else 0x22
-    out = _jfif_headers(
-        h, w, [(1, samp_y, 0), (2, 0x11, 1), (3, 0x11, 1)],
-        [bytes([0]) + bytes(Qy.reshape(-1)[_ZZ].tolist()),
-         bytes([1]) + bytes(Qc.reshape(-1)[_ZZ].tolist())], dpi)
-    out += seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    out += bw.flush()
-    out += b"\xff\xd9"                                          # EOI
-    return bytes(out)
+    comps = [(1, s, s, 0), (2, 1, 1, 1), (3, 1, 1, 1)][:len(planes)]
+    Qs = [_jpeg_quant_table(quality, base)            # one per tq
+          for base in (_JPEG_QBASE, _JPEG_QBASE_CHROMA)[:comps[-1][3] + 1]]
+    _hmax, _vmax, mcus_x, mcus_y = _mcu_grid(comps, w, h)
+    ph, pw = mcus_y * 8 * s, mcus_x * 8 * s           # pad to the MCU
+    zzs = {}
+    for (cid, hs, _vs, tq), plane in zip(comps, planes):
+        plane = np.pad(plane, ((0, ph - h), (0, pw - w)),
+                       mode="edge").astype(np.float64)
+        if hs < s:                                     # chroma box mean
+            plane = plane.reshape(ph // s, s, pw // s, s).mean(axis=(1, 3))
+        zzs[cid] = _block_zz(plane, Qs[tq])
+    qsegs = [bytes([tq]) + bytes(Q.reshape(-1)[_ZZ].tolist())
+             for tq, Q in enumerate(Qs)]
+    out = _jfif_headers(h, w, comps, qsegs, dpi, progressive)
+    out += _jpeg_scans(comps, zzs, w, h, progressive)
+    return bytes(out + b"\xff\xd9")                         # EOI
 
 
 # Huffman decoding is table-driven rather than bit-serial (T.81 Annex
@@ -2080,11 +2012,9 @@ class _BitReader:
 
     def at_marker(self) -> int | None:
         """If byte-aligned input sits at a marker, return it (no consume)."""
-        p = self.pos
-        while p + 1 < len(self.data):
-            if self.data[p] == 0xFF and self.data[p + 1] != 0x00:
-                return self.data[p + 1]
-            break
+        d, p = self.data, self.pos
+        if p + 1 < len(d) and d[p] == 0xFF and d[p + 1]:
+            return d[p + 1]
         return None
 
 
@@ -2272,7 +2202,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     progressive = False
     n_scans = 0
     zzs: dict[int, np.ndarray] = {}
-    cmeta: dict[int, tuple[int, int]] = {}
     hmax = vmax = mcus_x = mcus_y = 1
     while pos + 4 <= len(data):
         if data[pos] != 0xFF:
@@ -2306,37 +2235,43 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):     # SOF0/1 sequential, 2 prog.
             progressive = marker == 0xC2
+            if len(payload) < 6:
+                raise ValueError("JPEG: truncated SOF segment")
             _prec, h, w, ncomp = struct.unpack_from(">BHHB", payload, 0)
             if ncomp not in (1, 3):
                 raise NotImplementedError(
                     f"JPEG: {ncomp}-component images unsupported")
+            if len(payload) < 6 + 3 * ncomp:
+                raise ValueError("JPEG: truncated SOF segment")
             for c in range(ncomp):
                 cid, samp, tq = payload[6 + 3 * c: 9 + 3 * c]
                 comps.append((cid, samp >> 4, samp & 15, tq))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
+            if not all(c[1] and c[2] for c in comps):
+                raise ValueError("JPEG: sampling factor 0")
+            hmax, vmax, mcus_x, mcus_y = _mcu_grid(comps, w, h)
             if any(hmax % c[1] or vmax % c[2] for c in comps):
                 raise NotImplementedError("JPEG: non-integer sampling "
                                           "ratios")
-            mcus_x = -(-w // (8 * hmax))
-            mcus_y = -(-h // (8 * vmax))
             # full (MCU-padded) coefficient grid per component; every
             # scan accumulates into it
             zzs = {cid: np.zeros((mcus_y * vs * mcus_x * hs, 64),
                                  dtype=np.int32)
                    for cid, hs, vs, _tq in comps}
-            cmeta = {cid: (hs, vs) for cid, hs, vs, _tq in comps}
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7,
                         0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
                 f"JPEG SOF{marker - 0xC0} (lossless/arithmetic/"
                 "hierarchical) unsupported")
         elif marker == 0xDD:                   # DRI
+            if len(payload) < 2:
+                raise ValueError("JPEG: truncated DRI segment")
             (restart,) = struct.unpack_from(">H", payload, 0)
         elif marker == 0xDA:                   # SOS: one scan of many
             if h is None:
                 raise ValueError("JPEG: SOS before SOF")
-            ns = payload[0]
+            ns = payload[0] if payload else 0
+            if not ns:
+                raise ValueError("JPEG: scan has no components")
             scomps = []                        # (cid, Td, Ta) in scan
             for c in range(ns):
                 cid, tt = payload[1 + 2 * c: 3 + 2 * c]
@@ -2346,7 +2281,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             if not progressive:
                 Ss, Se, Ah, Al = 0, 63, 0, 0
             for cid, td, ta in scomps:
-                if cid not in cmeta:
+                if cid not in zzs:
                     raise ValueError(f"JPEG: scan component {cid} is not "
                                      "in the frame")
                 if not progressive:
@@ -2364,64 +2299,36 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             br = _BitReader(data[pos:end])
             pos = end
             n_scans += 1
-            preds = {cid: 0 for cid, _td, _ta in scomps}
+            # per scan position: component id, grid and tables
+            cids = [cid for cid, _td, _ta in scomps]
+            grids = [zzs[cid] for cid in cids]
+            dcs = [htabs.get((0, td)) for _cid, td, _ta in scomps]
+            acs = [htabs.get((1, ta)) for _cid, _td, ta in scomps]
+            preds = dict.fromkeys(cids, 0)
             eobrun = 0
-            # unit list: (cid, Td, Ta, block-index) — MCU-interleaved
-            # for ns>1, raster over the component's REAL block grid
-            # (stride = padded grid width) for ns=1 (T.81 A.2)
-            if ns > 1:
-                units: list[list[tuple]] = []
-                for my in range(mcus_y):
-                    for mx in range(mcus_x):
-                        unit = []
-                        for cid, td, ta in scomps:
-                            hs, vs = cmeta[cid]
-                            bw_c = mcus_x * hs
-                            unit.append(
-                                (cid, td, ta,
-                                 [(my * vs + by) * bw_c + mx * hs + bx
-                                  for by in range(vs)
-                                  for bx in range(hs)]))
-                        units.append(unit)
-            else:
-                cid, td, ta = scomps[0]
-                hs, vs = cmeta[cid]
-                bw_c = mcus_x * hs
-                cw = -(-(w * hs) // hmax)      # component sample dims
-                ch = -(-(h * vs) // vmax)
-                blocks_w = -(-cw // 8)
-                blocks_h = -(-ch // 8)
-                units = [[(cid, td, ta,
-                           [(u // blocks_w) * bw_c + u % blocks_w])]
-                         for u in range(blocks_w * blocks_h)]
-            for n_unit, unit in enumerate(units):
+            for n_unit, unit in enumerate(_scan_units(comps, cids, w, h)):
                 if restart and n_unit and n_unit % restart == 0:
                     br.align()
                     m = br.at_marker()
                     if m is not None and 0xD0 <= m <= 0xD7:
                         br.pos += 2            # consume RSTn
                         br.acc = br.n = 0
-                    preds = {cid: 0 for cid in preds}
+                    preds = dict.fromkeys(cids, 0)
                     eobrun = 0
-                for cid, td, ta, idxs in unit:
-                    for idx in idxs:
-                        blk = zzs[cid][idx]
-                        if not progressive:
-                            preds[cid] = _read_block(
-                                br, htabs[(0, td)], htabs[(1, ta)],
-                                preds[cid], blk)
-                        elif Ss == 0:          # DC scan (Se must be 0)
-                            dc_tab = htabs[(0, td)] if Ah == 0 else None
-                            preds[cid] = _decode_dc_block(
-                                br, blk, dc_tab, preds[cid], Ah, Al)
-                        elif Ah == 0:          # AC first (ns == 1)
-                            eobrun = _decode_ac_first(
-                                br, blk, htabs[(1, ta)], Ss, Se, Al,
-                                eobrun)
-                        else:                  # AC refinement
-                            eobrun = _decode_ac_refine(
-                                br, blk, htabs[(1, ta)], Ss, Se, Al,
-                                eobrun)
+                for i, idx in unit:
+                    cid, blk = cids[i], grids[i][idx]
+                    if not progressive:
+                        preds[cid] = _read_block(br, dcs[i], acs[i],
+                                                 preds[cid], blk)
+                    elif Ss == 0:              # DC scan (Se must be 0)
+                        preds[cid] = _decode_dc_block(br, blk, dcs[i],
+                                                      preds[cid], Ah, Al)
+                    elif Ah == 0:              # AC first (ns == 1)
+                        eobrun = _decode_ac_first(br, blk, acs[i], Ss, Se,
+                                                  Al, eobrun)
+                    else:                      # AC refinement
+                        eobrun = _decode_ac_refine(br, blk, acs[i], Ss, Se,
+                                                   Al, eobrun)
     if h is None or n_scans == 0:
         raise ValueError("JPEG: missing SOS/SOF")
     for _cid, _hs, _vs, tq in comps:
@@ -2458,11 +2365,11 @@ from .codecs_pdf import decode_pdf, encode_pdf  # noqa: E402 — registry
 def _tiff_dpi(data: bytes) -> int | None:
     endian, ifd_off = _tiff_header(data)
     tags = _tiff_tags(data, endian, ifd_off)
-    unit = (_tiff_values(data, endian, *tags["resolution_unit"])[0]
+    unit = (_tiff_values(data, endian, tags, "resolution_unit")[0]
             if "resolution_unit" in tags else 2)    # spec default: inch
     if tags.get("x_resolution", (0,))[0] != 5 or unit == 1:  # 1: no unit
         return None
-    num, den = _tiff_values(data, endian, *tags["x_resolution"])[:2]
+    num, den = _tiff_values(data, endian, tags, "x_resolution")[:2]
     if not den:
         return None
     return round(num / den * 2.54) if unit == 3 else round(num / den)

@@ -272,3 +272,173 @@ def test_ccitt_every_wire_form_roundtrips(k, eol, align):
     rows = np.unpackbits(np.frombuffer(dec, np.uint8).reshape(23, -1),
                          axis=1)[:, :37]
     assert np.array_equal(rows.astype(bool), black)
+
+
+def test_gif_truncated_inside_extension_or_image_data():
+    """A payload cut inside an extension's sub-blocks or inside the image
+    data is a ValueError, not an IndexError from the sub-block walk."""
+    blob = C.encode_gif(NOISE[:20, :30])
+    desc = blob.index(b"\x2c", 13 + 768)        # after header + palette
+    comment = b"\x21\xfe\x05hello\x03abc\x00"   # comment extension
+    with_ext = blob[:desc] + comment + blob[desc:]
+    assert np.array_equal(C.decode_gif(with_ext), C.decode_gif(blob))
+    for cut in (desc + 4, desc + len(comment) - 1):
+        with pytest.raises(ValueError, match="GIF: truncated sub-blocks"):
+            C.decode_gif(with_ext[:cut])
+    for cut in (len(blob) - 3, desc + 11, desc + 10):   # in / at LZW data
+        with pytest.raises(ValueError, match="GIF: truncated sub-blocks"):
+            C.decode_gif(blob[:cut])
+    with pytest.raises(ValueError, match="GIF image descriptor at offset"):
+        C.decode_gif(blob[:desc + 5])
+    with pytest.raises(ValueError, match="GIF header at offset 6"):
+        C.decode_gif(blob[:10])
+
+
+def test_tiff_offsets_past_payload_name_what_was_read():
+    """An IFD offset or a value offset past the payload is a ValueError
+    naming the IFD or the tag, not an untyped struct.error."""
+    tif = C.encode_tiff(NOISE_RGB)              # 3 x SHORT bits: offset
+    far = len(tif) + 100
+    bad_ifd = tif[:4] + far.to_bytes(4, "little") + tif[8:]
+    with pytest.raises(ValueError, match=f"TIFF IFD at offset {far}"):
+        C.decode_tiff(bad_ifd)
+    bad_value = _tiff_set(tif, 258, far)
+    with pytest.raises(ValueError, match=f"TIFF bits tag at offset {far}"):
+        C.decode_tiff(bad_value)
+
+
+def _segment(blob: bytes, marker: bytes) -> int:
+    """Offset of the length field of the first `marker` segment."""
+    return blob.index(marker) + 2
+
+
+@pytest.mark.parametrize("progressive", [False, True],
+                         ids=["sequential", "progressive"])
+def test_jpeg_short_marker_segments_raise_value_error(progressive):
+    """An SOF shorter than 6 + 3 Nf bytes, an SOS naming no components
+    and a DRI without its interval are ValueErrors, not struct.error or
+    IndexError; so is a sampling factor of 0, not ZeroDivisionError."""
+    blob = C.encode_jpeg(NOISE_RGB, subsampling="420",
+                         progressive=progressive)
+    sof = _segment(blob, b"\xff\xc2" if progressive else b"\xff\xc0")
+    for short in (2 + 6 + 3 * 3 - 1, 2 + 5):    # one component byte / Nf
+        b = bytearray(blob)
+        b[sof:sof + 2] = short.to_bytes(2, "big")
+        with pytest.raises(ValueError, match="truncated SOF segment"):
+            C.decode_jpeg(bytes(b))
+    b = bytearray(blob)
+    b[sof + 9] = 0x20                           # luma H = 2, V = 0
+    with pytest.raises(ValueError, match="sampling factor 0"):
+        C.decode_jpeg(bytes(b))
+    sos = _segment(blob, b"\xff\xda")
+    b = bytearray(blob)
+    b[sos + 2] = 0                              # Ns
+    with pytest.raises(ValueError, match="scan has no components"):
+        C.decode_jpeg(bytes(b))
+    at = blob.index(b"\xff\xda")
+    dri = blob[:at] + b"\xff\xdd\x00\x02" + blob[at:]
+    with pytest.raises(ValueError, match="truncated DRI segment"):
+        C.decode_jpeg(dri)
+
+
+def _jpeg_scans_of(blob: bytes) -> tuple[bytes, list[tuple[bytes, bytes]]]:
+    """(everything before the first SOS, [(SOS segment, entropy-coded
+    bytes)]) of a stream without restart markers."""
+    pos = blob.index(b"\xff\xda")
+    head, scans = blob[:pos], []
+    while blob[pos:pos + 2] == b"\xff\xda":
+        start = pos + 2 + int.from_bytes(blob[pos + 2:pos + 4], "big")
+        end = start
+        while blob[end] != 0xFF or blob[end + 1] == 0x00:
+            end += 2 if blob[end] == 0xFF else 1
+        scans.append((blob[pos:start], blob[start:end]))
+        pos = end
+    assert blob[pos:] == b"\xff\xd9"
+    return head, scans
+
+
+@pytest.mark.parametrize("rows", [1, 2, 3])
+@pytest.mark.parametrize("form", ["grey", "444", "420", "grey-prog",
+                                  "444-prog", "420-prog"])
+def test_jpeg_restart_intervals_decode_like_strips(form, rows):
+    """Real restart intervals: each strip of `rows` MCU rows is encoded
+    on its own, and its entropy-coded segment becomes one restart
+    interval of the whole image (RSTn between them, a DRI per scan).
+    Restarts zero the DC predictors and EOB runs exactly as a strip's own
+    encode starts them, so the whole decodes to the stacked strips. A
+    scan's interval is one MCU row of its restart units: MCUs when
+    interleaved, the component's real blocks when not."""
+    colour, _, prog = form.partition("-")
+    img = NOISE[:77, :45] if colour == "grey" else TEXT_RGB[100:201, :45]
+    s = 2 if colour == "420" else 1
+    kw = {"subsampling": colour.replace("grey", "444"),
+          "progressive": bool(prog)}
+    h, w = img.shape[:2]
+    strip = rows * 8 * s
+    encs = [C.encode_jpeg(img[y:y + strip], **kw) for y in range(0, h, strip)]
+    assert len(encs) >= 3
+    head, scans = _jpeg_scans_of(encs[0])
+    sof = _segment(head, b"\xff\xc2" if prog else b"\xff\xc0")
+    head = head[:sof + 3] + h.to_bytes(2, "big") + head[sof + 5:]
+    comps = [(1, s, s, 0), (2, 1, 1, 1), (3, 1, 1, 1)]
+    if colour == "grey":
+        comps = comps[:1]
+    samp = {cid: hs for cid, hs, _vs, _tq in comps}
+    out = bytearray(head)
+    for j, (sos, _seg) in enumerate(scans):
+        scan = [sos[5 + 2 * i] for i in range(sos[4])]
+        if len(scan) > 1:                       # MCUs per MCU row
+            per_row = -(-w // (8 * s))
+        else:                                   # real blocks per row
+            hs = samp[scan[0]]
+            cw = -(-w * hs // s)                # component samples across
+            per_row = -(-cw // 8) * hs          # x block rows (vs == hs)
+        interval = per_row * rows
+        strip_units = [len(C._scan_units(comps, scan, w, min(strip, h - y)))
+                       for y in range(0, h, strip)]
+        assert strip_units[:-1] == [interval] * (len(encs) - 1)
+        assert sum(strip_units) == len(C._scan_units(comps, scan, w, h))
+        out += b"\xff\xdd\x00\x04" + interval.to_bytes(2, "big") + sos
+        for k, enc in enumerate(encs):
+            if k:
+                out += bytes([0xFF, 0xD0 + (k - 1) % 8])
+            out += _jpeg_scans_of(enc)[1][j][1]
+    out += b"\xff\xd9"
+    want = np.concatenate([C.decode_jpeg(e) for e in encs], axis=0)
+    assert np.array_equal(C.decode_jpeg(bytes(out)), want)
+
+
+@pytest.mark.parametrize("form", ["grey", "grey-prog", "420", "420-prog"])
+def test_jpeg_seeded_mutants_end_as_array_or_typed_error(form):
+    """The per-format mutation probe for JPEG: seeded byte edits in the
+    headers and in the entropy-coded data, and truncations. Every
+    mutant must end, within a small time bound, as a uint8 array, a
+    ValueError or a NotImplementedError."""
+    import time
+    colour, _, prog = form.partition("-")
+    img = TEXT[40:104, 30:110] if colour == "grey" else TEXT_RGB[40:88, 30:94]
+    blob = C.encode_jpeg(img, subsampling=colour.replace("grey", "444"),
+                         progressive=bool(prog))
+    sos = blob.index(b"\xff\xda")
+    rng = np.random.default_rng(2026)
+    seen = {}
+    for i in range(250):
+        b = bytearray(blob)
+        if i % 10 == 0:
+            b = b[:int(rng.integers(2, len(b)))]
+        else:
+            lo, hi = (2, sos + 14) if i % 2 else (sos, len(b))
+            for _ in range(int(rng.integers(1, 4))):
+                p = int(rng.integers(lo, hi))
+                b[p] = (b[p] ^ (1 << int(rng.integers(0, 8)))
+                        if rng.integers(0, 2) else int(rng.integers(0, 256)))
+        t = time.perf_counter()
+        try:
+            out = C.decode_jpeg(bytes(b))
+            assert out.dtype == np.uint8
+            kind = "array"
+        except (ValueError, NotImplementedError) as e:
+            kind = type(e).__name__
+        assert time.perf_counter() - t < 2.0, (i, kind)
+        seen[kind] = seen.get(kind, 0) + 1
+    assert seen.get("array") and seen.get("ValueError"), seen
