@@ -1099,9 +1099,13 @@ def decode_tiff_pages(data: bytes) -> list[np.ndarray]:
     sequence)."""
     endian, ifd_off = _tiff_header(data)
     pages = []
+    seen = set()
     while ifd_off:
+        if ifd_off in seen:
+            raise ValueError(f"TIFF IFD chain loops back to offset {ifd_off}")
+        seen.add(ifd_off)
         pages.append(_decode_tiff_ifd(data, endian, ifd_off))
-        n = struct.unpack_from(f"{endian}H", data, ifd_off)[0]
+        n = _unpack(f"{endian}H", data, ifd_off, "TIFF IFD")[0]
         ifd_off = _unpack(f"{endian}I", data, ifd_off + 2 + n * 12,
                           "TIFF next IFD offset")[0]
     return pages
@@ -2231,6 +2235,11 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 symbols = list(payload[i + 17: i + 17 + n])
                 if len(bits) < 16 or len(symbols) < n:
                     raise ValueError("JPEG: truncated DHT segment")
+                # a DC symbol is a difference category, 0-11 for 8-bit
+                # samples (T.81 F.1.2.1)
+                if cls == 0 and max(symbols, default=0) > 11:
+                    raise ValueError(f"JPEG: DHT DC table {tid} has "
+                                     f"category {max(symbols)}, above 11")
                 htabs[(cls, tid)] = _huff_table(bits, symbols)
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):     # SOF0/1 sequential, 2 prog.

@@ -31,6 +31,23 @@ Tier-1 runs on one context model shared by encoder and decoder
 - one MQ decoder whose state lives in closure cells (`_MQDecoder.decode`
   is the closure).
 
+The tier-1 pass loops stay written once per direction (`t1_encode`,
+`t1_decode`): nearly all decode time is spent in them, and one loop for
+both would put a callback on every MQ decision. Everything else is
+written once:
+- tier-2: one packet-header coder, `_code_packet`, over a bit source
+  whose `bits(v, n)` writes v (`_PktBitWriter`) or reads n bits
+  (`_PktBitReader`), and one packet walk, `_packets` over the subband
+  sizes of `_band_shapes`, in LRCP order;
+- the 5/3 wavelet: one predict and one update step, which the forward
+  transform applies and the inverse undoes.
+
+The decoder refuses a malformed stream with a `ValueError` naming what
+was wrong: a JP2 box shorter than its header, a marker segment shorter
+than its fields or with a length below 2, a QCD without one exponent per
+subband, a packet header running past the tile data, and a code-block
+coding more bit-planes than its band holds.
+
 Supported subset (encoder always writes this; decoder validates and
 rejects anything else with a clear error): single tile at origin, 1 or 3
 components sampled 1:1 (no MCT — components coded independently), 8-bit
@@ -49,7 +66,6 @@ environment to cross-check byte streams against.
 from __future__ import annotations
 
 import functools
-import math
 import struct
 
 import numpy as np
@@ -278,48 +294,40 @@ class _MQDecoder:
 # 5/3 reversible wavelet (T.800 Annex F, lifting form)
 # ---------------------------------------------------------------------------
 
+def _predict53(ev: np.ndarray, n: int) -> np.ndarray:
+    """Predict step for the n odd samples: floor((x[2i] + x[2i+2]) / 2),
+    x[2i+2] mirrored to x[2i] past the end (whole-sample symmetric
+    extension)."""
+    ev_r = ev[1:] if len(ev) > n else np.concatenate([ev[1:], ev[-1:]])
+    return (ev[:n] + ev_r) // 2
+
+
+def _update53(d: np.ndarray, n: int) -> np.ndarray:
+    """Update step for the n even samples: floor((d[i-1] + d[i] + 2) / 4),
+    d[-1] mirrored to d[0] and d past the end to its last value."""
+    d_l = np.concatenate([d[:1], d[: n - 1]])
+    d_r = d[:n] if len(d) >= n else np.concatenate([d, d[-1:]])
+    return (d_l + d_r + 2) // 4
+
+
 def _fwd53_axis0(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """1-D forward 5/3 along axis 0 of a 2-D int array; returns (lo, hi)
     with len(lo)=ceil(n/2) (even samples), len(hi)=floor(n/2)."""
-    n = x.shape[0]
-    if n == 1:
+    if x.shape[0] == 1:
         return x.copy(), x[:0]
     ev = x[0::2]
-    od = x[1::2]
-    # predict: d[i] = od[i] - floor((ev[i] + ev_right[i]) / 2)
-    if len(od) == len(ev):          # n even: x[n] -> x[n-2] = ev[-1]
-        ev_r = np.concatenate([ev[1:], ev[-1:]])
-    else:
-        ev_r = ev[1:]
-    d = od - (ev[: len(od)] + ev_r) // 2
-    # update: s[i] = ev[i] + floor((d[i-1] + d[i] + 2) / 4)
-    d_l = np.concatenate([d[:1], d[: len(ev) - 1]])      # d[-1] -> d[0]
-    if len(d) >= len(ev):
-        d_r = d[: len(ev)]
-    else:                            # n odd: d[last] -> d[last-1]
-        d_r = np.concatenate([d, d[-1:]])
-    s = ev + (d_l + d_r + 2) // 4
-    return s, d
+    d = x[1::2] - _predict53(ev, len(x) // 2)
+    return ev + _update53(d, len(ev)), d
 
 
 def _inv53_axis0(s: np.ndarray, d: np.ndarray, n: int) -> np.ndarray:
-    """Exact inverse of _fwd53_axis0."""
+    """Exact inverse of _fwd53_axis0: undo the update, then the predict."""
     if n == 1:
         return s.copy()
-    d_l = np.concatenate([d[:1], d[: len(s) - 1]])
-    if len(d) >= len(s):
-        d_r = d[: len(s)]
-    else:
-        d_r = np.concatenate([d, d[-1:]])
-    ev = s - (d_l + d_r + 2) // 4
-    if len(d) == len(ev):
-        ev_r = np.concatenate([ev[1:], ev[-1:]])
-    else:
-        ev_r = ev[1:]
-    od = d + (ev[: len(d)] + ev_r) // 2
+    ev = s - _update53(d, len(s))
     out = np.empty((n,) + s.shape[1:], dtype=s.dtype)
     out[0::2] = ev
-    out[1::2] = od
+    out[1::2] = d + _predict53(ev, len(d))
     return out
 
 
@@ -334,19 +342,11 @@ def _dwt53_fwd2d(a: np.ndarray) -> tuple[np.ndarray, np.ndarray,
 
 
 def _dwt53_inv2d(ll: np.ndarray, hl: np.ndarray, lh: np.ndarray,
-                 hh: np.ndarray, h: int, w: int) -> np.ndarray:
+                 hh: np.ndarray) -> np.ndarray:
+    h = ll.shape[0] + lh.shape[0]
     lo = _inv53_axis0(ll, lh, h)
     hi = _inv53_axis0(hl, hh, h)
-    return _inv53_axis0(lo.T, hi.T, w).T
-
-
-def _subband_dims(h: int, w: int, nl: int) -> list[tuple[int, int]]:
-    """(h, w) of the LL chain after each split; index l = level."""
-    dims = [(h, w)]
-    for _ in range(nl):
-        hh, ww = dims[-1]
-        dims.append(((hh + 1) // 2, (ww + 1) // 2))
-    return dims
+    return _inv53_axis0(lo.T, hi.T, ll.shape[1] + hl.shape[1]).T
 
 
 # ---------------------------------------------------------------------------
@@ -650,7 +650,12 @@ def t1_decode(data: bytes, w: int, h: int, orient: str,
 
 
 # ---------------------------------------------------------------------------
-# Tier-2: FF-stuffed packet-header bit IO + tag trees (Annexes B.10, B.10.2)
+# Tier-2: packet headers (Annex B.10). One coder serves both directions:
+# `_code_packet` and everything under it code each field as
+# `x = bits(x, n)`, where `bits` is `_PktBitWriter.bits` (writes the n
+# low bits of x, returns x) or `_PktBitReader.bits` (ignores x, returns
+# the next n bits). The encoder hands in the values it wants written; the
+# decoder hands in zeros and gets the values back.
 # ---------------------------------------------------------------------------
 
 class _PktBitWriter:
@@ -664,19 +669,17 @@ class _PktBitWriter:
         self.nbits = 0
         self.limit = 8
 
-    def put(self, bit: int) -> None:
-        self.cur = (self.cur << 1) | (bit & 1)
-        self.nbits += 1
-        if self.nbits == self.limit:
-            byte = self.cur          # limit==7 keeps the MSB 0 implicitly
-            self.out.append(byte)
-            self.limit = 7 if byte == 0xFF else 8
-            self.cur = 0
-            self.nbits = 0
-
-    def put_bits(self, val: int, n: int) -> None:
+    def bits(self, v: int, n: int) -> int:
         for k in range(n - 1, -1, -1):
-            self.put((val >> k) & 1)
+            self.cur = (self.cur << 1) | ((v >> k) & 1)
+            self.nbits += 1
+            if self.nbits == self.limit:
+                byte = self.cur      # limit==7 keeps the MSB 0 implicitly
+                self.out.append(byte)
+                self.limit = 7 if byte == 0xFF else 8
+                self.cur = 0
+                self.nbits = 0
+        return v
 
     def flush(self) -> bytes:
         if self.nbits:
@@ -690,7 +693,7 @@ class _PktBitWriter:
 
 
 class _PktBitReader:
-    """Mirror of _PktBitWriter over a memoryview + offset."""
+    """Mirror of _PktBitWriter over the tile data from offset `pos`."""
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
@@ -699,24 +702,24 @@ class _PktBitReader:
         self.nbits = 0
         self.prev_ff = False
 
-    def get(self) -> int:
-        if self.nbits == 0:
-            byte = self.data[self.pos]
-            self.pos += 1
-            if self.prev_ff:
-                self.cur = byte & 0x7F
-                self.nbits = 7
-            else:
-                self.cur = byte
-                self.nbits = 8
-            self.prev_ff = byte == 0xFF
-        self.nbits -= 1
-        return (self.cur >> self.nbits) & 1
-
-    def get_bits(self, n: int) -> int:
+    def bits(self, _v: int, n: int) -> int:
         v = 0
         for _ in range(n):
-            v = (v << 1) | self.get()
+            if self.nbits == 0:
+                if self.pos >= len(self.data):
+                    raise ValueError("JPEG 2000 packet header runs past "
+                                     "the tile data")
+                byte = self.data[self.pos]
+                self.pos += 1
+                if self.prev_ff:
+                    self.cur = byte & 0x7F
+                    self.nbits = 7
+                else:
+                    self.cur = byte
+                    self.nbits = 8
+                self.prev_ff = byte == 0xFF
+            self.nbits -= 1
+            v = (v << 1) | ((self.cur >> self.nbits) & 1)
         return v
 
     def align(self) -> int:
@@ -731,87 +734,50 @@ class _PktBitReader:
 
 
 class _TagTree:
-    """2x2-reduction tag tree (T.800 B.10.2) used for code-block
-    inclusion and zero-bitplane signalling."""
+    """2x2-reduction tag tree (T.800 B.10.2) over a w x h grid of leaf
+    values, used for code-block inclusion and zero bit-planes. A
+    decoder's tree is built over placeholder leaves; `code` learns each
+    node's value from the bits it reads."""
 
-    def __init__(self, w: int, h: int) -> None:
+    def __init__(self, w: int, h: int, leaves: list[int]) -> None:
         self.w = w
-        self.h = h
-        self.levels: list[tuple[int, int]] = []
-        ww, hh = w, h
-        while True:
-            self.levels.append((ww, hh))
-            if ww == 1 and hh == 1:
-                break
-            ww = (ww + 1) // 2
-            hh = (hh + 1) // 2
-        self.off = [0]
-        for ww, hh in self.levels:
-            self.off.append(self.off[-1] + ww * hh)
-        n = self.off[-1]
-        self.value = [0] * n
-        self.low = [0] * n
-        self.known = [False] * n
+        self.levels = [(w, h)]             # (width, height), leaves first
+        while self.levels[-1] != (1, 1):
+            ww, hh = self.levels[-1]
+            self.levels.append(((ww + 1) // 2, (hh + 1) // 2))
+        self.off = [0]                     # first node of each level
+        self.value = list(leaves)          # internal node = min of children
+        for (pw, ph), (ww, hh) in zip(self.levels, self.levels[1:]):
+            base = self.off[-1]
+            self.off.append(base + pw * ph)
+            for y in range(hh):
+                for x in range(ww):
+                    self.value.append(min(
+                        self.value[base + cy * pw + cx]
+                        for cy in (2 * y, 2 * y + 1) if cy < ph
+                        for cx in (2 * x, 2 * x + 1) if cx < pw))
+        self.low = [0] * len(self.value)
+        self.known = [False] * len(self.value)
 
     def _path(self, leaf: int) -> list[int]:
         x, y = leaf % self.w, leaf // self.w
         path = []
-        for li, (ww, _hh) in enumerate(self.levels):
-            path.append(self.off[li] + y * ww + x)
+        for off, (ww, _hh) in zip(self.off, self.levels):
+            path.append(off + y * ww + x)
             x >>= 1
             y >>= 1
-        path.reverse()               # root first
-        return path
+        return path[::-1]                  # root first
 
-    def set_values(self, leaves: list[int]) -> None:
-        """Leaf values -> internal nodes = min of children."""
-        self.value[: self.w * self.h] = leaves
-        for li in range(1, len(self.levels)):
-            ww, hh = self.levels[li]
-            pw, ph = self.levels[li - 1]
-            for y in range(hh):
-                for x in range(ww):
-                    best = None
-                    for cy in (2 * y, 2 * y + 1):
-                        if cy >= ph:
-                            continue
-                        for cx in (2 * x, 2 * x + 1):
-                            if cx >= pw:
-                                continue
-                            v = self.value[self.off[li - 1] + cy * pw + cx]
-                            best = v if best is None else min(best, v)
-                    self.value[self.off[li] + y * ww + x] = (
-                        0 if best is None else best)
-
-    def encode(self, leaf: int, threshold: int, put) -> None:
-        low = 0
-        for nd in self._path(leaf):
-            if low > self.low[nd]:
-                self.low[nd] = low
-            else:
-                low = self.low[nd]
-            while low < threshold:
-                if low >= self.value[nd]:
-                    if not self.known[nd]:
-                        put(1)
-                        self.known[nd] = True
-                    break
-                put(0)
-                low += 1
-            self.low[nd] = low
-
-    def decode(self, leaf: int, threshold: int, get) -> int | None:
-        """Returns the leaf value if determined to be < threshold, else
-        None (meaning >= threshold)."""
+    def code(self, leaf: int, threshold: int, bits) -> int | None:
+        """Code the leaf's value as far as `threshold`: returns it if it
+        is below the threshold, else None (it is at least the
+        threshold)."""
         low = 0
         nd = -1
         for nd in self._path(leaf):
-            if low > self.low[nd]:
-                self.low[nd] = low
-            else:
-                low = self.low[nd]
+            low = max(low, self.low[nd])
             while low < threshold and not self.known[nd]:
-                if get():
+                if bits(int(low >= self.value[nd]), 1):
                     self.known[nd] = True
                     self.value[nd] = low
                 else:
@@ -821,44 +787,54 @@ class _TagTree:
             return self.value[nd]
         return None
 
-    def decode_value(self, leaf: int, get) -> int:
-        t = 1
-        while True:
-            v = self.decode(leaf, t, get)
-            if v is not None:
-                return v
-            t += 1
+
+# Pass-count code (T.800 Table B.4), one step per row: (field width,
+# first count, escape). A field holds count - first, or the escape value
+# to go on to the next row; the last row's escape does not fit its field.
+_NPASSES_CODE = ((1, 1, 1), (1, 2, 1), (2, 3, 3), (5, 6, 31), (7, 37, 128))
 
 
-def _put_npasses(bw: _PktBitWriter, n: int) -> None:
-    if n == 1:
-        bw.put(0)
-    elif n == 2:
-        bw.put(1)
-        bw.put(0)
-    elif n <= 5:
-        bw.put_bits(0b11, 2)
-        bw.put_bits(n - 3, 2)
-    elif n <= 36:
-        bw.put_bits(0b1111, 4)
-        bw.put_bits(n - 6, 5)
-    else:
-        bw.put_bits(0b111111111, 9)
-        bw.put_bits(n - 37, 7)
+def _code_npasses(n: int, bits) -> int:
+    for width, first, escape in _NPASSES_CODE:
+        v = bits(min(n - first, escape), width)
+        if v != escape:
+            break
+    return first + v
 
 
-def _get_npasses(br: _PktBitReader) -> int:
-    if not br.get():
-        return 1
-    if not br.get():
-        return 2
-    v = br.get_bits(2)
-    if v < 3:
-        return 3 + v
-    v = br.get_bits(5)
-    if v < 31:
-        return 6 + v
-    return 37 + br.get_bits(7)
+def _code_length(length: int, npasses: int, bits) -> int:
+    """Codeword length (B.10.7.1): Lblock starts at 3 (each block is in
+    one packet), a comma code of 1 bits raises it, and the length takes
+    Lblock + floor(log2(npasses)) bits."""
+    lbits = 3 + npasses.bit_length() - 1
+    while bits(int(length >= 1 << lbits), 1):
+        lbits += 1
+    return bits(length, lbits)
+
+
+def _code_packet(bits, grids: list[tuple[int, int]],
+                 blocks: list[list[list[int]]]) -> None:
+    """One packet header: the empty-packet bit, then for each subband
+    (code-block grid (gw, gh) in `grids`) and each of its code-blocks
+    the inclusion, zero bit-planes, pass count and codeword length.
+    `blocks[b][i] = [npasses, zb, length]` of block i of subband b (0
+    passes: not included); the encoder fills it in, the decoder passes
+    zeros and reads it back."""
+    if not bits(int(any(blk[0] for band in blocks for blk in band)), 1):
+        return
+    for (gw, gh), band in zip(grids, blocks):
+        if not band:
+            continue
+        incl = _TagTree(gw, gh, [0 if blk[0] else 1 for blk in band])
+        zbt = _TagTree(gw, gh, [blk[1] if blk[0] else 0 for blk in band])
+        for i, blk in enumerate(band):
+            if incl.code(i, 1, bits) is None:
+                continue
+            t = 1
+            while (zb := zbt.code(i, t, bits)) is None:
+                t += 1
+            npasses = _code_npasses(blk[0], bits)
+            blk[:] = [npasses, zb, _code_length(blk[2], npasses, bits)]
 
 
 # ---------------------------------------------------------------------------
@@ -867,11 +843,6 @@ def _get_npasses(br: _PktBitReader) -> int:
 
 _CB_LOG = 6                 # 64x64 code-blocks
 _CB = 1 << _CB_LOG
-
-
-def _resolution_subbands(nl: int) -> list[list[str]]:
-    """Subband names per resolution r = 0..nl."""
-    return [["LL"]] + [["HL", "LH", "HH"] for _ in range(nl)]
 
 
 def _choose_nl(h: int, w: int) -> int:
@@ -883,15 +854,34 @@ def _choose_nl(h: int, w: int) -> int:
     return 0
 
 
-def _blocks_of(band: np.ndarray) -> list[tuple[int, int, np.ndarray]]:
-    """(y0, x0, view) for each 64x64-anchored code-block of a subband."""
+def _band_shapes(h: int, w: int, nl: int) -> list[list[tuple[str, int, int]]]:
+    """(name, height, width) of every subband, per resolution r = 0..nl
+    in codestream order: r = 0 is the LL left after nl splits, r >= 1
+    the HL, LH and HH of split nl - r + 1."""
+    res = []
+    for _ in range(nl):
+        res.append([("HL", (h + 1) // 2, w // 2),
+                    ("LH", h // 2, (w + 1) // 2),
+                    ("HH", h // 2, w // 2)])
+        h, w = (h + 1) // 2, (w + 1) // 2
+    return [[("LL", h, w)]] + res[::-1]
+
+
+def _packets(shapes: list[list[tuple[str, int, int]]], ncomp: int):
+    """The packets in LRCP order (one layer, one precinct per
+    resolution): (r, c, code-block grid (gw, gh) of each subband)."""
+    for r, res in enumerate(shapes):
+        for c in range(ncomp):
+            yield r, c, [(-(-bw // _CB), -(-bh // _CB))
+                         for _name, bh, bw in res]
+
+
+def _blocks_of(band: np.ndarray) -> list[np.ndarray]:
+    """View of each 64x64-anchored code-block of a subband, raster
+    order."""
     bh, bw = band.shape
-    out = []
-    for y0 in range(0, bh, _CB):
-        for x0 in range(0, bw, _CB):
-            out.append((y0, x0,
-                        band[y0: y0 + _CB, x0: x0 + _CB]))
-    return out
+    return [band[y0: y0 + _CB, x0: x0 + _CB]
+            for y0 in range(0, bh, _CB) for x0 in range(0, bw, _CB)]
 
 
 def encode_jp2(img: np.ndarray) -> bytes:
@@ -907,96 +897,37 @@ def encode_jp2(img: np.ndarray) -> bytes:
         raise ValueError(f"unsupported image shape {img.shape}")
     h, w = img.shape[:2]
     nl = _choose_nl(h, w)
-    res_bands = _resolution_subbands(nl)
-    dims = _subband_dims(h, w, nl)
+    shapes = _band_shapes(h, w, nl)
 
-    # per component: DC shift, wavelet, subbands by (resolution, name)
-    comp_bands: list[dict[tuple[int, str], np.ndarray]] = []
+    # per component: DC shift, wavelet, subbands as _band_shapes lists them
+    bands: list[list[list[np.ndarray]]] = []
     for comp in comps:
-        cur = comp.astype(np.int32) - 128
-        bands: dict[tuple[int, str], np.ndarray] = {}
-        for lev in range(1, nl + 1):
-            ll, hl, lh, hh = _dwt53_fwd2d(cur)
-            r = nl - lev + 1
-            bands[(r, "HL")] = hl
-            bands[(r, "LH")] = lh
-            bands[(r, "HH")] = hh
-            cur = ll
-        bands[(0, "LL")] = cur
-        comp_bands.append(bands)
+        cur, res = comp.astype(np.int32) - 128, []
+        for _ in range(nl):
+            cur, *high = _dwt53_fwd2d(cur)
+            res.insert(0, high)
+        bands.append([[cur]] + res)
 
     # QCD exponents: per subband in codestream order, max over components
-    eps: list[int] = []
-    for r, names in enumerate(res_bands):
-        for name in names:
-            m = 0
-            for bands in comp_bands:
-                band = bands[(r, name)]
-                if band.size:
-                    m = max(m, int(np.abs(band).max()))
-            eps.append(max(1, m.bit_length()))
+    eps = [[max(1, max(int(np.abs(cb[r][k]).max(initial=0))
+                       for cb in bands).bit_length())
+            for k in range(len(res))] for r, res in enumerate(shapes)]
     guard = 1                      # Mb = eps + G - 1 = eps
 
-    # Tier-1 encode every code-block
-    # coded[(c, r, name)] = list of (codeword, npasses, zb) in raster order
-    coded: dict[tuple[int, int, str], list[tuple[bytes, int, int]]] = {}
-    ei = 0
-    for r, names in enumerate(res_bands):
-        for name in names:
-            mb = eps[ei]
-            ei += 1
-            for c, bands in enumerate(comp_bands):
-                lst = []
-                for _y0, _x0, blk in _blocks_of(bands[(r, name)]):
-                    cw, npasses, nbps = t1_encode(blk, name)
-                    lst.append((cw, npasses, mb - nbps))
-                coded[(c, r, name)] = lst
-
-    # Tier-2: LRCP packets (1 layer)
+    # Tier-1 each code-block, then its packet's header and codewords
     body = bytearray()
-    for r, names in enumerate(res_bands):
-        for c in range(len(comps)):
-            bw = _PktBitWriter()
-            blocks_all = [coded[(c, r, name)] for name in names]
-            any_included = any(np_ > 0
-                               for lst in blocks_all
-                               for _cw, np_, _zb in lst)
-            if not any_included:
-                bw.put(0)
-                body += bw.flush()
-                continue
-            bw.put(1)
-            payload = bytearray()
-            for name, lst in zip(names, blocks_all):
-                band = comp_bands[c][(r, name)]
-                bh_, bw_ = band.shape
-                gw = (bw_ + _CB - 1) // _CB
-                gh = (bh_ + _CB - 1) // _CB
-                if gw == 0 or gh == 0:
-                    continue
-                incl = _TagTree(gw, gh)
-                zbt = _TagTree(gw, gh)
-                incl.set_values([0 if np_ > 0 else 1
-                                 for _cw, np_, _zb in lst])
-                zbt.set_values([zb if np_ > 0 else 0
-                                for _cw, np_, zb in lst])
-                lblocks = [3] * len(lst)
-                for i, (cw, np_, zb) in enumerate(lst):
-                    incl.encode(i, 1, bw.put)
-                    if np_ == 0:
-                        continue
-                    zbt.encode(i, zb + 1, bw.put)
-                    _put_npasses(bw, np_)
-                    lbits = lblocks[i] + int(math.log2(np_))
-                    while len(cw) >= (1 << lbits):
-                        bw.put(1)
-                        lblocks[i] += 1
-                        lbits += 1
-                    bw.put(0)
-                    bw.put_bits(len(cw), lbits)
-                    payload += cw
-            body += bw.flush()
-            body += payload
+    for r, c, grids in _packets(shapes, len(comps)):
+        blocks, payload = [], bytearray()
+        for (name, _bh, _bw), band, mb in zip(shapes[r], bands[c][r], eps[r]):
+            row = []
+            for blk in _blocks_of(band):
+                cw, npasses, nbps = t1_encode(blk, name)
+                row.append([npasses, mb - nbps, len(cw)])
+                payload += cw
+            blocks.append(row)
+        bw = _PktBitWriter()
+        _code_packet(bw.bits, grids, blocks)
+        body += bw.flush() + payload
 
     # markers
     ncomp = len(comps)
@@ -1004,9 +935,9 @@ def encode_jp2(img: np.ndarray) -> bytes:
                       w, h, 0, 0, ncomp) + b"\x07\x01\x01" * ncomp
     cod = struct.pack(">HBBHBBBBBB", 12, 0, 0, 1, 0,
                       nl, _CB_LOG - 2, _CB_LOG - 2, 0, 1)
-    nb = len(eps)
-    qcd = struct.pack(">HB", 3 + nb, (guard << 5) | 0)
-    qcd += bytes((e << 3) & 0xFF for e in eps)
+    flat = [e for res in eps for e in res]
+    qcd = struct.pack(">HB", 3 + len(flat), (guard << 5) | 0)
+    qcd += bytes((e << 3) & 0xFF for e in flat)
     main = (b"\xff\x4f" + b"\xff\x51" + siz + b"\xff\x52" + cod
             + b"\xff\x5c" + qcd)
     # Psot counts from the SOT marker itself: marker(2) + segment(10) +
@@ -1043,14 +974,26 @@ def _find_codestream(data: bytes) -> bytes:
         typ = data[pos + 4: pos + 8]
         off = pos + 8
         if ln == 1:                       # extended length
+            if pos + 16 > n:
+                raise ValueError(f"JP2 box at offset {pos} is cut inside "
+                                 "its extended length")
             (ln,) = struct.unpack_from(">Q", data, pos + 8)
             off = pos + 16
         elif ln == 0:
             ln = n - pos
+        if ln < off - pos:
+            raise ValueError(f"JP2 box at offset {pos} declares {ln} bytes, "
+                             f"less than its {off - pos}-byte header")
         if typ == b"jp2c":
             return data[off: pos + ln]
         pos += ln
     raise ValueError("no JPEG 2000 codestream found in JP2 container")
+
+
+# Marker segments the decoder reads: name and the bytes its fields take
+# after the length field (SIZ: plus 3 per component).
+_SEGMENTS = {b"\xff\x51": ("SIZ", 36), b"\xff\x52": ("COD", 10),
+             b"\xff\x5c": ("QCD", 1), b"\xff\x90": ("SOT", 8)}
 
 
 def decode_jp2(data: bytes) -> np.ndarray:
@@ -1069,9 +1012,20 @@ def decode_jp2(data: bytes) -> np.ndarray:
         pos += 2
         if marker == b"\xff\xd9":
             break
+        if pos + 2 > len(cs):
+            raise ValueError(f"JPEG 2000 marker segment at offset {pos - 2} "
+                             "is cut inside its length")
         (ln,) = struct.unpack_from(">H", cs, pos)
+        if ln < 2:
+            raise ValueError(f"JPEG 2000 marker segment at offset {pos - 2} "
+                             f"has length {ln}, below 2")
         seg = cs[pos + 2: pos + ln]
-        if marker == b"\xff\x51":        # SIZ
+        name, need = _SEGMENTS.get(marker, ("", 0))
+        if name == "SIZ" and len(seg) >= need:
+            need += 3 * struct.unpack_from(">H", seg, 34)[0]
+        if len(seg) < need:
+            raise ValueError(f"truncated JPEG 2000 {name} segment")
+        if name == "SIZ":
             (_rsiz, xs, ys, xo, yo, xt, yt, xto, yto,
              ncomp) = struct.unpack_from(">HIIIIIIIIH", seg, 0)
             if xo or yo or xto or yto or xt != xs or yt != ys:
@@ -1085,7 +1039,7 @@ def decode_jp2(data: bytes) -> np.ndarray:
                         "only 8-bit unsigned 1:1-sampled components "
                         "are supported")
             pos += ln
-        elif marker == b"\xff\x52":      # COD
+        elif name == "COD":
             (scod, prog, nlayers, mct, nl_, xcb, ycb, cbsty,
              xform) = struct.unpack_from(">BBHBBBBBB", seg, 0)
             if scod != 0 or prog != 0 or nlayers != 1 or mct != 0:
@@ -1098,7 +1052,7 @@ def decode_jp2(data: bytes) -> np.ndarray:
                                  "supported")
             nl = nl_
             pos += ln
-        elif marker == b"\xff\x5c":      # QCD
+        elif name == "QCD":
             sq = seg[0]
             if sq & 0x1F:
                 raise ValueError("only no-quantization (reversible) QCD "
@@ -1106,9 +1060,8 @@ def decode_jp2(data: bytes) -> np.ndarray:
             guard = sq >> 5
             eps = [b >> 3 for b in seg[1:]]
             pos += ln
-        elif marker == b"\xff\x90":      # SOT
-            (_lsot, _isot, psot, _tp, _tn) = struct.unpack_from(
-                ">HHIBB", cs, pos)
+        elif name == "SOT":
+            (_isot, psot, _tp, _tn) = struct.unpack_from(">HIBB", seg, 0)
             pos += ln
             if cs[pos: pos + 2] != b"\xff\x93":
                 raise ValueError("expected SOD after SOT")
@@ -1120,86 +1073,40 @@ def decode_jp2(data: bytes) -> np.ndarray:
             pos += ln
     if None in (w, h, ncomp, nl) or body is None:
         raise ValueError("incomplete JPEG 2000 codestream")
+    if len(eps) != 3 * nl + 1:
+        raise ValueError(f"JPEG 2000 QCD has {len(eps)} exponents; "
+                         f"{nl} decomposition levels need {3 * nl + 1}")
 
-    res_bands = _resolution_subbands(nl)
-    dims = _subband_dims(h, w, nl)
-
-    def band_shape(r: int, name: str) -> tuple[int, int]:
-        if r == 0:
-            return dims[nl]
-        lev = nl - r + 1                 # produced at this split level
-        ph, pw = dims[lev - 1]
-        lo_h, hi_h = (ph + 1) // 2, ph // 2
-        lo_w, hi_w = (pw + 1) // 2, pw // 2
-        return {"HL": (lo_h, hi_w), "LH": (hi_h, lo_w),
-                "HH": (hi_h, hi_w)}[name]
-
-    mb_of: dict[tuple[int, str], int] = {}
-    ei = 0
-    for r, names in enumerate(res_bands):
-        for name in names:
-            mb_of[(r, name)] = eps[ei] + guard - 1
-            ei += 1
-
-    bands: list[dict[tuple[int, str], np.ndarray]] = [
-        {} for _ in range(ncomp)]
+    shapes = _band_shapes(h, w, nl)
+    it = iter(eps)
+    mbs = [[next(it) + guard - 1 for _ in res] for res in shapes]
+    bands: list[list[list[np.ndarray]]] = [[] for _ in range(ncomp)]
     pos = 0
-    for r, names in enumerate(res_bands):
-        for c in range(ncomp):
-            br = _PktBitReader(body, pos)
-            if not br.get():
-                pos = br.align()
-                for name in names:
-                    bh_, bw_ = band_shape(r, name)
-                    bands[c][(r, name)] = np.zeros((bh_, bw_),
-                                                   dtype=np.int32)
-                continue
-            todo = []                    # (name, i, npasses, length)
-            trees: dict[str, tuple[_TagTree, _TagTree]] = {}
-            for name in names:
-                bh_, bw_ = band_shape(r, name)
-                band = np.zeros((bh_, bw_), dtype=np.int32)
-                bands[c][(r, name)] = band
-                gw = (bw_ + _CB - 1) // _CB
-                gh = (bh_ + _CB - 1) // _CB
-                if gw == 0 or gh == 0:
+    for r, c, grids in _packets(shapes, ncomp):
+        blocks = [[[0, 0, 0] for _ in range(gw * gh)] for gw, gh in grids]
+        br = _PktBitReader(body, pos)
+        _code_packet(br.bits, grids, blocks)
+        pos = br.align()
+        bands[c].append([np.zeros((bh, bw), dtype=np.int32)
+                         for _name, bh, bw in shapes[r]])
+        for (name, _bh, _bw), band, mb, row in zip(shapes[r], bands[c][r],
+                                                   mbs[r], blocks):
+            for view, (npasses, zb, length) in zip(_blocks_of(band), row):
+                if not npasses:
                     continue
-                incl = _TagTree(gw, gh)
-                zbt = _TagTree(gw, gh)
-                lblocks = [3] * (gw * gh)
-                for i in range(gw * gh):
-                    if incl.decode(i, 1, br.get) is None:
-                        continue
-                    zb = zbt.decode_value(i, br.get)
-                    np_ = _get_npasses(br)
-                    lbits = lblocks[i] + int(math.log2(np_))
-                    while br.get():
-                        lblocks[i] += 1
-                        lbits += 1
-                    length = br.get_bits(lbits)
-                    todo.append((name, i, np_, length, zb))
-            pos = br.align()
-            for name, i, np_, length, _zb in todo:
-                bh_, bw_ = bands[c][(r, name)].shape
-                gw = (bw_ + _CB - 1) // _CB
-                y0 = (i // gw) * _CB
-                x0 = (i % gw) * _CB
-                cw = body[pos: pos + length]
+                if (npasses + 2) // 3 > mb - zb:
+                    raise ValueError(
+                        f"JPEG 2000 code-block codes {(npasses + 2) // 3} "
+                        f"bit-planes; its {name} band holds {mb - zb}")
+                view[:] = t1_decode(body[pos: pos + length], view.shape[1],
+                                    view.shape[0], name, npasses)
                 pos += length
-                cb_h = min(_CB, bh_ - y0)
-                cb_w = min(_CB, bw_ - x0)
-                blk = t1_decode(cw, cb_w, cb_h, name, np_)
-                bands[c][(r, name)][y0: y0 + cb_h, x0: x0 + cb_w] = blk
 
     comps = []
-    for c in range(ncomp):
-        cur = bands[c][(0, "LL")]
-        for r in range(1, nl + 1):
-            lev = nl - r + 1
-            ph, pw = dims[lev - 1]
-            cur = _dwt53_inv2d(cur, bands[c][(r, "HL")],
-                               bands[c][(r, "LH")], bands[c][(r, "HH")],
-                               ph, pw)
+    for res in bands:
+        cur = res[0][0]
+        for hl, lh, hh in res[1:]:
+            cur = _dwt53_inv2d(cur, hl, lh, hh)
         comps.append(np.clip(cur + 128, 0, 255).astype(np.uint8))
     if ncomp == 1:
         return comps[0]

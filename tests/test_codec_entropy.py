@@ -13,13 +13,16 @@ grey page is large enough to split into several 64x64 JP2 code-blocks.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
+import signal
 import struct
 
 import numpy as np
 import pytest
 
 from org_dharts_dia_tesseract_spark import codecs_img as C
+from org_dharts_dia_tesseract_spark import codecs_jp2 as J
 from org_dharts_dia_tesseract_spark import datagen
 from org_dharts_dia_tesseract_spark.codecs_avi import (decode_avi_mjpeg,
                                                        encode_avi_mjpeg)
@@ -440,5 +443,202 @@ def test_jpeg_seeded_mutants_end_as_array_or_typed_error(form):
         except (ValueError, NotImplementedError) as e:
             kind = type(e).__name__
         assert time.perf_counter() - t < 2.0, (i, kind)
+        seen[kind] = seen.get(kind, 0) + 1
+    assert seen.get("array") and seen.get("ValueError"), seen
+
+
+@contextlib.contextmanager
+def _within(seconds: float):
+    """Fail with TimeoutError, instead of hanging, if the block runs
+    longer than `seconds`."""
+    def expire(*_):
+        raise TimeoutError(f"still running after {seconds} s")
+    old = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, old)
+
+
+@pytest.mark.parametrize("box", [
+    b"\x00\x00\x00\x01bad!" + bytes(8),        # XLBox = 0
+    b"\x00\x00\x00\x01bad!" + bytes([0] * 7 + [15]),
+    b"\x00\x00\x00\x04bad!",                     # LBox < 8
+], ids=["xlbox-0", "xlbox-15", "lbox-4"])
+def test_jp2_box_shorter_than_its_header_rejected(box):
+    """A box whose length does not cover its own header would leave the
+    box walk where it is (XLBox = 0) or step back into it: a
+    ValueError naming the box, not a hang."""
+    blob = C.encode_jp2(TEXT[:16, :16])
+    with _within(3), pytest.raises(ValueError, match="JP2 box at offset 12"):
+        C.decode_jp2(blob[:12] + box + blob[12:])
+    if box[3] == 1:                             # cut inside the XLBox
+        with _within(3), pytest.raises(ValueError, match="extended length"):
+            C.decode_jp2(blob[:12] + box[:12])
+
+
+def _tiff_next_ifd_at(blob: bytes, ifd: int) -> int:
+    """Offset of the next-IFD pointer of the little-endian IFD at `ifd`."""
+    return ifd + 2 + 12 * int.from_bytes(blob[ifd:ifd + 2], "little")
+
+
+def test_tiff_ifd_chain_loop_rejected():
+    """An IFD chain pointing back into itself is a ValueError naming the
+    repeated offset, not an endless walk appending pages."""
+    one = bytearray(C.encode_tiff(NOISE[:9, :7]))
+    first = int.from_bytes(one[4:8], "little")
+    at = _tiff_next_ifd_at(one, first)
+    one[at:at + 4] = first.to_bytes(4, "little")          # self-loop
+    with _within(3), pytest.raises(
+            ValueError, match=f"TIFF IFD chain loops back to offset {first}"):
+        C.decode_tiff_pages(bytes(one))
+    two = bytearray(C.encode_tiff_multipage([NOISE[:9, :7], NOISE[:5, :6]]))
+    assert len(C.decode_tiff_pages(bytes(two))) == 2
+    first = int.from_bytes(two[4:8], "little")
+    second = int.from_bytes(two[_tiff_next_ifd_at(two, first):][:4], "little")
+    at = _tiff_next_ifd_at(two, second)
+    two[at:at + 4] = first.to_bytes(4, "little")          # 1 -> 2 -> 1
+    with _within(3), pytest.raises(
+            ValueError, match=f"TIFF IFD chain loops back to offset {first}"):
+        C.decode_tiff_pages(bytes(two))
+
+
+@pytest.mark.parametrize("progressive", [False, True],
+                         ids=["sequential", "progressive"])
+def test_jpeg_dc_category_above_11_rejected(progressive):
+    """A DC Huffman symbol is a difference category, at most 11 for
+    8-bit samples (T.81 F.1.2.1); a larger one is refused when its DHT
+    is read, not when a scan uses it as a shift count."""
+    blob = C.encode_jpeg(NOISE[:16, :16], progressive=progressive)
+    # DHT payload: Tc << 4 | Th, 16 code counts, then the symbols
+    for category in (12, 17, 255):
+        bad = _patched(blob, b"\xff\xc4", 4 + 17, category)
+        with pytest.raises(ValueError,
+                           match=f"DHT DC table 0 has category {category}"):
+            C.decode_jpeg(bad)
+
+
+@pytest.mark.parametrize("form", ["grey", "rgb"])
+def test_jp2_bad_main_header_and_packets_raise_value_error(form):
+    """Marker segments shorter than their fields, a length below 2, a
+    QCD without one exponent per subband, a packet header running past
+    the tile data and a code-block coding more bit-planes than its band
+    holds are ValueErrors naming what was wrong, not struct.error,
+    IndexError or a silent decode."""
+    blob = C.encode_jp2(TEXT[:40, :36] if form == "grey"
+                        else TEXT_RGB[:40, :36])
+    ncomp = 1 if form == "grey" else 3
+
+    def with_length(marker: bytes, length: int) -> bytes:
+        at = _segment(blob, marker)
+        return blob[:at] + length.to_bytes(2, "big") + blob[at + 2:]
+
+    for marker, name, short in ((b"\xff\x51", "SIZ", 38 + 3 * ncomp - 1),
+                                (b"\xff\x51", "SIZ", 37),
+                                (b"\xff\x52", "COD", 11),
+                                (b"\xff\x5c", "QCD", 2),
+                                (b"\xff\x90", "SOT", 9)):
+        with pytest.raises(ValueError,
+                           match=f"truncated JPEG 2000 {name} segment"):
+            C.decode_jp2(with_length(marker, short))
+    with pytest.raises(ValueError, match="has length 1, below 2"):
+        C.decode_jp2(with_length(b"\xff\x52", 1))
+    cod = _segment(blob, b"\xff\x52")
+    assert blob[cod + 7] == 3                   # SPcod: levels
+    for nl, count in ((2, "10 exponents; 2"), (4, "10 exponents; 4")):
+        b = bytearray(blob)
+        b[cod + 7] = nl
+        with pytest.raises(ValueError, match=f"QCD has {count}"):
+            C.decode_jp2(bytes(b))
+    sot = _segment(blob, b"\xff\x90")
+    b = bytearray(blob)
+    b[sot + 4:sot + 8] = (14 + 1).to_bytes(4, "big")    # Psot: 1-byte body
+    with pytest.raises(ValueError, match="packet header runs past"):
+        C.decode_jp2(bytes(b))
+    qcd = _segment(blob, b"\xff\x5c")
+    b = bytearray(blob)
+    b[qcd + 3] -= 1 << 3                        # LL exponent one too small
+    with pytest.raises(ValueError, match="bit-planes; its LL band holds"):
+        C.decode_jp2(bytes(b))
+
+
+def _bit_log():
+    """A `bits` source for the tier-2 coder that records what it writes."""
+    log = []
+
+    def bits(v: int, n: int) -> int:
+        log.append(format(v, f"0{n}b"))
+        return v
+    return log, bits
+
+
+def test_jp2_pass_count_code_and_lblock_steps():
+    """The one pass-count code writes T.800 Table B.4's codewords, and a
+    packet header reads back what it wrote at every pass count the
+    table distinguishes (37-164 comes from no 8-bit encode) and at
+    lengths either side of each Lblock step."""
+    table = {1: "0", 2: "10", 3: "1100", 5: "1110", 6: "111100000",
+             36: "111111110", 37: "1111111110000000",
+             164: "1111111111111111"}
+    for n, code in table.items():
+        log, bits = _bit_log()
+        assert J._code_npasses(n, bits) == n
+        assert "".join(log) == code
+    for n in table:
+        lbits = 3 + n.bit_length() - 1          # Lblock + floor(log2 n)
+        for k in range(lbits, lbits + 4):
+            for length in (0, (1 << k) - 1, 1 << k):
+                log, bits = _bit_log()
+                assert J._code_length(length, n, bits) == length
+                wide = max(lbits, length.bit_length())
+                assert "".join(log) == ("1" * (wide - lbits) + "0"
+                                        + format(length, f"0{wide}b"))
+        # several blocks over two subbands, one left out, through the
+        # stuffed byte stream and back
+        want = [[[n, 2, (1 << lbits) - 1], [0, 0, 0]],
+                [[n, 0, 1 << lbits], [1, 5, 3], [n, 1, 1 << (lbits + 2)]]]
+        grids = [(2, 1), (1, 3)]
+        writer = J._PktBitWriter()
+        J._code_packet(writer.bits, grids, [[b[:] for b in band]
+                                            for band in want])
+        head = writer.flush()
+        reader = J._PktBitReader(head + b"tail", 0)
+        got = [[[0, 0, 0] for _ in band] for band in want]
+        J._code_packet(reader.bits, grids, got)
+        assert got == want
+        assert reader.align() == len(head)
+
+
+@pytest.mark.parametrize("form", ["grey", "rgb"])
+def test_jp2_seeded_mutants_end_as_array_or_typed_error(form):
+    """The per-format mutation probe for JPEG 2000: seeded byte edits in
+    the boxes and main header, in the packet headers and in the tile
+    data, and truncations. Every mutant must end, within a small time
+    bound, as a uint8 array, a ValueError or a NotImplementedError."""
+    img = TEXT[40:72, 30:78] if form == "grey" else TEXT_RGB[40:64, 30:62]
+    blob = C.encode_jp2(img)
+    sod = blob.index(b"\xff\x93") + 2
+    regions = [(0, sod), (sod, sod + 12), (sod, len(blob))]
+    rng = np.random.default_rng(2026)
+    seen = {}
+    for i in range(200):
+        b = bytearray(blob)
+        if i % 10 == 0:
+            b = b[:int(rng.integers(2, len(b)))]
+        else:
+            lo, hi = regions[i % 3]
+            for _ in range(int(rng.integers(1, 4))):
+                p = int(rng.integers(lo, hi))
+                b[p] = (b[p] ^ (1 << int(rng.integers(0, 8)))
+                        if rng.integers(0, 2) else int(rng.integers(0, 256)))
+        try:
+            with _within(2):
+                out = C.decode_jp2(bytes(b))
+            assert out.dtype == np.uint8
+            kind = "array"
+        except (ValueError, NotImplementedError) as e:
+            kind = type(e).__name__
         seen[kind] = seen.get(kind, 0) + 1
     assert seen.get("array") and seen.get("ValueError"), seen
