@@ -2,14 +2,12 @@
 local[$SPARK_GRAFT_CPUS]; prints ONE JSON line and writes the same
 numbers as markdown to data/BENCH_latest.md.
 
-The N-vs-4N scaling efficiency is read from the append-only ledger
-BENCH_scaling_attempts.jsonl: the median of its admitted rounds. Rounds
-are run only by scripts/scaling_attempt.py, one per invocation; this
-module holds the ledger helpers and the one-run worker it uses.
+The N-vs-4N scaling efficiency is the median of the admitted rounds in
+the closed ledger BENCH_scaling_attempts.jsonl, which is read, never
+written.
 
 Usage:
     python bench.py                      # headline queries + ledger median
-    python bench.py --worker local[8]    # one scaling run (scaling_attempt)
 """
 
 from __future__ import annotations
@@ -28,23 +26,13 @@ REPORT = os.path.join(REPO, "data", "BENCH_latest.md")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# scaling runs need enough work that compute dominates fixed overheads
-# (stage scheduling, Python worker spin-up) — else efficiency measures
-# the constant term, not the operator: a ~3 s constant against a ~10 s
-# hi-side run alone costs ~0.15 efficiency even with a perfectly linear
-# plan, hence 2x the round-3 doc count
-SCALE_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_DOCS", "40000"))
-WARMUP_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP_DOCS", "3000"))
-# a scaling round is admitted into the reported median only if the host
-# actually granted >= this ratio of extra compute at 4x procs while the
-# round ran (min of a pre- and post-round probe). Round 3's driver run
-# measured capacity ratios 2.1-3.9 on 4 of 5 rounds — the sandbox quota,
-# not the plan — and the one >=5 round scaled at 1.005.
-CAPACITY_MIN = float(os.environ.get("SPARK_GRAFT_BENCH_CAPACITY_MIN", "3.5"))
-# append-only cross-run ledger of scaling rounds: clean >=3.5x quota
-# windows open only every 5-30 min, so admitted rounds accumulate across
-# scripts/scaling_attempt.py runs; the reported north-rule efficiency is
-# the median over ALL admitted rounds on record
+# which committed ledger rows count: rounds run on the 40000-doc corpus
+# whose host granted >= 3.5x compute at 4x procs (min of the round's pre-
+# and post-probe) while they ran
+SCALE_DOCS = 40000
+CAPACITY_MIN = 3.5
+# the closed ledger of scaling rounds; the reported north-rule efficiency
+# is the median over ALL admitted rounds on record
 LEDGER = os.path.join(REPO, "BENCH_scaling_attempts.jsonl")
 # N vs 4N is 2 vs 8: the shared host's CPU quota tops out near ~16-20
 # effective cores, so both sides fit under it and the ratio measures the
@@ -59,16 +47,6 @@ def _ledger_rows() -> list[dict]:
         return [json.loads(l) for l in f if l.strip()]
 
 
-def _ledger_append(rows: list[dict], source: str) -> None:
-    if not rows:
-        return
-    stamp = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-    with open(LEDGER, "a") as f:
-        for r in rows:
-            f.write(json.dumps({**r, "source": source, "ts": stamp})
-                    + "\n")
-
-
 def _ledger_admitted(pair: list[str]) -> list[dict]:
     """Measured rounds on record that are COMMENSURABLE with the current
     protocol: same master pair, same corpus size (rows predating the
@@ -81,15 +59,6 @@ def _ledger_admitted(pair: list[str]) -> list[dict]:
             and r.get("scale_docs", 40000) == SCALE_DOCS
             and r.get("capacity") is not None
             and r["capacity"] >= CAPACITY_MIN]
-
-
-def _cores_of(master: str) -> int:
-    """Parallelism of a master string; local[N] -> N, anything else
-    (spark:// URLs, bare 'local') -> conservative 1 rather than crashing
-    the bench before its JSON line prints."""
-    import re
-    m = re.fullmatch(r"local\[(\d+)\]", master.strip())
-    return int(m.group(1)) if m else 1
 
 
 def _sf_label(sf_dir: str) -> str:
@@ -118,34 +87,6 @@ def _run_flagship(spark, docs_path: str,
     return time.time() - t0, n
 
 
-def _probe_work(n):
-    # single-threaded BLAS: otherwise one matmul already fans out over
-    # every core and the probe measures BLAS, not process-level capacity
-    os.environ["OMP_NUM_THREADS"] = "1"
-    os.environ["OPENBLAS_NUM_THREADS"] = "1"
-    import numpy as np
-    x = np.random.default_rng(1).random((400, 400))
-    s = 0.0
-    for _ in range(n):
-        s += float((x @ x)[0, 0])
-    return s
-
-
-def _quick_capacity_ratio(lo_p: int, hi_p: int) -> float:
-    """One fast probe pair: how much more aggregate compute hi_p procs
-    get than lo_p procs RIGHT NOW (4.0 = unthrottled at 4x procs).
-    Stamped on each scaling round so throttled rounds are identifiable."""
-    import multiprocessing as mp
-
-    thr = {}
-    for procs in (lo_p, hi_p):
-        t0 = time.time()
-        with mp.Pool(procs) as p:
-            p.map(_probe_work, [200] * procs)
-        thr[procs] = procs * 200 / (time.time() - t0)
-    return round(thr[hi_p] / thr[lo_p], 3)
-
-
 def _single_process_baseline(n_docs: int = 150) -> dict:
     """Single-process end-to-end docs/sec of the oracle engine — the
     stand-in for the reference's single-threaded wrapper (which publishes
@@ -162,25 +103,6 @@ def _single_process_baseline(n_docs: int = 150) -> dict:
     el = time.time() - t0
     return {"docs_per_sec_1core": round(n_docs / el, 2),
             "n_docs": n_docs, "elapsed": round(el, 3)}
-
-
-def worker_main(master: str) -> None:
-    """One scaling measurement in a clean JVM; prints its own JSON line.
-    Warm-up (JIT + Python worker spin-up + codec import) runs on a small
-    separate corpus so the timed run is a single full-size pass — noise
-    across runs is handled by the multi-round median, not best-of."""
-    from org_dharts_dia_tesseract_spark.session import get_spark
-    cores = _cores_of(master)
-    spark = get_spark(master, app_name=f"dia-bench-{cores}",
-                      shuffle_partitions=max(cores, 8))
-    warm_docs, warm_media = _corpus_paths(spark, WARMUP_DOCS)
-    docs_path, media_path = _corpus_paths(spark, SCALE_DOCS)
-    _run_flagship(spark, warm_docs, warm_media)                  # warm-up
-    elapsed, n_spans = _run_flagship(spark, docs_path, media_path)
-    print(json.dumps({"master": master, "elapsed": elapsed,
-                      "docs_per_sec": SCALE_DOCS / elapsed,
-                      "n_spans": n_spans}))
-    spark.stop()
 
 
 def _ledger_scaling(pair: list[str]) -> dict:
@@ -264,8 +186,7 @@ def _write_bench_md(result: dict) -> None:
     lines += [
         "",
         f"## Scaling ({lo} vs {hi}, same input; "
-        "BENCH_scaling_attempts.jsonl, rounds from "
-        "scripts/scaling_attempt.py)",
+        "closed ledger BENCH_scaling_attempts.jsonl)",
         "",
         f"- rounds admitted by the pre-registered >= "
         f"{sc['capacity_min']}x capacity rule: {len(adm)}",
@@ -282,7 +203,4 @@ def _write_bench_md(result: dict) -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--worker":
-        worker_main(sys.argv[2])
-    else:
-        main()
+    main()

@@ -1298,12 +1298,16 @@ def decode_png(data: bytes) -> np.ndarray:
         raise ValueError("not a PNG payload")
     pos, ihdr, idat, plte, trns = 8, None, [], None, None
     while pos + 8 <= len(data):
-        (length,) = struct.unpack_from(">I", data, pos)
+        (length,) = _unpack(">I", data, pos, "PNG chunk length")
         typ = data[pos + 4: pos + 8]
+        if pos + 8 + length > len(data):
+            raise ValueError(f"PNG {typ!r} chunk of {length} bytes at "
+                             f"offset {pos} runs past the "
+                             f"{len(data)}-byte payload")
         chunk = data[pos + 8: pos + 8 + length]
         pos += 12 + length
         if typ == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", chunk)
+            ihdr = _unpack(">IIBBBBB", chunk, 0, "PNG IHDR")
         elif typ == b"PLTE":
             plte = np.frombuffer(chunk, dtype=np.uint8).reshape(-1, 3)
         elif typ == b"tRNS":
@@ -1314,6 +1318,8 @@ def decode_png(data: bytes) -> np.ndarray:
             break
     if ihdr is None:
         raise ValueError("PNG missing IHDR")
+    if not idat:
+        raise ValueError("PNG missing IDAT")
     w, h, depth, color, _comp, _filt, interlace = ihdr
     allowed = {0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8),
                4: (8, 16), 6: (8, 16)}

@@ -203,7 +203,10 @@ def decode_pdf(payload: bytes) -> np.ndarray:
         if b"/FlateDecode" in body:
             data = zlib.decompress(data)
         elif b"/Filter" in body:
-            m = re.search(rb"/Filter\s*/(\w+)", body)
+            # a name, or the first name of a filter array
+            m = re.search(rb"/Filter\s*(?:\[\s*)?/(\w+)", body)
+            if m is None:
+                raise ValueError("PDF image /Filter names no filter")
             raise NotImplementedError(
                 f"PDF image filter {m.group(1).decode()} unsupported")
         if b"/DeviceRGB" in body:

@@ -48,10 +48,6 @@ def _write_json(path: str, obj: dict) -> None:
     os.replace(path + ".tmp", path)
 
 
-def done_buckets(root: str) -> set[int]:
-    return {m["bucket"] for m in metrics(root) if m["status"] == "DONE"}
-
-
 def run_checkpointed(spark: SparkSession, documents: DataFrame,
                      media: DataFrame, root: str, n_buckets: int = 16,
                      fail_buckets: set[int] | None = None,

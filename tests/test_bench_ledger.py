@@ -42,3 +42,14 @@ def test_null_capacity_row_is_not_admitted(tmp_path, monkeypatch):
     text = report.read_text()
     assert "capacity rule: 1" in text
     assert "median **0.900**" in text and "n=1" in text
+
+
+def test_committed_ledger_reading():
+    """The committed ledger, read with bench.py's own constants, gives
+    the settled N-vs-4N answer: median 0.929 over 22 admitted rounds."""
+    scaling = bench._ledger_scaling(bench.PAIR)
+    eff = scaling["admitted_efficiencies"]
+    assert scaling["efficiency"] == 0.929
+    assert scaling["capacity_min"] == 3.5
+    assert len(eff) == 22
+    assert sum(1 for e in eff if e >= 0.8) == 18

@@ -143,6 +143,11 @@ def test_malformed_payloads():
         bad = bytearray(C.encode_tiff(GREY))
         struct.pack_into("<H", bad, 8 + 2 + 3 * 12 + 8, 5)
         C.decode_tiff(bytes(bad))
+    png = C.encode_png(GREY)
+    for cut in (4, 8, 16, 20, 25, 33, 60, len(png) - 20):
+        # cut inside the signature, IHDR or IDAT: not a struct.error
+        with pytest.raises(ValueError, match="PNG"):
+            C.decode_png(png[:cut])
 
 
 def test_decode_payload_sniffing():

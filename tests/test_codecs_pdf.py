@@ -80,6 +80,13 @@ def test_malformed_payloads():
         bad = P.encode_pdf(GREY).replace(b"/Filter /FlateDecode",
                                          b"/Filter /LZWDecode")
         P.decode_pdf(bad)
+    for array, name in ((b"[/LZWDecode]", "LZWDecode"),
+                        (b"[ /RunLengthDecode ]", "RunLengthDecode")):
+        # a filter array names its first filter
+        with pytest.raises(NotImplementedError, match=name):
+            P.decode_pdf(P.encode_pdf(GREY).replace(b"/FlateDecode", array))
+    with pytest.raises(ValueError, match="names no filter"):
+        P.decode_pdf(P.encode_pdf(GREY).replace(b"/FlateDecode", b"7"))
 
 
 @pytest.mark.parametrize("key,value", [(b"/Width", b"53"),
