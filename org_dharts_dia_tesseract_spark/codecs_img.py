@@ -35,6 +35,10 @@ from __future__ import annotations
 
 import bisect
 import struct
+import sys
+import zlib
+from collections.abc import Callable
+from typing import NamedTuple
 
 import numpy as np
 
@@ -71,6 +75,22 @@ def _unpack(fmt: str, data: bytes, at: int, what: str) -> tuple:
         raise ValueError(f"{what} at offset {at} runs past the "
                          f"{len(data)}-byte payload")
     return struct.unpack_from(fmt, data, at)
+
+
+def _inflate(data: bytes, limit: int | None, what: str) -> bytes:
+    """Inflate the zlib stream `data` into at most `limit` + 1 bytes
+    (None: no bound), so an overlong stream stops a byte past what the
+    caller can use and the caller's own size check sees it. A corrupt
+    or unfinished stream is a ValueError naming `what`."""
+    d = zlib.decompressobj()
+    try:
+        out = d.decompress(data, 0 if limit is None
+                           else min(limit + 1, sys.maxsize))
+    except zlib.error as e:
+        raise ValueError(f"{what}: {e}") from None
+    if not d.eof and (limit is None or len(out) <= limit):
+        raise ValueError(f"{what}: deflate stream ends early")
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -754,17 +774,57 @@ def _ccitt_decode(data: bytes, h: int, w: int, k: int, eol: bool = False,
     return np.packbits(out, axis=1).tobytes()
 
 
-# CCITT compressions -> _ccitt_encode's (k, eol, align)
-_TIFF_CCITT = {"g3": (0, False, True), "t4": (0, True, False),
-               "t4_2d": (4, True, False), "g4": (-1, False, False)}
+# ---------------------------------------------------------------------------
+# TIFF layout: one compression table read by the page writer and the IFD
+# decoder, and one page writer for single- and multi-page files
+# ---------------------------------------------------------------------------
+
+class _TiffCoding(NamedTuple):
+    tag: int                        # Compression (259) value
+    fax: tuple | None               # _ccitt_encode's (k, eol, align)
+    row_strips: bool                # a strip per row, else one strip
+    encode: Callable                # strip rows -> strip bytes
+    decode: Callable                # (strip, n_rows, w, n_bytes) -> rows
 
 
-_TIFF_COMPRESSION = {"none": 1, "g3": 2, "t4": 3, "t4_2d": 3, "g4": 4,
-                     "lzw": 5, "deflate": 8, "packbits": 32773}
+def _fax_coding(tag: int, row_strips: bool, k: int, eol: bool,
+                align: bool) -> _TiffCoding:
+    """A CCITT compression: its strips code bilevel rows (True = black)
+    in the wire form (k, eol, align)."""
+    return _TiffCoding(
+        tag, (k, eol, align), row_strips,
+        lambda black: _ccitt_encode(black, k, eol, align),
+        lambda strip, n_rows, w, _n: _ccitt_decode(strip, n_rows, w, k,
+                                                   eol, align))
 
 
-def encode_tiff(img: np.ndarray, packbits: bool = False,
-                compression: str | None = None,
+_TIFF = {
+    "none": _TiffCoding(1, None, True, lambda rows: rows.tobytes(),
+                        lambda strip, _r, _w, _n: strip),
+    "packbits": _TiffCoding(
+        32773, None, True, packbits_encode,
+        lambda strip, _r, _w, n: packbits_decode(strip, n)),
+    "lzw": _TiffCoding(                 # MSB-first, early change
+        5, None, True, lambda rows: _lzw_encode(rows.tobytes(), 8, "tiff"),
+        lambda strip, _r, _w, n: _lzw_decode(strip, 8, n, "tiff")),
+    "deflate": _TiffCoding(             # Adobe DEFLATE: a zlib stream
+        8, None, True, lambda rows: zlib.compress(rows.tobytes()),
+        lambda strip, _r, _w, n: _inflate(strip, n, "TIFF deflate strip")),
+    "g3": _fax_coding(2, True, 0, False, True),
+    "t4": _fax_coding(3, False, 0, True, False),
+    "t4_2d": _fax_coding(3, False, 4, True, False),
+    "g4": _fax_coding(4, False, -1, False, False),
+}
+
+# Compression tag -> _TIFF name. 32946 is the legacy tag for deflate;
+# tag 3 is 't4', or 't4_2d' when T4Options bit 0 is set.
+_TIFF_NAMES = {**{c.tag: name for name, c in _TIFF.items()},
+               3: "t4", 32946: "deflate"}
+
+_TIFF_HEADER = struct.pack("<2sHI", b"II", 42, 8)   # first IFD at 8
+
+
+def encode_tiff(img: np.ndarray, compression: str = "none",
                 predictor: bool = False,
                 dpi: int | None = None,
                 bits: int = 8) -> bytes:
@@ -778,8 +838,7 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
     't4' (tag 3, EOL before every 1-D line: (0, yes, no)), 't4_2d'
     (tag 3 with T4Options bit 0, EOL + tag bit, a 1-D line every 4th:
     (4, yes, no)) or 'g4' (tag 4, T.6 MMR: (-1, no, no)); the last
-    three write one strip. The legacy `packbits` bool is kept for
-    callers predating the deflate path.
+    three write one strip.
 
     predictor: horizontal differencing (tag 317 = 2), the standard
     companion to LZW/DEFLATE for scanned pages.
@@ -791,11 +850,22 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
     bits: bits per sample for 1-band images — 1 (bilevel, threshold at
     128, the scanned-document staple), 4 (16 grey levels), 8, or 16
     (written v*257 so 8-bit payloads round-trip exactly)."""
-    if compression is None:
-        compression = "packbits" if packbits else "none"
-    if compression not in _TIFF_COMPRESSION:
+    return _TIFF_HEADER + _tiff_page(img, 8, True, compression, predictor,
+                                     dpi, bits)
+
+
+def _tiff_page(img: np.ndarray, at: int, last: bool, compression: str,
+               predictor: bool = False, dpi: int | None = None,
+               bits: int = 8) -> bytes:
+    """One page of an `encode_tiff` file laid out from file offset `at`:
+    IFD | [bits array if bands==3] | [x/y rational if dpi] | strip
+    offsets | strip counts | strips. The IFD's next pointer is 0 on the
+    `last` page, else the offset just past this page, where the next
+    page's IFD goes."""
+    if compression not in _TIFF:
         raise ValueError(f"TIFF compression must be one of "
-                         f"{sorted(_TIFF_COMPRESSION)}, got {compression!r}")
+                         f"{sorted(_TIFF)}, got {compression!r}")
+    coding = _TIFF[compression]
     if predictor and compression not in ("lzw", "deflate"):
         raise ValueError("TIFF predictor requires lzw or deflate "
                          f"compression, got {compression!r}")
@@ -813,7 +883,13 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
         diff = img.astype(np.int16)
         diff[:, 1:] -= img[:, :-1].astype(np.int16)
         img = (diff % 256).astype(np.uint8)
-    if bits == 1:
+    if coding.fax:
+        # CCITT coding: bilevel only, bit 1 = black under the fax
+        # convention, so the file declares WhiteIsZero (photometric 0)
+        if bits != 1:
+            raise ValueError("TIFF g3/t4/g4 compression requires bits=1")
+        rows = img < 128                # True = black ink
+    elif bits == 1:
         rows = np.packbits(img >= 128, axis=1)
     elif bits == 4:
         idx = np.minimum((img.astype(np.int32) + 8) // 17, 15)
@@ -824,52 +900,20 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
         rows = np.repeat(img, 2, axis=1)    # little-endian v*257
     else:
         rows = img.reshape(h, w * bands)
-    rows_per_strip = 1
-    t4options = None
-    if compression in _TIFF_CCITT:
-        # CCITT coding: bilevel only, bit 1 = black under the fax
-        # convention, so the file declares WhiteIsZero (photometric 0)
-        if bits != 1:
-            raise ValueError("TIFF g3/t4/g4 compression requires bits=1")
-        black = img < 128               # True = black ink
-        form = _TIFF_CCITT[compression]
-        if compression == "g3":         # compression 2: a strip per row
-            strips = [_ccitt_encode(black[y:y + 1], *form)
-                      for y in range(h)]
-        else:                           # one stateful strip
-            strips = [_ccitt_encode(black, *form)]
-            rows_per_strip = h
-        if form[0] > 0:
-            t4options = 1               # T4Options bit 0: 2-D lines
-    elif compression == "packbits":
-        strips = [packbits_encode(rows[y]) for y in range(h)]
-    elif compression == "lzw":
-        strips = [_lzw_encode(rows[y].tobytes(), 8, "tiff")
-                  for y in range(h)]
-    elif compression == "deflate":
-        import zlib
-        strips = [zlib.compress(rows[y].tobytes()) for y in range(h)]
-    else:
-        strips = [rows[y].tobytes() for y in range(h)]
+    rows_per_strip = 1 if coding.row_strips else h
+    strips = ([coding.encode(rows[y:y + 1]) for y in range(h)]
+              if coding.row_strips else [coding.encode(rows)])
     n_strips = len(strips)
-    compression = _TIFF_COMPRESSION[compression]
-    photometric = (0 if compression in (2, 3, 4)
-                   else (1 if bands == 1 else 2))
+    photometric = 0 if coding.fax else (1 if bands == 1 else 2)
+    t4options = coding.fax and coding.fax[0] > 0   # bit 0: 2-D lines
 
-    # layout: header(8) | IFD | [bits array if bands==3] | [x/y rational
-    #         if dpi] | strip offsets | strip counts | pixel data
     n_entries = (9 + (1 if predictor else 0) + (3 if dpi else 0)
                  + (1 if t4options else 0))
-    ifd_off = 8
-    after_ifd = ifd_off + 2 + n_entries * 12 + 4
-    bits_off = after_ifd
-    bits_extra = 6 if bands == 3 else 0
-    rat_off = bits_off + bits_extra
-    rat_extra = 16 if dpi else 0        # two 8-byte RATIONALs
-    so_off = rat_off + rat_extra
+    bits_off = at + 2 + n_entries * 12 + 4
+    rat_off = bits_off + (6 if bands == 3 else 0)
+    so_off = rat_off + (16 if dpi else 0)   # two 8-byte RATIONALs
     sc_off = so_off + 4 * n_strips
-    data_off = sc_off + 4 * n_strips
-    offsets, pos = [], data_off
+    offsets, pos = [], sc_off + 4 * n_strips
     for s in strips:
         offsets.append(pos)
         pos += len(s)
@@ -884,7 +928,7 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
         entry(257, 4, 1, h),
         (entry(258, 3, 3, bits_off) if bands == 3
          else entry(258, 3, 1, bits)),
-        entry(259, 3, 1, compression),
+        entry(259, 3, 1, coding.tag),
         entry(262, 3, 1, photometric),
         # count*size <= 4 => the value field holds the value ITSELF, not a
         # pointer (TIFF spec); single-strip files hit this path
@@ -899,17 +943,15 @@ def encode_tiff(img: np.ndarray, packbits: bool = False,
         entries.append(entry(282, 5, 1, rat_off))       # XResolution
         entries.append(entry(283, 5, 1, rat_off + 8))   # YResolution
     if t4options:
-        entries.append(entry(292, 4, 1, t4options))     # T4Options: 2-D
+        entries.append(entry(292, 4, 1, 1))             # T4Options: 2-D
     if dpi:
         entries.append(entry(296, 3, 1, 2))             # unit = inch
     if predictor:
         entries.append(entry(317, 3, 1, 2))
-    out = bytearray()
-    out += struct.pack("<2sHI", b"II", 42, ifd_off)
-    out += struct.pack("<H", n_entries)
+    out = bytearray(struct.pack("<H", n_entries))
     for e in entries:
         out += e
-    out += struct.pack("<I", 0)                       # next IFD
+    out += struct.pack("<I", 0 if last else pos)      # next IFD
     if bands == 3:
         out += struct.pack("<HHH", 8, 8, 8)
     if dpi:
@@ -970,7 +1012,10 @@ def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
 
     def tag(name: str, default: int | None = None) -> list[int]:
         if name in tags and tags[name][0] != 5:     # integer types only
-            return _tiff_values(data, endian, tags, name)
+            values = _tiff_values(data, endian, tags, name)
+            if not values:
+                raise ValueError(f"TIFF {name} tag has no values")
+            return values
         if default is None:
             raise ValueError(f"TIFF IFD has no {name} tag")
         return [default]
@@ -991,35 +1036,25 @@ def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
         raise NotImplementedError(
             f"TIFF bits-per-sample {bps} x {bands} bands unsupported "
             "(1/4/8/16 single-band, 8-bit multi-band)")
-    if compression not in (1, 2, 3, 4, 5, 8, 32773, 32946):
+    name = _TIFF_NAMES.get(compression)
+    if name is None:
         raise NotImplementedError(
             f"TIFF compression {compression} unsupported "
             "(none/CCITT G3/T4/G4/LZW/DEFLATE/PackBits only)")
-    if compression in (2, 3, 4) and (bps != 1 or bands != 1):
+    coding = _TIFF["t4_2d" if name == "t4" and t4options & 1 else name]
+    if coding.fax and (bps != 1 or bands != 1):
         raise ValueError("TIFF CCITT compression requires 1-bit 1-band")
     if predictor not in (1, 2):
         raise NotImplementedError(f"TIFF predictor {predictor} unsupported "
                                   "(none/horizontal only)")
     if predictor == 2 and bps != 8:
         raise NotImplementedError("TIFF predictor needs 8-bit samples")
-    if compression in (2, 3, 4):        # _ccitt_decode's (k, eol, align)
-        fax = ((0, False, True) if compression == 2
-               else (-1, False, False) if compression == 4
-               else (t4options & 1, True, False))
     row_bytes = -(-w * bps * bands // 8)    # rows pad to byte boundaries
     chunks = []
     for si, (off, cnt) in enumerate(zip(offsets, counts)):
         n_rows = min(rows_per_strip, h - si * rows_per_strip)
-        raw = data[off: off + cnt]
-        if compression == 32773:
-            raw = packbits_decode(raw, n_rows * row_bytes)
-        elif compression == 5:            # LZW (MSB-first, early change)
-            raw = _lzw_decode(raw, 8, n_rows * row_bytes, "tiff")
-        elif compression in (8, 32946):   # Adobe / legacy DEFLATE
-            import zlib
-            raw = zlib.decompress(raw)
-        elif compression in (2, 3, 4):    # CCITT fax
-            raw = _ccitt_decode(raw, n_rows, w, *fax)
+        raw = coding.decode(data[off: off + cnt], n_rows, w,
+                            n_rows * row_bytes)
         chunks.append(np.frombuffer(raw, dtype=np.uint8,
                                     count=n_rows * row_bytes))
     px = np.concatenate(chunks)
@@ -1046,49 +1081,19 @@ def _decode_tiff_ifd(data: bytes, endian: str, ifd_off: int) -> np.ndarray:
 
 
 def encode_tiff_multipage(pages: list[np.ndarray],
-                          packbits: bool = False,
-                          compression: str | None = None,
+                          compression: str = "none",
                           bits: int = 8) -> bytes:
-    """Multi-page TIFF: per-page single-IFD files concatenated (header
-    kept once) with every intra-file offset rebased and the IFDs linked
+    """Multi-page TIFF: each page laid out by the `encode_tiff` page
+    writer at the offset where the previous one ends, the IFDs linked
     through the `next` pointer chain — the layout
     ImageIOHelper.createTiffFiles:74-123 splits back into page files.
     `bits=1` + a CCITT compression gives the classic multi-page fax."""
     if not pages:
         raise ValueError("multi-page TIFF needs at least one page")
-    blobs = [encode_tiff(p, packbits, compression, bits=bits)
-             for p in pages]
-    # page i's bytes land at `starts[i]`; for i>0 the 8-byte header is
-    # dropped, so an in-blob offset X maps to X + starts[i] - 8
-    starts, pos = [], 0
-    for i, blob in enumerate(blobs):
-        starts.append(pos)
-        pos += len(blob) if i == 0 else len(blob) - 8
-    bases = [starts[i] - (0 if i == 0 else 8) for i in range(len(blobs))]
-    out = bytearray()
-    for i, blob in enumerate(blobs):
-        b = bytearray(blob)
-        base = bases[i]
-        ifd_off = struct.unpack_from("<I", b, 4)[0]
-        n = struct.unpack_from("<H", b, ifd_off)[0]
-        for j in range(n):
-            e0 = ifd_off + 2 + j * 12
-            tag, typ, count = struct.unpack_from("<HHI", b, e0)
-            # RATIONAL (type 5, 8 bytes) is always a pointer
-            if _TYPE_SIZE.get(typ, 1) * count > 4:
-                ptr = struct.unpack_from("<I", b, e0 + 8)[0]
-                if tag == 273:   # strip offsets array: rebase each entry
-                    for s in range(count):
-                        v = struct.unpack_from("<I", b, ptr + 4 * s)[0]
-                        struct.pack_into("<I", b, ptr + 4 * s, v + base)
-                struct.pack_into("<I", b, e0 + 8, ptr + base)
-            elif tag == 273:     # inline single strip offset
-                v = struct.unpack_from("<I", b, e0 + 8)[0]
-                struct.pack_into("<I", b, e0 + 8, v + base)
-        nxt = (struct.unpack_from("<I", blobs[i + 1], 4)[0] + bases[i + 1]
-               if i + 1 < len(blobs) else 0)
-        struct.pack_into("<I", b, ifd_off + 2 + n * 12, nxt)
-        out += b if i == 0 else b[8:]
+    out = bytearray(_TIFF_HEADER)
+    for i, page in enumerate(pages):
+        out += _tiff_page(page, len(out), i == len(pages) - 1, compression,
+                          bits=bits)
     return bytes(out)
 
 
@@ -1119,7 +1124,6 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def _png_chunk(typ: bytes, data: bytes) -> bytes:
-    import zlib
     return (struct.pack(">I", len(data)) + typ + data
             + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
 
@@ -1153,7 +1157,6 @@ def encode_png(img: np.ndarray, dpi: int | None = None, depth: int = 8,
     image must use <= 2^depth distinct colors); `alpha` adds an alpha
     channel (color type 4/6, 8-bit only); `interlace` emits Adam7.
     `dpi` writes a pHYs chunk (pixels-per-meter, unit=meter)."""
-    import zlib
     img = np.ascontiguousarray(img, dtype=np.uint8)
     h, w = img.shape[:2]
     bands = 1 if img.ndim == 2 else img.shape[2]
@@ -1293,7 +1296,6 @@ def decode_png(data: bytes) -> np.ndarray:
     the downstream binarizer treats transparency as page background.
     Palette images decode to RGB; all-grey palettes collapse to 1-band
     (the media bands contract treats grey-palette pages as greyscale)."""
-    import zlib
     if data[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
     pos, ihdr, idat, plte, trns = 8, None, [], None, None
@@ -1330,31 +1332,37 @@ def decode_png(data: bytes) -> np.ndarray:
         raise ValueError("PNG palette image missing PLTE")
     channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
     bpp = max(1, channels * depth // 8)
-    raw = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
+    if interlace not in (0, 1):
+        raise NotImplementedError(f"PNG interlace {interlace} unsupported")
+    # (x0, y0, dx, dy, width, height) of each non-empty Adam7 pass
+    passes = [(x0, y0, dx, dy, -(-(w - x0) // dx), -(-(h - y0) // dy))
+              for x0, y0, dx, dy in _ADAM7 if w > x0 and h > y0]
+
+    def scanline_bytes(iw: int, ih: int) -> int:
+        return ih * (-(-iw * channels * depth // 8) + 1)
+
+    limit = (sum(scanline_bytes(pw, ph) for *_, pw, ph in passes)
+             if interlace else scanline_bytes(w, h))
+    raw = np.frombuffer(_inflate(b"".join(idat), limit, "PNG IDAT"),
+                        dtype=np.uint8)
+    # refused before the pass buffer is allocated; Adam7 ignores a tail
+    if raw.size < limit or (raw.size > limit and not interlace):
+        raise ValueError("PNG scanline data size mismatch")
 
     def one_image(raw: np.ndarray, iw: int, ih: int) -> np.ndarray:
         stride = -(-iw * channels * depth // 8)
-        if raw.size != ih * (stride + 1):
-            raise ValueError("PNG scanline data size mismatch")
         recon = _png_unfilter(raw.reshape(ih, stride + 1), stride, bpp)
         return _png_samples(recon, iw, depth, channels)
 
     if interlace == 0:
         samples = one_image(raw, w, h)
-    elif interlace == 1:                                  # Adam7
+    else:                                                 # Adam7
         samples = np.zeros((h, w, channels), dtype=np.int32)
         off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw_ = -(-(w - x0) // dx) if w > x0 else 0
-            ph_ = -(-(h - y0) // dy) if h > y0 else 0
-            if pw_ == 0 or ph_ == 0:
-                continue
-            stride = -(-pw_ * channels * depth // 8)
-            n = ph_ * (stride + 1)
-            samples[y0::dy, x0::dx] = one_image(raw[off:off + n], pw_, ph_)
+        for x0, y0, dx, dy, pw, ph in passes:
+            n = scanline_bytes(pw, ph)
+            samples[y0::dy, x0::dx] = one_image(raw[off:off + n], pw, ph)
             off += n
-    else:
-        raise NotImplementedError(f"PNG interlace {interlace} unsupported")
 
     if color == 3:                                        # palette -> RGB
         idx = samples[:, :, 0]

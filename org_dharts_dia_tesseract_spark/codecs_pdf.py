@@ -200,15 +200,6 @@ def decode_pdf(payload: bytes) -> np.ndarray:
         if b"/DCTDecode" in body:
             from .codecs_img import decode_jpeg   # lazy: avoids cycle
             return decode_jpeg(data)
-        if b"/FlateDecode" in body:
-            data = zlib.decompress(data)
-        elif b"/Filter" in body:
-            # a name, or the first name of a filter array
-            m = re.search(rb"/Filter\s*(?:\[\s*)?/(\w+)", body)
-            if m is None:
-                raise ValueError("PDF image /Filter names no filter")
-            raise NotImplementedError(
-                f"PDF image filter {m.group(1).decode()} unsupported")
         if b"/DeviceRGB" in body:
             bands = 3
         elif b"/DeviceGray" in body:
@@ -216,6 +207,16 @@ def decode_pdf(payload: bytes) -> np.ndarray:
         else:
             raise NotImplementedError("PDF image ColorSpace unsupported "
                                       "(DeviceGray/DeviceRGB only)")
+        if b"/FlateDecode" in body:
+            from .codecs_img import _inflate   # lazy: avoids cycle
+            data = _inflate(data, w * h * bands, "PDF image stream")
+        elif b"/Filter" in body:
+            # a name, or the first name of a filter array
+            m = re.search(rb"/Filter\s*(?:\[\s*)?/(\w+)", body)
+            if m is None:
+                raise ValueError("PDF image /Filter names no filter")
+            raise NotImplementedError(
+                f"PDF image filter {m.group(1).decode()} unsupported")
         arr = np.frombuffer(data, dtype=np.uint8)
         if arr.size != w * h * bands:
             raise ValueError(
@@ -348,6 +349,7 @@ def extract_pdf_text(payload: bytes) -> list[str]:
         if data is None:
             continue
         if b"/FlateDecode" in body[:body.find(b"stream")]:
-            data = zlib.decompress(data)
+            from .codecs_img import _inflate   # lazy: avoids cycle
+            data = _inflate(data, None, "PDF text stream")
         out.extend(_shown_strings(data))
     return out

@@ -4,8 +4,8 @@ frame-sample over opaque binary payloads with typed metadata.
 Every payload decodes through `oracle.page.decode_payload`: raw
 row-major uint8 (zero-copy byte-buffer handoff, the reference's
 ImageIOHelper.convertImageData:249-257) plus REAL pure-numpy codecs for
-BMP / PNM / TIFF (PackBits + DEFLATE strips) / PNG (zlib IDAT, all 5
-scanline filters) / GIF (real LZW both directions, interlace) / JPEG
+BMP / PNM / TIFF (PackBits / LZW / DEFLATE / CCITT strips) / PNG (zlib
+IDAT, all 5 scanline filters) / GIF (real LZW both directions, interlace) / JPEG
 (real Huffman+DCT; lossy, but the binarization margin keeps spans
 identical) / JPEG 2000 (MQ coder + EBCOT + reversible 5/3 wavelet;
 lossless) — the reference's FULL ImageIO decode surface
@@ -57,65 +57,52 @@ def colorize_media(media: DataFrame) -> DataFrame:
     return row_stage(media.select(*_MEDIA_COLS), RESIZE_SCHEMA, emit)
 
 
-def reencode_media(media: DataFrame, codec: str,
-                   packbits: bool = False,
-                   compression: str | None = None,
-                   dpi: int | None = None,
-                   jpeg_subsampling: str = "444",
-                   jpeg_progressive: bool = False,
-                   png_palette: bool = False,
-                   png_interlace: bool = False,
-                   tiff_bits: int = 8,
-                   pdf_ccitt: bool = False) -> DataFrame:
+#: reencode_media option -> (the codecs it applies to, their encoder's
+#: keyword). An option given to another codec is a caller bug: it fails
+#: loudly so a miswired gate can't silently test the wrong surface.
+_ENCODE_OPTIONS = {
+    "compression": (("tiff",), "compression"),
+    "tiff_bits": (("tiff",), "bits"),
+    "dpi": (("bmp", "tiff", "png", "jpeg"), "dpi"),
+    "jpeg_subsampling": (("jpeg",), "subsampling"),
+    "jpeg_progressive": (("jpeg",), "progressive"),
+    "png_palette": (("png",), "palette"),
+    "png_interlace": (("png",), "interlace"),
+    "pdf_ccitt": (("pdf",), "ccitt"),
+}
+
+
+def reencode_media(media: DataFrame, codec: str, **options) -> DataFrame:
     """Re-encode raw media payloads with a real codec —
     the inverse of decode, used as a sink format and to drive the codec
     decode path end-to-end through the OCR pipeline. width/height/bands
-    metadata is preserved. For tiff,
-    `compression` picks 'none' | 'packbits' | 'deflate' and `tiff_bits`
+    metadata is preserved. Options (each for the codecs
+    `_ENCODE_OPTIONS` names): for tiff, `compression` picks 'none' |
+    'packbits' | 'lzw' | 'deflate' | a CCITT fax form and `tiff_bits`
     the bits-per-sample (1 = bilevel threshold-128, the fax/scan
-    staple). For jpeg, `jpeg_progressive` emits an SOF2 scan script;
-    for png, `png_palette`/`png_interlace` pick indexed color and
-    Adam7. `dpi` embeds the physical resolution in the output metadata
+    staple); for jpeg, `jpeg_subsampling` and `jpeg_progressive` (an
+    SOF2 scan script); for png, `png_palette`/`png_interlace` pick
+    indexed color and Adam7; for pdf, `pdf_ccitt` embeds a G4 fax
+    stream. `dpi` embeds the physical resolution in the output metadata
     (TIFF XResolution, PNG pHYs, JFIF density, BMP ppm) — read back on
     decode by the S5 resolution chain (oracle.page.resolve_ppi)."""
     if codec not in CODECS_REAL:
         raise ValueError(f"encodable codecs are {CODECS_REAL}, got {codec!r}")
-    if dpi and codec not in ("bmp", "tiff", "png", "jpeg"):
-        raise ValueError(f"codec {codec!r} has no resolution metadata field")
-    # format-specific flags on the wrong codec are caller bugs — fail
-    # loudly so a miswired gate can't silently test the wrong surface
-    _flag_owner = {"jpeg_subsampling": ("jpeg", jpeg_subsampling != "444"),
-                   "jpeg_progressive": ("jpeg", jpeg_progressive),
-                   "png_palette": ("png", png_palette),
-                   "png_interlace": ("png", png_interlace),
-                   "tiff_bits": ("tiff", tiff_bits != 8),
-                   "pdf_ccitt": ("pdf", pdf_ccitt),
-                   "compression": ("tiff", compression is not None),
-                   "packbits": ("tiff", packbits)}
-    for flag, (owner, is_set) in _flag_owner.items():
-        if is_set and codec != owner:
-            raise ValueError(f"{flag} applies to codec {owner!r}, "
-                             f"not {codec!r}")
+    kw = {}
+    for name, value in options.items():
+        if name not in _ENCODE_OPTIONS:
+            raise TypeError(f"reencode_media() got an unexpected keyword "
+                            f"argument {name!r}")
+        owners, keyword = _ENCODE_OPTIONS[name]
+        if codec not in owners:
+            raise ValueError(f"{name} applies to codec "
+                             f"{' / '.join(owners)}, not {codec!r}")
+        kw[keyword] = value
+    encode = ENCODERS[codec]
 
     def emit(r):
-        img = _raster(r)
-        if codec == "tiff":
-            enc = ENCODERS["tiff"](img, packbits, compression,
-                                   dpi=dpi, bits=tiff_bits)
-        elif codec == "jpeg":
-            enc = ENCODERS["jpeg"](img, dpi=dpi,
-                                   subsampling=jpeg_subsampling,
-                                   progressive=jpeg_progressive)
-        elif codec == "png" and (png_palette or png_interlace):
-            enc = ENCODERS["png"](img, dpi=dpi, palette=png_palette,
-                                  interlace=png_interlace)
-        elif codec == "pdf" and pdf_ccitt:
-            enc = ENCODERS["pdf"](img, ccitt=True)
-        elif dpi:
-            enc = ENCODERS[codec](img, dpi=dpi)
-        else:
-            enc = ENCODERS[codec](img)
-        yield r.media_ref, r.width, r.height, r.bands, enc
+        yield (r.media_ref, r.width, r.height, r.bands,
+               encode(_raster(r), **kw))
 
     return row_stage(media.select(*_MEDIA_COLS), RESIZE_SCHEMA, emit)
 

@@ -16,9 +16,10 @@ from pyspark.sql import types as T
 
 from ..errors import InvalidParameterError
 from ..oracle.page import decode_payload
-from ..oracle.segment import TEXT_KINDS
+from ..oracle.segment import LEVELS, TEXT_KINDS
 from .extract import image_pages
 from .stage import row_stage
+from .windows import _ID_COLS
 
 _LINE_KEY = ["doc_id", "media_ref", "block_id", "para_id", "line_id"]
 
@@ -182,7 +183,6 @@ def merge_pages(documents: DataFrame, media: DataFrame,
 
 
 def merge_tiff(documents: DataFrame, media: DataFrame,
-               packbits: bool = False,
                max_pages: int = DEFAULT_MAX_PAGES) -> DataFrame:
     """Byte-level TIFF merge (ImageIOHelper.mergeTiff:336-371): each
     document's page images, in span order, become ONE multi-page TIFF
@@ -206,7 +206,7 @@ def merge_tiff(documents: DataFrame, media: DataFrame,
         imgs = [decode_payload(p["payload"], p["width"], p["height"],
                                p["bands"])
                 for p in r.pages]
-        yield r.doc_id, len(imgs), encode_tiff_multipage(imgs, packbits)
+        yield r.doc_id, len(imgs), encode_tiff_multipage(imgs)
 
     # guard enforced in the kernel above (typed), not the plan
     return row_stage(merge_pages(documents, media, max_pages=None), schema,
@@ -228,25 +228,13 @@ def page_items(hierarchy: DataFrame) -> DataFrame:
     BLOCK rows carry block_type + orientation columns (PageBlock); other
     levels leave them NULL (PageItem)."""
     lvl = F.col("level")
-    ids = {
-        "BLOCK": ["block_id"],
-        "PARA": ["block_id", "para_id"],
-        "TEXTLINE": ["block_id", "para_id", "line_id"],
-        "WORD": ["block_id", "para_id", "line_id", "word_id"],
-        "SYMBOL": ["block_id", "para_id", "line_id", "word_id", "sym_id"],
-    }
 
-    def key_of(level: str, parent: bool) -> F.Column:
-        cols = ids[level][:-1] if parent else ids[level]
-        if not cols:
-            return F.lit(None).cast("string")
-        plevel = {"PARA": "BLOCK", "TEXTLINE": "PARA", "WORD": "TEXTLINE",
-                  "SYMBOL": "WORD"}[level] if parent else level
+    def key_of(level: str) -> F.Column:
         # offset is part of the key: a document may reference the same
         # media_ref at two span offsets, and their items must not collide
         h = F.md5(F.concat_ws("|", F.col("doc_id"), F.col("media_ref"),
-                              F.col("offset"), F.lit(plevel),
-                              *[F.col(c) for c in cols]))
+                              F.col("offset"), F.lit(level),
+                              *[F.col(c) for c in _ID_COLS[level]]))
         return F.concat_ws(
             "-", F.substring(h, 1, 8), F.substring(h, 9, 4),
             F.substring(h, 13, 4), F.substring(h, 17, 4),
@@ -254,11 +242,11 @@ def page_items(hierarchy: DataFrame) -> DataFrame:
 
     item_id = F.lit(None).cast("string")
     parent_id = F.lit(None).cast("string")
-    for level in ids:
-        item_id = F.when(lvl == level, key_of(level, False)).otherwise(item_id)
-        if level != "BLOCK":
+    for parent, level in zip((None,) + LEVELS, LEVELS):
+        item_id = F.when(lvl == level, key_of(level)).otherwise(item_id)
+        if parent:      # a node's parent is the enclosing level's item
             parent_id = F.when(lvl == level,
-                               key_of(level, True)).otherwise(parent_id)
+                               key_of(parent)).otherwise(parent_id)
     is_block = lvl == "BLOCK"
     return hierarchy.select(
         "doc_id", "media_ref", "offset",

@@ -13,12 +13,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-LEVELS = ("BLOCK", "PARA", "TEXTLINE", "WORD", "SYMBOL")
-_ID_COLS = {"BLOCK": ["block_id"],
-            "PARA": ["block_id", "para_id"],
-            "TEXTLINE": ["block_id", "para_id", "line_id"],
-            "WORD": ["block_id", "para_id", "line_id", "word_id"],
-            "SYMBOL": ["block_id", "para_id", "line_id", "word_id", "sym_id"]}
+from ..oracle.segment import LEVELS
+
+# each level's id-vector prefix: BLOCK -> [block_id] ... SYMBOL -> all five
+_ID_COLS = {level: ["block_id", "para_id", "line_id", "word_id",
+                    "sym_id"][:i + 1] for i, level in enumerate(LEVELS)}
 
 _PAGE = ["doc_id", "media_ref"]
 

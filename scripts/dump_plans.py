@@ -6,7 +6,6 @@ operators (the plan postures regression-pinned in tests/test_plans.py).
 
 from __future__ import annotations
 
-import io
 import os
 import sys
 
@@ -16,6 +15,7 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     from org_dharts_dia_tesseract_spark.operators import extract_spans
+    from org_dharts_dia_tesseract_spark.plans.inspect import explain_str
     from org_dharts_dia_tesseract_spark.queries import spark_queries
     from org_dharts_dia_tesseract_spark.session import get_spark
     from org_dharts_dia_tesseract_spark.sources import materialize_corpus
@@ -70,13 +70,8 @@ def main() -> None:
            "exchange",
            "counts, pushdown, codegen)."]
     for title, df, note in sections:
-        buf = io.StringIO()
-        stdout = sys.stdout
-        sys.stdout = buf
-        df.explain("formatted")
-        sys.stdout = stdout
         out += ["", f"## {title}", "", note, "", "```",
-                buf.getvalue().rstrip(), "```"]
+                explain_str(df).rstrip(), "```"]
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print("PLANS.md written")

@@ -642,3 +642,53 @@ def test_jp2_seeded_mutants_end_as_array_or_typed_error(form):
             kind = type(e).__name__
         seen[kind] = seen.get(kind, 0) + 1
     assert seen.get("array") and seen.get("ValueError"), seen
+
+
+def _flate_forms():
+    """(encoded page, decoder, [header region, compressed-data region])
+    for each Flate path: TIFF deflate strips, PNG IDAT, PDF FlateDecode."""
+    page = TEXT[40:100, 30:70]
+    tif = C.encode_tiff(page, compression="deflate")
+    ifd_end = 8 + 2 + 9 * 12 + 4
+    yield "tiff-deflate", tif, C.decode_tiff, [(0, ifd_end),
+                                                (ifd_end, len(tif))]
+    for name, img in (("png-grey", page), ("png-rgb", TEXT_RGB[40:80, 30:70])):
+        png = C.encode_png(img)
+        idat = png.index(b"IDAT") + 4
+        yield name, png, C.decode_png, [(8, idat + 2), (idat, len(png))]
+    pdf = encode_pdf(page)
+    stream = pdf.index(b"stream") + 7
+    yield "pdf-flate", pdf, decode_pdf, [
+        (pdf.index(b"/Subtype /Image"), stream + 2), (stream, stream + 800)]
+
+
+@pytest.mark.parametrize("form", ["tiff-deflate", "png-grey", "png-rgb",
+                                  "pdf-flate"])
+def test_flate_seeded_mutants_end_as_array_or_typed_error(form):
+    """The mutation probe for the Flate paths: seeded byte edits in the
+    headers and in the deflate data, and truncations. Every mutant must
+    end, within a small time bound, as a uint8 array, a ValueError or a
+    NotImplementedError — a corrupt or cut deflate stream included."""
+    blob, decode, regions = next((b, d, r) for name, b, d, r
+                                 in _flate_forms() if name == form)
+    rng = np.random.default_rng(2026)
+    seen = {}
+    for i in range(200):
+        b = bytearray(blob)
+        if i % 10 == 0:
+            b = b[:int(rng.integers(2, len(b)))]
+        else:
+            lo, hi = regions[i % 2]
+            for _ in range(int(rng.integers(1, 4))):
+                p = int(rng.integers(lo, hi))
+                b[p] = (b[p] ^ (1 << int(rng.integers(0, 8)))
+                        if rng.integers(0, 2) else int(rng.integers(0, 256)))
+        try:
+            with _within(2):
+                out = decode(bytes(b))
+            assert out.dtype == np.uint8
+            kind = "array"
+        except (ValueError, NotImplementedError) as e:
+            kind = type(e).__name__
+        seen[kind] = seen.get(kind, 0) + 1
+    assert seen.get("array") and seen.get("ValueError"), seen

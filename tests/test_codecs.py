@@ -31,7 +31,7 @@ def test_roundtrip(img, codec):
 
 @pytest.mark.parametrize("img", [GREY, RGB], ids=["grey", "rgb"])
 def test_tiff_packbits_roundtrip(img):
-    enc = C.encode_tiff(img, packbits=True)
+    enc = C.encode_tiff(img, compression="packbits")
     assert (C.decode_tiff(enc) == img).all()
 
 
@@ -81,7 +81,8 @@ def test_tiff_predictor_shrinks_gradients():
 
 def test_packbits_compresses_runs():
     flat = np.full((4, 64), 128, dtype=np.uint8)
-    assert len(C.encode_tiff(flat, packbits=True)) < len(C.encode_tiff(flat))
+    assert (len(C.encode_tiff(flat, compression="packbits"))
+            < len(C.encode_tiff(flat)))
     row = np.array([1, 2, 3, 7, 7, 7, 7, 9], dtype=np.uint8)
     assert C.packbits_decode(C.packbits_encode(row), 8) == row.tobytes()
 
@@ -212,7 +213,8 @@ def test_codec_roundtrip_property():
         img = rng.integers(0, 256, shape, dtype=np.uint8)
         for codec in ("bmp", "pnm", "tiff"):
             assert (C.DECODERS[codec](C.ENCODERS[codec](img)) == img).all()
-        assert (C.decode_tiff(C.encode_tiff(img, packbits=True)) == img).all()
+        assert (C.decode_tiff(C.encode_tiff(img, compression="packbits"))
+                == img).all()
 
     check()
 
@@ -299,13 +301,91 @@ def test_tiff_multipage_roundtrip():
     rng = np.random.default_rng(9)
     pages = [rng.integers(0, 256, (11 + i, 17 - i), dtype=np.uint8)
              for i in range(4)]
-    for pb in (False, True):
-        blob = C.encode_tiff_multipage(pages, packbits=pb)
+    for compression in ("none", "packbits"):
+        blob = C.encode_tiff_multipage(pages, compression=compression)
         dec = C.decode_tiff_pages(blob)
         assert len(dec) == 4
         assert all((a == b).all() for a, b in zip(pages, dec))
         assert (C.decode_tiff(blob) == pages[0]).all()   # first page
 
+
+TIFF_COMPRESSIONS = ("none", "packbits", "lzw", "deflate",
+                     "g3", "t4", "t4_2d", "g4")
+FAX = ("g3", "t4", "t4_2d", "g4")
+
+# sha256 prefix of every encode_tiff output (or refusal) over the grid
+# below, per compression: the bytes perfbench's TIFF pools are built from
+TIFF_GOLDEN = {
+    "none": "59c1d72c5d71f931",
+    "packbits": "067dd40285c99f59",
+    "lzw": "51490383290f0b2b",
+    "deflate": "b92a3e463c18fafe",
+    "g3": "472d1ad3b5b42f01",
+    "t4": "868cb07049c1da3e",
+    "t4_2d": "484dde2e8cef5459",
+    "g4": "0cb25a5b45f0846f",
+}
+
+
+@pytest.mark.parametrize("compression", TIFF_COMPRESSIONS)
+def test_encode_tiff_bytes_pinned(compression):
+    import hashlib
+    import itertools
+    h = hashlib.sha256()
+    for img, bits, predictor, dpi in itertools.product(
+            (GREY, RGB), (1, 4, 8, 16), (False, True), (None, 300)):
+        try:
+            h.update(C.encode_tiff(img, compression=compression,
+                                   predictor=predictor, dpi=dpi, bits=bits))
+        except ValueError as e:     # an option the compression refuses
+            h.update(type(e).__name__.encode())
+    assert h.hexdigest()[:16] == TIFF_GOLDEN[compression]
+
+
+@pytest.mark.parametrize("compression", TIFF_COMPRESSIONS)
+def test_tiff_one_page_multipage_is_the_single_page_file(compression):
+    bits = 1 if compression in FAX else 8
+    for img in (GREY, GREY[:1]) if bits == 1 else (GREY, RGB, GREY[:1]):
+        assert (C.encode_tiff_multipage([img], compression=compression,
+                                        bits=bits)
+                == C.encode_tiff(img, compression=compression, bits=bits))
+
+
+@pytest.mark.parametrize("compression", ["g4", "t4_2d"])
+def test_tiff_multipage_fax_strip_offsets_inside_file(compression):
+    """Single-strip fax pages after the first: every strip offset the
+    IFDs give, inline or through the offsets array, lies in the file."""
+    rng = np.random.default_rng(11)
+    pages = [np.where(rng.random((9 + 3 * i, 20 + i)) < 0.3, 0, 255)
+             .astype(np.uint8) for i in range(3)]
+    blob = C.encode_tiff_multipage(pages, compression=compression, bits=1)
+    endian, ifd = C._tiff_header(blob)
+    n_ifds = 0
+    while ifd:
+        tags = C._tiff_tags(blob, endian, ifd)
+        offsets = C._tiff_values(blob, endian, tags, "strip_offsets")
+        counts = C._tiff_values(blob, endian, tags, "strip_counts")
+        assert all(o + c <= len(blob) for o, c in zip(offsets, counts))
+        n = struct.unpack_from("<H", blob, ifd)[0]
+        ifd = struct.unpack_from("<I", blob, ifd + 2 + 12 * n)[0]
+        n_ifds += 1
+    assert n_ifds == len(pages)
+    dec = C.decode_tiff_pages(blob)
+    assert all(np.array_equal(a, b) for a, b in zip(pages, dec))
+    assert len(dec) == len(pages)
+
+
+def test_reencode_media_refuses_option_of_another_codec(spark):
+    docs, media = corpus_tables(spark, 1)
+    for codec, option in [("jpeg", {"compression": "lzw"}),
+                          ("tiff", {"pdf_ccitt": True}),
+                          ("png", {"jpeg_progressive": True}),
+                          ("gif", {"dpi": 300})]:
+        name = next(iter(option))
+        with pytest.raises(ValueError, match=name):
+            M.reencode_media(media, codec, **option)
+    with pytest.raises(TypeError, match="packbits"):
+        M.reencode_media(media, "tiff", packbits=True)
 
 def test_merge_tiff_and_split_roundtrip(spark):
     """S3 byte-level merge -> S2 split closes the loop: a document's
