@@ -596,6 +596,9 @@ def t1_decode(data: bytes, w: int, h: int, orient: str,
     if n_passes == 0:
         return out
     nbps = (n_passes + 2) // 3
+    if nbps > 31:
+        raise ValueError(f"JPEG 2000 code-block codes {nbps} bit-planes; "
+                         "int32 magnitudes hold at most 31")
     g = _T1Grid(h, w)
     mag = [0] * len(g.sig)
     dec = _MQDecoder(data).decode

@@ -1,5 +1,7 @@
-"""Deduplication operators over any corpus DataFrame (reusable API; the
-parity-checked flat-table versions live in queries.py).
+"""Deduplication operators over any corpus DataFrame. The near-dup gates
+in queries.py (simhash32, simhash_near_dup_pairs, ngram_jaccard_pairs,
+ngram_jaccard_band_blocked) call these operators, so the DuckDB oracles
+check this code.
 
 Scale shapes:
 - exact: one shuffle on the content hash, map-side combinable.
@@ -252,10 +254,6 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text",
     Recall matches the LSH candidate set: pairs sharing no band are never
     scored (tunable via n_hashes/bands), which is the standard
     trade — candidate recall for bounded fan-out."""
-    words = (df.select(id_col,
-                       F.explode(F.split(F.col(text_col), r"\s+")).alias("w"))
-             .where(F.col("w") != "").distinct())
-    sizes = words.groupBy(id_col).agg(F.count("*").cast("bigint").alias("n"))
     if block_col:
         blk = df.select(id_col, block_col)
         a, b = blk.alias("a"), blk.alias("b")
@@ -266,6 +264,19 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text",
                 .distinct())
     else:
         cand = minhash_lsh_candidates(df, text_col, id_col, n_hashes, bands)
+    return _exact_jaccard(df, cand, threshold, text_col, id_col)
+
+
+def _exact_jaccard(df: DataFrame, cand: DataFrame, threshold: float,
+                   text_col: str, id_col: str) -> DataFrame:
+    """Exact word-set Jaccard of the candidate pairs (id_a, id_b) -> the
+    pairs at or above threshold with (id_a, id_b, jaccard). The overlap
+    join fans out per candidate pair; pairs sharing no word never
+    reach the score."""
+    words = (df.select(id_col,
+                       F.explode(F.split(F.col(text_col), r"\s+")).alias("w"))
+             .where(F.col("w") != "").distinct())
+    sizes = words.groupBy(id_col).agg(F.count("*").cast("bigint").alias("n"))
     wa, wb = words.alias("wa"), words.alias("wb")
     common = (cand
               .join(wa, F.col(f"wa.{id_col}") == F.col("id_a"))

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import ordered_join
 from .dedup import exact_dedup, minhash_lsh_candidates
 from .extract import extract_spans
 
@@ -23,12 +24,8 @@ def doc_text_from_spans(spans: DataFrame) -> DataFrame:
     """Reassemble one text per document from its ordered text spans."""
     return (spans.where((F.col("kind") == "text") & F.col("text").isNotNull())
             .groupBy("doc_id")
-            .agg(F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seq", "text"))),
-                    lambda s: s["text"]),
-                "\n").alias("text"),
-                F.count("*").cast("bigint").alias("n_text_spans")))
+            .agg(ordered_join("seq", "text", "\n").alias("text"),
+                 F.count("*").cast("bigint").alias("n_text_spans")))
 
 
 def quality_columns(docs_text: DataFrame) -> DataFrame:

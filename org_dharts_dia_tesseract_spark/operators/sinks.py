@@ -4,7 +4,7 @@ GetBoxText / MeanTextConf / AllWordConfidences / TIFF merge).
 
 All are declarative aggregations over the hierarchy DataFrame produced by
 operators.extract.analyze_documents — ordered string assembly uses
-array_sort(collect_list(struct(...))) so results are deterministic under
+`functions.ordered_join` so results are deterministic under
 any partitioning (Spark guarantees no implicit order).
 """
 
@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import InvalidParameterError
+from ..functions import ordered_join
 from ..oracle.page import decode_payload
 from ..oracle.segment import LEVELS, TEXT_KINDS
 from .extract import image_pages
@@ -26,12 +27,8 @@ _LINE_KEY = ["doc_id", "media_ref", "block_id", "para_id", "line_id"]
 
 def _ordered_join(df: DataFrame, keys: list[str], order_col: str,
                   frag_col: str, sep: str, out_name: str) -> DataFrame:
-    return (df.groupBy(*keys)
-            .agg(F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(order_col, frag_col))),
-                    lambda s: s[frag_col]),
-                sep).alias(out_name)))
+    return df.groupBy(*keys).agg(
+        ordered_join(order_col, frag_col, sep).alias(out_name))
 
 
 def _join_lines(lines: DataFrame, frag_col: str, out_name: str) -> DataFrame:
@@ -104,14 +101,10 @@ def unlv_text(hierarchy: DataFrame, reject_below: float = 50.0,
                            & F.col("text").isNotNull())
     ch = F.when(F.col("confidence") < reject_below, F.lit("~")) \
         .otherwise(F.regexp_replace(F.col("text"), r"[^\x00-\xff]", "~"))
-    words = (syms
+    words = (syms.withColumn("c", ch)
              .groupBy(*_LINE_KEY, "word_id")
              .agg(F.min("seq").alias("seq"),
-                  F.array_join(
-                      F.transform(
-                          F.array_sort(F.collect_list(
-                              F.struct("seq", ch.alias("c")))),
-                          lambda s: s["c"]), "").alias("w"),
+                  ordered_join("seq", "c", "").alias("w"),
                   F.min("confidence").alias("min_conf")))
     words = words.withColumn(
         "w", F.when(F.col("min_conf") < suspect_below,

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import ordered_join
 from ..oracle.segment import LEVELS
 
 # each level's id-vector prefix: BLOCK -> [block_id] ... SYMBOL -> all five
@@ -75,20 +76,11 @@ def level_text(hierarchy: DataFrame, level: str) -> DataFrame:
     line_key = _PAGE + _ID_COLS["TEXTLINE"]
     lines = (words.groupBy(*line_key)
              .agg(F.min("seq").alias("seq"),
-                  F.array_join(
-                      F.transform(
-                          F.array_sort(F.collect_list(F.struct("seq", "text"))),
-                          lambda s: s["text"]),
-                      " ").alias("line_text")))
+                  ordered_join("seq", "text", " ").alias("line_text")))
     if level == "TEXTLINE":
         return lines.withColumnRenamed("line_text", "text")
-    sep = "\n"
     return (lines.groupBy(*keys)
-            .agg(F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seq", "line_text"))),
-                    lambda s: s["line_text"]),
-                sep).alias("text")))
+            .agg(ordered_join("seq", "line_text", "\n").alias("text")))
 
 
 FONT_ATTR_COLS = ("font_bold", "font_italic", "font_underlined",

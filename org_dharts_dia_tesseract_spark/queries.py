@@ -13,6 +13,10 @@ Cross-engine determinism rules used throughout:
 - the portable 32-bit hash is `conv(substr(md5(s),1,8),16,10)` (Spark) ==
   `CAST('0x'||substr(md5(s),1,8) AS BIGINT)` (DuckDB) — verified equal;
 - no reliance on row order (the driver compares order-insensitively).
+
+The near-dup gates (SimHash, Jaccard pairs, shingling) and the vector
+norm call the library operators in `operators/dedup.py` and
+`operators/similarity.py`, so their oracles check the library itself.
 """
 
 from __future__ import annotations
@@ -22,6 +26,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions import ordered_join
+from .operators import dedup
+from .operators.dedup import _h32, _word_shingles
+from .operators.similarity import _norm
 from .sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -67,11 +75,7 @@ _WORDS_SQL = """
     WHERE word <> ''
 """
 
-# portable 32-bit hash of a string expression
-def _h32(col):
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-
-
+# SQL twin of the portable 32-bit hash `_h32` (operators/dedup.py)
 def _h32_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 8) AS BIGINT)"
 
@@ -150,11 +154,7 @@ def rollup_doc_text(spark, sf_dir):
             .groupBy("doc_id")
             .agg(F.count("*").cast("bigint").alias("n_words"),
                  F.min("word_id").alias("first_id"),
-                 F.array_join(
-                     F.transform(
-                         F.array_sort(F.collect_list(F.struct("word_id", "word"))),
-                         lambda s: s["word"]),
-                     " ").alias("text_rejoin")))
+                 ordered_join("word_id", "word", " ").alias("text_rejoin")))
 
 
 @q("mean_word_conf", f"""
@@ -186,11 +186,7 @@ def all_word_confidences(spark, sf_dir):
     return (_words(spark, sf_dir)
             .withColumn("conf", _conf(F.col("word")))
             .groupBy("doc_id")
-            .agg(F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("word_id", "conf"))),
-                    lambda s: s["conf"].cast("string")),
-                ",").alias("confs")))
+            .agg(ordered_join("word_id", "conf", ",").alias("confs")))
 
 
 # ==========================================================================
@@ -262,11 +258,7 @@ def hocr_output(spark, sf_dir):
     return (b.groupBy("doc_id")
             .agg(F.concat(
                 F.lit("<div class='ocr_page'>"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("word_id", "frag"))),
-                        lambda s: s["frag"]),
-                    ""),
+                ordered_join("word_id", "frag", ""),
                 F.lit("</div>")).alias("hocr")))
 
 
@@ -552,19 +544,14 @@ _SHINGLES_SQL = f"""
 """
 
 
+# The library operators split text on \s+ and the oracles on ' '. They
+# agree because no documents table (sf0.001, sf0.01, sf0.1) holds a tab,
+# a newline or two spaces in a row.
 def _shingles(spark, sf_dir):
-    # map-side shingling via higher-order array fns: same rows as the
-    # window-lead formulation (the SQL oracle keeps that shape) but with
-    # NO shuffle — at corpus scale the lead() version shuffles every word
-    docs = load_table(spark, sf_dir, "documents")
-    return (docs
-            .withColumn("__ws", F.filter(F.split("text", " "),
-                                         lambda w: w != ""))
-            .select("doc_id", F.explode(F.expr(
-                "CASE WHEN size(__ws) >= 3 THEN "
-                "transform(sequence(0, size(__ws) - 3), "
-                "i -> concat_ws(' ', __ws[i], __ws[i+1], __ws[i+2])) "
-                "ELSE array() END")).alias("shingle")))
+    # map-side shingling: same rows as the oracle's window-lead form but
+    # with NO shuffle — at corpus scale the lead() version shuffles every word
+    return _word_shingles(load_table(spark, sf_dir, "documents"),
+                          "text", "doc_id")
 
 
 _MINHASH_SQL = f"""
@@ -638,15 +625,12 @@ def simhash32(spark, sf_dir):
     One groupBy with 32 vote-sum columns (map-side combinable, single
     shuffle) instead of the oracle SQL's bit-explode shape — the explode
     multiplies the shuffled rows 32x and needs a second aggregation."""
-    wh = _words(spark, sf_dir).select("doc_id", _h32(F.col("word")).alias("h"))
-    votes = [F.sum(F.when(F.expr(f"shiftright(h, {j}) % 2") == 1, 1)
-                   .otherwise(-1)).alias(f"s{j}") for j in range(32)]
-    sums = wh.groupBy("doc_id").agg(*votes)
-    fp = None
-    for j in range(32):
-        term = F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(0)
-        fp = term if fp is None else fp + term
-    return sums.select("doc_id", fp.cast("bigint").alias("simhash"))
+    return dedup.simhash(load_table(spark, sf_dir, "documents"), bits=32)
+
+
+def _doc_pairs(pairs: DataFrame) -> DataFrame:
+    return (pairs.withColumnRenamed("id_a", "doc_a")
+            .withColumnRenamed("id_b", "doc_b"))
 
 
 @q("ngram_jaccard_pairs", f"""
@@ -674,22 +658,9 @@ def ngram_jaccard_pairs(spark, sf_dir):
     100 TB path. The scale path is `ngram_jaccard_band_blocked` (MinHash
     band candidates, bounded fan-out), which `dedup.jaccard_pairs` uses
     by default."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    dw = _words(spark, sf_dir).select("doc_id", "word").distinct()
-    sizes = dw.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n"))
-    blocks = dw.join(sizes, "doc_id").join(docs, "doc_id")
-    a = blocks.alias("a")
-    b = blocks.alias("b")
-    pairs = (a.join(b, (F.col("a.word") == F.col("b.word"))
-                    & (F.col("a.lang") == F.col("b.lang"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-             .agg(F.count("*").cast("bigint").alias("common"),
-                  F.min("a.n").alias("na"), F.min("b.n").alias("nb")))
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return (pairs.where(jac >= 0.8)
-            .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard")))
+    docs = load_table(spark, sf_dir, "documents")
+    return _doc_pairs(dedup.jaccard_pairs(docs, block_col="lang",
+                                          threshold=0.8))
 
 
 @q("simhash_near_dup_pairs", f"""
@@ -723,28 +694,8 @@ def simhash_near_dup_pairs(spark, sf_dir):
     must agree exactly on at least one band, so the self-join runs on
     (band_idx, band_value) bucket keys (bounded fan-out, never all-pairs)
     and the exact bit_count(xor) filter runs on candidates only."""
-    sig = simhash32(spark, sf_dir)
-    bands = sig.select(
-        "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("j"),
-                     (F.shiftright("simhash", 8 * j)
-                      .bitwiseAND(F.lit(255))).alias("bv"))
-            for j in range(4)])).alias("b")
-    ).select("doc_id", "simhash", F.col("b.j").alias("j"),
-             F.col("b.bv").alias("bv"))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.j") == F.col("b.j"))
-                   & (F.col("a.bv") == F.col("b.bv"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                    F.col("a.simhash").alias("sa"),
-                    F.col("b.simhash").alias("sb"))
-            .distinct())
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    return (cand.where(ham <= 3)
-            .select("doc_a", "doc_b", ham.cast("int").alias("hamming")))
+    docs = load_table(spark, sf_dir, "documents")
+    return _doc_pairs(dedup.simhash_near_dup_pairs(docs))
 
 
 @q("ngram_jaccard_band_blocked", f"""
@@ -780,23 +731,9 @@ def ngram_jaccard_band_blocked(spark, sf_dir):
     not: candidate generation is bounded by LSH bucket sizes (never by
     the frequency of 'the'), and the exact-overlap join fans out per
     candidate pair, not per shared word."""
-    cand = minhash_lsh_pairs(spark, sf_dir)
-    dw = _words(spark, sf_dir).select("doc_id", "word").distinct()
-    sizes = dw.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n"))
-    wa, wb = dw.alias("wa"), dw.alias("wb")
-    common = (cand
-              .join(wa, F.col("wa.doc_id") == F.col("doc_a"))
-              .join(wb, (F.col("wb.doc_id") == F.col("doc_b"))
-                    & (F.col("wb.word") == F.col("wa.word")))
-              .groupBy("doc_a", "doc_b")
-              .agg(F.count("*").cast("bigint").alias("common")))
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    out = (common
-           .join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-           .join(sb, F.col("sb.doc_id") == F.col("doc_b")))
-    jac = F.col("common") / (F.col("sa.n") + F.col("sb.n") - F.col("common"))
-    return (out.where(jac >= 0.5)
-            .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard")))
+    cand = minhash_lsh_pairs(spark, sf_dir).toDF("id_a", "id_b")
+    docs = load_table(spark, sf_dir, "documents")
+    return _doc_pairs(dedup._exact_jaccard(docs, cand, 0.5, "text", "doc_id"))
 
 
 # ==========================================================================
@@ -1076,11 +1013,8 @@ def doc_fingerprint(spark, sf_dir):
 """)
 def embedding_norms(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    sq = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
     return emb.select("vec_id", "label",
-                      F.round(F.sqrt(sq), 4).alias("l2_norm"),
+                      F.round(_norm(F.col("embedding")), 4).alias("l2_norm"),
                       F.size("embedding").cast("int").alias("dim"))
 
 

@@ -47,6 +47,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def _numbered_refs(spark: SparkSession, n: int, fmt: str,
+                   name: str) -> DataFrame:
+    """refs 0..n-1 formatted by `fmt` into one column `name`."""
+    return spark.range(n).select(
+        F.format_string(fmt, F.col("id")).alias(name))
+
+
+def _rows_for(refs: DataFrame, parts: int, row_for: str,
+              schema: T.StructType) -> DataFrame:
+    """Repartition the one-column `refs` on it into `parts`, then map each
+    ref to one `schema` row with `datagen.<row_for>` (looked up inside
+    the task)."""
+    ref = refs.columns[0]
+    names = [f.name for f in schema]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from .. import datagen
+        row = getattr(datagen, row_for)
+        for pdf in batches:
+            yield pd.DataFrame([row(r) for r in pdf[ref]], columns=names)
+
+    return refs.repartition(parts, ref).mapInPandas(gen, schema)
+
+
 def corpus_tables(spark: SparkSession, n_docs: int,
                   partitions: int | None = None) -> tuple[DataFrame, DataFrame]:
     """Build the interleaved (documents, media) pair distributed.
@@ -60,8 +84,7 @@ def corpus_tables(spark: SparkSession, n_docs: int,
     # every later consumer (single-row-group fat-binary files don't
     # split). Target many small media files instead.
     parts = partitions or max(64, 2 * spark.sparkContext.defaultParallelism)
-    ids = spark.range(n_docs).select(
-        F.format_string("doc-%08d", F.col("id")).alias("doc_id"))
+    ids = _numbered_refs(spark, n_docs, "doc-%08d", "doc_id")
     ids = ids.repartition(max(parts // 4, 8), "doc_id")
 
     def gen_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -77,17 +100,8 @@ def corpus_tables(spark: SparkSession, n_docs: int,
     refs = (documents
             .select(F.explode("spans").alias("s"))
             .where(F.col("s.kind") == "image")
-            .select(F.col("s.media_ref").alias("media_ref"))
-            .repartition(parts, "media_ref"))
-
-    def gen_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..datagen import media_row_for
-        for pdf in batches:
-            rows = [media_row_for(r) for r in pdf["media_ref"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA])
-
-    media = refs.mapInPandas(gen_media, MEDIA_SCHEMA)
-    return documents, media
+            .select(F.col("s.media_ref").alias("media_ref")))
+    return documents, _rows_for(refs, parts, "media_row_for", MEDIA_SCHEMA)
 
 
 def materialize_corpus(spark: SparkSession, out_dir: str, n_docs: int,
@@ -167,17 +181,8 @@ def audio_table(spark: SparkSession, n_clips: int,
     same way as corpus_tables — content is a pure function of
     audio_ref, so any partition regenerates independently."""
     parts = partitions or max(32, spark.sparkContext.defaultParallelism)
-    refs = spark.range(n_clips).select(
-        F.format_string("aud-%08d", F.col("id")).alias("audio_ref"))
-    refs = refs.repartition(parts, "audio_ref")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..datagen import audio_row_for
-        for pdf in batches:
-            rows = [audio_row_for(r) for r in pdf["audio_ref"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_SCHEMA])
-
-    return refs.mapInPandas(gen, AUDIO_SCHEMA)
+    refs = _numbered_refs(spark, n_clips, "aud-%08d", "audio_ref")
+    return _rows_for(refs, parts, "audio_row_for", AUDIO_SCHEMA)
 
 
 VIDEO_SCHEMA = T.StructType([
@@ -198,14 +203,5 @@ def video_table(spark: SparkSession, n_clips: int,
     a pure function of video_ref, so any partition regenerates
     independently."""
     parts = partitions or max(32, spark.sparkContext.defaultParallelism)
-    refs = spark.range(n_clips).select(
-        F.format_string("vid-%08d", F.col("id")).alias("video_ref"))
-    refs = refs.repartition(parts, "video_ref")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..datagen import video_row_for
-        for pdf in batches:
-            rows = [video_row_for(r) for r in pdf["video_ref"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_SCHEMA])
-
-    return refs.mapInPandas(gen, VIDEO_SCHEMA)
+    refs = _numbered_refs(spark, n_clips, "vid-%08d", "video_ref")
+    return _rows_for(refs, parts, "video_row_for", VIDEO_SCHEMA)

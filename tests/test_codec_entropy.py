@@ -692,3 +692,23 @@ def test_flate_seeded_mutants_end_as_array_or_typed_error(form):
             kind = type(e).__name__
         seen[kind] = seen.get(kind, 0) + 1
     assert seen.get("array") and seen.get("ValueError"), seen
+
+
+@pytest.mark.parametrize("planes", [31, 32, 33])
+def test_jp2_t1_decode_caps_bit_planes_at_int32(planes):
+    """t1_decode packs magnitudes into int32: a 31-bit-plane code-block
+    round-trips, and a block of 32 or 33 bit-planes is a ValueError
+    naming the plane count, not a silently wrapped magnitude."""
+    rng = np.random.default_rng(planes)
+    blk = rng.integers(-(1 << 20), 1 << 20, size=(4, 5), dtype=np.int64)
+    blk[1, 2] = (1 << planes) - 1
+    blk[3, 0] = -((1 << (planes - 1)) + 7)
+    cw, n_passes, nbps = J.t1_encode(blk, "LL")
+    assert nbps == planes
+    if planes == 31:
+        out = J.t1_decode(cw, 5, 4, "LL", n_passes)
+        assert out.dtype == np.int32
+        assert np.array_equal(out.astype(np.int64), blk)
+    else:
+        with pytest.raises(ValueError, match=f"codes {planes} bit-planes"):
+            J.t1_decode(cw, 5, 4, "LL", n_passes)

@@ -218,6 +218,28 @@ def test_jaccard_hot_word_bounded(spark):
     assert pairs == {("near_a", "near_b")}
 
 
+def test_exact_jaccard_scores_only_given_candidates(spark):
+    """The exact-overlap half of jaccard_pairs over explicit candidates:
+    a pair exactly at the threshold is kept, a pair with no common word
+    and a pair below the threshold are not, repeated words count once,
+    and an identical pair that is not a candidate is never scored."""
+    base = "w1 w2 w3 w4 w5 w6 w7 w8"
+    df = spark.createDataFrame(
+        [("a", base + " xa"), ("b", base + " xb"), ("c", "p q r s"),
+         ("d", "w1 w1 w2 q"), ("e", base + " xa")],
+        "doc_id string, text string")
+    cand = spark.createDataFrame([("a", "b"), ("a", "c"), ("b", "d")],
+                                 "id_a string, id_b string")
+
+    def pairs(threshold):
+        return {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+                D._exact_jaccard(df, cand, threshold, "text",
+                                 "doc_id").collect()}
+    # a, b: 9 words each, 8 common -> 8 / 10; b, d: {w1, w2, q} -> 2 / 10
+    assert pairs(0.8) == {("a", "b"): 0.8}
+    assert pairs(0.2) == {("a", "b"): 0.8, ("b", "d"): 0.2}
+
+
 def test_simhash_near_dup_pairs_api(spark):
     df = spark.createDataFrame(
         [("a", "alpha beta gamma delta epsilon zeta eta theta"),
