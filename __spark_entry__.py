@@ -234,11 +234,10 @@ def _pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; at sf0.1 it reports a value mismatch."""
     from org_dharts_dia_tesseract_spark.operators.similarity import \
         pq_topk_adc
+    from org_dharts_dia_tesseract_spark.queries import _probe_queries
     from org_dharts_dia_tesseract_spark.sources.tables import load_table
     emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return pq_topk_adc(emb, qs, k=5, m=8, ks=16)
+    return pq_topk_adc(emb, _probe_queries(emb), k=5, m=8, ks=16)
 
 
 def _ivfpq_topk_probe_all(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,11 +253,11 @@ def _ivfpq_topk_probe_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; at sf0.1 it reports a value mismatch."""
     from org_dharts_dia_tesseract_spark.operators.similarity import \
         ivfpq_topk
+    from org_dharts_dia_tesseract_spark.queries import _probe_queries
     from org_dharts_dia_tesseract_spark.sources.tables import load_table
     emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return ivfpq_topk(emb, qs, k=5, n_lists=8, nprobe=8, m=8, ks=16)
+    return ivfpq_topk(emb, _probe_queries(emb), k=5, n_lists=8, nprobe=8,
+                      m=8, ks=16)
 
 
 def _ivfpq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,14 +272,14 @@ def _ivfpq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     train/encode/probe/ADC kernels over the same vectors)."""
     from org_dharts_dia_tesseract_spark.operators.similarity import (
         ivfpq_topk_indexed, ivfpq_write_index)
+    from org_dharts_dia_tesseract_spark.queries import _probe_queries
     from org_dharts_dia_tesseract_spark.sources.tables import load_table
     emb = load_table(spark, sf_dir, "embeddings")
     label = os.path.basename(sf_dir.rstrip("/"))
     path = os.path.join(_HERE, "data", "gen", f"ivfpq_index_{label}")
     ivfpq_write_index(emb, path, n_lists=8, m=8, ks=16)
-    qs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return ivfpq_topk_indexed(spark, path, qs, k=5, nprobe=2)
+    return ivfpq_topk_indexed(spark, path, _probe_queries(emb), k=5,
+                              nprobe=2)
 
 
 def _semdedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -130,15 +130,18 @@ def encode_bmp(img: np.ndarray, dpi: int | None = None) -> bytes:
 def decode_bmp(data: bytes) -> np.ndarray:
     if data[:2] != b"BM":
         raise ValueError("not a BMP payload")
-    offset = struct.unpack_from("<I", data, 10)[0]
-    (hdr_size, w, h, _planes, bpp, compression) = struct.unpack_from(
-        "<IiiHHI", data, 14)
+    (offset,) = _unpack("<I", data, 10, "BMP pixel offset")
+    (hdr_size, w, h, _planes, bpp, compression) = _unpack(
+        "<IiiHHI", data, 14, "BMP info header")
     if compression != 0:
         raise NotImplementedError(
             f"BMP compression {compression} unsupported (uncompressed only)")
     bottom_up = h > 0
     h = abs(h)
     stride = (w * (bpp // 8) + 3) & ~3
+    if offset + h * stride > len(data):
+        raise ValueError(f"BMP raster of {h} rows at offset {offset} runs "
+                         f"past the {len(data)}-byte payload")
     raster = np.frombuffer(data, dtype=np.uint8, count=h * stride,
                            offset=offset).reshape(h, stride)
     if bottom_up:
@@ -147,7 +150,7 @@ def decode_bmp(data: bytes) -> np.ndarray:
         # palette starts right after the info header; greyscale palettes
         # map index -> level via the palette's blue channel
         pal_off = 14 + hdr_size
-        n_colors = struct.unpack_from("<I", data, 46)[0] or 256
+        n_colors = _unpack("<I", data, 46, "BMP palette size")[0] or 256
         pal = np.frombuffer(data, dtype=np.uint8, count=n_colors * 4,
                             offset=pal_off).reshape(n_colors, 4)
         idx = raster[:, :w]

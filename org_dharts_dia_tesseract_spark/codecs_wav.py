@@ -22,6 +22,8 @@ import struct
 
 import numpy as np
 
+from .codecs_img import _unpack
+
 
 def encode_wav(samples: np.ndarray, sample_rate: int,
                bits: int = 16) -> bytes:
@@ -58,10 +60,14 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     while pos + 8 <= len(data):
         cid = data[pos:pos + 4]
         (ln,) = struct.unpack_from("<I", data, pos + 4)
+        if pos + 8 + ln > len(data):
+            raise ValueError(f"WAV {cid.decode('latin-1')!r} chunk at "
+                             f"offset {pos} runs past the "
+                             f"{len(data)}-byte payload")
         body = data[pos + 8: pos + 8 + ln]
         pos += 8 + ln + (ln & 1)            # chunks are word-aligned
         if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
+            fmt = _unpack("<HHIIHH", body, 0, "WAV fmt chunk")
         elif cid == b"data":
             frames = body
     if fmt is None or frames is None:

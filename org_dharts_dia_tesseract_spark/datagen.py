@@ -42,7 +42,6 @@ MARGIN = 6
 
 INK_MAX = 40      # ink pixels drawn in [0, INK_MAX)
 BG_MIN = 215      # background pixels drawn in [BG_MIN, 256)
-DEFAULT_DPI = 96  # fallback mirrors ImageIOHelper.readImageData:379-407
 
 _VOCAB = [
     "the", "quick", "brown", "fox", "jumps", "over", "lazy", "dog",

@@ -1,7 +1,9 @@
 """Deduplication operators over any corpus DataFrame. The near-dup gates
-in queries.py (simhash32, simhash_near_dup_pairs, ngram_jaccard_pairs,
-ngram_jaccard_band_blocked) call these operators, so the DuckDB oracles
-check this code.
+in queries.py (simhash32, simhash_near_dup_pairs, minhash_signatures,
+minhash_lsh_pairs, ngram_jaccard_pairs, ngram_jaccard_band_blocked and
+the dedup_clusters pair) call these operators, so the DuckDB oracles
+check this code. The gates run MinHash at 4 hashes in 2 bands; the
+training corpus runs the defaults, 8 hashes in 4 bands.
 
 Scale shapes:
 - exact: one shuffle on the content hash, map-side combinable.
@@ -437,10 +439,10 @@ def connected_components_star(pairs: DataFrame, src: str = "id_a",
 
 def bloom_hash_positions(col: Column, m_bits: int,
                          k: int = 4) -> list[Column]:
-    """k independent bit positions from ONE md5 (same portable-hash
-    trick as the MinHash permutations, queries.py:13: the md5 hex is
-    split into k disjoint 32-bit chunks, each exactly reproducible in
-    ANSI SQL as CAST('0x'||substr(md5(s),1+8j,8) AS BIGINT)). Computed
+    """k independent bit positions from ONE md5: the md5 hex is split
+    into k disjoint 32-bit chunks, each the portable hash of the
+    queries.py docstring (`_h32` is chunk 0), exactly reproducible in
+    ANSI SQL as CAST('0x'||substr(md5(s),1+8j,8) AS BIGINT). Computed
     JVM-side — whole-stage codegen, no Python in the hash path."""
     if not 1 <= k <= 4:
         raise ValueError(f"k must be in 1..4 (one md5 = four 32-bit "

@@ -31,12 +31,11 @@ from ..codecs_wav import wav_features
 from ..datagen import colorize_page
 from ..oracle.binarize import otsu_binarize, to_grey
 from ..oracle.cc import connected_components
-from ..oracle.page import decode_payload
+from ..oracle.page import DEFAULT_PPI, decode_payload
 from .extract import image_spans
 from .stage import row_stage
 
 CODECS_REAL = ("bmp", "pnm", "tiff", "png", "gif", "jpeg", "jp2", "pdf")
-DEFAULT_DPI = 96
 
 _MEDIA_COLS = ("media_ref", "width", "height", "bands", "payload")
 
@@ -127,7 +126,7 @@ def extract_features(media: DataFrame) -> DataFrame:
         grey = to_grey(_raster(r))
         ink = otsu_binarize(grey)
         yield (r.media_ref, r.width, r.height,
-               int(r.dpi) if pd.notna(r.dpi) else DEFAULT_DPI,
+               int(r.dpi) if pd.notna(r.dpi) else DEFAULT_PPI,
                float(ink.mean()), float(grey.mean()),
                float(np.var(ink.sum(axis=1))), len(connected_components(ink)))
 

@@ -44,8 +44,10 @@ def _join_lines(lines: DataFrame, frag_col: str, out_name: str) -> DataFrame:
 def page_text(hierarchy: DataFrame) -> DataFrame:
     """GetUTF8Text (TessAPI.java:483-487): per page, text blocks joined by
     blank lines in reading order."""
+    # sorted: TEXT_KINDS is a set, whose order changes with the
+    # process's string-hash seed, and the plan should not
     blocks = hierarchy.where((F.col("level") == "BLOCK")
-                             & F.col("block_type").isin(*TEXT_KINDS)
+                             & F.col("block_type").isin(*sorted(TEXT_KINDS))
                              & F.col("text").isNotNull())
     return _ordered_join(blocks, ["doc_id", "media_ref"], "seq", "text",
                          "\n\n", "page_text")

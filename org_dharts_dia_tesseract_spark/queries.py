@@ -14,9 +14,12 @@ Cross-engine determinism rules used throughout:
   `CAST('0x'||substr(md5(s),1,8) AS BIGINT)` (DuckDB) — verified equal;
 - no reliance on row order (the driver compares order-insensitively).
 
-The near-dup gates (SimHash, Jaccard pairs, shingling) and the vector
-norm call the library operators in `operators/dedup.py` and
-`operators/similarity.py`, so their oracles check the library itself.
+The near-dup gates (SimHash, MinHash signatures and LSH pairs, Jaccard
+pairs, shingling) and the vector norm call the library operators in
+`operators/dedup.py` and `operators/similarity.py`, so their oracles
+check the library itself. The MinHash oracles restate the library's
+scheme in SQL: `_MINHASH_SQL` for the signatures, `_LSH_PAIRS_SQL` for
+the band keys and the candidate self-join.
 """
 
 from __future__ import annotations
@@ -554,56 +557,57 @@ def _shingles(spark, sf_dir):
                           "text", "doc_id")
 
 
+def _doc_pairs(pairs: DataFrame) -> DataFrame:
+    return (pairs.withColumnRenamed("id_a", "doc_a")
+            .withColumnRenamed("id_b", "doc_b"))
+
+
+# Permutation i of the library's MinHash (dedup.minhash_signatures) is
+# (h1 + i*h2) mod 2^32, where h1 and h2 are the first two 32-bit chunks of
+# the shingle's md5.
 _MINHASH_SQL = f"""
     SELECT doc_id,
-           min(CAST('0x' || substr(md5(shingle),  1, 8) AS BIGINT)) AS mh0,
-           min(CAST('0x' || substr(md5(shingle),  9, 8) AS BIGINT)) AS mh1,
-           min(CAST('0x' || substr(md5(shingle), 17, 8) AS BIGINT)) AS mh2,
-           min(CAST('0x' || substr(md5(shingle), 25, 8) AS BIGINT)) AS mh3
-    FROM ({_SHINGLES_SQL})
+           min((h1 + 0 * h2) % 4294967296) AS mh0,
+           min((h1 + 1 * h2) % 4294967296) AS mh1,
+           min((h1 + 2 * h2) % 4294967296) AS mh2,
+           min((h1 + 3 * h2) % 4294967296) AS mh3
+    FROM (SELECT doc_id,
+                 CAST('0x' || substr(md5(shingle), 1, 8) AS BIGINT) AS h1,
+                 CAST('0x' || substr(md5(shingle), 9, 8) AS BIGINT) AS h2
+          FROM ({_SHINGLES_SQL}))
     GROUP BY doc_id
+"""
+
+# LSH candidates of dedup.minhash_lsh_candidates(n_hashes=4, bands=2):
+# band b's key hashes its index with its two rows, and docs sharing any
+# key pair up.
+_LSH_PAIRS_SQL = f"""
+    WITH sig AS ({_MINHASH_SQL}),
+    bands AS (
+        SELECT doc_id, md5(concat_ws('_', 0, mh0, mh1)) AS band_key FROM sig
+        UNION ALL
+        SELECT doc_id, md5(concat_ws('_', 1, mh2, mh3)) AS band_key FROM sig)
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
 """
 
 
 @q("minhash_signatures", _MINHASH_SQL)
 def minhash_signatures(spark, sf_dir):
-    """MinHash over 3-word shingles, 4 permutations from the 4 disjoint
-    32-bit chunks of ONE md5 per shingle (md5 bits are independent, so
-    the chunks act as 4 independent hash functions — one digest instead
-    of four in the hot path)."""
-    sh = _shingles(spark, sf_dir).withColumn("__md5", F.md5("shingle"))
-    aggs = [F.min(F.conv(F.substring("__md5", 1 + 8 * i, 8), 16, 10)
-                  .cast("bigint")).alias(f"mh{i}") for i in range(4)]
-    return sh.groupBy("doc_id").agg(*aggs)
+    """MinHash over 3-word shingles: 4 permutations from ONE md5 per
+    shingle, h_i = (h1 + i*h2) mod 2^32 (dedup.minhash_signatures)."""
+    docs = load_table(spark, sf_dir, "documents")
+    return dedup.minhash_signatures(docs, n_hashes=4)
 
 
-@q("minhash_lsh_pairs", f"""
-    WITH sig AS ({_MINHASH_SQL}),
-    bands AS (
-        SELECT doc_id, md5(CAST(mh0 AS VARCHAR) || '_' || CAST(mh1 AS VARCHAR)) AS band_key
-        FROM sig
-        UNION ALL
-        SELECT doc_id, md5(CAST(mh2 AS VARCHAR) || '_' || CAST(mh3 AS VARCHAR)) AS band_key
-        FROM sig)
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-""")
+@q("minhash_lsh_pairs", _LSH_PAIRS_SQL)
 def minhash_lsh_pairs(spark, sf_dir):
     """LSH banding: 2 bands x 2 rows; candidate pairs via band-key
-    self-join (the scale path: join fans out only within buckets).
-    Band rows come from ONE explode over the signature aggregation
-    (a union of per-band selects would duplicate the agg subtree)."""
-    sig = minhash_signatures(spark, sf_dir)
-    bands = sig.select("doc_id", F.explode(F.array(
-        F.md5(F.concat_ws("_", "mh0", "mh1")),
-        F.md5(F.concat_ws("_", "mh2", "mh3")))).alias("band_key"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
+    self-join (the scale path: join fans out only within buckets), under
+    the library's default band-bucket cap."""
+    docs = load_table(spark, sf_dir, "documents")
+    return _doc_pairs(dedup.minhash_lsh_candidates(docs, n_hashes=4,
+                                                   bands=2))
 
 
 @q("simhash32", f"""
@@ -626,11 +630,6 @@ def simhash32(spark, sf_dir):
     shuffle) instead of the oracle SQL's bit-explode shape — the explode
     multiplies the shuffled rows 32x and needs a second aggregation."""
     return dedup.simhash(load_table(spark, sf_dir, "documents"), bits=32)
-
-
-def _doc_pairs(pairs: DataFrame) -> DataFrame:
-    return (pairs.withColumnRenamed("id_a", "doc_a")
-            .withColumnRenamed("id_b", "doc_b"))
 
 
 @q("ngram_jaccard_pairs", f"""
@@ -699,17 +698,7 @@ def simhash_near_dup_pairs(spark, sf_dir):
 
 
 @q("ngram_jaccard_band_blocked", f"""
-    WITH sig AS ({_MINHASH_SQL}),
-    bands AS (
-        SELECT doc_id, md5(CAST(mh0 AS VARCHAR) || '_' || CAST(mh1 AS VARCHAR)) AS band_key
-        FROM sig
-        UNION ALL
-        SELECT doc_id, md5(CAST(mh2 AS VARCHAR) || '_' || CAST(mh3 AS VARCHAR)) AS band_key
-        FROM sig),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.band_key = b.band_key
-                                 AND a.doc_id < b.doc_id),
+    WITH cand AS ({_LSH_PAIRS_SQL}),
     dw AS (SELECT DISTINCT doc_id, word FROM ({_WORDS_SQL})),
     sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM dw GROUP BY doc_id),
     common AS (
@@ -731,9 +720,9 @@ def ngram_jaccard_band_blocked(spark, sf_dir):
     not: candidate generation is bounded by LSH bucket sizes (never by
     the frequency of 'the'), and the exact-overlap join fans out per
     candidate pair, not per shared word."""
-    cand = minhash_lsh_pairs(spark, sf_dir).toDF("id_a", "id_b")
     docs = load_table(spark, sf_dir, "documents")
-    return _doc_pairs(dedup._exact_jaccard(docs, cand, 0.5, "text", "doc_id"))
+    return _doc_pairs(dedup.jaccard_pairs(docs, threshold=0.5, n_hashes=4,
+                                          bands=2))
 
 
 # ==========================================================================
@@ -1018,7 +1007,16 @@ def embedding_norms(spark, sf_dir):
                       F.size("embedding").cast("int").alias("dim"))
 
 
-@q("similarity_topk_cosine", """
+def _probe_queries(emb: DataFrame) -> DataFrame:
+    """The 5 probe vectors of the top-k gates (vec_id < 5) as
+    (q_id, q_emb)."""
+    return emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
+
+
+# Brute-force cosine top-5 of the probe vectors: the oracle of every
+# exact top-k gate.
+_COSINE_TOPK_SQL = """
     WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
                WHERE vec_id < 5),
     scored AS (
@@ -1036,16 +1034,17 @@ def embedding_norms(spark, sf_dir):
                                     ORDER BY cosine DESC, vec_id) AS rk
           FROM scored)
     WHERE rk <= 5
-""")
+"""
+
+
+@q("similarity_topk_cosine", _COSINE_TOPK_SQL)
 def similarity_topk_cosine(spark, sf_dir):
     """Brute-force cosine top-5 for 5 query vectors — the ANN baseline.
     At scale: broadcast the query set; each partition scores its shard and
     emits local top-k; a single narrow final top-k per query follows."""
     from .operators.similarity import brute_force_topk
     emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 5) \
-        .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return (brute_force_topk(emb, qs, k=5)
+    return (brute_force_topk(emb, _probe_queries(emb), k=5)
             .select("q_id", "vec_id", F.round("cosine", 4).alias("cosine"), "rk"))
 
 
@@ -1857,28 +1856,7 @@ def cms_hot_users(spark, sf_dir):
                       .cast("bigint").alias("overestimate"))
 
 
-_IVF_EXACT_SQL = """
-    WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-               WHERE vec_id < 5),
-    scored AS (
-        SELECT q.q_id, e.vec_id,
-               list_sum(list_transform(range(1, len(e.embedding) + 1),
-                   i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.q_emb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-               AS cosine
-        FROM q, embeddings e
-        WHERE e.vec_id <> q.q_id)
-    SELECT q_id, vec_id, round(cosine, 4) AS cosine, CAST(rk AS INT) AS rk
-    FROM (SELECT q_id, vec_id, cosine,
-                 row_number() OVER (PARTITION BY q_id
-                                    ORDER BY cosine DESC, vec_id) AS rk
-          FROM scored)
-    WHERE rk <= 5
-"""
-
-
-@q("ivf_topk_probe_all", _IVF_EXACT_SQL)
+@q("ivf_topk_probe_all", _COSINE_TOPK_SQL)
 def ivf_topk_probe_all(spark, sf_dir):
     """IVF ANN machinery (k-means train -> inverted lists -> probe join)
     gated exactly: with nprobe == n_lists every list is probed, so the
@@ -1886,9 +1864,7 @@ def ivf_topk_probe_all(spark, sf_dir):
     at nprobe < n_lists is pytest-covered (test_operators_wide)."""
     from .operators.similarity import ivf_topk
     emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    out = ivf_topk(emb, qs, k=5, n_lists=8, nprobe=8)
+    out = ivf_topk(emb, _probe_queries(emb), k=5, n_lists=8, nprobe=8)
     return out.select("q_id", "vec_id",
                       F.round("cosine", 4).alias("cosine"), "rk")
 
@@ -2290,19 +2266,7 @@ def line_dedup_global(spark, sf_dir):
 
 
 @q("dedup_clusters", f"""
-    WITH RECURSIVE sig AS ({_MINHASH_SQL}),
-    bands AS (
-        SELECT doc_id, md5(CAST(mh0 AS VARCHAR) || '_' ||
-                           CAST(mh1 AS VARCHAR)) AS band_key
-        FROM sig
-        UNION ALL
-        SELECT doc_id, md5(CAST(mh2 AS VARCHAR) || '_' ||
-                           CAST(mh3 AS VARCHAR)) AS band_key
-        FROM sig),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
+    WITH RECURSIVE pairs AS ({_LSH_PAIRS_SQL}),
     edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
               UNION SELECT doc_b, doc_a FROM pairs),
     reach(id, comp) AS (

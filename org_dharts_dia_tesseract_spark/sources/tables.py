@@ -127,8 +127,8 @@ def load_media_files(spark: SparkSession, directory: str) -> DataFrame:
     (S1, ImageIOHelper.java:270-327). Raster metadata travels in the
     filename (`<ref>_w<W>_h<H>_b<B>.bin`, raw row-major uint8 payload);
     with real codecs the payload would carry it and decode in the UDF.
-    Returns the MEDIA_SCHEMA shape (dpi NULL -> downstream DEFAULT_DPI
-    fallback, S5)."""
+    Returns the MEDIA_SCHEMA shape (dpi NULL -> downstream
+    oracle.page.DEFAULT_PPI fallback, S5)."""
     raw = spark.read.format("binaryFile").load(
         os.path.join(directory, "*.bin"))
     path = F.col("path")

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from org_dharts_dia_tesseract_spark import codecs_img as C
+from org_dharts_dia_tesseract_spark.codecs_wav import decode_wav, encode_wav
 from org_dharts_dia_tesseract_spark.operators import extract_spans
 from org_dharts_dia_tesseract_spark.operators import multimodal as M
 from org_dharts_dia_tesseract_spark.oracle.page import decode_payload
@@ -149,6 +150,19 @@ def test_malformed_payloads():
         # cut inside the signature, IHDR or IDAT: not a struct.error
         with pytest.raises(ValueError, match="PNG"):
             C.decode_png(png[:cut])
+    bmp = C.encode_bmp(np.zeros((60, 40), np.uint8))
+    for cut in range(60):
+        # cut inside the file or info header: not a struct.error
+        with pytest.raises(ValueError, match="BMP"):
+            C.decode_bmp(bmp[:cut])
+    wav = encode_wav(np.zeros(101, np.int16), 8000)
+    for cut in range(len(wav)):
+        # cut inside a header or chunk: not a struct.error
+        with pytest.raises(ValueError, match="WAV"):
+            decode_wav(wav[:cut])
+    # a data chunk past the payload is refused, not read short
+    with pytest.raises(ValueError, match="'data' chunk .* runs past"):
+        decode_wav(wav[:-10])
 
 
 def test_decode_payload_sniffing():

@@ -53,6 +53,43 @@ def test_page_text_matches_oracle(hier):
     assert checked > 0
 
 
+_PAGE_TEXT_PLAN = """
+from pyspark.sql import SparkSession
+from org_dharts_dia_tesseract_spark.operators.sinks import page_text
+from org_dharts_dia_tesseract_spark.oracle.segment import TEXT_KINDS
+from org_dharts_dia_tesseract_spark.plans import explain_str
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+hier = spark.createDataFrame(
+    [(1, "m", 0, "BLOCK", "FLOWING_TEXT", "t")],
+    "doc_id long, media_ref string, seq int, level string, "
+    "block_type string, text string")
+print(list(TEXT_KINDS))
+print(explain_str(page_text(hier), "extended"))
+spark.stop()
+"""
+
+
+def test_page_text_plan_independent_of_hash_seed():
+    """page_text's plan text is the same in every process: its IN list
+    over the block kinds does not follow the per-process string-hash
+    order of the TEXT_KINDS set."""
+    import os
+    import subprocess
+    import sys
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    procs = [subprocess.Popen(
+        [sys.executable, "-c", _PAGE_TEXT_PLAN], cwd=repo,
+        env={**os.environ, "PYTHONHASHSEED": seed, "PYTHONPATH": repo},
+        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+        for seed in ("1", "2")]
+    (kinds1, plan1), (kinds2, plan2) = [
+        p.communicate(timeout=300)[0].split("\n", 1) for p in procs]
+    assert kinds1 != kinds2, "the two seeds should order the set apart"
+    assert "FLOWING_TEXT" in plan1
+    assert plan1 == plan2
+
+
 def test_mean_conf_and_word_confs(hier):
     mc = K.mean_text_conf(hier).collect()
     assert len(mc) > 0
@@ -999,6 +1036,27 @@ def test_minhash_bucket_cap_rejects_nonpositive(spark):
         D.minhash_lsh_candidates(df, max_bucket=0)
     with pytest.raises(ValueError, match="max_bucket"):
         D.minhash_lsh_candidates(df, max_bucket=-1)
+
+
+def test_minhash_gates_run_the_library(spark):
+    """One MinHash scheme: the minhash_signatures and minhash_lsh_pairs
+    gates return exactly what the library operators return."""
+    from org_dharts_dia_tesseract_spark.queries import spark_queries
+    from org_dharts_dia_tesseract_spark.sources.tables import load_table
+    sf = "/root/testdata/sf0.001"
+    docs = load_table(spark, sf, "documents")
+    qs = spark_queries()
+
+    def same(gate, lib):
+        assert gate.columns == lib.columns
+        got, want = gate.collect(), lib.collect()
+        assert want and sorted(got) == sorted(want)
+
+    same(qs["minhash_signatures"](spark, sf),
+         D.minhash_signatures(docs, n_hashes=4))
+    same(qs["minhash_lsh_pairs"](spark, sf),
+         D.minhash_lsh_candidates(docs, n_hashes=4, bands=2)
+         .toDF("doc_a", "doc_b"))
 
 
 def test_star_components_empty_and_selfloops(spark):
